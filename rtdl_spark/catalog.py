@@ -10,9 +10,11 @@ from __future__ import annotations
 
 import os
 import re
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from rtdl_spark.session import ensure_runtime_confs
 
@@ -90,16 +92,45 @@ def register_lake_table(
     table_name: str,
     location: str,
     fmt: str = "parquet",
+    schema: StructType | None = None,
+    partition_cols: Sequence[str] = (),
+    partitions: Iterable[Sequence[str | None]] = (),
 ) -> None:
     """Spark-native equivalent of rtdl's Dremio dataset promotion
     (reference ingester/ingester.go:944-988): make a written dataset
     queryable by name via the session catalog. Idempotent. Identifiers are
     sanitized (the session catalog only allows [A-Za-z0-9_], stricter than
     Dremio's source names — e.g. stream type 'test-msg' → 'test_msg').
+
+    Without ``schema`` the table's schema is inferred from the files under
+    ``location`` and every partition directory there is recovered.
+
+    With ``schema`` the table is declared: that schema, partitioned by
+    ``partition_cols``, with no inference job and no partition discovery;
+    only ``partitions`` (value tuples in ``partition_cols`` order) are
+    added. A location that holds several datasets' partitions (an ingest
+    stream root, ``rtdl_table=*/rtdl_bucket=*``) then registers each
+    dataset with its own rows only.
     """
     db = sanitize_identifier(database)
     tbl = sanitize_identifier(table_name)
     spark.sql(f"CREATE DATABASE IF NOT EXISTS `{db}`")
+    if schema is not None:
+        # files carry no constraints, so every column is declared nullable
+        nullable = StructType([
+            StructField(f.name, f.dataType, True, f.metadata) for f in schema
+        ])
+        ddl = spark._jvm.org.apache.spark.sql.types.DataType.fromJson(
+            nullable.json()
+        ).toDDL()
+        by = ", ".join(f"`{c}`" for c in partition_cols)
+        spark.sql(
+            f"CREATE TABLE IF NOT EXISTS `{db}`.`{tbl}` ({ddl}) "
+            f"USING {fmt} PARTITIONED BY ({by}) LOCATION '{location}'"
+        )
+        add_lake_partitions(spark, database, table_name, partition_cols,
+                            partitions)
+        return
     spark.sql(
         f"CREATE TABLE IF NOT EXISTS `{db}`.`{tbl}` "
         f"USING {fmt} LOCATION '{location}'"
@@ -111,6 +142,40 @@ def register_lake_table(
         spark.sql(f"MSCK REPAIR TABLE `{db}`.`{tbl}`")
     except Exception:
         pass
+
+
+def add_lake_partitions(
+    spark: SparkSession,
+    database: str,
+    table_name: str,
+    partition_cols: Sequence[str],
+    partitions: Iterable[Sequence[str | None]],
+) -> None:
+    """Add ``partitions`` (value tuples in ``partition_cols`` order; None
+    is the null partition) to a partitioned catalog table in one
+    ``ALTER TABLE ... ADD IF NOT EXISTS`` statement. Each partition's
+    directory is the one a ``partitionBy`` write of those values uses."""
+    specs = [
+        "PARTITION ("
+        + ", ".join(
+            f"`{c}` = {_sql_literal(v)}"
+            for c, v in zip(partition_cols, values)
+        )
+        + ")"
+        for values in partitions
+    ]
+    if specs:
+        db = sanitize_identifier(database)
+        tbl = sanitize_identifier(table_name)
+        spark.sql(
+            f"ALTER TABLE `{db}`.`{tbl}` ADD IF NOT EXISTS " + " ".join(specs)
+        )
+
+
+def _sql_literal(value: str | None) -> str:
+    if value is None:
+        return "NULL"
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def sanitize_identifier(identifier: str) -> str:

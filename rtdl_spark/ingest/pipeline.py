@@ -22,18 +22,27 @@ Spark redesign decisions (each a deliberate divergence, not an omission):
 - **Routing precedence** is preserved exactly: stream_alt_id match wins
   over stream_id (ingest-service.go:216-243); unmatched rows are dropped
   silently (same semantics, ingester.go:1592).
-- **Catalog**: Dremio source/dataset promotion (A19) becomes
-  CREATE DATABASE/TABLE IF NOT EXISTS against the Spark session catalog.
+- **Catalog**: Dremio source/dataset promotion (A19) becomes a Spark
+  session-catalog table per (stream folder, message type), registered
+  once per job and declared from the write's schema. Its partitions come
+  from the write itself: an observation on each append collects the
+  (rtdl_table, rtdl_bucket) pairs it landed, and only pairs the job has
+  not added yet become ADD PARTITION calls. A table holds only its own
+  type's rows, although all types share the stream root.
+- **Micro-batch shape**: one probe job plus one write job per routed
+  stream. Internal actions run under the small-plan scope of the batch's
+  own session (under foreachBatch, the stream's session, never the
+  caller's).
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from rtdl_spark.catalog import register_lake_table
+from rtdl_spark.catalog import add_lake_partitions, register_lake_table
 from rtdl_spark.config.constants import (
     COMPRESSION_TYPES,
     CONTROL_MESSAGE_TYPE,
@@ -45,11 +54,16 @@ from rtdl_spark.config.constants import (
 from rtdl_spark.config.registry import StreamConfig, StreamRegistry
 from rtdl_spark.functions.buckets import partition_bucket
 from rtdl_spark.functions.pii import mask_pii_strings
+from rtdl_spark.functions.smallplan import (
+    _plan_size_estimate,
+    _small_plan_scope,
+)
 from rtdl_spark.session import ensure_runtime_confs
 
 TABLE_COL = "rtdl_table"
 BUCKET_COL = "rtdl_bucket"
 CORRUPT_COL = "_corrupt_record"
+_PART_COLS = (TABLE_COL, BUCKET_COL)
 
 
 def _col_or_null(df: DataFrame, name: str):
@@ -123,6 +137,10 @@ class IngestJob:
         self.corrupt_policy = corrupt_policy
         self.extra_functions = dict(extra_functions or {})
         self.with_lineage = with_lineage
+        # catalog state of this job: (db, table) registered, and the
+        # (db, table, bucket) partitions added (see _register_partitions)
+        self._catalog_tables: set[tuple[str, str]] = set()
+        self._catalog_parts: set[tuple[str, str, str | None]] = set()
 
     # -- A1: envelope ------------------------------------------------------
     def read_json(self, path: str) -> DataFrame:
@@ -257,24 +275,85 @@ class IngestJob:
 
     # -- A11 + A19: write + catalog ---------------------------------------
     def write_stream_batch(self, cfg: StreamConfig, df: DataFrame) -> str:
-        """Partitioned columnar append: one write per (table, bucket)
-        partition — the micro-batch replacement for file-per-message."""
-        codec = COMPRESSION_TYPES[cfg.compression_type_id]
+        """Partitioned columnar append of one stream's rows — the
+        micro-batch replacement for file-per-message — then catalog
+        registration of exactly the (table, bucket) partitions that write
+        produced. Those pairs come from an observation on the write itself
+        (the same current_timestamp() bucket the files get), so learning
+        them costs no extra job; see ``_register_partitions``."""
         dest = self.dest_root(cfg)
+        obs = None
+        if self.register_catalog:
+            obs = Observation()
+            df = df.observe(
+                obs, F.collect_set(F.struct(*_PART_COLS)).alias("parts")
+            )
         (
-            df.write.partitionBy(TABLE_COL, BUCKET_COL)
-            .option("compression", codec)
+            df.write.partitionBy(*_PART_COLS)
+            .option("compression", COMPRESSION_TYPES[cfg.compression_type_id])
             .mode("append")
             .parquet(dest)
         )
-        if self.register_catalog:
-            db = cfg.folder_name or f"s_{cfg.stream_id}"
-            tables = [
-                r[0] for r in df.select(TABLE_COL).distinct().collect()
-            ]
-            for t in tables:
-                register_lake_table(self.spark, db, t, dest)
+        if obs is not None:
+            self._register_partitions(cfg, dest, df.schema, obs.get["parts"])
         return dest
+
+    def _register_partitions(
+        self, cfg: StreamConfig, dest: str, schema, parts
+    ) -> None:
+        """A19 from the write's observed (table, bucket) pairs. Each
+        (db, table) is registered once per job: declared from the write's
+        schema and partitioned on (rtdl_table, rtdl_bucket), with the
+        buckets already under ``dest/rtdl_table=<t>/`` (earlier jobs'
+        appends, one listing) plus the observed ones. After that, only
+        pairs this job has not added yet become ``ALTER TABLE ... ADD
+        PARTITION``, so most batches make no catalog call at all.
+
+        Every message type's table shares the stream root, so registering
+        from a discovery of the root (MSCK REPAIR) would give each table
+        every other type's rows; adding only ``rtdl_table=<t>``
+        partitions keeps each type its own dataset, as in rtdl where each
+        message type is its own Dremio dataset."""
+        db = cfg.folder_name or f"s_{cfg.stream_id}"
+        new: dict[str, set[str | None]] = {}
+        for t, b in parts:
+            if (db, t, b) not in self._catalog_parts:
+                new.setdefault(t, set()).add(b)
+        for t, buckets in new.items():
+            if (db, t) in self._catalog_tables:
+                add_lake_partitions(
+                    self.spark, db, t, _PART_COLS,
+                    [(t, b) for b in sorted(buckets, key=str)],
+                )
+            else:
+                buckets |= self._listed_buckets(dest, t)
+                register_lake_table(
+                    self.spark, db, t, dest, schema=schema,
+                    partition_cols=_PART_COLS,
+                    partitions=[(t, b) for b in sorted(buckets, key=str)],
+                )
+                self._catalog_tables.add((db, t))
+            self._catalog_parts.update((db, t, b) for b in buckets)
+
+    def _listed_buckets(self, dest: str, table: str) -> set[str | None]:
+        """Buckets on disk for one table of a stream root. Partition
+        directory names use Spark's own path escaping and null marker."""
+        from rtdl_spark.sources import fsutil
+
+        paths = (
+            self.spark._jvm.org.apache.spark.sql.catalyst.catalog
+            .ExternalCatalogUtils
+        )
+        names = fsutil.list_names(
+            self.spark,
+            f"{dest.rstrip('/')}/{TABLE_COL}={paths.escapePathName(table)}",
+        )
+        prefix = f"{BUCKET_COL}="
+        null = paths.DEFAULT_PARTITION_NAME()
+        return {
+            None if v == null else paths.unescapePathName(v)
+            for v in (n[len(prefix):] for n in names if n.startswith(prefix))
+        }
 
     # -- A22/A23: function chain ------------------------------------------
     def apply_chain(self, cfg: StreamConfig, df: DataFrame) -> DataFrame:
@@ -324,13 +403,25 @@ class IngestJob:
         """Full pipeline for one batch; returns {stream_id: dest_root}.
         Mirrors Ingest() (ingester.go:1545-1654) minus Kafka hops.
 
-        The envelope frame is persisted for the batch's lifetime: the
-        control-message check, each stream's emptiness probe, and each
-        stream's write would otherwise each re-run the whole source read —
-        3+ passes over raw JSON per batch. A micro-batch is bounded by
-        construction, so caching it is the standard foreachBatch
-        multi-sink pattern (and is why this method, not the caller,
-        owns persist/unpersist).
+        A batch without control messages runs one probe job plus one
+        write job per routed stream:
+
+        - The envelope frame is persisted for the batch's lifetime, so the
+          probe and every stream's write read it instead of re-running the
+          source read. A micro-batch is bounded by construction, so this
+          is the standard foreachBatch multi-sink pattern (and is why this
+          method, not the caller, owns persist/unpersist).
+        - The probe and the writes run under the bytes-gated small-plan
+          scope (functions/smallplan.py) of the BATCH's session,
+          ``raw.sparkSession``. Under foreachBatch that is the stream's
+          own session with its own SQLConf, so the scope reaches the
+          batch's actions and never flips AQE on the caller's session,
+          where a user query may be planning.
+        - Streams are written one after another (``write_stream_batch``),
+          each write followed by the catalog registration of the
+          partitions it observed: no extra job, and most batches make no
+          catalog call. If a write fails, its error is raised at once;
+          the streams written before it are already catalogued.
 
         ``collect_metrics=True`` fills ``self.last_metrics`` with the
         batch's row accounting: n_input, n_control, n_unrouted (rows that
@@ -338,17 +429,10 @@ class IngestJob:
         ingest-service.go:244 — plus any rows a chain transform removed),
         and per-stream written row counts. The
         per-stream counts ride the write action itself via df.observe —
-        no extra pass; the input/control counts are reads of the cached
-        envelope frame."""
-        from pyspark.sql import Observation
-
-        from rtdl_spark.functions.smallplan import (
-            _plan_size_estimate,
-            _small_plan_scope,
-        )
-
+        no extra pass; the input/control counts come from the probe."""
         raw, cached_raw = self._quarantine_corrupt(raw)
         env = self.envelope(raw).persist()
+        batch_spark = env.sparkSession
         # r11: batch-internal actions (the fused probe, each stream's
         # write) run under the bytes-gated small-plan scope — at bench
         # scale the probe collapsed from 3 AQE stage-jobs to 1 and the
@@ -370,7 +454,7 @@ class IngestJob:
             is_ctrl = F.col("message_type") == CONTROL_MESSAGE_TYPE
             not_ctrl = ~is_ctrl | is_ctrl.isNull()
             conds = self._route_conds()
-            with _small_plan_scope(self.spark, batch_small_bytes):
+            with _small_plan_scope(batch_spark, batch_small_bytes):
                 probe = env.agg(
                     F.count(F.lit(1)).alias("__n"),
                     F.sum(is_ctrl.cast("long")).alias("__ctrl"),
@@ -426,7 +510,7 @@ class IngestJob:
                     fn in self.extra_functions
                     for fn in cfg.function_chain()
                 )
-                with _small_plan_scope(self.spark, batch_small_bytes):
+                with _small_plan_scope(batch_spark, batch_small_bytes):
                     if may_empty and chained.limit(1).count() == 0:
                         continue
                     obs = None

@@ -809,3 +809,195 @@ def test_ingest_json_dir_reads_gzipped_spool(spark, tmp_path):
     got_plain = land(plain, "lake_plain")
     got_gz = land(gzd, "lake_gz")
     assert got_gz == got_plain == {(m["i"], m["tag"]) for m in msgs}
+
+
+def _one_stream_registry(tmp_path, folder, **kw):
+    reg = StreamRegistry(str(tmp_path / "configs"))
+    reg.create(
+        StreamConfig(
+            stream_id=STREAM_ID,
+            message_type="test-msg",
+            folder_name=folder,
+            partition_time_id=2,
+            **kw,
+        )
+    )
+    return reg
+
+
+def _table_counts(spark, db, table):
+    return {
+        (r["rtdl_table"], r["rtdl_bucket"]): r["n"]
+        for r in spark.sql(
+            f"SELECT rtdl_table, rtdl_bucket, count(*) AS n FROM {db}.{table} "
+            "GROUP BY rtdl_table, rtdl_bucket"
+        ).collect()
+    }
+
+
+def test_catalog_table_per_message_type(spark, tmp_path):
+    """Two message types in one stream root register as two tables, each
+    with only its own rows (rtdl: one Dremio dataset per type), null
+    bucket included; a later batch's new bucket is added to the existing
+    table."""
+    from rtdl_spark.ingest import IngestJob
+
+    spark.sql("DROP DATABASE IF EXISTS leakFolder CASCADE")
+    reg = _one_stream_registry(tmp_path, "leakFolder")
+    job = IngestJob(spark, reg, str(tmp_path / "lake"),
+                    time_source="event")
+    def ev(ts, **kw):
+        return {"stream_id": STREAM_ID, "ts": f"2024-02-{ts}:00:00", **kw}
+
+    p1 = write_events(tmp_path, [
+        ev("15 10", type="page_view"),
+        ev("15 11", type="page_view"),
+        ev("16 09", type="page_view"),
+        {"stream_id": STREAM_ID, "type": "page_view"},  # null bucket
+        ev("15 10"),
+        ev("15 12"),
+    ], name="b1")
+    p2 = write_events(tmp_path, [ev("17 08", type="page_view")], name="b2")
+    job.ingest_json_dir(p1)
+    assert _table_counts(spark, "leakFolder", "page_view") == {
+        ("page_view", "2024-02-15"): 2, ("page_view", "2024-02-16"): 1,
+        ("page_view", None): 1,
+    }
+    assert _table_counts(spark, "leakFolder", "test_msg") == {
+        ("test-msg", "2024-02-15"): 2,
+    }
+    job.ingest_json_dir(p2)
+    assert _table_counts(spark, "leakFolder", "page_view") == {
+        ("page_view", "2024-02-15"): 2, ("page_view", "2024-02-16"): 1,
+        ("page_view", "2024-02-17"): 1, ("page_view", None): 1,
+    }
+    assert _table_counts(spark, "leakFolder", "test_msg") == {
+        ("test-msg", "2024-02-15"): 2,
+    }
+
+
+def test_catalog_recovers_earlier_buckets_with_escaped_type(spark, tmp_path):
+    """A new IngestJob over an existing lake registers the buckets earlier
+    jobs wrote, found under the type's partition directory — including a
+    type value Spark escapes in directory names (%XX)."""
+    from rtdl_spark.ingest import IngestJob
+
+    odd = "a/b:c%d'e=f"
+    spark.sql("DROP DATABASE IF EXISTS escFolder CASCADE")
+    reg = _one_stream_registry(tmp_path, "escFolder")
+    lake = str(tmp_path / "lake")
+    old = write_events(tmp_path, [
+        {"stream_id": STREAM_ID, "type": odd, "i": 1},
+        {"stream_id": STREAM_ID, "type": odd, "i": 2},
+        {"stream_id": STREAM_ID, "type": "other", "i": 3},
+    ], name="old")
+    IngestJob(spark, reg, lake, fixed_time="2024-02-14 00:00:00",
+              register_catalog=False).ingest_json_dir(old)
+    assert os.path.isdir(os.path.join(lake, "escFolder",
+                                      "rtdl_table=a%2Fb%3Ac%25d%27e%3Df"))
+    new = write_events(tmp_path, [
+        {"stream_id": STREAM_ID, "type": odd, "i": 4},
+    ], name="new")
+    IngestJob(spark, reg, lake,
+              fixed_time="2024-02-15 00:00:00").ingest_json_dir(new)
+    rows = spark.sql(
+        "SELECT i, rtdl_table, rtdl_bucket FROM escFolder.a_b_c_d_e_f"
+    ).collect()
+    got = sorted((r["i"], r["rtdl_table"], r["rtdl_bucket"]) for r in rows)
+    assert got == [
+        (1, odd, "2024-02-14"), (2, odd, "2024-02-14"), (4, odd, "2024-02-15"),
+    ]
+    # "other" was never written by a registering job, so it has no table
+    assert "other" not in {
+        r["tableName"] for r in spark.sql("SHOW TABLES IN escFolder").collect()
+    }
+
+
+def _multi_root_registry(tmp_path, folders):
+    """One stream per folder; stream i owns type t<i>."""
+    reg = StreamRegistry(str(tmp_path / "configs"))
+    for i, folder in enumerate(folders):
+        reg.create(
+            StreamConfig(
+                stream_id=f"s{i}",
+                message_type=f"t{i}",
+                folder_name=folder,
+                partition_time_id=2,
+            )
+        )
+    return reg
+
+
+def _events_for(n_streams, per_stream):
+    return [
+        {"stream_id": f"s{i}", "seq": i * 1000 + k}
+        for i in range(n_streams)
+        for k in range(per_stream)
+    ]
+
+
+def test_streams_sharing_a_root_land_every_row_once(spark, tmp_path):
+    """Two configs with one folder_name land in one destination root
+    (their appends stage under the root's shared _temporary directory, so
+    they must not overlap), beside a third root. Every row lands exactly
+    once."""
+    from rtdl_spark.ingest import IngestJob
+
+    reg = _multi_root_registry(tmp_path, ["shared", "shared", "solo"])
+    job = IngestJob(spark, reg, str(tmp_path / "lake"),
+                    fixed_time="2024-02-15 00:00:00", register_catalog=False)
+    path = write_events(tmp_path, _events_for(3, 20))
+    written = job.run_batch(job.read_json(path))
+    assert set(written) == {"s0", "s1", "s2"}
+    assert written["s0"] == written["s1"] != written["s2"]
+    out = spark.read.parquet(written["s0"])
+    got = sorted(r["seq"] for r in out.collect())
+    assert got == sorted(e["seq"] for e in _events_for(2, 20))
+    assert spark.read.parquet(written["s2"]).count() == 20
+
+
+def test_failed_write_keeps_earlier_streams_catalogued(
+    spark, tmp_path, monkeypatch
+):
+    """When a stream's write fails, run_batch raises that error; the
+    streams written before it have landed and their partitions are in the
+    catalog, and the batch cache is released after the last write."""
+    from rtdl_spark.ingest import IngestJob
+
+    for db in ("r0", "r1", "r2"):
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    reg = _multi_root_registry(tmp_path, ["r0", "r1", "r2"])
+    job = IngestJob(spark, reg, str(tmp_path / "lake"),
+                    fixed_time="2024-02-15 00:00:00")
+    good, bad, after = [cfg for cfg, _c in job._route_conds()]
+    events = []
+    write = job.write_stream_batch
+
+    def flaky_write(cfg, df):
+        events.append(("write", cfg.stream_id))
+        if cfg is bad:
+            raise RuntimeError(f"boom {cfg.stream_id}")
+        return write(cfg, df)
+
+    path = write_events(tmp_path, _events_for(3, 5))
+    raw = job.read_json(path)
+    unpersist = type(raw).unpersist
+
+    def tracked_unpersist(self, *a, **kw):
+        events.append(("unpersist", None))
+        return unpersist(self, *a, **kw)
+
+    monkeypatch.setattr(job, "write_stream_batch", flaky_write)
+    monkeypatch.setattr(type(raw), "unpersist", tracked_unpersist)
+    with pytest.raises(RuntimeError, match=f"boom {bad.stream_id}"):
+        job.run_batch(raw)
+    assert events == [
+        ("write", good.stream_id), ("write", bad.stream_id),
+        ("unpersist", None),
+    ]
+    rows = spark.sql(
+        f"SELECT seq, rtdl_bucket FROM {good.folder_name}.{good.message_type}"
+    ).collect()
+    assert sorted((r["seq"], r["rtdl_bucket"]) for r in rows) == [
+        (int(good.stream_id[1:]) * 1000 + k, "2024-02-15") for k in range(5)
+    ]

@@ -131,6 +131,120 @@ def test_stream_ingest_foreachbatch(spark, tmp_path):
     assert out.select("rtdl_table").distinct().collect()[0][0] == "clicks"
 
 
+def test_stream_ingest_batch_job_shape(spark, tmp_path, monkeypatch):
+    """Pins the streaming micro-batch shape: one probe job plus one write
+    job per routed stream; the small-plan scope turns AQE off on the
+    batch's own session while the caller's session keeps it on; catalog
+    partitions are added only for buckets the job has not added yet."""
+    import contextlib
+    import time
+
+    from rtdl_spark.config import StreamConfig, StreamRegistry
+    from rtdl_spark.ingest import IngestJob
+    from rtdl_spark.ingest import pipeline
+    from rtdl_spark.streaming import stream_ingest_json
+
+    aqe = "spark.sql.adaptive.enabled"
+    folders = [f"shapeFolder{i}" for i in range(4)]
+    for folder in folders:
+        spark.sql(f"DROP DATABASE IF EXISTS {folder} CASCADE")
+    reg = StreamRegistry(str(tmp_path / "configs"))
+    for i, folder in enumerate(folders):
+        reg.create(
+            StreamConfig(
+                stream_id=f"s{i}",
+                message_type=f"t{i}",
+                folder_name=folder,
+                partition_time_id=2,
+                functions="ingester,pii-detection" if i == 3 else "ingester",
+            )
+        )
+    src = tmp_path / "stream_src"
+    src.mkdir()
+
+    def add_file(name):
+        with open(src / name, "w") as f:
+            for i in range(4):
+                for k in range(10):
+                    f.write(json.dumps({"stream_id": f"s{i}", "k": k}) + "\n")
+
+    job = IngestJob(
+        spark, reg, str(tmp_path / "lake"), fixed_time="2024-03-01 00:00:00"
+    )
+    sc = spark.sparkContext
+    groups, scope_aqe, catalog_calls = [], [], []
+    run_batch = job.run_batch
+
+    def counted_run_batch(batch_df, *a, **kw):
+        gid = f"shape-batch-{len(groups)}"
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(gid, gid)
+        groups.append(gid)
+        catalog_calls.append([])
+        try:
+            return run_batch(batch_df, *a, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+
+    scope = pipeline._small_plan_scope
+
+    @contextlib.contextmanager
+    def watched_scope(batch_spark, involved_bytes):
+        with scope(batch_spark, involved_bytes) as on:
+            scope_aqe.append(
+                (on, batch_spark.conf.get(aqe), spark.conf.get(aqe))
+            )
+            yield on
+
+    def recorded(name, fn):
+        def wrapper(*a, **kw):
+            catalog_calls[-1].append((name, kw.get("partitions", a[-1])))
+            return fn(*a, **kw)
+        return wrapper
+
+    monkeypatch.setattr(job, "run_batch", counted_run_batch)
+    monkeypatch.setattr(pipeline, "_small_plan_scope", watched_scope)
+    monkeypatch.setattr(pipeline, "register_lake_table", recorded(
+        "register", pipeline.register_lake_table))
+    monkeypatch.setattr(pipeline, "add_lake_partitions", recorded(
+        "add", pipeline.add_lake_partitions))
+
+    schema = "stream_id string, k bigint"
+
+    def run(ckpt):
+        q = stream_ingest_json(job, str(src), schema, ckpt,
+                               trigger_once=True, max_files_per_trigger=1)
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    ckpt = str(tmp_path / "ckpt")
+    add_file("b1.json")
+    add_file("b2.json")
+    run(ckpt)
+    job.fixed_time = "2024-03-02 00:00:00"  # the next batch opens a bucket
+    add_file("b3.json")
+    run(ckpt)
+
+    time.sleep(0.5)  # let the listener bus deliver the last job events
+    tracker = sc.statusTracker()
+    assert [len(tracker.getJobIdsForGroup(g)) for g in groups] == [5, 5, 5]
+    assert scope_aqe and all(
+        on and batch == "false" and caller == "true"
+        for on, batch, caller in scope_aqe
+    )
+    assert spark.conf.get(aqe) == "true"
+    registered = sorted(p for name, p in catalog_calls[0])
+    assert [name for name, _p in catalog_calls[0]] == ["register"] * 4
+    assert registered == [[(f"t{i}", "2024-03-01")] for i in range(4)]
+    assert catalog_calls[1] == []
+    assert sorted(catalog_calls[2]) == [
+        ("add", [(f"t{i}", "2024-03-02")]) for i in range(4)
+    ]
+    for i, folder in enumerate(folders):
+        n = spark.sql(f"SELECT count(*) AS n FROM {folder}.t{i}").collect()
+        assert n[0]["n"] == 30
+
+
 def test_stream_stateful_user_totals_matches_batch(spark, sf_dir, events_stream):
     """The applyInPandasWithState running totals, after one availableNow
     pass, must equal the batch groupBy on the same data (one update row per
