@@ -182,22 +182,6 @@ def sanitize_identifier(identifier: str) -> str:
     return re.sub(r"[^A-Za-z0-9_]", "_", identifier)
 
 
-def register_versioned_view(
-    spark: SparkSession,
-    table_obj,
-    view_name: str,
-    as_of: int | None = None,
-) -> None:
-    """Expose a VersionedTable snapshot as a temp view so plain SQL users
-    query it like any catalog table (the Dremio-registration parity for
-    versioned data): ``register_versioned_view(spark, vt, "orders_v3",
-    as_of=3)`` then ``spark.sql("SELECT ... FROM orders_v3")``. The view
-    captures the version list at registration time — re-register after
-    new commits for a fresher snapshot (same semantics as a catalog
-    pointer update)."""
-    table_obj.snapshot(as_of=as_of).createOrReplaceTempView(view_name)
-
-
 def register_delta_view(
     spark: SparkSession,
     table_dir: str,
@@ -205,33 +189,19 @@ def register_delta_view(
     version: int | None = None,
     timestamp=None,
 ) -> None:
-    """Expose a Delta table (read via delta-spark when present, else the
-    NATIVE log-replay reader) as a temp view for plain SQL users —
-    optionally pinned to a version or a commit timestamp:
-    ``register_delta_view(spark, path, "events_v3", version=3)`` then
-    ``spark.sql("SELECT ... FROM events_v3")``. Like every catalog
-    pointer, the view captures the snapshot's file list at registration
-    time — re-register after new commits for a fresher snapshot. The
-    underlying scan is ordinary parquet, so pushdown/pruning work
-    through the view."""
-    from rtdl_spark.sources.readers import delta_available, read_delta
+    """Expose a Delta table (read by the native log-replay reader) as a
+    temp view for plain SQL users — optionally pinned to a version or a
+    commit timestamp: ``register_delta_view(spark, path, "events_v3",
+    version=3)`` then ``spark.sql("SELECT ... FROM events_v3")``. Like
+    every catalog pointer, the view captures the snapshot's file list at
+    registration time — re-register after new commits for a fresher
+    snapshot. The underlying scan is ordinary parquet, so
+    pushdown/pruning work through the view."""
+    from rtdl_spark.sources.delta_reader import read_delta_native
 
-    if timestamp is not None:
-        if version is not None:
-            raise ValueError("pass version OR timestamp, not both")
-        if delta_available(spark):  # pragma: no cover - delta not in image
-            df = (
-                spark.read.format("delta")
-                .option("timestampAsOf", str(timestamp))
-                .load(table_dir)
-            )
-        else:
-            from rtdl_spark.sources.delta_reader import read_delta_native
-
-            df = read_delta_native(spark, table_dir, timestamp=timestamp)
-    else:
-        df = read_delta(spark, table_dir, version=version)
-    df.createOrReplaceTempView(view_name)
+    read_delta_native(
+        spark, table_dir, version=version, timestamp=timestamp
+    ).createOrReplaceTempView(view_name)
 
 
 def register_masked_view(

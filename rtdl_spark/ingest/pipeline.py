@@ -378,17 +378,16 @@ class IngestJob:
 
     def _delta_append(self, cfg: StreamConfig, df: DataFrame) -> DataFrame:
         """deltawriter parity (delta_writer.py:81-98): append the batch to
-        <root>/<db>/<table> as a REAL Delta table. With delta-spark on the
-        classpath that is the library writer; without it (this image) the
-        native protocol writer emits the same parquet files PLUS the JSON
-        commit log (sources/delta_writer.py) — the directory stays
-        readable as plain parquet (the log is '_'-hidden) and becomes
-        readable by any Delta client, closing A18's write direction."""
-        from rtdl_spark.sources.readers import write_delta
+        <root>/<db>/<table> as a REAL Delta table. The native protocol
+        writer emits the parquet files PLUS the JSON commit log
+        (sources/delta_writer.py) — the directory stays readable as plain
+        parquet (the log is '_'-hidden) and by any Delta client, closing
+        A18's write direction."""
+        from rtdl_spark.sources.delta_writer import write_delta_native
 
         db = cfg.folder_name or f"s_{cfg.stream_id}"
         base = os.path.join(self.lake_root, "_delta", db)
-        write_delta(
+        write_delta_native(
             df.sparkSession,
             df.drop(TABLE_COL, BUCKET_COL),
             base,

@@ -1,67 +1,80 @@
-"""Incrementally maintained materialized aggregate views over a
-VersionedTable — the lakehouse MV refresh loop, composed from two existing
-primitives: the versioned table's commit log says WHICH rows are new, and
+"""Incrementally maintained materialized aggregate views over a Delta
+table — the lakehouse MV refresh loop, composed from two existing
+primitives: the source's commit log says WHICH rows are new, and
 ``merge_aggregates`` folds their (tiny) partial aggregate into the
 persisted rollup.
 
 Refresh cost therefore tracks the DELTA, not the table: appending a batch
-to a 100 TB fact table and refreshing a rollup re-reads only that batch's
-version directories. An ``overwrite`` commit invalidates the increment
-(rows may have vanished), so refresh falls back to one full recompute —
-the same rule Delta/materialized-view engines apply when the source
-history is rewritten.
+to a 100 TB fact table and refreshing a rollup re-reads only the files
+that batch's commits added. A commit that removes data (overwrite,
+DELETE, UPDATE, MERGE — any ``remove`` with ``dataChange: true``)
+invalidates the increment, and so does a commit that log cleanup has
+already dropped; refresh then falls back to one full recompute — the
+same rule Delta/materialized-view engines apply when the source history
+is rewritten. OPTIMIZE commits (``dataChange: false`` only) change no
+rows and stay on the incremental path. The decision reads only the
+commit JSON, never data.
 
-State layout (all control-plane via sources/fsutil — object-store-safe):
-  <dir>/state_v=<K>/   the rollup as of source version K (parquet)
-  <dir>/_mv_commits/<K>.done   marker: state_v=K is complete
-
-Marker-atomic like VersionedTable itself: a crashed refresh leaves a
-half-written state dir that is never read; the next refresh redoes it.
+The view's state is itself a Delta table: each refresh overwrites it in
+one commit carrying ``txn=(app_id, source_version)``, so the absorbed
+source version is the table's own SetTransaction watermark
+(``last_txn_version``). A crashed refresh commits nothing and the next
+one redoes it; readers of the previous state keep reading its files,
+which the overwrite only tombstones. ``vacuum_delta_native`` on the view
+directory reaps superseded state files.
 """
 
 from __future__ import annotations
+
+import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rtdl_spark.operators.merge import merge_aggregates
-from rtdl_spark.operators.versioned import VersionedTable
-from rtdl_spark.sources import fsutil
-
-_COMMITS = "_mv_commits"
+from rtdl_spark.sources.delta_reader import (
+    _commit_versions,
+    _log_dir,
+    _read_json_lines,
+    last_txn_version,
+    read_delta_native,
+    read_table_changes_cdf,
+)
+from rtdl_spark.sources.delta_writer import write_delta_native
 
 
 class MaterializedAggView:
-    """A persisted groupBy-sum rollup of a VersionedTable, refreshed
-    incrementally. ``sum_cols`` maps output column -> source expression
-    (SQL string) summed per key; a row count ``n`` is always maintained,
-    so averages derive downstream (sum/n) without extra state."""
+    """A persisted groupBy-sum rollup of the Delta table at
+    ``source_dir``, refreshed incrementally. ``sum_cols`` maps output
+    column -> source expression (SQL string) summed per key; a row count
+    ``n`` is always maintained, so averages derive downstream (sum/n)
+    without extra state."""
 
     def __init__(
         self,
-        source: VersionedTable,
+        spark: SparkSession,
+        source_dir: str,
         view_dir: str,
         keys: list[str],
         sum_cols: dict[str, str],
     ) -> None:
-        self.source = source
-        self.spark: SparkSession = source.spark
+        self.spark = spark
+        self.source = source_dir.rstrip("/")
         self.root = view_dir.rstrip("/")
         self.keys = list(keys)
         self.sum_cols = dict(sum_cols)
+        # keyed by source: a view re-pointed at another table never
+        # mistakes its old watermark for progress on the new one
+        self.app_id = f"matview:{self.source}"
 
     # -- state bookkeeping -------------------------------------------------
     def refreshed_version(self) -> int | None:
         """Latest source version the view has fully absorbed."""
-        names = fsutil.list_names(self.spark, f"{self.root}/{_COMMITS}")
-        vs = [int(n.split(".", 1)[0]) for n in names if n.endswith(".done")]
-        return max(vs) if vs else None
+        return last_txn_version(self.spark, self.root, self.app_id)
 
     def frame(self) -> DataFrame:
-        v = self.refreshed_version()
-        if v is None:
-            raise ValueError(f"view at {self.root} has no refreshed state")
-        return self.spark.read.parquet(f"{self.root}/state_v={v}")
+        """The rollup as of the last refresh (raises before the first)."""
+        return read_delta_native(self.spark, self.root)
 
     # -- refresh -----------------------------------------------------------
     def _partial(self, rows: DataFrame) -> DataFrame:
@@ -73,53 +86,50 @@ class MaterializedAggView:
             F.count(F.lit(1)).alias("n"),
         )
 
+    def _append_only(self, logged: list[int], done: int, target: int) -> bool:
+        """True when every source commit in (done, target] is still in
+        the log and removes no data."""
+        have = set(logged)
+        for v in range(done + 1, target + 1):
+            if v not in have:
+                return False
+            path = posixpath.join(_log_dir(self.source), f"{v:020d}.json")
+            for action in _read_json_lines(self.spark, path):
+                if "remove" in action and action["remove"].get(
+                    "dataChange", True
+                ):
+                    return False
+        return True
+
     def refresh(self) -> int:
         """Bring the view up to the source's latest version; returns that
-        version. Increment path when every new commit is an append;
-        full recompute when an overwrite appeared (or first refresh)."""
-        target = self.source.latest_version()
-        if target is None:
-            raise ValueError("source table has no committed versions")
+        version. Increment path when every new commit only adds data;
+        full recompute otherwise (or on the first refresh)."""
+        logged = _commit_versions(self.spark, self.source)
+        if not logged:
+            raise ValueError(f"source table {self.source} has no commits")
+        target = logged[-1]
         done = self.refreshed_version()
         if done == target:
             return target
 
-        history = self.source.history()
-        new_commits = [(v, k) for v, k in history if done is None or v > done]
-        incremental = done is not None and all(
-            k == "append" for _, k in new_commits
-        )
-        if incremental:
-            delta = self.spark.read.option(
-                "basePath", self.source.root
-            ).parquet(
-                *[f"{self.source.root}/v={v}" for v, _ in new_commits]
-            ).drop("v")
+        if done is not None and self._append_only(logged, done, target):
+            inserts = read_table_changes_cdf(
+                self.spark, self.source, done + 1, target,
+                allow_unrecorded=True,
+            ).filter(F.col("_change_type") == "insert")
             state = merge_aggregates(
                 self.frame(),
-                self._partial(delta),
+                self._partial(inserts),
                 self.keys,
                 list(self.sum_cols),
             )
         else:
-            state = self._partial(self.source.snapshot(as_of=target))
-
-        out = f"{self.root}/state_v={target}"
-        state.write.mode("overwrite").parquet(out)
-        fsutil.touch(self.spark, f"{self.root}/{_COMMITS}/{target}.done")
+            state = self._partial(
+                read_delta_native(self.spark, self.source, version=target)
+            )
+        write_delta_native(
+            self.spark, state, self.root, mode="overwrite",
+            txn=(self.app_id, target),
+        )
         return target
-
-    def vacuum(self) -> None:
-        """Drop all but the newest committed state generation."""
-        keep = self.refreshed_version()
-        names = fsutil.list_names(self.spark, self.root)
-        for name in names:
-            if name.startswith("state_v=") and name != f"state_v={keep}":
-                v = name.split("=", 1)[1]
-                if fsutil.exists(
-                    self.spark, f"{self.root}/{_COMMITS}/{v}.done"
-                ):
-                    fsutil.delete(self.spark, f"{self.root}/{name}")
-                    fsutil.delete(
-                        self.spark, f"{self.root}/{_COMMITS}/{v}.done"
-                    )

@@ -253,8 +253,8 @@ def delete_by_keys(
 
     Returns {"files_scanned", "files_rewritten", "rows_deleted"}.
     Caveats: file-level atomicity only (readers can observe a partially
-    deleted table mid-run — front it with VersionedTable for snapshot
-    semantics); partition directory values are preserved because each
+    deleted table mid-run — use delete_where_delta_native on a Delta
+    table for snapshot semantics); partition directory values are preserved because each
     surviving row is written back to its source file's directory.
     """
     import os

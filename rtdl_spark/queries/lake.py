@@ -667,36 +667,44 @@ def lake_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def lake_versioned_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Versioned-table time travel exercised end-to-end
-    (operators/versioned.py::VersionedTable — Delta-shaped semantics on
-    plain parquet, deltawriter parity for this container): two appends
-    build version 1, an overwrite (price bump on every %5==0 order, rows
-    %5∈(1,2) dropped, %5==3 added) becomes version 2, and the returned
-    frame is the keyed diff between the two snapshots — which the oracle
-    recomputes directly from the fixture with a full-outer join. The
-    scratch table lives on tmpfs and is deleted before returning."""
+    """Delta time travel exercised end-to-end on a native Delta table:
+    two appends build version 1, an overwrite (price bump on every
+    %5==0 order, rows %5∈(1,2) dropped, %5==3 added) becomes version 2,
+    and the returned frame is the keyed diff between the two snapshots —
+    which the oracle recomputes directly from the fixture with a
+    full-outer join. The scratch table lives on tmpfs and is deleted
+    before returning."""
     import os
     import shutil
     import tempfile
 
-    from rtdl_spark.operators.versioned import VersionedTable
+    from rtdl_spark.operators.merge import snapshot_diff
+    from rtdl_spark.sources.delta_reader import read_delta_native
+    from rtdl_spark.sources.delta_writer import write_delta_native
 
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
     workdir = tempfile.mkdtemp(prefix="rtdl_versioned_", dir=shm)
     try:
-        t = VersionedTable(spark, os.path.join(workdir, "tbl"))
-        t.append(o.filter("o_orderkey % 5 IN (0, 1)"))
-        t.append(o.filter("o_orderkey % 5 = 2"))
-        t.overwrite(
+        path = os.path.join(workdir, "tbl")
+        write_delta_native(spark, o.filter("o_orderkey % 5 IN (0, 1)"), path)
+        write_delta_native(spark, o.filter("o_orderkey % 5 = 2"), path)
+        write_delta_native(
+            spark,
             o.filter("o_orderkey % 5 IN (0, 3)").withColumn(
                 "o_totalprice",
                 F.col("o_totalprice")
                 + F.when(F.col("o_orderkey") % 5 == 0, 1.0).otherwise(0.0),
-            )
+            ),
+            path,
+            mode="overwrite",
         )
         out = (
-            t.diff(1, 2, ["o_orderkey"])
+            snapshot_diff(
+                read_delta_native(spark, path, version=1),
+                read_delta_native(spark, path, version=2),
+                ["o_orderkey"],
+            )
             .groupBy("change_type")
             .agg(F.count(F.lit(1)).alias("n"))
         )

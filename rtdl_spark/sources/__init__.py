@@ -14,25 +14,19 @@ from rtdl_spark.sources.delta_writer import (
     write_delta_native,
 )
 from rtdl_spark.sources.readers import (
-    delta_available,
     kafka_stream_reader,
     read_csv,
-    read_delta,
     read_json_envelopes,
     read_parquet,
-    write_delta,
 )
 
 __all__ = [
     "DeltaStreamDataSource",
-    "delta_available",
     "delta_history",
     "last_txn_version",
     "read_delta_native",
     "kafka_stream_reader",
     "read_csv",
-    "read_delta",
-    "write_delta",
     "delete_where_delta_native",
     "merge_into_delta_native",
     "optimize_delta_native",

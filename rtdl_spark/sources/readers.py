@@ -12,10 +12,13 @@ all of those formats natively plus CSV as a utility:
 - ``read_json_envelopes`` — batch JSON with the reference's A8 inference
                         semantics (null/empty fields dropped).
 - ``read_csv``        — header + inference, explicit schema preferred.
-- ``read_delta``      — gated: delta-spark is not in this container; the
-                        call works unchanged where it is.
 - ``kafka_stream_reader`` — builds the readStream for the reference's
-                        ingress topics; gated the same way.
+                        ingress topics; gated on the spark-sql-kafka
+                        package.
+
+Delta tables are read and written by the native protocol stack
+(``delta_reader.read_delta_native`` / ``delta_writer.write_delta_native``),
+which needs nothing beyond Spark itself.
 
 Scale notes: every reader returns a plain scan DataFrame — no ``.cache()``,
 no ``.collect()``, no repartition — so Catalyst sees the raw scan and can
@@ -95,70 +98,6 @@ def read_csv(
     else:
         reader = reader.option("inferSchema", "true")
     return reader.csv(path)
-
-
-def delta_available(spark: SparkSession) -> bool:
-    """True when the delta-spark package is on the classpath.
-
-    Must go through Class.forName: a bare ``spark._jvm.a.b.C`` attribute
-    chain NEVER raises for a missing class — py4j lazily returns a
-    JavaPackage — so the previous probe reported delta present on every
-    image (caught in round 4 when the gated delta round-trip test FAILED
-    instead of skipping)."""
-    try:
-        spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
-            "org.apache.spark.sql.delta.DeltaLog"
-        )
-        return True
-    except Exception:
-        return False
-
-
-def read_delta(spark: SparkSession, path: str, version: int | None = None) -> DataFrame:
-    """Delta scan (+ time travel), the reference's deltawriter read side
-    (delta_writer.py:97-98). Uses the real delta-spark format when it is
-    on the classpath; otherwise falls back to the NATIVE log-replay
-    reader (sources/delta_reader.py — r5: the open Delta protocol needs
-    nothing beyond Spark itself for basic reads), so a table the
-    reference's deltawriter produced is readable on this image today.
-    The native path handles column mapping in BOTH name and id modes
-    (r6: physical names / parquet field-ids resolved back to logical)
-    and rejects the rest of the advanced reader features (deletion
-    vectors, v2 checkpoints) loudly rather than scanning wrong."""
-    if not delta_available(spark):
-        from rtdl_spark.sources.delta_reader import read_delta_native
-
-        return read_delta_native(spark, path, version=version)
-    reader = spark.read.format("delta")
-    if version is not None:
-        reader = reader.option("versionAsOf", str(version))
-    return reader.load(path)
-
-
-def write_delta(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    mode: str = "append",
-    partition_by: list[str] | None = None,
-) -> None:
-    """Delta write, the reference's deltawriter write side
-    (delta_writer.py:88-94 — ``format("delta").mode("append")``). Uses
-    the real delta-spark format when on the classpath; otherwise the
-    NATIVE protocol writer (sources/delta_writer.py — r5: JSON commits +
-    classic checkpoints per the published protocol), so tables written
-    on this image are real Delta tables any Delta client can read."""
-    if delta_available(spark):  # pragma: no cover - delta not in image
-        writer = df.write.format("delta").mode(mode)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.save(path)
-        return
-    from rtdl_spark.sources.delta_writer import write_delta_native
-
-    write_delta_native(
-        spark, df, path, mode=mode, partition_by=partition_by
-    )
 
 
 def kafka_stream_reader(

@@ -15,7 +15,6 @@ from rtdl_spark.streaming.jobs import (  # noqa: F401
     stream_stateful_user_totals,
     stream_to_delta_table,
     stream_upsert_to_delta,
-    stream_to_versioned_table,
     stream_tumbling_counts,
     stream_tumbling_distinct_users,
 )

@@ -445,60 +445,6 @@ def stream_tumbling_distinct_users(
     )
 
 
-def stream_to_versioned_table(
-    spark,
-    source_dir: str,
-    schema,
-    table_root: str,
-    checkpoint_dir: str,
-    commit_log_dir: str,
-    transform=None,
-    trigger_once: bool = True,
-    matview=None,
-) -> StreamingQuery:
-    """Continuous exactly-once appends into a VersionedTable
-    (operators/versioned.py): every micro-batch becomes one committed
-    table version, so the stream's history is time-travelable and
-    diffable — the Delta-streaming-sink shape on plain parquet.
-
-    Exactly-once comes from composing two commit logs: Structured
-    Streaming's checkpoint replays an epoch whose offset commit was lost,
-    and the epoch CommitLog then SKIPS the re-delivered batch, so a
-    version is never written twice (the VersionedTable's single-writer
-    contract holds — foreachBatch serializes batches). ``transform`` is
-    an optional DataFrame→DataFrame step (the A22 chain hook) applied
-    before the append."""
-    from rtdl_spark.operators.versioned import VersionedTable
-    from rtdl_spark.streaming.commit import CommitLog, idempotent_sink
-
-    raw = spark.readStream.schema(schema).json(source_dir)
-    vt = VersionedTable(spark, table_root)
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        out = transform(batch_df) if transform is not None else batch_df
-        vt.append(out)
-
-    # The epoch marker must land immediately after vt.append(): if
-    # matview.refresh() ran inside the idempotency scope and failed AFTER
-    # the version committed, the unmarked epoch would replay and re-append
-    # the same batch as a new version (permanent duplicates). refresh() is
-    # self-idempotent via its state_v/.done markers, so it runs OUTSIDE
-    # the scope — a failed refresh simply catches up on the next trigger.
-    core = idempotent_sink(sink, CommitLog(spark, commit_log_dir))
-
-    def batch_fn(batch_df: DataFrame, epoch_id: int) -> None:
-        core(batch_df, epoch_id)
-        if matview is not None:
-            matview.refresh()
-
-    writer = raw.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def stream_to_delta_table(
     spark,
     source_dir: str,
@@ -509,6 +455,7 @@ def stream_to_delta_table(
     transform=None,
     trigger_once: bool = True,
     partition_by: list[str] | None = None,
+    matview=None,
 ) -> StreamingQuery:
     """Continuous exactly-once appends into a REAL Delta table via the
     NATIVE protocol writer (sources/delta_writer.py) — the actual Delta
@@ -518,14 +465,19 @@ def stream_to_delta_table(
     offset commit was lost) is detected by ``txn version ≤ latest`` and
     SKIPPED inside the writer, so a batch can never double-append even
     if the sink crashes between the Delta commit and the streaming
-    checkpoint. Unlike the CommitLog composition in
-    ``stream_to_versioned_table``, the idempotency marker here IS the
-    table commit itself — one atomic put-if-absent file carries both the
-    data and the progress watermark, which is why the protocol defines
-    txn actions at all (delta-io PROTOCOL.md, Transaction Identifiers).
+    checkpoint. The idempotency marker IS the table commit itself — one
+    atomic put-if-absent file carries both the data and the progress
+    watermark, which is why the protocol defines txn actions at all
+    (delta-io PROTOCOL.md, Transaction Identifiers).
 
     The result is versioned, time-travelable, OPTIMIZE/VACUUM-able, and
-    readable by any Delta client while the stream runs."""
+    readable by any Delta client while the stream runs.
+
+    ``matview`` (an ``operators.matview.MaterializedAggView`` over
+    ``table_root``) is refreshed after each batch's commit: continuous
+    rollup maintenance. A failed refresh fails the batch, but its data
+    commit already carries the epoch's txn, so the replayed epoch skips
+    the append and only the self-idempotent refresh runs again."""
     from rtdl_spark.sources.delta_writer import write_delta_native
 
     raw = spark.readStream.schema(schema).json(source_dir)
@@ -540,6 +492,8 @@ def stream_to_delta_table(
             partition_by=partition_by,
             txn=(app_id, int(epoch_id)),
         )
+        if matview is not None:
+            matview.refresh()
 
     writer = raw.writeStream.foreachBatch(sink).option(
         "checkpointLocation", checkpoint_dir

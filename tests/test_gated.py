@@ -5,7 +5,8 @@ SKIPS with an explicit reason when it is absent — so the per-round
 environment probe is a committed, self-reporting artifact instead of an
 ad-hoc script, and the real integration coverage lights up automatically
 the round a package/broker appears. The code paths under test are the
-exact production entry points (read_delta / _delta_append, the Kafka
+exact production entry points (read_delta_native / write_delta_native
+against tables the delta-spark library wrote or reads, the Kafka
 reader/sink builders, transformWithStateInPandas), not probe stand-ins.
 """
 
@@ -21,17 +22,29 @@ import pytest
 KAFKA_BOOTSTRAP = "localhost:9092"
 
 
-def _kafka_package_available(spark) -> bool:
+def _jvm_class_available(spark, name: str) -> bool:
     # Class.forName, not a bare _jvm attribute chain — py4j resolves
-    # missing classes to lazy JavaPackage objects without raising (the
-    # delta_available bug, rtdl_spark/sources/readers.py)
+    # missing classes to lazy JavaPackage objects without raising, so an
+    # attribute probe reports every package present
     try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.spark.sql.kafka010.KafkaSourceProvider"
-        )
+        spark._jvm.java.lang.Class.forName(name)
         return True
     except Exception:
         return False
+
+
+def _kafka_package_available(spark) -> bool:
+    return _jvm_class_available(
+        spark, "org.apache.spark.sql.kafka010.KafkaSourceProvider"
+    )
+
+
+def _delta_package_available(spark) -> bool:
+    """True when the delta-spark library (the cross-check reference) is
+    on the classpath."""
+    return _jvm_class_available(
+        spark, "org.apache.spark.sql.delta.DeltaLog"
+    )
 
 
 def _kafka_broker_reachable(host_port: str, timeout: float = 1.0) -> bool:
@@ -45,12 +58,12 @@ def _kafka_broker_reachable(host_port: str, timeout: float = 1.0) -> bool:
 
 @pytest.mark.gated
 def test_delta_format_round_trip(spark, tmp_path):
-    """Real Delta append + scan + time travel (A18) — the parquet
-    fallback's big brother. Exercises read_delta and the ingest writer's
-    delta branch against an actual _delta_log."""
-    from rtdl_spark.sources.readers import delta_available, read_delta
+    """Real Delta append + scan + time travel (A18): the native reader,
+    latest and ``version=0``, against a table the delta-spark library
+    wrote."""
+    from rtdl_spark.sources.delta_reader import read_delta_native
 
-    if not delta_available(spark):
+    if not _delta_package_available(spark):
         pytest.skip(
             "delta-spark not on the classpath in this image "
             "(probe: spark._jvm...delta.DeltaLog) — the NATIVE protocol "
@@ -62,8 +75,8 @@ def test_delta_format_round_trip(spark, tmp_path):
     path = str(tmp_path / "dtab")
     spark.range(5).write.format("delta").save(path)
     spark.range(5, 8).write.format("delta").mode("append").save(path)
-    assert read_delta(spark, path).count() == 8
-    assert read_delta(spark, path, version=0).count() == 5
+    assert read_delta_native(spark, path).count() == 8
+    assert read_delta_native(spark, path, version=0).count() == 5
 
 
 @pytest.mark.gated
@@ -73,9 +86,7 @@ def test_delta_native_writer_library_interop(spark, tmp_path):
     (both versions + after OPTIMIZE), and a library-written table must
     replay through the native reader — the strongest possible proof the
     emitted log is the public protocol, not a dialect."""
-    from rtdl_spark.sources.readers import delta_available
-
-    if not delta_available(spark):
+    if not _delta_package_available(spark):
         pytest.skip(
             "delta-spark not on the classpath — native-writer interop "
             "cross-validation activates when an image ships it"
@@ -224,9 +235,7 @@ def test_delta_dv_library_interop(spark, tmp_path):
     in-image conformance tests (JVM RoaringBitmap for the bitmaps,
     stdlib b85 for the codec, strict CRC/magic/cardinality checks for
     the framing) cannot provide without the real writer."""
-    from rtdl_spark.sources.readers import delta_available
-
-    if not delta_available(spark):
+    if not _delta_package_available(spark):
         pytest.skip(
             "delta-spark absent — DV framing validated in-image via "
             "org.roaringbitmap conformance + stdlib-b85 parity + strict "
@@ -257,9 +266,7 @@ def test_v2_checkpoint_interop_with_delta_spark(spark, tmp_path):
     delta-spark write a table with a V2 checkpoint
     (delta.checkpointPolicy=v2) and assert our native reader
     reconstructs the identical snapshot through the sidecars."""
-    from rtdl_spark.sources.readers import delta_available
-
-    if not delta_available(spark):
+    if not _delta_package_available(spark):
         pytest.skip(
             "delta-spark absent — the v2-checkpoint reader is validated "
             "in-image by hand-built conformance fixtures "
@@ -291,9 +298,7 @@ def test_identity_column_interop_with_delta_spark(spark, tmp_path):
     creates a GENERATED ALWAYS AS IDENTITY table, our native writer
     appends (generating values + advancing the watermark), delta-spark
     reads back and can keep appending without collisions."""
-    from rtdl_spark.sources.readers import delta_available
-
-    if not delta_available(spark):
+    if not _delta_package_available(spark):
         pytest.skip(
             "delta-spark absent — identity generation is validated "
             "in-image against hand-built v6 tables "
@@ -337,9 +342,7 @@ def test_v2_checkpoint_write_interop_with_delta_spark(spark, tmp_path):
     import glob as _glob
     import os as _os
 
-    from rtdl_spark.sources.readers import delta_available
-
-    if not delta_available(spark):
+    if not _delta_package_available(spark):
         pytest.skip(
             "delta-spark absent — the v2-checkpoint writer is validated "
             "in-image against the repo's own STRICT v2 reader "

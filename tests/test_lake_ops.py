@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from rtdl_spark.catalog import table
+from rtdl_spark.sources.delta_reader import delta_history, read_delta_native
 
 
 def test_salted_aggregate_matches_plain(spark, sf_dir):
@@ -559,144 +560,6 @@ def test_file_manifest_matches_filesystem(spark, sf_dir, tmp_path):
     man.unpersist()
 
 
-def test_versioned_table_time_travel_and_atomic_visibility(
-    spark, sf_dir, tmp_path
-):
-    """Appends are atomic (uncommitted dirs invisible), snapshots compose
-    versions, as-of time travel works across an overwrite, diff reports
-    the keyed change set, and compact+vacuum preserve the current state
-    while cutting history."""
-    import pytest as _pytest
-
-    from rtdl_spark.operators.versioned import VersionedTable
-
-    root = str(tmp_path / "vt")
-    t = VersionedTable(spark, root)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "source", "n_chars"
-    )
-
-    v0 = t.append(docs.filter("doc_id < 100"))
-    v1 = t.append(docs.filter("doc_id >= 100 AND doc_id < 150"))
-    assert (v0, v1) == (0, 1)
-    assert t.snapshot().count() == docs.filter("doc_id < 150").count()
-    assert t.snapshot(as_of=0).count() == docs.filter("doc_id < 100").count()
-
-    # a crashed half-write: data dir exists, no marker -> invisible
-    docs.limit(5).write.parquet(f"{root}/v=99")
-    assert t.snapshot().count() == docs.filter("doc_id < 150").count()
-    assert t.versions() == [0, 1]
-
-    # overwrite supersedes; time travel still sees the pre-base state
-    v2 = t.overwrite(docs.filter("doc_id < 20"))
-    assert t.snapshot().count() == 20
-    assert t.snapshot(as_of=1).count() == docs.filter("doc_id < 150").count()
-
-    # keyed diff across the overwrite: rows 20..149 removed, none added
-    d = t.diff(1, v2, ["doc_id"])
-    by_change = {
-        r["change_type"]: r["n"]
-        for r in d.groupBy("change_type").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert by_change.get("removed", 0) == docs.filter(
-        "doc_id >= 20 AND doc_id < 150"
-    ).count()
-    assert "added" not in by_change
-
-    v3 = t.append(docs.filter("doc_id >= 480"))
-    before = sorted(r["doc_id"] for r in t.snapshot().collect())
-    t.compact()
-    dropped = t.vacuum()
-    assert set(dropped) == {0, 1, 2, 3}
-    assert sorted(r["doc_id"] for r in t.snapshot().collect()) == before
-    with _pytest.raises(ValueError):
-        t.snapshot(as_of=v3)  # history behind the vacuum cut is gone
-
-
-def test_versioned_table_partitioned_snapshot_prunes(spark, sf_dir, tmp_path):
-    """partition_by layouts inside version dirs survive multi-version
-    snapshots (partition column readable, values intact) and a partition
-    filter prunes the scan to matching directories; history_frame
-    accounts every version's rows."""
-    from rtdl_spark.operators.versioned import VersionedTable
-    from rtdl_spark.plans.inspect import formatted_plan
-
-    root = str(tmp_path / "vt_part")
-    t = VersionedTable(spark, root, partition_by=["o_orderstatus"])
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    t.append(o.filter("o_orderkey % 2 = 0"))
-    t.append(o.filter("o_orderkey % 2 = 1"))
-
-    snap = t.snapshot()
-    assert snap.count() == o.count()
-    assert set(snap.columns) == {"o_orderkey", "o_orderstatus", "o_totalprice"}
-
-    one = snap.filter(F.col("o_orderstatus") == "F")
-    assert one.count() == o.filter("o_orderstatus = 'F'").count()
-    plan = formatted_plan(one)
-    # the filter must prune at the directory level, not post-scan
-    assert "PartitionFilters" in plan and "o_orderstatus" in plan.split(
-        "PartitionFilters"
-    )[1].split("]")[0], plan
-
-    hist = {r["version"]: r for r in t.history_frame().collect()}
-    assert hist[0]["n_rows"] == o.filter("o_orderkey % 2 = 0").count()
-    assert hist[1]["n_rows"] == o.filter("o_orderkey % 2 = 1").count()
-    assert all(r["kind"] == "append" for r in hist.values())
-
-
-def test_register_versioned_view_sql_access(spark, sf_dir, tmp_path):
-    """A registered snapshot view answers SQL, is pinned to the version
-    list at registration, and re-registering picks up new commits."""
-    from rtdl_spark.catalog import register_versioned_view
-    from rtdl_spark.operators.versioned import VersionedTable
-
-    t = VersionedTable(spark, str(tmp_path / "vt_view"))
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_totalprice"
-    )
-    t.append(o.limit(100))
-    register_versioned_view(spark, t, "vt_probe")
-    assert spark.sql("SELECT COUNT(*) FROM vt_probe").first()[0] == 100
-
-    t.append(o.limit(300).exceptAll(o.limit(100)))
-    # view still pinned to registration-time versions
-    assert spark.sql("SELECT COUNT(*) FROM vt_probe").first()[0] == 100
-    register_versioned_view(spark, t, "vt_probe")
-    assert spark.sql("SELECT COUNT(*) FROM vt_probe").first()[0] == 300
-    spark.catalog.dropTempView("vt_probe")
-
-
-def test_versioned_table_schema_drift_and_collision_guard(
-    spark, sf_dir, tmp_path
-):
-    """A drifted append's new column surfaces under merge_schema=True
-    (nullable for old versions); racing on an existing marker raises
-    instead of silently clobbering."""
-    import pytest as _pytest
-
-    from rtdl_spark.operators.versioned import VersionedTable
-    from rtdl_spark.sources import fsutil
-
-    t = VersionedTable(spark, str(tmp_path / "vt_drift"))
-    t.append(spark.createDataFrame([(1, "a")], "id long, s string"))
-    t.append(
-        spark.createDataFrame(
-            [(2, "b", 9.5)], "id long, s string, extra double"
-        )
-    )
-    merged = t.snapshot(merge_schema=True)
-    assert set(merged.columns) == {"id", "s", "extra"}
-    vals = {r["id"]: r["extra"] for r in merged.collect()}
-    assert vals == {1: None, 2: 9.5}
-
-    # CAS marker: second create of the same version marker must fail
-    with _pytest.raises(Exception):
-        fsutil.touch_new(spark, t._marker(0, "append"))
-
-
 def test_overwrite_partitions_dynamic(spark, tmp_path):
     """Dynamic partition overwrite replaces only the partitions present in
     the incoming frame; untouched partitions survive byte-for-byte."""
@@ -778,24 +641,34 @@ def test_register_masked_view_rejects_unknown_columns(spark):
 
 
 def test_materialized_agg_view_incremental_and_rebuild(spark, tmp_path):
-    """MaterializedAggView: first refresh builds, append-only refreshes
-    fold ONLY the delta (and equal a full recompute), an overwrite commit
-    forces a rebuild, vacuum keeps one state generation."""
-    from rtdl_spark.operators.matview import MaterializedAggView
-    from rtdl_spark.operators.versioned import VersionedTable
+    """MaterializedAggView over a Delta source: first refresh builds,
+    append-only refreshes fold ONLY the delta (and equal a full
+    recompute), an overwrite commit forces a rebuild, and vacuuming the
+    view leaves only the live state files."""
+    import os
 
-    vt = VersionedTable(spark, str(tmp_path / "fact"))
-    mv = MaterializedAggView(
-        vt, str(tmp_path / "mv"), ["k"], {"total": "val", "wide": "val * 2"}
+    from rtdl_spark.operators.matview import MaterializedAggView
+    from rtdl_spark.sources.delta_reader import snapshot_state
+    from rtdl_spark.sources.delta_writer import (
+        vacuum_delta_native,
+        write_delta_native,
     )
 
-    def batch(rows):
-        return spark.createDataFrame(rows, "k string, val long")
+    src, view = str(tmp_path / "fact"), str(tmp_path / "mv")
+    mv = MaterializedAggView(
+        spark, src, view, ["k"], {"total": "val", "wide": "val * 2"}
+    )
+
+    def write(rows, mode="append"):
+        write_delta_native(
+            spark, spark.createDataFrame(rows, "k string, val long"), src,
+            mode=mode,
+        )
 
     def recompute():
         return {
             (r.k): (r.total, r.wide, r.n)
-            for r in vt.snapshot()
+            for r in read_delta_native(spark, src)
             .groupBy("k")
             .agg(
                 F.sum("val").alias("total"),
@@ -805,68 +678,108 @@ def test_materialized_agg_view_incremental_and_rebuild(spark, tmp_path):
             .collect()
         }
 
-    vt.append(batch([("a", 1), ("b", 2)]))
+    write([("a", 1), ("b", 2)])
     v1 = mv.refresh()
     assert {(r.k): (r.total, r.wide, r.n) for r in mv.frame().collect()} == recompute()
 
-    vt.append(batch([("b", 10), ("c", 5)]))
+    write([("b", 10), ("c", 5)])
     v2 = mv.refresh()
     assert v2 > v1
     assert {(r.k): (r.total, r.wide, r.n) for r in mv.frame().collect()} == recompute()
     # idempotent when current
     assert mv.refresh() == v2
+    assert mv.refreshed_version() == v2
 
     # overwrite invalidates increments -> rebuild still correct
-    vt.overwrite(batch([("z", 7), ("z", 3)]))
+    write([("z", 7), ("z", 3)], mode="overwrite")
     mv.refresh()
     got = {(r.k): (r.total, r.wide, r.n) for r in mv.frame().collect()}
     assert got == recompute() == {"z": (10, 20, 2)}
 
-    mv.vacuum()
-    import os
-
-    states = [
-        n for n in os.listdir(tmp_path / "mv") if n.startswith("state_v=")
-    ]
-    assert len(states) == 1
-
-
-def test_versioned_table_rejects_reserved_column(spark, tmp_path):
-    from rtdl_spark.operators.versioned import VersionedTable
-
-    vt = VersionedTable(spark, str(tmp_path / "rescol"))
-    df = spark.createDataFrame([(1, 2)], "k long, v long")
-    import pytest as _pt
-
-    with _pt.raises(ValueError, match="reserved"):
-        vt.append(df)
+    vacuum_delta_native(spark, view, retain_ms=0)
+    _, live, _ = snapshot_state(spark, view)
+    on_disk = sorted(
+        os.path.relpath(os.path.join(d, f), view)
+        for d, _, fs in os.walk(view)
+        if "_delta_log" not in d
+        for f in fs
+        if f.endswith(".parquet")
+    )
+    assert on_disk == sorted(p for p, _ in live)
 
 
-def test_versioned_table_tags(spark, tmp_path):
-    """tag_version/resolve_tag: a named release pins a version for
-    time travel; re-tagging the same name errors (immutable releases)."""
-    import pytest as _pt
-
-    from rtdl_spark.operators.versioned import (
-        VersionedTable,
-        resolve_tag,
-        tag_version,
+def test_materialized_agg_view_mixed_commits(spark, tmp_path, monkeypatch):
+    """Refresh across commits that are not plain appends: an OPTIMIZE
+    commit (only dataChange=false actions) stays on the incremental
+    path, a DELETE commit forces the full recompute, and in both cases
+    the view equals a fresh groupBy over the source."""
+    from rtdl_spark.operators import matview
+    from rtdl_spark.sources.delta_writer import (
+        delete_where_delta_native,
+        optimize_delta_native,
+        write_delta_native,
     )
 
-    vt = VersionedTable(spark, str(tmp_path / "tagged"))
-    v0 = vt.append(spark.createDataFrame([(1,)], "k long"))
-    v1 = vt.append(spark.createDataFrame([(2,)], "k long"))
-    assert tag_version(vt, "train-v1", v0) == v0
-    assert tag_version(vt, "latest-release") == v1
-    assert resolve_tag(vt, "train-v1") == v0
-    assert vt.snapshot(as_of=resolve_tag(vt, "train-v1")).count() == 1
-    assert vt.snapshot(as_of=resolve_tag(vt, "latest-release")).count() == 2
-    with _pt.raises(Exception):
-        tag_version(vt, "train-v1", v1)  # immutable
-    with _pt.raises(KeyError):
-        resolve_tag(vt, "nope")
-    with _pt.raises(ValueError):
-        tag_version(vt, "bad/name", v0)
+    src, view = str(tmp_path / "fact"), str(tmp_path / "mv")
+    mv = matview.MaterializedAggView(spark, src, view, ["k"], {"total": "val"})
+    calls = []
+
+    def spy(name):
+        real = getattr(matview, name)
+
+        def wrapped(spark_, table_dir, *a, **kw):
+            calls.append((name, table_dir.rstrip("/")))
+            return real(spark_, table_dir, *a, **kw)
+
+        monkeypatch.setattr(matview, name, wrapped)
+
+    spy("read_table_changes_cdf")
+    spy("read_delta_native")
+
+    def write(rows):
+        write_delta_native(
+            spark, spark.createDataFrame(rows, "k string, val long"), src
+        )
+
+    def fresh():
+        return {
+            r.k: (r.total, r.n)
+            for r in read_delta_native(spark, src)
+            .groupBy("k")
+            .agg(F.sum("val").alias("total"), F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
+
+    def current():
+        return {r.k: (r.total, r.n) for r in mv.frame().collect()}
+
+    write([("a", 1), ("b", 2)])
+    mv.refresh()
+    write([("a", 3), ("c", 4)])
+    write([("b", 5)])
+    before = mv.refreshed_version()
+    optimize_delta_native(spark, src, target_file_bytes=1 << 30)
+    write([("c", 6)])
+    # the range holds the OPTIMIZE commit: its dataChange=false swap adds
+    # no rows, so the refresh folds only the appends' inserts
+    ops = [h["operation"] for h in delta_history(spark, src)[before + 1:]]
+    assert "OPTIMIZE" in ops
+
+    calls.clear()
+    mv.refresh()
+    assert ("read_table_changes_cdf", src) in calls
+    assert ("read_delta_native", src) not in calls
+    assert current() == fresh()
+
+    delete_where_delta_native(spark, src, "k = 'a'")
+    write([("d", 7)])
+    calls.clear()
+    target = mv.refresh()
+    assert ("read_table_changes_cdf", src) not in calls
+    assert ("read_delta_native", src) in calls
+    assert target == mv.refreshed_version()
+    assert current() == fresh()
+    assert "a" not in current()
 
 
 def test_delete_by_keys_rewrites_only_affected_files(spark, tmp_path):

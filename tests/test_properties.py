@@ -468,50 +468,6 @@ def test_assign_sequential_ids_matches_enumerate_model(spark, keys):
     assert got == want
 
 
-@settings(max_examples=5, deadline=None)
-@given(
-    st.lists(
-        st.sampled_from(["append", "overwrite", "compact"]),
-        min_size=1,
-        max_size=6,
-    )
-)
-def test_versioned_table_matches_log_model(spark, tmp_path_factory, ops):
-    """ANY sequence of append/overwrite/compact yields snapshots equal to
-    a pure-Python replay of the commit log (union since last base), at
-    every as-of point."""
-    from rtdl_spark.operators.versioned import VersionedTable
-
-    root = str(tmp_path_factory.mktemp("vt_prop"))
-    t = VersionedTable(spark, root)
-    log: list[tuple[str, set[int]]] = []  # (kind, ids in that version)
-    next_id = 0
-
-    for op in ops:
-        if op == "compact":
-            if not log:
-                continue
-            t.compact()
-            # model: base version holding the current live union
-            live: set[int] = set()
-            for kind, ids in log:
-                live = ids if kind == "base" else live | ids
-            log.append(("base", live))
-        else:
-            ids = {next_id, next_id + 1}
-            next_id += 2
-            df = spark.createDataFrame([(i,) for i in sorted(ids)], "id long")
-            (t.append if op == "append" else t.overwrite)(df)
-            log.append(("append" if op == "append" else "base", ids))
-
-    for v in range(len(log)):
-        live = set()
-        for kind, ids in log[: v + 1]:
-            live = ids if kind == "base" else live | ids
-        got = sorted(r["id"] for r in t.snapshot(as_of=v).collect())
-        assert got == sorted(live), (ops, v)
-
-
 @settings(max_examples=8, deadline=None)
 @given(
     st.lists(

@@ -10,10 +10,9 @@ import pytest
 
 from rtdl_spark.plans import plan_report
 from rtdl_spark.sources import (
-    delta_available,
     kafka_stream_reader,
     read_csv,
-    read_delta,
+    read_delta_native,
     read_json_envelopes,
     read_parquet,
 )
@@ -64,18 +63,15 @@ def test_read_csv_with_and_without_schema(spark, tmp_path):
 
 
 def test_read_delta_native_fallback(spark, tmp_path):
-    """Without delta-spark, read_delta now serves reads through the
-    NATIVE log-replay reader (r5) instead of raising: a protocol-valid
-    Delta table is scannable today; a path with no log still errors
+    """The NATIVE log-replay reader scans a hand-written, protocol-valid
+    Delta table with no package beyond Spark; a path with no log errors
     clearly."""
     import json
     import os
     import shutil
 
-    if delta_available(spark):
-        pytest.skip("delta present; native fallback not exercised")
     with pytest.raises(ValueError, match="no Delta log"):
-        read_delta(spark, str(tmp_path / "nope"))
+        read_delta_native(spark, str(tmp_path / "nope"))
 
     table = str(tmp_path / "dtab")
     os.makedirs(os.path.join(table, "_delta_log"))
@@ -101,8 +97,8 @@ def test_read_delta_native_fallback(spark, tmp_path):
         os.path.join(table, "_delta_log", f"{0:020d}.json"), "w"
     ) as f:
         f.write("\n".join(json.dumps(a) for a in actions) + "\n")
-    assert read_delta(spark, table).count() == 6
-    assert read_delta(spark, table, version=0).count() == 6
+    assert read_delta_native(spark, table).count() == 6
+    assert read_delta_native(spark, table, version=0).count() == 6
 
 
 def test_kafka_reader_builds_without_broker(spark):

@@ -822,55 +822,6 @@ def test_progress_metrics_capture_and_summary(spark, sf_dir, events_stream):
         spark.streams.removeListener(log)
 
 
-def test_stream_to_versioned_table_exactly_once_and_time_travel(
-    spark, sf_dir, tmp_path
-):
-    """Each micro-batch commits one table version; a wiped checkpoint
-    (forced epoch re-delivery) appends NOTHING thanks to the commit log;
-    snapshots time-travel across batches."""
-    import json as _json
-    import shutil
-
-    from rtdl_spark.operators.versioned import VersionedTable
-    from rtdl_spark.streaming import stream_to_versioned_table
-
-    src = tmp_path / "vsrc"
-    src.mkdir()
-    ckpt, log, root = (
-        str(tmp_path / "ckpt"),
-        str(tmp_path / "clog"),
-        str(tmp_path / "vtbl"),
-    )
-    schema = "event_id long, user_id long"
-
-    def wave(name, rows):
-        with open(src / name, "w") as f:
-            for r in rows:
-                f.write(_json.dumps(r) + "\n")
-
-    wave("w1.json", [{"event_id": i, "user_id": i % 3} for i in range(10)])
-    q = stream_to_versioned_table(
-        spark, str(src), schema, root, ckpt, log
-    )
-    q.awaitTermination(120)
-
-    t = VersionedTable(spark, root)
-    v_after_w1 = t.latest_version()
-    assert t.snapshot().count() == 10
-
-    wave("w2.json", [{"event_id": 100 + i, "user_id": 0} for i in range(5)])
-    q = stream_to_versioned_table(spark, str(src), schema, root, ckpt, log)
-    q.awaitTermination(120)
-    assert t.snapshot().count() == 15
-    assert t.snapshot(as_of=v_after_w1).count() == 10  # time travel
-
-    # lose the offset log -> both files re-delivered -> commit log skips
-    shutil.rmtree(ckpt)
-    q = stream_to_versioned_table(spark, str(src), schema, root, ckpt, log)
-    q.awaitTermination(120)
-    assert t.snapshot().count() == 15, "re-delivered epochs must be skipped"
-
-
 def test_stream_heavy_hitters_bounds_and_guarantee(spark, sf_dir, events_stream):
     """Sharded Misra-Gries heavy hitters: per-bucket state stays within
     capacity, every emitted candidate's [min_count, max_count] interval
@@ -924,24 +875,26 @@ def test_stream_heavy_hitters_bounds_and_guarantee(spark, sf_dir, events_stream)
 
 
 def test_stream_matview_continuous_rollup(spark, tmp_path):
-    """stream_to_versioned_table(matview=...): every micro-batch commits a
-    version AND folds it into the persisted rollup; after replay with a
-    wiped checkpoint the view still equals a full recompute (no double
-    counting — the CommitLog skips the batch, so no version, no
-    refresh delta)."""
+    """stream_to_delta_table(matview=...): every micro-batch commits a
+    Delta version AND folds it into the persisted rollup; after replay
+    with a wiped checkpoint the view still equals a full recompute (no
+    double counting — the txn watermark skips the batch, so no commit,
+    no refresh delta)."""
     import json as _json
     import shutil
 
     from rtdl_spark.operators.matview import MaterializedAggView
-    from rtdl_spark.operators.versioned import VersionedTable
-    from rtdl_spark.streaming import stream_to_versioned_table
+    from rtdl_spark.sources.delta_reader import (
+        _commit_versions,
+        read_delta_native,
+    )
+    from rtdl_spark.streaming import stream_to_delta_table
 
     src = tmp_path / "mvsrc"
     src.mkdir()
-    ckpt, log, root, mdir = (
+    ckpt, root, mdir = (
         str(tmp_path / "ck"),
-        str(tmp_path / "cl"),
-        str(tmp_path / "vt"),
+        str(tmp_path / "dt"),
         str(tmp_path / "mv"),
     )
     schema = "event_id long, user_id long, amount long"
@@ -952,20 +905,21 @@ def test_stream_matview_continuous_rollup(spark, tmp_path):
                 f.write(_json.dumps(r) + "\n")
 
     def run():
-        vt = VersionedTable(spark, root)
-        mv = MaterializedAggView(vt, mdir, ["user_id"], {"amt": "amount"})
-        q = stream_to_versioned_table(
-            spark, str(src), schema, root, ckpt, log, matview=mv
+        mv = MaterializedAggView(
+            spark, root, mdir, ["user_id"], {"amt": "amount"}
+        )
+        q = stream_to_delta_table(
+            spark, str(src), schema, root, ckpt, "mv_app", matview=mv
         )
         q.awaitTermination(120)
-        return vt, mv
+        return mv
 
     wave("a.json", [{"event_id": i, "user_id": i % 2, "amount": i}
                     for i in range(8)])
-    vt, mv = run()
+    mv = run()
     wave("b.json", [{"event_id": 100 + i, "user_id": 1, "amount": 10}
                     for i in range(3)])
-    vt, mv = run()
+    mv = run()
 
     def view():
         return {r.user_id: (r.amt, r.n) for r in mv.frame().collect()}
@@ -973,39 +927,41 @@ def test_stream_matview_continuous_rollup(spark, tmp_path):
     def full():
         return {
             r.user_id: (r.amt, r.n)
-            for r in vt.snapshot()
+            for r in read_delta_native(spark, root)
             .groupBy("user_id")
             .agg(F.sum("amount").alias("amt"), F.count(F.lit(1)).alias("n"))
             .collect()
         }
 
     assert view() == full()
-    assert mv.refreshed_version() == vt.latest_version()
+    assert mv.refreshed_version() == _commit_versions(spark, root)[-1]
 
     shutil.rmtree(ckpt)  # force re-delivery of both files
-    vt, mv = run()
-    assert view() == full()  # commit log skipped -> no double counting
+    mv = run()
+    assert view() == full()  # txn watermark skipped -> no double counting
 
 
 def test_stream_matview_refresh_failure_does_not_duplicate_versions(
     spark, tmp_path
 ):
-    """If matview.refresh() dies AFTER vt.append() committed, the epoch
-    must already be marked: the retried batch is skipped (no duplicate
-    version / rows) and the self-idempotent refresh catches up on the
-    next trigger."""
+    """If matview.refresh() dies AFTER the batch's Delta commit, the
+    epoch's txn is already in that commit: the retried batch is skipped
+    (no duplicate version / rows) and the self-idempotent refresh
+    catches up on the next trigger."""
     import json as _json
 
     from rtdl_spark.operators.matview import MaterializedAggView
-    from rtdl_spark.operators.versioned import VersionedTable
-    from rtdl_spark.streaming import stream_to_versioned_table
+    from rtdl_spark.sources.delta_reader import (
+        _commit_versions,
+        read_delta_native,
+    )
+    from rtdl_spark.streaming import stream_to_delta_table
 
     src = tmp_path / "fsrc"
     src.mkdir()
-    ckpt, log, root, mdir = (
+    ckpt, root, mdir = (
         str(tmp_path / "fck"),
-        str(tmp_path / "fcl"),
-        str(tmp_path / "fvt"),
+        str(tmp_path / "fdt"),
         str(tmp_path / "fmv"),
     )
     schema = "event_id long, user_id long, amount long"
@@ -1028,10 +984,12 @@ def test_stream_matview_refresh_failure_does_not_duplicate_versions(
             self.inner.refresh()
 
     def run():
-        vt = VersionedTable(spark, root)
-        mv = MaterializedAggView(vt, mdir, ["user_id"], {"amt": "amount"})
-        q = stream_to_versioned_table(
-            spark, str(src), schema, root, ckpt, log, matview=FlakyMV(mv)
+        mv = MaterializedAggView(
+            spark, root, mdir, ["user_id"], {"amt": "amount"}
+        )
+        q = stream_to_delta_table(
+            spark, str(src), schema, root, ckpt, "flaky_app",
+            matview=FlakyMV(mv),
         )
         try:
             q.awaitTermination(120)
@@ -1040,13 +998,13 @@ def test_stream_matview_refresh_failure_does_not_duplicate_versions(
         finally:
             if q.isActive:
                 q.stop()
-        return vt, mv
+        return mv
 
-    vt, mv = run()          # append committed, refresh exploded
-    vt, mv = run()          # replayed epoch skipped; refresh catches up
-    snap = vt.snapshot()
+    mv = run()          # append committed, refresh exploded
+    mv = run()          # replayed epoch skipped; refresh catches up
+    snap = read_delta_native(spark, root)
     assert snap.count() == 6          # no duplicated batch
-    assert vt.latest_version() == 0   # exactly one committed version (v0)
+    assert _commit_versions(spark, root) == [0]  # exactly one commit
     got = {r.user_id: (r.amt, r.n) for r in mv.frame().collect()}
     want = {
         r.user_id: (r.amt, r.n)

@@ -30,8 +30,11 @@ def main() -> None:
 
     from rtdl_spark.operators.matview import MaterializedAggView
     from rtdl_spark.operators.merge import delete_by_keys
-    from rtdl_spark.operators.versioned import VersionedTable
     from rtdl_spark.session import get_spark
+    from rtdl_spark.sources.delta_writer import (
+        vacuum_delta_native,
+        write_delta_native,
+    )
 
     spark = get_spark("rtdl_spark_soak_r5")
     spark.sparkContext.setLogLevel("ERROR")
@@ -77,13 +80,10 @@ def main() -> None:
         shutil.rmtree(root, ignore_errors=True)
 
     # ---- matview: incremental refresh vs rebuild at 100+ versions ----
-    vt = VersionedTable(spark, os.path.join(work, "fact"))
+    fact, mv_dir = os.path.join(work, "fact"), os.path.join(work, "mv")
     batch_rows = max(rows // versions, 1)
     mv = MaterializedAggView(
-        vt,
-        os.path.join(work, "mv"),
-        keys=["k"],
-        sum_cols={"total": "amount"},
+        spark, fact, mv_dir, keys=["k"], sum_cols={"total": "amount"}
     )
     t_append = t_refresh = 0.0
     for v in range(versions):
@@ -92,12 +92,12 @@ def main() -> None:
             (F.col("id") % 97).cast("double").alias("amount"),
         )
         t0 = time.perf_counter()
-        vt.append(batch.coalesce(4))
+        write_delta_native(spark, batch.coalesce(4), fact)
         t_append += time.perf_counter() - t0
         t0 = time.perf_counter()
         mv.refresh()
         t_refresh += time.perf_counter() - t0
-        mv.vacuum()
+        vacuum_delta_native(spark, mv_dir, retain_ms=0)
     print(
         f"matview: {versions} append+refresh cycles "
         f"({batch_rows} rows each): append_total={t_append:.1f}s "
@@ -109,11 +109,11 @@ def main() -> None:
         (F.col("id") % 1000).alias("k"),
         (F.col("id") % 97).cast("double").alias("amount"),
     )
-    vt.append(batch.coalesce(4))
+    write_delta_native(spark, batch.coalesce(4), fact)
     _, dt_inc, _ = jobs_and_time(mv.refresh)
     # force the rebuild path: a new view over the full history
     mv2 = MaterializedAggView(
-        vt, os.path.join(work, "mv2"), keys=["k"],
+        spark, fact, os.path.join(work, "mv2"), keys=["k"],
         sum_cols={"total": "amount"},
     )
     _, dt_full, _ = jobs_and_time(mv2.refresh)
