@@ -72,12 +72,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in names}
-
-
 def register_views(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
 ) -> None:

@@ -40,15 +40,6 @@ def mask_pii_strings(df: DataFrame) -> DataFrame:
     return out
 
 
-def mask_pii_serialized(df: DataFrame) -> DataFrame:
-    """Exact reference semantics (PiiDetectionFn.java:32-69): serialize the
-    whole row to JSON, mask the serialized text, return one masked_json
-    string column."""
-    return df.select(
-        mask_pii_col(F.to_json(F.struct(*df.columns))).alias("masked_json")
-    )
-
-
 # -- extended detectors (capability-plus over the reference's two regexes) --
 
 EMAIL_RE = r"[A-Za-z0-9._%+\-]+@[A-Za-z0-9.\-]+\.[A-Za-z]{2,}"

@@ -136,21 +136,6 @@ def executed_plan(df: DataFrame) -> str:
     )
 
 
-def executed_report(df: DataFrame) -> "PlanReport":
-    """PlanReport over the executed (AQE-final) plan."""
-    plan = executed_plan(df)
-    return PlanReport(
-        exchanges=exchange_count(plan),
-        broadcast_joins=broadcast_join_count(plan),
-        sortmerge_joins=sortmerge_join_count(plan),
-        codegen_spans=codegen_span_count(plan),
-        pushed_filters=pushed_filters(plan),
-        read_schemas=scan_read_schemas(plan),
-        has_row_python_udf=python_row_udf_present(plan),
-        plan=plan,
-    )
-
-
 def scan_output_rows(df: DataFrame) -> int | None:
     """Execute ``df`` (collect — see executed_plan's caveat) and return the
     file-scan node's ``numOutputRows`` runtime metric: the rows that

@@ -949,7 +949,7 @@ def create_delta_table_native(
         active = replacing[2]
         actions.extend(
             {"remove": r}
-            for r in _remove_actions(sorted(active), active, ts)
+            for r in _remove_actions([active[p] for p in sorted(active)], ts)
         )
     if cluster_by:
         actions.append(

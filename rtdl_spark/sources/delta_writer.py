@@ -50,6 +50,7 @@ from __future__ import annotations
 import json
 import posixpath
 import re
+import threading
 import time
 import urllib.parse
 import uuid
@@ -487,6 +488,81 @@ def _rt_materialize_cols(meta: dict) -> tuple[str, str, dict | None]:
     )
 
 
+def _num_records(a: dict) -> int | None:
+    """An add's stats.numRecords, None when unknown or unparseable."""
+    try:
+        n = json.loads(a.get("stats") or "{}").get("numRecords")
+    except Exception:
+        return None
+    return None if n is None else int(n)
+
+
+def _rt_base(a: dict, operation: str) -> int:
+    """The baseRowId a rewrite re-derives a file's row ids from. A
+    ZERO-ROW file carries no identities to preserve (schema seeds
+    predating the feature) and yields 0; anything else without a base
+    was never assigned ids — refuse, don't mint."""
+    if a.get("baseRowId") is not None:
+        return int(a["baseRowId"])
+    if _num_records(a) != 0:
+        raise ValueError(
+            f"row tracking: file {a['path']!r} carries no "
+            "baseRowId — its row ids were never assigned "
+            f"(foreign backfill missing); refusing {operation} "
+            "that would mint new identities"
+        )
+    return 0
+
+
+def _attach_row_ids(
+    spark: SparkSession,
+    df: DataFrame,
+    files: list[tuple[str, dict]],
+    mat_id: str,
+    mat_cv: str,
+    operation: str,
+) -> DataFrame:
+    """Materialize each scanned row's identity into the row-tracking
+    columns, per the spec's resolution: row id = materialized ??
+    (baseRowId + physical row index), commit version = materialized ??
+    defaultRowCommitVersion. ``files`` pairs each scanned file's raw
+    ``_FP_COL`` rendering with its add action; ``df`` carries
+    ``_FP_COL`` and ``_RI_COL``. A row whose file the join misses fails
+    loudly instead of getting a minted identity."""
+    base_df = F.broadcast(
+        local_df(
+            spark,
+            [
+                (raw, _rt_base(a, operation),
+                 a.get("defaultRowCommitVersion"))
+                for raw, a in files
+            ],
+            f"`{_FP_COL}` string, `__rt_base` bigint, `__rt_dcv` bigint",
+        )
+    )
+    base = F.when(
+        F.col("`__rt_base`").isNull(),
+        F.raise_error(
+            F.concat(
+                F.lit("rtdl: row-tracking base attach missed the scanned "
+                      "file "),
+                F.col(_FP_COL),
+            )
+        ).cast("long"),
+    ).otherwise(F.col("__rt_base"))
+    return (
+        df.join(base_df, _FP_COL, "left")
+        .withColumn(
+            mat_id,
+            F.coalesce(F.col(f"`{mat_id}`"), base + F.col(_RI_COL)),
+        )
+        .withColumn(
+            mat_cv, F.coalesce(F.col(f"`{mat_cv}`"), F.col("__rt_dcv"))
+        )
+        .drop("__rt_base", "__rt_dcv")
+    )
+
+
 def _stamp_row_tracking(
     spark: SparkSession, root: str, adds: list[dict], version: int
 ) -> dict | None:
@@ -518,12 +594,7 @@ def _stamp_row_tracking(
             )
     base = hwm + 1
     for a in adds:
-        nr = None
-        if a.get("stats"):
-            try:
-                nr = json.loads(a["stats"]).get("numRecords")
-            except Exception:
-                nr = None
+        nr = _num_records(a)
         if nr is None:
             raise ValueError(
                 "row tracking needs numRecords stats on every add "
@@ -531,7 +602,7 @@ def _stamp_row_tracking(
             )
         a["baseRowId"] = base
         a["defaultRowCommitVersion"] = version
-        base += int(nr)
+        base += nr
     return {
         "domainMetadata": {
             "domain": "delta.rowTracking",
@@ -1677,26 +1748,38 @@ def _promote_staged(
     # a pool would only add overhead).
     for d in sorted(dest_dirs):
         fsutil.mkdirs(spark, d)
-    threaded = len(moves) >= 16 and not fsutil._is_local(spark, root)
-    if threaded:
+    failed = threading.Event()
+
+    def _mv(pair):
+        """True once moved, None when skipped after an earlier failure,
+        else the failure."""
+        if failed.is_set():
+            return None
+        try:
+            if fsutil.rename(spark, *pair):
+                return True
+            err = IOError(
+                f"failed to move staged file {pair[0]} -> {pair[1]}"
+            )
+        except Exception as e:
+            err = e
+        failed.set()
+        return err
+
+    if len(moves) >= 16 and not fsutil._is_local(spark, root):
         from concurrent.futures import ThreadPoolExecutor
 
-        def _mv(pair):
-            src, dest = pair
-            if not fsutil.rename(spark, src, dest):
-                raise IOError(
-                    f"failed to move staged file {src} -> {dest}"
-                )
-
         with ThreadPoolExecutor(max_workers=min(16, len(moves))) as ex:
-            # list() propagates the first worker exception
-            list(ex.map(_mv, moves))
+            done = list(ex.map(_mv, moves))
     else:
-        for src, dest in moves:
-            if not fsutil.rename(spark, src, dest):
-                raise IOError(
-                    f"failed to move staged file {src} -> {dest}"
-                )
+        done = [_mv(m) for m in moves]
+    errors = [r for r in done if isinstance(r, Exception)]
+    if errors:
+        raise IOError(
+            f"{errors[0]}; {done.count(True)} of {len(moves)} staged "
+            f"files were already moved into {root} (unreferenced, "
+            "vacuum-reclaimable), the rest were not"
+        ) from errors[0]
     return sorted(adds, key=lambda a: a["path"])
 
 
@@ -2541,40 +2624,12 @@ def _dv_map_of(root: str, active: dict[str, dict]) -> dict[str, dict]:
     return out
 
 
-def _active_scan(
-    spark: SparkSession,
-    root: str,
-    meta: dict,
-    active: dict[str, dict],
-    subset: list[str] | None = None,
-    with_row_index: bool = False,
-    extra_long_cols: list[str] | None = None,
-    dv_by_plain: dict[str, dict] | None = None,
-) -> tuple[DataFrame | None, dict[str, dict]]:
-    """Scan the active file set (optionally restricted to ``subset``
-    plain abs paths) with partition columns injected from the log and
-    the RAW ``_metadata.file_path`` as ``_FP_COL`` → (frame | None if
-    empty, {plain abs path: add action}). The map keys are in
-    ``_plain`` form; _FP_COL is the raw (percent-escaped, scheme-
-    qualified) rendering — zero per-row computation (r11). Collected
-    _FP_COL values decode to the map's keys with ``_fp_decode_py``.
-
-    ``extra_long_cols``: physical LONG columns read under their literal
-    names outside any mapping (the row-tracking materialized columns —
-    files that predate them yield null, parquet missing-column
-    semantics).
-
-    Column mapping: files carry PHYSICAL names (name mode) / field ids
-    (id mode) and partitionValues are physically keyed — resolved back
-    to LOGICAL columns exactly like the batch reader, so DELETE/UPDATE
-    predicates and SET expressions run against logical names.
-
-    ``dv_by_plain`` (r10): {plain abs path: deletionVector descriptor}
-    — DV-carrying files drop their masked rows via the reader's
-    Arrow-batched membership test (bitmaps decoded+cached per
-    executor), so rewrites over the scan CANNOT resurrect DV-deleted
-    rows; the rewritten output then simply carries no DV (the mask is
-    materialized). DV-less files keep the untouched fast path."""
+def _scan_read_schema(
+    spark: SparkSession, meta: dict
+) -> tuple[StructType, dict[str, str], dict[str, str]]:
+    """(parquet read schema of the data columns, {logical name: column
+    to read}, {logical name: physical name}) — files carry PHYSICAL
+    names (name mode) / field ids (id mode) under column mapping."""
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
     part_cols = list(meta.get("partitionColumns") or [])
     cm = _cm_mode(meta)
@@ -2629,6 +2684,47 @@ def _active_scan(
     else:
         data_schema = StructType(data_fields)
         read_col_of = {n: n for n in phys_of}
+    return data_schema, read_col_of, phys_of
+
+
+def _active_scan(
+    spark: SparkSession,
+    root: str,
+    meta: dict,
+    active: dict[str, dict],
+    subset: list[str] | None = None,
+    with_row_index: bool = False,
+    extra_long_cols: list[str] | None = None,
+    dv_by_plain: dict[str, dict] | None = None,
+) -> tuple[DataFrame | None, dict[str, dict]]:
+    """Scan the active file set (optionally restricted to ``subset``
+    plain abs paths) with partition columns injected from the log and
+    the RAW ``_metadata.file_path`` as ``_FP_COL`` → (frame | None if
+    empty, {plain abs path: add action}). The map keys are in
+    ``_plain`` form; _FP_COL is the raw (percent-escaped, scheme-
+    qualified) rendering — zero per-row computation (r11). Collected
+    _FP_COL values decode to the map's keys with ``_fp_decode_py``.
+
+    ``extra_long_cols``: physical LONG columns read under their literal
+    names outside any mapping (the row-tracking materialized columns —
+    files that predate them yield null, parquet missing-column
+    semantics).
+
+    Column mapping: files carry PHYSICAL names (name mode) / field ids
+    (id mode) and partitionValues are physically keyed — resolved back
+    to LOGICAL columns exactly like the batch reader, so DELETE/UPDATE
+    predicates and SET expressions run against logical names.
+
+    ``dv_by_plain`` (r10): {plain abs path: deletionVector descriptor}
+    — DV-carrying files drop their masked rows via the reader's
+    Arrow-batched membership test (bitmaps decoded+cached per
+    executor), so rewrites over the scan CANNOT resurrect DV-deleted
+    rows; the rewritten output then simply carries no DV (the mask is
+    materialized). DV-less files keep the untouched fast path."""
+    schema = StructType.fromJson(json.loads(meta["schemaString"]))
+    part_cols = list(meta.get("partitionColumns") or [])
+    data_fields = [f for f in schema.fields if f.name not in part_cols]
+    data_schema, read_col_of, phys_of = _scan_read_schema(spark, meta)
     if extra_long_cols:
         data_schema = StructType(
             list(data_schema.fields)
@@ -2804,19 +2900,15 @@ def _meta_key(meta: dict) -> tuple:
 
 
 def _remove_actions(
-    affected: list[str],
-    path_to_add: dict[str, dict],
-    ts: int,
-    data_change: bool = True,
+    adds: list[dict], ts: int, data_change: bool = True
 ) -> list[dict]:
-    """Remove tombstones for the add actions behind the ``affected``
-    plain abs paths. A DV-carrying file's tombstone keeps the
-    descriptor (per spec — action reconciliation keys on path+dvId,
-    and the CDF reader's mask-diff derivation needs the BEFORE mask
-    from exactly here)."""
+    """Remove tombstones for ``adds``. A DV-carrying file's tombstone
+    keeps the descriptor (per spec — action reconciliation keys on
+    path+dvId, the commit conflict check compares it, and the CDF
+    reader's mask-diff derivation needs the BEFORE mask from exactly
+    here)."""
     out = []
-    for p in affected:
-        a = path_to_add[p]
+    for a in adds:
         out.append(
             {
                 "path": a["path"],
@@ -2833,6 +2925,15 @@ def _remove_actions(
             }
         )
     return out
+
+
+def _dv_id(action: dict) -> tuple | None:
+    """A file action's deletion-vector identity (storage type, path or
+    inline bytes, offset); None when it carries no DV."""
+    dv = action.get("deletionVector")
+    if not dv:
+        return None
+    return dv.get("storageType"), dv.get("pathOrInlineDv"), dv.get("offset")
 
 
 def _commit_rewrite(
@@ -2859,11 +2960,15 @@ def _commit_rewrite(
     A concurrent commit is COMPATIBLE iff (a) protocol still passes the
     writer checks, (b) the metaData facets this plan depends on
     (id/schema/partitioning/configuration) are unchanged, and (c) every
-    file this rewrite removes is STILL in the active set — i.e. the
-    interleaved commits were blind appends (or rewrites of disjoint
-    files). Anything else raises DeltaConcurrentWriteError, matching
-    delta-spark's ConcurrentAppend/ConcurrentDeleteRead exceptions
-    (the staged files are unreferenced and vacuum-reclaimable).
+    file this rewrite removes is STILL in the active set with the SAME
+    deletion vector — i.e. the interleaved commits were blind appends
+    (or rewrites of disjoint files). Delta reconciles files on path +
+    DV id, so a concurrent DV DELETE that re-adds a path with a new mask
+    has removed the file this plan read; committing anyway would drop
+    that mask and bring its rows back. Anything else raises
+    DeltaConcurrentWriteError, matching delta-spark's
+    ConcurrentAppend/ConcurrentDeleteRead exceptions (the staged files
+    are unreferenced and vacuum-reclaimable).
 
     Documented divergence: like Delta's default WriteSerializable level,
     a predicate rewrite (DELETE/UPDATE/MERGE) that retries over a
@@ -2871,7 +2976,7 @@ def _commit_rewrite(
     appended rows — they were not part of the snapshot this transaction
     read. Strict Serializable would abort instead; callers wanting that
     can pass max_retries=1."""
-    removed_rels = {r["path"] for r in removes}
+    planned = {r["path"]: _dv_id(r) for r in removes}
     for _attempt in range(max_retries):
         ict = _ict_value(spark, root, current, planned_meta, ts)
         actions: list[dict] = [
@@ -2918,7 +3023,10 @@ def _commit_rewrite(
                 "staged rewrite no longer matches the table (re-run; "
                 "staged files are unreferenced and vacuum-reclaimable)"
             )
-        gone = sorted(removed_rels - set(active2))
+        gone = sorted(
+            p for p, dv in planned.items()
+            if p not in active2 or _dv_id(active2[p]) != dv
+        )
         if gone:
             raise DeltaConcurrentWriteError(
                 f"concurrent commit removed files this {operation} "
@@ -2955,325 +3063,41 @@ def _skip_candidates(
     return {p: active[p] for p, _pv in cand}
 
 
-def _rewrite_where(
+def _stage_write(
     spark: SparkSession,
-    table_dir: str,
-    condition: str,
-    set_exprs: dict[str, str] | None,
-    operation: str,
-) -> dict:
-    """Shared DELETE WHERE / UPDATE WHERE engine: one identify pass finds
-    the files containing predicate matches; only those are rewritten
-    (survivors kept verbatim, matched rows dropped or transformed) in
-    one distributed staging write. Rows where the predicate is NULL are
-    kept untouched (SQL WHERE semantics). O(1) Spark jobs regardless of
-    affected-file count."""
-    root = table_dir.rstrip("/")
-    protocol, meta, active, current, _txns = snapshot_actions(spark, root)
-    _check_protocol(protocol)
-    _check_writer_protocol(protocol)
-    rt = _row_tracking_supported(protocol)
-    # r10: DV-carrying tables rewrite through the DV-aware scan —
-    # masked rows never resurrect; affected files materialize the mask
-    dv_by_plain = _dv_map_of(root, active)
-    if (meta.get("configuration") or {}).get("delta.appendOnly") == "true":
-        raise ValueError(
-            f"table is delta.appendOnly=true; {operation} rewrites"
-        )
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    part_cols = list(meta.get("partitionColumns") or [])
-    if set_exprs:
-        bad = [c for c in set_exprs if c not in schema.fieldNames()]
-        if bad:
-            raise ValueError(f"SET columns not in the table schema: {bad}")
-        id_set = sorted(set(set_exprs) & set(_identity_cols(meta)))
-        if id_set:
-            raise ValueError(
-                f"UPDATE on IDENTITY columns {id_set} is not supported "
-                "(real Delta refuses the same — identity values are "
-                "never mutated)"
-            )
-
-    # data skipping (r9): a file whose stats PROVE no row matches the
-    # predicate cannot be affected — the identify scan never opens it.
-    # Pruning feeds only the candidate set; the rewrite still keys on
-    # the actual matches, so a conservative keep costs nothing, and
-    # affected ⊆ candidates so the pruned map is complete.
-    candidates = _skip_candidates(active, meta, condition, literal_tz=_session_zone(spark))
-    tbl, path_to_add = _active_scan(
-        spark, root, meta, candidates, dv_by_plain=dv_by_plain
-    )
-    cond = F.coalesce(F.expr(condition), F.lit(False))
-    if tbl is None:
-        return {"version": None, "files_rewritten": 0, "files_added": 0}
-    dml_small_bytes = sum(
-        int(a.get("size") or 0) for a in candidates.values()
-    )
-    with _small_plan_scope(spark, dml_small_bytes):
-        raw_of = {
-            _fp_decode_py(r[_FP_COL]): r[_FP_COL]
-            for r in tbl.filter(cond).select(_FP_COL).distinct().collect()
-        }
-    affected = sorted(raw_of)
-    if not affected:
-        return {"version": None, "files_rewritten": 0, "files_added": 0}
-
-    # row tracking (r8): each surviving row's identity rides the
-    # materialized columns into the rewritten files — row id =
-    # materialized ?? (baseRowId + physical row index), commit version
-    # = materialized ?? defaultRowCommitVersion; rows this UPDATE
-    # touches get a fresh commit version (materialized NULL → the new
-    # add's defaultRowCommitVersion), exactly the spec's resolution
-    mat_id = mat_cv = None
-    rt_meta_actions: list[dict] = []
-    if not rt:
-        arows, _ = _active_scan(
-            spark, root, meta, active, subset=affected,
-            dv_by_plain=dv_by_plain,
-        )
-    else:
-        mat_id, mat_cv, new_meta = _rt_materialize_cols(meta)
-        if new_meta is not None:
-            rt_meta_actions = [{"metaData": new_meta}]
-        arows, _ = _active_scan(
-            spark, root, meta, active, subset=affected,
-            with_row_index=True, extra_long_cols=[mat_id, mat_cv],
-            dv_by_plain=dv_by_plain,
-        )
-        base_rows = []
-        for p in affected:
-            a = path_to_add[p]
-            if a.get("baseRowId") is None:
-                # a ZERO-ROW file carries no identities to preserve
-                # (schema seeds predating the feature); anything else
-                # was never assigned ids — refuse, don't mint
-                try:
-                    nr0 = json.loads(a.get("stats") or "{}").get(
-                        "numRecords"
-                    )
-                except Exception:
-                    nr0 = None
-                if nr0 != 0:
-                    raise ValueError(
-                        f"row tracking: file {a['path']!r} carries no "
-                        "baseRowId — its row ids were never assigned "
-                        "(foreign backfill missing); refusing a "
-                        "rewrite that would mint new identities"
-                    )
-            base_rows.append(
-                # keyed by the file's TRUE raw rendering, learned from
-                # the identify collect (r11 — no per-row decode, no
-                # prediction needed on this path)
-                (raw_of[p], int(a.get("baseRowId") or 0),
-                 a.get("defaultRowCommitVersion"))
-            )
-        base_df = F.broadcast(
-            local_df(spark,
-                base_rows,
-                f"`{_FP_COL}` string, `__rt_base` bigint, "
-                "`__rt_dcv` bigint",
-            )
-        )
-        arows = (
-            arows.join(base_df, _FP_COL)
-            .withColumn(
-                mat_id,
-                F.coalesce(
-                    F.col(f"`{mat_id}`"),
-                    F.col("__rt_base") + F.col(_RI_COL),
-                ),
-            )
-            .withColumn(
-                mat_cv,
-                F.coalesce(F.col(f"`{mat_cv}`"), F.col("__rt_dcv")),
-            )
-            .drop("__rt_base", "__rt_dcv", _RI_COL)
-        )
-    arows = arows.drop(_FP_COL)
-    if _cdf_enabled(meta):
-        # r11 (VERDICT item 1, CDF fold): the change-row staging and
-        # the data rewrite BOTH consume the affected rows; a lazy
-        # localCheckpoint materializes the affected-file scan once
-        # (inside the first write's job) and the second write reads the
-        # checkpointed blocks — one physical pass instead of two
-        # (guide §5: localCheckpoint to cut recompute+lineage)
-        arows = arows.localCheckpoint(eager=False)
-    col_order = [f.name for f in schema.fields]
-    stage_cols = col_order + ([mat_id, mat_cv] if rt else [])
-    if set_exprs is None:
-        out = arows.filter(~cond)
-    else:
-        # r10 (guide §2.4/§8): UPDATE used to scan the affected files
-        # TWICE — survivors filtered one way, updated rows the other,
-        # unioned. One conditional projection does both in a single
-        # pass. The match flag is materialized FIRST so SET expressions
-        # never shift it, then each SET applies as
-        # when(flag, expr).otherwise(old) — later SETs referencing an
-        # earlier SET column see its updated value exactly as the
-        # sequential withColumn chain they replace did.
-        flag = "__delta_update_match__"
-        if flag in arows.columns:
-            raise ValueError(
-                f"table schema uses the reserved column {flag!r}"
-            )
-        out = arows.withColumn(flag, cond)
-        for c, e in set_exprs.items():
-            out = out.withColumn(
-                c,
-                F.when(
-                    F.col(flag), F.expr(e).cast(schema[c].dataType)
-                ).otherwise(F.col(c)),
-            )
-        if rt:
-            # updated rows: id preserved, commit version goes FRESH
-            # (null materialized → the new add's default)
-            out = out.withColumn(
-                mat_cv,
-                F.when(
-                    F.col(flag), F.lit(None).cast("long")
-                ).otherwise(F.col(mat_cv)),
-            )
-        out = out.select(*stage_cols)
-
-    out = _enforce_not_null(out, meta["schemaString"])
-    out = _enforce_constraints(out, meta)
-
-    # change data feed: a partial-file rewrite is NOT derivable from
-    # add/remove actions (the rewritten survivors would read as
-    # inserts), so the commit must carry cdc actions describing exactly
-    # the changed rows — delete preimages, update pre+post images
-    cdc_actions: list[dict] = []
-    if _cdf_enabled(meta):
-        matched_rows = arows.filter(cond)
-        if set_exprs is None:
-            changes = matched_rows.withColumn(
-                "_change_type", F.lit("delete")
-            )
-        else:
-            post = matched_rows
-            for c, e in set_exprs.items():
-                post = post.withColumn(
-                    c, F.expr(e).cast(schema[c].dataType)
-                )
-            changes = matched_rows.withColumn(
-                "_change_type", F.lit("update_preimage")
-            ).unionByName(
-                post.select(*col_order).withColumn(
-                    "_change_type", F.lit("update_postimage")
-                )
-            )
-        cdc_actions = _stage_cdc(
-            spark, root, changes, col_order, part_cols, meta,
-            small_bytes=dml_small_bytes,
-        )
-
-    # column mapping: the rewrite is computed in LOGICAL terms, staged
-    # back in the table's PHYSICAL layout (names + field ids)
-    stage_part_cols = part_cols
-    if _cm_mode(meta) != "none":
+    root: str,
+    df: DataFrame,
+    part_cols: list[str],
+    meta: dict | None,
+    tag: str,
+    small_bytes: int,
+    extra_cols: list[str] | None = None,
+    with_stats: bool = True,
+    dest_prefix: str = "",
+) -> list[dict]:
+    """Write ``df`` to a ``{tag}-<uuid>`` staging directory partitioned
+    like the table and promote the files into it → their add actions.
+    Frames are computed in LOGICAL terms; under column mapping they are
+    staged in the table's PHYSICAL layout (names + field ids), with
+    ``extra_cols`` passed through unmapped."""
+    if meta is not None and _cm_mode(meta) != "none":
         fields_json = json.loads(meta["schemaString"]).get("fields") or []
         phys_of = {f["name"]: _physical_name(f) for f in fields_json}
-        # materialized row-tracking columns pass through UNMAPPED —
-        # they live outside the schemaString, under their literal
-        # configuration-named identity (real Delta stores them so)
-        out = _to_physical(
-            spark, out, meta,
-            extra_cols=[mat_id, mat_cv] if rt else None,
-        )
-        stage_part_cols = [phys_of[c] for c in part_cols]
-    out = _sized_for_rewrite(
-        out,
-        sum(int(path_to_add[p].get("size") or 0) for p in affected),
-        meta,
-    )
-    staging = posixpath.join(
-        root, f"_{operation.lower()}-{uuid.uuid4().hex[:12]}"
-    )
-    writer = out.write.mode("overwrite")
-    if stage_part_cols:
-        writer = writer.partitionBy(*stage_part_cols)
-    with _small_plan_scope(spark, dml_small_bytes):
+        df = _to_physical(spark, df, meta, extra_cols=extra_cols or None)
+        part_cols = [phys_of[c] for c in part_cols]
+    staging = posixpath.join(root, f"{tag}-{uuid.uuid4().hex[:12]}")
+    writer = df.write.mode("overwrite")
+    if part_cols:
+        writer = writer.partitionBy(*part_cols)
+    with _small_plan_scope(spark, small_bytes):
         writer.parquet(staging)
     try:
-        adds = _promote_staged(
-            spark, root, staging, stage_part_cols, True
+        return _promote_staged(
+            spark, root, staging, part_cols, with_stats,
+            dest_prefix=dest_prefix,
         )
     finally:
         fsutil.delete(spark, staging)
-    ts = _now_ms()
-    version = _commit_rewrite(
-        spark,
-        root,
-        current,
-        operation,
-        {"predicate": condition, "set": json.dumps(set_exprs or {})},
-        _remove_actions(affected, path_to_add, ts),
-        adds,
-        ts,
-        meta,
-        extra_actions=rt_meta_actions + cdc_actions,
-        row_tracking=rt,
-    )
-    return {
-        "version": version,
-        "files_rewritten": len(affected),
-        "files_added": len(adds),
-        "cdc_files": len(cdc_actions),
-    }
-
-
-def delete_where_delta_native(
-    spark: SparkSession, table_dir: str, condition: str
-) -> dict:
-    """DELETE FROM <table> WHERE <condition>: rows matching the SQL
-    predicate are removed by rewriting ONLY the files that contain them
-    (the delete_by_keys discipline on the Delta log — untouched files
-    keep their add entries). NULL-predicate rows are kept, per SQL.
-
-    For SELECTIVE deletes from huge files, ``delete_where_delta_dv``
-    marks rows via deletion vectors instead — zero data bytes
-    rewritten."""
-    return _rewrite_where(spark, table_dir, condition, None, "DELETE")
-
-
-def _mask_prior_dvs(
-    root: str, tbl: DataFrame, path_to_add: dict[str, dict]
-) -> DataFrame:
-    """Drop rows already masked by the table's EXISTING deletion
-    vectors from an ``_active_scan`` frame. The scan reads the physical
-    files verbatim, so without this filter a DV DELETE would re-match
-    previously-deleted rows and — far worse — a DV UPDATE would
-    RESURRECT them as freshly appended "updated" rows. ``tbl`` must
-    carry ``_FP_COL`` (the RAW metadata path, r11) and ``_RI_COL``;
-    the keep test is the reader's Arrow-batched bitmap membership — the
-    raw form decodes ONCE PER DISTINCT FILE inside the batch, never per
-    row."""
-    dv_by_plain = {
-        p: dict(a["deletionVector"])
-        for p, a in path_to_add.items()
-        if a.get("deletionVector")
-    }
-    if not dv_by_plain:
-        return tbl
-    from pyspark.sql.functions import pandas_udf
-
-    from rtdl_spark.sources.delta_reader import _dv_indices_cached
-
-    @pandas_udf("boolean")
-    def keep(fp: pd.Series, ri: pd.Series) -> pd.Series:
-        import numpy as np
-
-        out = np.ones(len(fp), dtype=bool)
-        for pth in fp.unique():
-            desc = dv_by_plain.get(_fp_decode_py(pth))
-            if desc is None:
-                continue
-            arr = _dv_indices_cached(root, _fp_decode_py(pth), desc)
-            m = (fp == pth).values
-            out[m] = ~np.isin(ri.values[m], arr)
-        return pd.Series(out)
-
-    return tbl.filter(keep(F.col(_FP_COL), F.col(_RI_COL)))
 
 
 def _stage_cdc(
@@ -3286,36 +3110,17 @@ def _stage_cdc(
     small_bytes: int = -1,
 ) -> list[dict]:
     """Write a ``_change_type``-carrying frame as ``_change_data`` files
-    and return the commit's ``cdc`` actions (shared by the rewrite path
-    and the DV DELETE/UPDATE paths). The frame is staged partitioned
-    like the data and promoted under ``_change_data/`` — hidden from
-    plain-parquet readers and from vacuum's file index; log-retention
-    cleanup is their reclamation point. Under column mapping the change
-    files use the table's PHYSICAL layout like the data files do
-    (``_change_type`` itself stays unmapped — real Delta stores it
-    under its literal name)."""
-    sel = changes.select(*col_order, "_change_type")
-    stage_part_cols = list(part_cols)
-    if meta is not None and _cm_mode(meta) != "none":
-        fields_json = json.loads(meta["schemaString"]).get("fields") or []
-        phys_of = {f["name"]: _physical_name(f) for f in fields_json}
-        sel = _to_physical(spark, sel, meta, extra_cols=["_change_type"])
-        stage_part_cols = [phys_of[c] for c in part_cols]
-    cdc_stage = posixpath.join(
-        root, f"_staging-cdc-{uuid.uuid4().hex[:12]}"
+    and return the commit's ``cdc`` actions. The files are promoted
+    under ``_change_data/`` — hidden from plain-parquet readers and from
+    vacuum's file index; log-retention cleanup is their reclamation
+    point. ``_change_type`` itself stays unmapped under column mapping
+    (real Delta stores it under its literal name)."""
+    cdc_adds = _stage_write(
+        spark, root, changes.select(*col_order, "_change_type"),
+        part_cols, meta, "_staging-cdc", small_bytes,
+        extra_cols=["_change_type"], with_stats=False,
+        dest_prefix="_change_data",
     )
-    w = sel.write.mode("overwrite")
-    if stage_part_cols:
-        w = w.partitionBy(*stage_part_cols)
-    with _small_plan_scope(spark, small_bytes):
-        w.parquet(cdc_stage)
-    try:
-        cdc_adds = _promote_staged(
-            spark, root, cdc_stage, stage_part_cols, False,
-            dest_prefix="_change_data",
-        )
-    finally:
-        fsutil.delete(spark, cdc_stage)
     return [
         {
             "cdc": {
@@ -3335,8 +3140,8 @@ def _write_dvs_for(
     matched,
     path_to_add: dict[str, dict],
 ) -> list:
-    """Shared DV-mask engine for delete_where_delta_dv /
-    update_where_delta_dv: a (fp, ri) frame of matched physical row
+    """The DV stage's mask engine (``_stage_dvs``): a (fp, ri) frame of
+    matched physical row
     positions -> one DV .bin per file, BUILT AND WRITTEN ON AN EXECUTOR
     (applyInPandas per file), merged with the file's EXISTING DV when it
     carries one. Only the per-file descriptor rows (fp, enc, offset,
@@ -3421,411 +3226,234 @@ def _write_dvs_for(
     )
 
 
-def delete_where_delta_dv(
-    spark: SparkSession, table_dir: str, condition: str
-) -> dict:
-    """DELETE FROM <table> WHERE <condition> via DELETION VECTORS:
-    matched rows are marked deleted by writing a roaring bitmap of
-    their physical row positions beside the data — ZERO data bytes are
-    rewritten, so deleting a handful of rows from terabytes of files
-    costs one scan plus KB-scale bitmap writes (the reason the DV
-    writer feature exists; delta-spark's DELETE does the same under
-    delta.enableDeletionVectors).
-
-    Scale shape: the identify scan emits (file, row_index) for matches;
-    each file's bitmap is BUILT AND WRITTEN ON AN EXECUTOR
-    (applyInPandas per file — one DV .bin per file, merged with the
-    file's EXISTING DV if it carries one), and only the per-file
-    descriptor rows return to the driver for the commit. Intended for
-    the selective regime: a group's matched row indices materialize in
-    one task, so bulk deletes (most of a file) should use the rewrite
-    path instead — a file whose every row ends up deleted commits a
-    plain remove (detected via stats.numRecords) rather than a
-    fully-masked add.
-
-    Requirements, checked loudly: the table's configuration sets
-    delta.enableDeletionVectors=true AND its protocol already carries
-    the deletionVectors reader+writer features (no silent protocol
-    upgrade — enabling DVs is a table-owner decision); not
-    column-mapped; not appendOnly. Commits remove+add of the SAME path
-    (the add carries the new descriptor, dataChange=true, stats kept —
-    numRecords stays the PHYSICAL count per the spec). Readers
-    (sources/delta_reader.py) subtract the bitmap; the streaming
-    source treats the commit as a change commit (fail by default,
-    skipChangeCommits/ignoreChanges escapes — an emitted DV add
-    yields its visible rows).
-
-    Returns {"version", "files_marked", "files_removed",
-    "rows_deleted"} (rows_deleted counts NEWLY deleted positions)."""
-    import pandas as pd
-
-    root = table_dir.rstrip("/")
-    protocol, meta, active, current, _txns = snapshot_actions(spark, root)
+def _check_dml_target(
+    protocol: dict, meta: dict, operation: str, dv: bool
+) -> None:
+    """Refuse a DELETE/UPDATE this writer cannot commit: unsupported
+    protocol features, an appendOnly table and, in deletion-vector mode,
+    a column-mapped table or one whose owner has not enabled DVs — the
+    configuration must set delta.enableDeletionVectors=true AND the
+    protocol already carry the deletionVectors reader+writer features
+    (no silent protocol upgrade — enabling DVs is a table-owner
+    decision)."""
     _check_protocol(protocol)
     _check_writer_protocol(protocol)
-    # row tracking composes for free here: a DV attach re-adds the SAME
-    # file with its live baseRowId/defaultRowCommitVersion passed
-    # through verbatim (the {**a} copy below), and survivors never move
-    # — no materialization, no restamping (r8)
-    _refuse_cm(meta, "DV DELETE")
+    if dv:
+        _refuse_cm(meta, f"DV {operation}")
     conf = meta.get("configuration") or {}
     if conf.get("delta.appendOnly") == "true":
-        raise ValueError("table is delta.appendOnly=true; DELETE rewrites")
+        raise ValueError(
+            f"table is delta.appendOnly=true; {operation} rewrites"
+        )
+    if not dv:
+        return
     if conf.get("delta.enableDeletionVectors") != "true":
         raise ValueError(
-            "DV DELETE needs delta.enableDeletionVectors=true in the "
-            "table configuration (use delete_where_delta_native for the "
-            "rewrite path)"
+            f"DV {operation} needs delta.enableDeletionVectors=true in the "
+            f"table configuration (use {operation.lower()}_where_delta_native "
+            "for the rewrite path)"
         )
-    rf = set(protocol.get("readerFeatures") or ())
-    wf = set(protocol.get("writerFeatures") or ())
-    if "deletionVectors" not in rf or "deletionVectors" not in wf:
+    if not all(
+        "deletionVectors" in (protocol.get(k) or ())
+        for k in ("readerFeatures", "writerFeatures")
+    ):
         raise ValueError(
-            "DV DELETE needs the deletionVectors reader AND writer "
+            f"DV {operation} needs the deletionVectors reader AND writer "
             "features in the table protocol — this writer does not "
             "silently upgrade protocols"
         )
 
-    candidates = _skip_candidates(
-        active, meta, condition, literal_tz=_session_zone(spark)
-    )
-    tbl, path_to_add = _active_scan(
-        spark, root, meta, candidates, with_row_index=True,
-    )
-    if tbl is None:
-        return {
-            "version": None, "files_marked": 0, "files_removed": 0,
-            "rows_deleted": 0,
-        }
-    dml_small_bytes = sum(
-        int(a.get("size") or 0) for a in candidates.values()
-    )
-    cond = F.coalesce(F.expr(condition), F.lit(False))
-    # previously-masked rows are NOT visible: re-matching them is
-    # harmless for the bitmap merge but would poison the CDF delete
-    # rows, so the scan subtracts existing DVs up front
-    matched_rows = _mask_prior_dvs(root, tbl, path_to_add).filter(cond)
-    cdf = _cdf_enabled(meta)
-    with _small_plan_scope(spark, dml_small_bytes):
-        if cdf:
-            # two consumers (DV build + change rows) see identical rows
-            matched_rows = matched_rows.localCheckpoint(eager=True)
-        matched = matched_rows.select(
-            F.col(_FP_COL).alias("fp"), F.col(_RI_COL).alias("ri")
-        )
-        desc_rows = _write_dvs_for(spark, root, matched, path_to_add)
-    if not desc_rows:
-        return {
-            "version": None, "files_marked": 0, "files_removed": 0,
-            "rows_deleted": 0,
-        }
-    # change data feed: a DV attach is remove+add of the SAME path —
-    # derivation from add/remove cannot express it, so the commit must
-    # carry cdc actions holding exactly the deleted rows
-    cdc_actions: list[dict] = []
-    if cdf:
-        schema = StructType.fromJson(json.loads(meta["schemaString"]))
-        cdc_actions = _stage_cdc(
-            spark,
-            root,
-            matched_rows.withColumn("_change_type", F.lit("delete")),
-            [f.name for f in schema.fields],
-            list(meta.get("partitionColumns") or []),
-            small_bytes=dml_small_bytes,
-        )
 
-    ts = _now_ms()
-    removes, adds = [], []
-    n_marked = n_removed = n_rows = 0
-    affected = []
-    for r in desc_rows:
-        a = path_to_add[r["fp"]]
-        affected.append(r["fp"])
-        n_rows += int(r["new_rows"])
-        # full-file deletion: every physical row masked -> plain remove
-        num_records = None
-        if a.get("stats"):
-            try:
-                num_records = json.loads(a["stats"]).get("numRecords")
-            except Exception:
-                num_records = None
-        if num_records is not None and int(r["cardinality"]) >= int(
-            num_records
-        ):
-            n_removed += 1
-            continue  # the freshly written DV file is vacuum-reclaimable
-        n_marked += 1
-        adds.append(
-            {
-                **{k: v for k, v in a.items() if k != "deletionVector"},
-                "modificationTime": ts,
-                "dataChange": True,
-                "deletionVector": {
-                    "storageType": "u",
-                    "pathOrInlineDv": r["enc"],
-                    "offset": int(r["offset"]),
-                    "sizeInBytes": int(r["size"]),
-                    "cardinality": int(r["cardinality"]),
-                },
-            }
-        )
-    removes = _remove_actions(affected, path_to_add, ts)
-    version = _commit_rewrite(
-        spark,
-        root,
-        current,
-        "DELETE",
-        {"predicate": condition, "deletionVectors": "true"},
-        removes,
-        adds,
-        ts,
-        meta,
-        extra_actions=cdc_actions,
-    )
-    return {
-        "version": version,
-        "files_marked": n_marked,
-        "files_removed": n_removed,
-        "rows_deleted": n_rows,
-        "cdc_files": len(cdc_actions),
-    }
-
-
-def update_where_delta_dv(
-    spark: SparkSession,
-    table_dir: str,
-    condition: str,
+def _set_applied(
+    df: DataFrame,
     set_exprs: dict[str, str],
-) -> dict:
-    """UPDATE ... SET ... WHERE via DELETION VECTORS: the matched rows'
-    OLD versions are masked with bitmaps (zero bytes of the existing
-    files rewritten — delete_where_delta_dv's machinery) and their NEW
-    versions are appended as fresh files, all in ONE commit — exactly
-    how delta-spark's UPDATE behaves under delta.enableDeletionVectors.
-    The selective-update scale path: updating k rows in N TB of files
-    writes k rows plus KB-scale bitmaps.
+    schema: StructType,
+    mat_cv: str | None = None,
+    flag: str | None = None,
+) -> DataFrame:
+    """Apply an UPDATE's SET list in order: a later SET that references
+    an earlier SET column sees its new value. With ``flag`` only the
+    rows where that column holds change; the rest pass through. An
+    updated row's materialized row-tracking commit version goes NULL,
+    so it reads as the new add's defaultRowCommitVersion."""
 
-    Same requirements as delete_where_delta_dv (DV config + protocol
-    features, not column-mapped, not appendOnly); NULL predicates keep
-    rows, SET expressions may reference any column INCLUDING partition
-    columns (updated rows then migrate directories via the staged
-    write). Returns {"version", "files_marked", "files_removed",
-    "files_added", "rows_updated"}."""
-    import pandas as pd  # noqa: F401 — applyInPandas path below
-
-    if not set_exprs:
-        raise ValueError("UPDATE needs at least one SET column")
-    root = table_dir.rstrip("/")
-    protocol, meta, active, current, _txns = snapshot_actions(spark, root)
-    _check_protocol(protocol)
-    _check_writer_protocol(protocol)
-    rt = _row_tracking_supported(protocol)
-    _refuse_cm(meta, "DV UPDATE")
-    conf = meta.get("configuration") or {}
-    if conf.get("delta.appendOnly") == "true":
-        raise ValueError("table is delta.appendOnly=true; UPDATE rewrites")
-    if conf.get("delta.enableDeletionVectors") != "true":
-        raise ValueError(
-            "DV UPDATE needs delta.enableDeletionVectors=true in the "
-            "table configuration (use update_where_delta_native for the "
-            "rewrite path)"
-        )
-    if "deletionVectors" not in set(
-        protocol.get("readerFeatures") or ()
-    ) or "deletionVectors" not in set(protocol.get("writerFeatures") or ()):
-        raise ValueError(
-            "DV UPDATE needs the deletionVectors reader AND writer "
-            "features in the table protocol — this writer does not "
-            "silently upgrade protocols"
-        )
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    part_cols = list(meta.get("partitionColumns") or [])
-    bad = [c for c in set_exprs if c not in schema.fieldNames()]
-    if bad:
-        raise ValueError(f"SET columns not in the table schema: {bad}")
-    id_set = sorted(set(set_exprs) & set(_identity_cols(meta)))
-    if id_set:
-        raise ValueError(
-            f"UPDATE on IDENTITY columns {id_set} is not supported "
-            "(real Delta refuses the same — identity values are "
-            "never mutated)"
+    def upd(c: str, new):
+        return new if flag is None else F.when(F.col(flag), new).otherwise(
+            F.col(c)
         )
 
-    # row tracking (r8): updated rows MOVE to new files, so their ids
-    # materialize (coalesced from the source file's baseRowId + row
-    # index); their commit version goes fresh (null materialized → the
-    # new add's default). The DV-masked re-adds keep their live range
-    # verbatim — only the new files get stamped.
-    mat_id = mat_cv = None
-    rt_meta_actions: list[dict] = []
-    if rt:
-        mat_id, mat_cv, new_meta = _rt_materialize_cols(meta)
-        if new_meta is not None:
-            rt_meta_actions = [{"metaData": new_meta}]
-    candidates = _skip_candidates(
-        active, meta, condition, literal_tz=_session_zone(spark)
-    )
-    tbl, path_to_add = _active_scan(
-        spark, root, meta, candidates,
-        with_row_index=True,
-        extra_long_cols=[mat_id, mat_cv] if rt else None,
-    )
-    if tbl is None:
-        return {
-            "version": None, "files_marked": 0, "files_removed": 0,
-            "files_added": 0, "rows_updated": 0,
-        }
-    dml_small_bytes = sum(
-        int(a.get("size") or 0) for a in candidates.values()
-    )
-    if rt:
-        base_rows = []
-        for p, a in path_to_add.items():
-            if a.get("baseRowId") is None:
-                try:
-                    nr0 = json.loads(a.get("stats") or "{}").get(
-                        "numRecords"
-                    )
-                except Exception:
-                    nr0 = None
-                if nr0 != 0:
-                    raise ValueError(
-                        f"row tracking: file {a['path']!r} carries no "
-                        "baseRowId — its row ids were never assigned "
-                        "(foreign backfill missing); refusing a DV "
-                        "UPDATE that would mint new identities"
-                    )
-            # no identify collect precedes this join, so the raw key is
-            # PREDICTED (r11); the left join + raise_error below turns
-            # a rendering miss into a loud failure instead of a
-            # silently minted identity
-            base_rows.append(
-                (
-                    _fp_raw_predicted(
-                        spark,
-                        posixpath.join(
-                            root, urllib.parse.unquote(a["path"])
-                        ),
-                    ),
-                    int(a.get("baseRowId") or 0),
-                )
-            )
-        base_df = F.broadcast(
-            local_df(spark,
-                base_rows, f"`{_FP_COL}` string, `__rt_base` bigint"
-            )
-        )
-        tbl = (
-            tbl.join(base_df, _FP_COL, "left")
-            .withColumn(
-                mat_id,
-                F.coalesce(
-                    F.col(f"`{mat_id}`"),
-                    F.when(
-                        F.col("`__rt_base`").isNull(),
-                        F.raise_error(
-                            F.concat(
-                                F.lit(
-                                    "rtdl: row-tracking base attach "
-                                    "missed the scanned file "
-                                ),
-                                F.col(_FP_COL),
-                            )
-                        ).cast("long"),
-                    ).otherwise(F.col("__rt_base"))
-                    + F.col(_RI_COL),
-                ),
-            )
-            .withColumn(mat_cv, F.lit(None).cast("long"))
-            .drop("__rt_base")
-        )
-    cond = F.coalesce(F.expr(condition), F.lit(False))
-    col_order = [f.name for f in schema.fields]
-    stage_cols = col_order + ([mat_id, mat_cv] if rt else [])
-
-    # pass 1: the updated rows, staged as NEW files (localCheckpoint
-    # freezes the matched set so the DV pass masks exactly these rows).
-    # Existing DVs are subtracted FIRST: the raw scan reads physical
-    # files, and updating a previously-deleted row would RESURRECT it
-    # as a fresh append.
-    with _small_plan_scope(spark, dml_small_bytes):
-        updated = (
-            _mask_prior_dvs(root, tbl, path_to_add)
-            .filter(cond)
-            .localCheckpoint(eager=True)
-        )
-        n_rows = updated.count()
-    if n_rows == 0:
-        return {
-            "version": None, "files_marked": 0, "files_removed": 0,
-            "files_added": 0, "rows_updated": 0,
-        }
-    new_rows = updated
     for c, e in set_exprs.items():
-        new_rows = new_rows.withColumn(c, F.expr(e).cast(schema[c].dataType))
-    new_rows = _enforce_not_null(
-        new_rows.select(*stage_cols), meta["schemaString"]
+        df = df.withColumn(c, upd(c, F.expr(e).cast(schema[c].dataType)))
+    if mat_cv is not None:
+        df = df.withColumn(mat_cv, upd(mat_cv, F.lit(None).cast("long")))
+    return df
+
+
+def _stage_rewrite(
+    spark: SparkSession,
+    root: str,
+    meta: dict,
+    schema: StructType,
+    active: dict[str, dict],
+    tbl: DataFrame,
+    cond,
+    set_exprs: dict[str, str] | None,
+    operation: str,
+    rt_cols: list[str],
+    small_bytes: int,
+) -> tuple[list[str], list[dict], DataFrame] | None:
+    """Copy-on-write stage: one identify collect names the files holding
+    matches; only those are rewritten (survivors kept verbatim, matched
+    rows dropped or transformed) in one distributed staging write.
+    → (affected plain paths, their replacement adds, the matched rows)
+    or None when nothing matches."""
+    with _small_plan_scope(spark, small_bytes):
+        raw_of = {
+            _fp_decode_py(r[_FP_COL]): r[_FP_COL]
+            for r in tbl.filter(cond).select(_FP_COL).distinct().collect()
+        }
+    affected = sorted(raw_of)
+    if not affected:
+        return None
+    arows, path_to_add = _active_scan(
+        spark, root, meta, active, subset=affected,
+        with_row_index=bool(rt_cols), extra_long_cols=rt_cols,
+        dv_by_plain=_dv_map_of(root, active),
     )
-    new_rows = _enforce_constraints(new_rows, meta)
-    staging = posixpath.join(root, f"_update-{uuid.uuid4().hex[:12]}")
-    writer = new_rows.write.mode("overwrite")
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    with _small_plan_scope(spark, dml_small_bytes):
-        writer.parquet(staging)
-    try:
-        adds = _promote_staged(spark, root, staging, part_cols, True)
-    finally:
-        fsutil.delete(spark, staging)
-    fresh_adds = list(adds)  # the new files — the only rt-stamped adds
-
-    # change data feed: matched rows as update pre-images, their new
-    # versions as post-images (the DV remove+add pair is not derivable)
-    cdc_actions: list[dict] = []
+    if rt_cols:
+        # keyed by each file's TRUE raw rendering, learned from the
+        # identify collect (r11 — no prediction needed on this path)
+        arows = _attach_row_ids(
+            spark, arows, [(raw_of[p], path_to_add[p]) for p in affected],
+            *rt_cols, "a rewrite",
+        ).drop(_RI_COL)
+    arows = arows.drop(_FP_COL)
     if _cdf_enabled(meta):
-        cdc_actions = _stage_cdc(
-            spark,
-            root,
-            updated.select(*col_order)
-            .withColumn("_change_type", F.lit("update_preimage"))
-            .unionByName(
-                new_rows.select(*col_order).withColumn(
-                    "_change_type", F.lit("update_postimage")
-                )
+        # r11 (CDF fold): the change rows and the data rewrite BOTH
+        # consume the affected rows; a lazy localCheckpoint materializes
+        # the affected-file scan once (inside the first write's job)
+        arows = arows.localCheckpoint(eager=False)
+    if set_exprs is None:
+        out = arows.filter(~cond)
+    else:
+        # r10: one conditional projection keeps survivors and updates
+        # matches in a single pass. The match flag is materialized FIRST
+        # so SET expressions never shift it.
+        flag = "__delta_update_match__"
+        if flag in arows.columns:
+            raise ValueError(
+                f"table schema uses the reserved column {flag!r}"
+            )
+        out = _set_applied(
+            arows.withColumn(flag, cond),
+            set_exprs,
+            schema,
+            mat_cv=rt_cols[1] if rt_cols else None,
+            flag=flag,
+        ).select(*schema.fieldNames(), *rt_cols)
+    adds = _stage_write(
+        spark, root,
+        _sized_for_rewrite(
+            _enforce_constraints(
+                _enforce_not_null(out, meta["schemaString"]), meta
             ),
-            col_order,
-            part_cols,
-            small_bytes=dml_small_bytes,
-        )
+            sum(int(path_to_add[p].get("size") or 0) for p in affected),
+            meta,
+        ),
+        list(meta.get("partitionColumns") or []), meta,
+        f"_{operation.lower()}", small_bytes, extra_cols=rt_cols,
+    )
+    return affected, adds, arows.filter(cond)
 
-    # pass 2: mask the old versions via per-file executor-written DVs
-    with _small_plan_scope(spark, dml_small_bytes):
-        masked = _write_dvs_for(
+
+def _stage_dvs(
+    spark: SparkSession,
+    root: str,
+    meta: dict,
+    schema: StructType,
+    tbl: DataFrame,
+    path_to_add: dict[str, dict],
+    cond,
+    set_exprs: dict[str, str] | None,
+    rt_cols: list[str],
+    small_bytes: int,
+) -> tuple[list, list[dict], DataFrame, int | None] | None:
+    """Deletion-vector stage: the matched rows' physical positions are
+    masked by per-file bitmaps written on the executors
+    (``_write_dvs_for``) — zero bytes of the existing files rewritten.
+    An UPDATE first appends the rows' new versions as fresh files.
+    → (DV descriptor rows, fresh adds, the matched rows, updated-row
+    count | None) or None when nothing matches."""
+    if rt_cols:
+        # updated rows MOVE to new files, so their ids materialize. No
+        # identify collect precedes this join, so the raw keys are
+        # PREDICTED (r11); the attach fails loudly on a rendering miss
+        tbl = _attach_row_ids(
+            spark, tbl,
+            [
+                (_fp_raw_predicted(spark, posixpath.join(
+                    root, urllib.parse.unquote(a["path"])
+                )), a)
+                for a in path_to_add.values()
+            ],
+            *rt_cols, "a DV UPDATE",
+        )
+    matched = tbl.filter(cond)
+    n_rows = None
+    with _small_plan_scope(spark, small_bytes):
+        if set_exprs is not None or _cdf_enabled(meta):
+            # the DV build, the new rows and the change rows must all
+            # see identical rows
+            matched = matched.localCheckpoint(eager=True)
+        if set_exprs is not None:
+            n_rows = matched.count()
+    if n_rows == 0:
+        return None
+    fresh: list[dict] = []
+    if set_exprs is not None:
+        new_rows = _set_applied(
+            matched, set_exprs, schema,
+            mat_cv=rt_cols[1] if rt_cols else None,
+        ).select(*schema.fieldNames(), *rt_cols)
+        fresh = _stage_write(
+            spark, root,
+            _enforce_constraints(
+                _enforce_not_null(new_rows, meta["schemaString"]), meta
+            ),
+            list(meta.get("partitionColumns") or []), meta,
+            "_update", small_bytes,
+        )
+    with _small_plan_scope(spark, small_bytes):
+        desc_rows = _write_dvs_for(
             spark,
             root,
-            updated.select(
+            matched.select(
                 F.col(_FP_COL).alias("fp"), F.col(_RI_COL).alias("ri")
             ),
             path_to_add,
         )
-    ts = _now_ms()
-    n_marked = n_removed = 0
-    affected = []
-    for r in masked:
+    if not desc_rows:
+        return None
+    return desc_rows, fresh, matched, n_rows
+
+
+def _dv_adds(
+    desc_rows: list, path_to_add: dict[str, dict], ts: int
+) -> tuple[list[str], list[dict]]:
+    """``_write_dvs_for``'s descriptor rows → (affected plain paths, DV
+    re-adds). A marked file is re-added under the SAME path with the new
+    descriptor, dataChange=true and its stats kept (numRecords stays the
+    PHYSICAL count per the spec; a live baseRowId passes through). A
+    file whose every physical row ends up masked gets no re-add — the
+    commit's plain remove deletes it, and its fresh DV file is
+    vacuum-reclaimable."""
+    affected, adds = [], []
+    for r in desc_rows:
         a = path_to_add[r["fp"]]
         affected.append(r["fp"])
-        num_records = None
-        if a.get("stats"):
-            try:
-                num_records = json.loads(a["stats"]).get("numRecords")
-            except Exception:
-                num_records = None
-        if num_records is not None and int(r["cardinality"]) >= int(
-            num_records
-        ):
-            n_removed += 1
+        num_records = _num_records(a)
+        if num_records is not None and int(r["cardinality"]) >= num_records:
             continue
-        n_marked += 1
         adds.append(
             {
                 **{k: v for k, v in a.items() if k != "deletionVector"},
@@ -3840,32 +3468,165 @@ def update_where_delta_dv(
                 },
             }
         )
+    return affected, adds
+
+
+def _dml_where(
+    spark: SparkSession,
+    table_dir: str,
+    condition: str,
+    set_exprs: dict[str, str] | None,
+    operation: str,
+    dv: bool,
+) -> dict:
+    """DELETE WHERE / UPDATE WHERE, copy-on-write or deletion-vector, as
+    one pipeline: snapshot and checks → skip and identify → stage → CDF
+    images → commit. Only the stage step depends on the mode
+    (``_stage_rewrite`` / ``_stage_dvs``). Rows where the predicate is
+    NULL are kept untouched (SQL WHERE semantics). O(1) Spark jobs
+    regardless of affected-file count."""
+    root = table_dir.rstrip("/")
+    protocol, meta, active, current, _txns = snapshot_actions(spark, root)
+    _check_dml_target(protocol, meta, operation, dv)
+    schema = StructType.fromJson(json.loads(meta["schemaString"]))
+    col_order = schema.fieldNames()
+    update = set_exprs is not None
+    if update:
+        bad = [c for c in set_exprs if c not in col_order]
+        if bad:
+            raise ValueError(f"SET columns not in the table schema: {bad}")
+        id_set = sorted(set(set_exprs) & set(_identity_cols(meta)))
+        if id_set:
+            raise ValueError(
+                f"UPDATE on IDENTITY columns {id_set} is not supported "
+                "(real Delta refuses the same — identity values are "
+                "never mutated)"
+            )
+    # row tracking (r8): rewritten survivors and moved (updated) rows
+    # carry their identity in the materialized columns. A DV DELETE
+    # moves no row: its re-adds keep their live baseRowId verbatim.
+    rt = _row_tracking_supported(protocol) and (update or not dv)
+    rt_cols: list[str] = []
+    rt_meta_actions: list[dict] = []
+    if rt:
+        mat_id, mat_cv, new_meta = _rt_materialize_cols(meta)
+        rt_cols = [mat_id, mat_cv]
+        if new_meta is not None:
+            rt_meta_actions = [{"metaData": new_meta}]
+    if dv:
+        keys = ("files_marked", "files_removed") + (
+            ("files_added", "rows_updated") if update else ("rows_deleted",)
+        )
+    else:
+        keys = ("files_rewritten", "files_added")
+    no_change = {"version": None, **dict.fromkeys(keys, 0)}
+
+    # data skipping (r9): a file whose stats PROVE no row matches the
+    # predicate cannot be affected — the identify scan never opens it.
+    # DV-carrying files scan through the reader's bitmap filter (r10):
+    # masked rows are never re-matched, rewritten or updated back to life.
+    candidates = _skip_candidates(
+        active, meta, condition, literal_tz=_session_zone(spark)
+    )
+    small_bytes = sum(int(a.get("size") or 0) for a in candidates.values())
+    tbl, path_to_add = _active_scan(
+        spark, root, meta, candidates,
+        with_row_index=dv, extra_long_cols=rt_cols if dv else None,
+        dv_by_plain=_dv_map_of(root, candidates),
+    )
+    if tbl is None:
+        return no_change
+    cond = F.coalesce(F.expr(condition), F.lit(False))
+    if dv:
+        staged = _stage_dvs(
+            spark, root, meta, schema, tbl, path_to_add, cond, set_exprs,
+            rt_cols, small_bytes,
+        )
+    else:
+        staged = _stage_rewrite(
+            spark, root, meta, schema, active, tbl, cond, set_exprs,
+            operation, rt_cols, small_bytes,
+        )
+    if staged is None:
+        return no_change
+    ts = _now_ms()
+    if dv:
+        desc_rows, fresh, matched, n_rows = staged
+        affected, dv_adds = _dv_adds(desc_rows, path_to_add, ts)
+        adds = fresh + dv_adds
+        counts = [len(dv_adds), len(affected) - len(dv_adds)] + (
+            [len(fresh), n_rows]
+            if update
+            else [sum(int(r["new_rows"]) for r in desc_rows)]
+        )
+    else:
+        affected, adds, matched = staged
+        fresh = adds
+        counts = [len(affected), len(adds)]
+
+    # change data feed: neither a partial-file rewrite nor a DV attach is
+    # derivable from add/remove actions, so the commit carries cdc
+    # actions describing exactly the changed rows — delete preimages,
+    # update pre+post images
+    cdc_actions: list[dict] = []
+    if _cdf_enabled(meta):
+        pre = matched.select(*col_order)
+        if update:
+            changes = pre.withColumn(
+                "_change_type", F.lit("update_preimage")
+            ).unionByName(
+                _set_applied(pre, set_exprs, schema).withColumn(
+                    "_change_type", F.lit("update_postimage")
+                )
+            )
+        else:
+            changes = pre.withColumn("_change_type", F.lit("delete"))
+        cdc_actions = _stage_cdc(
+            spark, root, changes, col_order,
+            list(meta.get("partitionColumns") or []), meta,
+            small_bytes=small_bytes,
+        )
     version = _commit_rewrite(
         spark,
         root,
         current,
-        "UPDATE",
+        operation,
         {
             "predicate": condition,
-            "set": json.dumps(set_exprs),
-            "deletionVectors": "true",
+            **(
+                {}
+                if dv and not update
+                else {"set": json.dumps(set_exprs or {})}
+            ),
+            **({"deletionVectors": "true"} if dv else {}),
         },
-        _remove_actions(affected, path_to_add, ts),
+        _remove_actions([path_to_add[p] for p in affected], ts),
         adds,
         ts,
         meta,
         extra_actions=rt_meta_actions + cdc_actions,
         row_tracking=rt,
-        rt_stamp_adds=fresh_adds,
+        rt_stamp_adds=fresh,
     )
     return {
         "version": version,
-        "files_marked": n_marked,
-        "files_removed": n_removed,
-        "files_added": len(adds) - n_marked,
-        "rows_updated": n_rows,
+        **dict(zip(keys, counts)),
         "cdc_files": len(cdc_actions),
     }
+
+
+def delete_where_delta_native(
+    spark: SparkSession, table_dir: str, condition: str
+) -> dict:
+    """DELETE FROM <table> WHERE <condition>: rows matching the SQL
+    predicate are removed by rewriting ONLY the files that contain them
+    (the delete_by_keys discipline on the Delta log — untouched files
+    keep their add entries). NULL-predicate rows are kept, per SQL.
+
+    For SELECTIVE deletes from huge files, ``delete_where_delta_dv``
+    marks rows via deletion vectors instead — zero data bytes
+    rewritten."""
+    return _dml_where(spark, table_dir, condition, None, "DELETE", False)
 
 
 def update_where_delta_native(
@@ -3881,9 +3642,55 @@ def update_where_delta_native(
     only match-bearing files are rewritten."""
     if not set_exprs:
         raise ValueError("UPDATE needs at least one SET column")
-    return _rewrite_where(
-        spark, table_dir, condition, set_exprs, "UPDATE"
-    )
+    return _dml_where(spark, table_dir, condition, set_exprs, "UPDATE", False)
+
+
+def delete_where_delta_dv(
+    spark: SparkSession, table_dir: str, condition: str
+) -> dict:
+    """DELETE FROM <table> WHERE <condition> via DELETION VECTORS:
+    matched rows are marked deleted by writing a roaring bitmap of
+    their physical row positions beside the data — ZERO data bytes are
+    rewritten, so deleting a handful of rows from terabytes of files
+    costs one scan plus KB-scale bitmap writes (delta-spark's DELETE
+    does the same under delta.enableDeletionVectors).
+
+    Intended for the selective regime: a file's matched row indices
+    materialize in one task, so bulk deletes (most of a file) should
+    use the rewrite path instead. A file whose every row ends up
+    deleted commits a plain remove rather than a fully-masked add.
+    Needs delta.enableDeletionVectors=true and the deletionVectors
+    protocol features; not column-mapped, not appendOnly. Readers
+    (sources/delta_reader.py) subtract the bitmap; the streaming source
+    treats the commit as a change commit.
+
+    Returns {"version", "files_marked", "files_removed",
+    "rows_deleted", "cdc_files"} (rows_deleted counts NEWLY deleted
+    positions)."""
+    return _dml_where(spark, table_dir, condition, None, "DELETE", True)
+
+
+def update_where_delta_dv(
+    spark: SparkSession,
+    table_dir: str,
+    condition: str,
+    set_exprs: dict[str, str],
+) -> dict:
+    """UPDATE ... SET ... WHERE via DELETION VECTORS: the matched rows'
+    OLD versions are masked with bitmaps (zero bytes of the existing
+    files rewritten) and their NEW versions are appended as fresh files,
+    all in ONE commit — how delta-spark's UPDATE behaves under
+    delta.enableDeletionVectors. Updating k rows in N TB of files writes
+    k rows plus KB-scale bitmaps.
+
+    Same requirements as delete_where_delta_dv; SET expressions may
+    reference any column INCLUDING partition columns (updated rows then
+    migrate directories via the staged write). Returns {"version",
+    "files_marked", "files_removed", "files_added", "rows_updated",
+    "cdc_files"}."""
+    if not set_exprs:
+        raise ValueError("UPDATE needs at least one SET column")
+    return _dml_where(spark, table_dir, condition, set_exprs, "UPDATE", True)
 
 
 def _normalize_merge_clauses(
@@ -4365,52 +4172,13 @@ def merge_into_delta_native(
                 extra_long_cols=[mat_id, mat_cv],
                 dv_by_plain=dv_by_plain,
             )
-            base_rows = []
-            for p in affected:
-                a = path_to_add[p]
-                if a.get("baseRowId") is None:
-                    try:
-                        nr0 = json.loads(a.get("stats") or "{}").get(
-                            "numRecords"
-                        )
-                    except Exception:
-                        nr0 = None
-                    if nr0 != 0:
-                        raise ValueError(
-                            f"row tracking: file {a['path']!r} carries "
-                            "no baseRowId — its row ids were never "
-                            "assigned (foreign backfill missing); "
-                            "refusing a MERGE that would mint new "
-                            "identities"
-                        )
-                base_rows.append(
-                    # keyed by the TRUE raw rendering learned from the
-                    # probe collect (r11)
-                    (raw_of[p], int(a.get("baseRowId") or 0),
-                     a.get("defaultRowCommitVersion"))
-                )
-            base_df = F.broadcast(
-                local_df(spark, 
-                    base_rows,
-                    f"`{_FP_COL}` string, `__rt_base` bigint, "
-                    "`__rt_dcv` bigint",
-                )
-            )
-            arows = (
-                arows.join(base_df, _FP_COL)
-                .withColumn(
-                    mat_id,
-                    F.coalesce(
-                        F.col(f"`{mat_id}`"),
-                        F.col("__rt_base") + F.col(_RI_COL),
-                    ),
-                )
-                .withColumn(
-                    mat_cv,
-                    F.coalesce(F.col(f"`{mat_cv}`"), F.col("__rt_dcv")),
-                )
-                .drop("__rt_base", "__rt_dcv", _RI_COL)
-            )
+            # keyed by the TRUE raw rendering learned from the probe
+            # collect (r11)
+            arows = _attach_row_ids(
+                spark, arows,
+                [(raw_of[p], path_to_add[p]) for p in affected],
+                mat_id, mat_cv, "a MERGE",
+            ).drop(_RI_COL)
         arows = arows.drop(_FP_COL)
         fused_legacy = (
             legacy_update and not bs_clauses and not generic_matched
@@ -4442,7 +4210,7 @@ def merge_into_delta_native(
             # anti-join they replace.
             mark = "__delta_merge_matched__"
             if mark in src.columns or mark in schema.fieldNames():
-                # mirror _rewrite_where's reserved-column guard: a user
+                # mirror _stage_rewrite's reserved-column guard: a user
                 # column of this name would be silently overwritten and
                 # every row would project as matched
                 raise ValueError(
@@ -4860,7 +4628,7 @@ def merge_into_delta_native(
         return df
 
     # column mapping: computed logically above, staged PHYSICALLY
-    # (same discipline as _rewrite_where)
+    # (same discipline as _stage_write)
     stage_part_cols = part_cols
     if _cm_mode(meta) != "none":
         fields_json = json.loads(meta["schemaString"]).get("fields") or []
@@ -4895,15 +4663,10 @@ def merge_into_delta_native(
             aff_bytes = aff_records = 0
             for p in affected:
                 a = path_to_add[p]
-                try:
-                    nr = json.loads(a.get("stats") or "{}").get(
-                        "numRecords"
-                    )
-                except Exception:
-                    nr = None
+                nr = _num_records(a)
                 if nr:
                     aff_bytes += int(a.get("size") or 0)
-                    aff_records += int(nr)
+                    aff_records += nr
             if aff_records > 0:
                 ins_fin = _sized_for_rewrite(
                     ins_fin,
@@ -4946,7 +4709,7 @@ def merge_into_delta_native(
                 else {}
             ),
         },
-        _remove_actions(affected, path_to_add, ts),
+        _remove_actions([path_to_add[p] for p in affected], ts),
         adds,
         ts,
         commit_meta,
@@ -5093,25 +4856,7 @@ def restore_delta_native(
                 {"schemaString": restored_meta["schemaString"]}, keep
             )
         extra = [{"metaData": restored_meta}]
-    removes = [
-        {
-            "path": rel,
-            "deletionTimestamp": ts,
-            "dataChange": True,
-            "extendedFileMetadata": True,
-            "partitionValues": active_now[rel].get("partitionValues")
-            or {},
-            "size": active_now[rel].get("size"),
-            # the BEFORE mask rides the tombstone (spec; the CDF
-            # reader's mask-diff derivation reads it from here)
-            **(
-                {"deletionVector": active_now[rel]["deletionVector"]}
-                if active_now[rel].get("deletionVector")
-                else {}
-            ),
-        }
-        for rel in to_remove
-    ]
+    removes = _remove_actions([active_now[rel] for rel in to_remove], ts)
     # dataChange FORCED true: adds sourced from a checkpoint carry
     # dataChange=false (the spec requires checkpoints to write them
     # that way), and copying that verbatim would make the restored rows
@@ -5572,23 +5317,6 @@ def optimize_delta_native(
                 root, urllib.parse.unquote(a["path"])
             )
             in_paths_set.add(abs_path)
-            if rt and a.get("baseRowId") is None:
-                # a ZERO-ROW file carries no identities to preserve
-                # (schema seeds predating the feature); anything else
-                # was never assigned ids — refuse, don't mint
-                try:
-                    nr0 = json.loads(a.get("stats") or "{}").get(
-                        "numRecords"
-                    )
-                except Exception:
-                    nr0 = None
-                if nr0 != 0:
-                    raise ValueError(
-                        f"row tracking: file {a['path']!r} carries no "
-                        "baseRowId — its row ids were never assigned "
-                        "(foreign backfill missing); refusing an "
-                        "OPTIMIZE that would mint new identities"
-                    )
             # join key = the file's PREDICTED raw metadata path (r11 —
             # the r10 shape decoded the metadata path per ROW instead);
             # the left join + raise_error guard below turns a rendering
@@ -5601,7 +5329,7 @@ def optimize_delta_native(
                     len(e["bks"]),
                 )
                 + (
-                    (int(a.get("baseRowId") or 0),
+                    (_rt_base(a, "an OPTIMIZE"),
                      a.get("defaultRowCommitVersion"))
                     if rt
                     else ()
@@ -5814,17 +5542,7 @@ def optimize_delta_native(
                             ),
                         }
                     )
-            for a in e["files"]:
-                removes.append(
-                    {
-                        "path": a["path"],
-                        "deletionTimestamp": ts,
-                        "dataChange": False,
-                        "extendedFileMetadata": True,
-                        "partitionValues": pvals,
-                        "size": a.get("size"),
-                    }
-                )
+            removes += _remove_actions(e["files"], ts, data_change=False)
     finally:
         fsutil.delete(spark, staging)
 

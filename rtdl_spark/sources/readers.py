@@ -181,21 +181,3 @@ def to_kafka_records(df: "DataFrame", key_col: str = "stream_id") -> "DataFrame"
         F.to_json(F.struct(*df.columns)).alias("value"),
     )
 
-
-def kafka_stream_writer(
-    df: "DataFrame",
-    bootstrap_servers: str,
-    topic: str,
-    checkpoint_dir: str,
-):
-    """The writeStream builder for Kafka egress (A3 / the function-chain
-    forward hop, ingester.go:1620-1643): expects a (key, value) frame from
-    ``to_kafka_records``; returns the un-started writer so callers pick
-    the trigger. Requires the spark-sql-kafka package at runtime (not in
-    this container — same gate as kafka_stream_reader)."""
-    return (
-        df.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint_dir)
-    )

@@ -1081,6 +1081,85 @@ def test_rewrite_aborts_on_concurrent_file_removal(spark, tmp_path, monkeypatch)
     assert ids == list(range(0, 8))
 
 
+@pytest.mark.parametrize("loser", ["dv_delete", "cow_delete", "optimize"])
+def test_rewrite_aborts_on_concurrent_dv_commit(
+    spark, tmp_path, monkeypatch, loser
+):
+    """A racing DV DELETE re-adds the SAME paths with new deletion
+    vectors, so a path-only conflict check sees every removed file still
+    active. The loser must compare the DV identity too (Delta reconciles
+    files on path + dvId) and abort — committing its plan would drop the
+    racer's mask and bring ids 25..29 back."""
+    import rtdl_spark.sources.delta_writer as dw
+    from rtdl_spark.sources.delta_writer import (
+        delete_where_delta_dv,
+        delete_where_delta_native,
+    )
+    from tests.test_dv import _dv_enabled_table
+
+    # OPTIMIZE leaves single-file partitions alone, so it races on 3
+    root = _dv_enabled_table(
+        spark, tmp_path, nfiles=3 if loser == "optimize" else 1
+    )
+    real = dw._try_commit
+    state = {"raced": False}
+
+    def race_once(spark_, root_, version, actions):
+        if not state["raced"]:
+            state["raced"] = True
+            delete_where_delta_dv(spark_, root_, "id >= 25")
+        return real(spark_, root_, version, actions)
+
+    monkeypatch.setattr(dw, "_try_commit", race_once)
+    run = {
+        "dv_delete": lambda: delete_where_delta_dv(spark, root, "id < 3"),
+        "cow_delete": lambda: delete_where_delta_native(spark, root, "id < 3"),
+        "optimize": lambda: optimize_delta_native(spark, root, min_files=1),
+    }[loser]
+    with pytest.raises(DeltaConcurrentWriteError):
+        run()
+    ids = sorted(r["id"] for r in read_delta_native(spark, root).collect())
+    assert ids == list(range(25))
+
+
+def test_promote_stops_moving_after_first_failed_rename(
+    spark, tmp_path, monkeypatch
+):
+    """The threaded promote (remote stores) must stop moving files once
+    one rename fails: the queued moves are skipped, and the error says
+    how many files already reached the table root."""
+    import threading
+    import time
+
+    import rtdl_spark.sources.delta_writer as dw
+    from rtdl_spark.sources import fsutil
+
+    root = tmp_path / "t"
+    staging = root / "_stage"
+    staging.mkdir(parents=True)
+    n = 64
+    for i in range(n):
+        (staging / f"part-{i:05d}.parquet").write_bytes(b"x")
+    moved = []
+    lock = threading.Lock()
+
+    def rename(spark_, src, dst):
+        if src.endswith("part-00000.parquet"):
+            return False
+        time.sleep(0.05)
+        os.rename(src, dst)
+        with lock:
+            moved.append(dst)
+        return True
+
+    monkeypatch.setattr(fsutil, "_is_local", lambda spark_, path: False)
+    monkeypatch.setattr(fsutil, "rename", rename)
+    with pytest.raises(IOError, match="already moved") as err:
+        dw._promote_staged(spark, str(root), str(staging), [], False)
+    assert len(moved) < n // 2
+    assert f"{len(moved)} of {n}" in str(err.value)
+
+
 def test_rewrite_aborts_on_concurrent_metadata_change(spark, tmp_path, monkeypatch):
     """A concurrent schema evolution (mergeSchema append carrying a new
     metaData) invalidates a staged rewrite plan — abort, don't commit

@@ -757,3 +757,58 @@ def test_reorg_purge_statement(spark, tmp_path):
     # DV-free table: no-op
     res2 = delta_sql(spark, f"REORG TABLE delta.`{root}` APPLY (PURGE)")
     assert res2["version"] is None
+
+
+@pytest.mark.parametrize("cdf", [False, True])
+def test_dml_job_shape(spark, tmp_path, cdf):
+    """Pins how many Spark jobs each DELETE/UPDATE entry point runs, in
+    both modes, with CDF off and on, on a table that already carries a
+    deletion vector (so every identify scan takes the masked-file path).
+    Counted through statusTracker job groups; the snapshot, identify,
+    stage, CDF and commit steps all run inside the group."""
+    import time
+
+    from rtdl_spark.sources.delta_writer import (
+        delete_where_delta_dv,
+        delete_where_delta_native,
+        update_where_delta_dv,
+        update_where_delta_native,
+    )
+    from tests.test_cdf import _dv_cdf_table
+
+    calls = {
+        "delete_native": lambda r: delete_where_delta_native(
+            spark, r, "id % 5 = 0"),
+        "update_native": lambda r: update_where_delta_native(
+            spark, r, "id % 5 = 0", {"id": "id + 1000"}),
+        "delete_dv": lambda r: delete_where_delta_dv(
+            spark, r, "id % 5 = 0"),
+        "update_dv": lambda r: update_where_delta_dv(
+            spark, r, "id % 5 = 0", {"id": "id + 1000"}),
+    }
+    sc = spark.sparkContext
+    groups = {}
+    for name, call in calls.items():
+        if cdf:
+            root = _dv_cdf_table(spark, tmp_path, name)
+        else:
+            root = _dv_enabled_table(spark, tmp_path / name, nfiles=2)
+        delete_where_delta_dv(spark, root, "id = 7")
+        gid = f"dml-shape-{name}-{cdf}"
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(gid, gid)
+        try:
+            assert call(root)["version"] is not None
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+        groups[name] = gid
+    time.sleep(0.5)  # let the listener bus deliver the last job events
+    tracker = sc.statusTracker()
+    got = {n: len(tracker.getJobIdsForGroup(g)) for n, g in groups.items()}
+    assert got == (
+        {"delete_native": 4, "update_native": 4, "delete_dv": 4,
+         "update_dv": 6}
+        if cdf
+        else {"delete_native": 3, "update_native": 3, "delete_dv": 2,
+              "update_dv": 5}
+    )

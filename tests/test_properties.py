@@ -785,6 +785,117 @@ def test_delta_native_stack_matches_log_model(
         assert got == want, (ops, ver)
 
 
+_DML_PREDICATES = [
+    "id % 3 = 0",
+    "id < 10",
+    "p = '1'",
+    "nullif(id % 4, 0) > 1",
+    "id % 5 = 0 OR p = '2'",
+    "id >= 100",
+]
+_DML_SETS = [
+    {"id": "id + 100"},
+    {"p": "'9'"},
+    {"id": "id * 2", "p": "cast(id % 2 AS string)"},
+    {"p": "concat(p, 'x')", "id": "id + length(p)"},
+]
+
+
+def _dml_modes_table(spark, root):
+    """30 rows, 3 partitions, on a table with deletion vectors, CDF and
+    row tracking all on. The rows land after the upgrade, so every file
+    carries a baseRowId; v0 is an empty seed."""
+    import json as _json
+    import os as _os
+
+    from rtdl_spark.sources.delta_reader import snapshot_actions
+    from rtdl_spark.sources.delta_writer import write_delta_native
+
+    def rows(n):
+        return spark.range(0, n).select(
+            "id", (F.col("id") % 3).cast("string").alias("p")
+        )
+
+    write_delta_native(
+        spark, rows(0), root, partition_by=["p"], checkpoint_interval=0
+    )
+    _, meta, _, current, _ = snapshot_actions(spark, root)
+    with open(
+        _os.path.join(root, "_delta_log", f"{current + 1:020d}.json"), "w"
+    ) as f:
+        f.write(_json.dumps({"commitInfo": {
+            "timestamp": 2, "operation": "UPGRADE"}}) + "\n")
+        f.write(_json.dumps({"protocol": {
+            "minReaderVersion": 3, "minWriterVersion": 7,
+            "readerFeatures": ["deletionVectors"],
+            "writerFeatures": ["deletionVectors", "changeDataFeed",
+                               "rowTracking", "domainMetadata",
+                               "appendOnly", "invariants"]}}) + "\n")
+        f.write(_json.dumps({"metaData": {**meta, "configuration": {
+            "delta.enableDeletionVectors": "true",
+            "delta.enableChangeDataFeed": "true",
+        }}}) + "\n")
+    return write_delta_native(
+        spark, rows(30).repartition(2), root, checkpoint_interval=0
+    )
+
+
+@settings(max_examples=4, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.sampled_from(_DML_PREDICATES),
+            st.one_of(st.none(), st.sampled_from(_DML_SETS)),
+        ),
+        min_size=1,
+        max_size=3,
+    )
+)
+def test_rewrite_and_dv_dml_agree(spark, tmp_path_factory, ops):
+    """Copy-on-write and deletion-vector DELETE/UPDATE are two stage
+    steps of one pipeline: on a DV + CDF + row-tracking table, any
+    sequence of them leaves the same visible rows and emits the same
+    change rows (``_change_type`` plus row, as a multiset) in either
+    mode."""
+    from rtdl_spark.sources.delta_reader import (
+        read_delta_native,
+        read_table_changes_cdf,
+        snapshot_control,
+    )
+    from rtdl_spark.sources.delta_writer import (
+        delete_where_delta_dv,
+        delete_where_delta_native,
+        update_where_delta_dv,
+        update_where_delta_native,
+    )
+
+    base = tmp_path_factory.mktemp("dml_modes")
+    seen = {}
+    for mode, delete, update in (
+        ("cow", delete_where_delta_native, update_where_delta_native),
+        ("dv", delete_where_delta_dv, update_where_delta_dv),
+    ):
+        root = str(base / mode)
+        start = _dml_modes_table(spark, root) + 1
+        for cond, sets in ops:
+            if sets is None:
+                delete(spark, root, cond)
+            else:
+                update(spark, root, cond, sets)
+        rows = sorted(
+            (r["id"], r["p"]) for r in read_delta_native(spark, root).collect()
+        )
+        end = snapshot_control(spark, root)[2]
+        changes = sorted(
+            (r["_change_type"], r["id"], r["p"])
+            for r in read_table_changes_cdf(
+                spark, root, start, end
+            ).collect()
+        ) if end >= start else []
+        seen[mode] = (rows, changes)
+    assert seen["cow"] == seen["dv"], ops
+
+
 @settings(max_examples=300, deadline=None)
 @given(
     st.data(),
