@@ -848,7 +848,7 @@ def allpairs_cosine_blocked(
 
     thr = float(threshold)
 
-    def score(key, pdf: pd.DataFrame):
+    def score(key, pdf):
         import numpy as np
 
         empty = pd.DataFrame(
@@ -1057,7 +1057,7 @@ def knn_graph(
     tagged = _block_pair_tags(df, id_col, vec_col, n_blocks)
     kk = int(k)
 
-    def local_topk(key, pdf: pd.DataFrame):
+    def local_topk(key, pdf):
         import numpy as np
 
         empty = pd.DataFrame(

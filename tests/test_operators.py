@@ -1910,6 +1910,35 @@ def test_allpairs_cosine_blocked_zero_norm_guard(spark):
     assert got == {(1, 3): 1.0}
 
 
+def test_grouped_map_callers_infer_no_eval_type_warning(spark):
+    """The blocked GEMM stages of allpairs_cosine_blocked and knn_graph
+    hand applyInPandas a (key, pdf) function. PySpark infers the eval
+    type from type hints only when every parameter is annotated, and
+    warns "Cannot infer the eval type from type hints" when only some
+    are — so both must plan without that UserWarning."""
+    import warnings
+
+    from rtdl_spark.operators.similarity import (
+        allpairs_cosine_blocked,
+        knn_graph,
+    )
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    with warnings.catch_warnings():
+        warnings.filterwarnings(
+            "error", message="Cannot infer the eval type", category=UserWarning
+        )
+        pairs = allpairs_cosine_blocked(df, threshold=0.5, n_blocks=2)
+        edges = knn_graph(df, k=1, n_blocks=2)
+    assert {(r.id_a, r.id_b) for r in pairs.collect()} == {(1, 2)}
+    assert {(r.src, r.dst) for r in edges.collect()} == {
+        (1, 2), (2, 1), (3, 2)
+    }
+
+
 def test_weighted_sample_deterministic_and_guarded(spark, sf_dir):
     """weighted_sample: rerun-identical, excludes nonpositive weights,
     clamps at the population size, and favors heavy rows (a max-weight row

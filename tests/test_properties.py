@@ -656,11 +656,17 @@ def test_delta_native_stack_matches_log_model(
     surgery, and — after the 'upgrade' op lands a v3/v7
     v2Checkpoint-feature protocol — the V2 UUID-named checkpoint
     layout composing with all of the above (layout='auto' routes
-    there) (r8)."""
+    there) (r8). At every version the snapshot is also replayed with
+    the checkpoint read both ways — pyarrow on the driver (local
+    storage) and one Spark collect (remote storage) — and must agree."""
     import json as _json
     import os as _os
 
-    from rtdl_spark.sources.delta_reader import read_delta_native
+    from rtdl_spark.sources.delta_reader import (
+        read_delta_native,
+        snapshot_actions,
+        snapshot_domains,
+    )
     from rtdl_spark.sources.delta_writer import (
         delete_where_delta_native,
         merge_into_delta_native,
@@ -670,6 +676,7 @@ def test_delta_native_stack_matches_log_model(
         write_checkpoint_native,
         write_delta_native,
     )
+    from tests.test_checkpoint_read import _remote_fs
 
     root = str(tmp_path_factory.mktemp("delta_prop")) + "/t"
 
@@ -783,6 +790,14 @@ def test_delta_native_stack_matches_log_model(
             for r in read_delta_native(spark, root, version=ver).collect()
         }
         assert got == want, (ops, ver)
+        # the driver checkpoint read (local storage) and the Spark one
+        # (remote storage) replay to the same snapshot at every version
+        local = (snapshot_actions(spark, root, version=ver),
+                 snapshot_domains(spark, root, version=ver))
+        with _remote_fs(spark):
+            assert (snapshot_actions(spark, root, version=ver),
+                    snapshot_domains(spark, root, version=ver)) == local, (
+                ops, ver)
 
 
 _DML_PREDICATES = [

@@ -479,6 +479,23 @@ def test_catalog_schema_cache_equivalence(spark):
     assert dict(ev.dtypes)["ts"].startswith("timestamp")
 
 
+def test_catalog_schema_cache_sees_rewritten_path(spark, tmp_path):
+    """A path rewritten with a different schema must not be read
+    through the schema cached for its old files: the new column would
+    silently read as missing."""
+    import rtdl_spark.catalog as cat
+
+    path = str(tmp_path / "x.parquet")
+    spark.range(3).select(F.col("id").alias("a")).write.parquet(path)
+    assert cat.table(spark, str(tmp_path), "x").columns == ["a"]
+    spark.range(3).select(
+        F.col("id").alias("a"), (F.col("id") * 10).alias("b")
+    ).write.mode("overwrite").parquet(path)
+    got = cat.table(spark, str(tmp_path), "x")
+    assert got.columns == ["a", "b"]
+    assert sorted(map(tuple, got.collect())) == [(0, 0), (1, 10), (2, 20)]
+
+
 def test_ensure_runtime_confs_once_per_session(spark):
     """ensure_runtime_confs applies the engine confs on first sight of a
     session and then becomes a no-op for that session object — re-applying
