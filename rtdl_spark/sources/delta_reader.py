@@ -932,10 +932,14 @@ def snapshot_domains(
         if v <= start_after or v > target:
             continue
         cpath = posixpath.join(_log_dir(root), f"{v:020d}.json")
-        for a in _read_json_lines(spark, cpath):
-            if "domainMetadata" in a:
-                d = a["domainMetadata"]
-                domains[d["domain"]] = dict(d)
+        # decode only the lines that can hold the action: a commit of
+        # 50k adds decoded whole costs ~0.3 s and ~50 MB to find none
+        for line in fsutil.read_text(spark, cpath).splitlines():
+            if '"domainMetadata"' in line:
+                a = json.loads(line)
+                if "domainMetadata" in a:
+                    d = a["domainMetadata"]
+                    domains[d["domain"]] = dict(d)
     return domains
 
 

@@ -35,8 +35,9 @@ Scale shape: the data write is one ordinary distributed
 numRecords stats come from ONE metadata-only aggregation over the staged
 files; everything else is driver-side KB-scale log bookkeeping — the same
 division of labor as delta-spark's OptimisticTransaction. Checkpoints
-(every ``checkpoint_interval`` commits, Delta's default 10) bound log
-replay for readers to [checkpoint, tail].
+(after every data commit whose version is a multiple of the
+checkpoint interval, Delta's default 10) bound log replay for readers
+to [checkpoint, tail].
 
 Known divergence, documented rather than silent: checkpoints carry
 protocol/metaData/add but no expired remove tombstones; batch readers
@@ -52,12 +53,14 @@ import posixpath
 import re
 import threading
 import time
+import traceback
 import urllib.parse
 import uuid
+import warnings
 
 import pandas as pd  # module-level: pandas_udf resolves stringified
 # type hints against MODULE globals under future-annotations (NOTES trap)
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -1799,13 +1802,50 @@ def _try_commit(
         raise
 
 
+def _post_commit(
+    spark: SparkSession,
+    root: str,
+    version: int,
+    actions: list[dict],
+    meta: dict | None,
+    checkpoint_interval: int | None = None,
+) -> None:
+    """The step after every data commit (delta-spark's postCommit hook):
+    checkpoint every ``checkpoint_interval`` commits — the table's
+    ``delta.checkpointInterval`` (as of this commit) when None, else 10;
+    0 never. Best-effort: the commit has already landed, so a failed
+    checkpoint warns instead of raising (a caller retrying the "failed"
+    write would commit it twice) and the next interval tries again."""
+    try:
+        if checkpoint_interval is None:
+            committed = next(
+                (a["metaData"] for a in actions if "metaData" in a), meta
+            )
+            checkpoint_interval = int(
+                ((committed or {}).get("configuration") or {}).get(
+                    "delta.checkpointInterval", 10
+                )
+            )
+        if checkpoint_interval > 0 and version > 0 and (
+            version % checkpoint_interval == 0
+        ):
+            write_checkpoint_native(spark, root)
+    except Exception:
+        warnings.warn(
+            f"Delta commit {version} at {root} landed, but its "
+            f"checkpoint failed:\n{traceback.format_exc()}",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+
+
 def write_delta_native(
     spark: SparkSession,
     df: DataFrame,
     table_dir: str,
     mode: str = "append",
     partition_by: list[str] | None = None,
-    checkpoint_interval: int = 10,
+    checkpoint_interval: int | None = None,
     with_stats: bool = True,
     max_retries: int = 5,
     txn: tuple[str, int] | None = None,
@@ -1849,6 +1889,11 @@ def write_delta_native(
     applies (it cannot curve-rank a nested field). On an EXISTING table
     the option must match the table's domain verbatim (it never
     re-clusters; that is ALTER TABLE territory).
+
+    ``checkpoint_interval``: checkpoint after every N-th commit; None
+    (default) takes the table's ``delta.checkpointInterval``, else 10;
+    0 never checkpoints. A failed checkpoint warns and the landed
+    version is still returned (``_post_commit``).
 
     ``txn=(app_id, version)`` attaches the protocol's SetTransaction
     action — the exactly-once handshake for streaming writers: if the
@@ -2349,10 +2394,9 @@ def write_delta_native(
         actions.extend({"add": a} for a in adds)
 
         if _try_commit(spark, root, version, actions):
-            if checkpoint_interval and version > 0 and (
-                version % checkpoint_interval == 0
-            ):
-                write_checkpoint_native(spark, root)
+            _post_commit(
+                spark, root, version, actions, meta, checkpoint_interval
+            )
             return version
 
         # lost the race: re-read and re-validate against the new tip
@@ -3011,6 +3055,7 @@ def _commit_rewrite(
                 actions.append(dom)
         actions.extend({"add": a} for a in adds)
         if _try_commit(spark, root, current + 1, actions):
+            _post_commit(spark, root, current + 1, actions, planned_meta)
             return current + 1
         protocol2, meta2, active2, current, _tx = snapshot_actions(
             spark, root
@@ -5845,209 +5890,305 @@ def write_checkpoint_native(
     (delta-spark's checkpointPolicy=v2 gate); refuses otherwise. The
     strict read side (delta_reader._v2_sidecar_paths: exactly one
     checkpointMetadata, matching version, every sidecar present) is
-    the conformance oracle for what this writes.
+    the conformance oracle for what this writes. ``sidecar_parts``
+    splits the add set over N sidecar files (readers scan them in
+    parallel; default 1 file).
 
-    Scale shape: the add set flows checkpoint→checkpoint as a DATAFRAME
-    (snapshot_adds_frame — prior checkpoint scanned distributed, JSON
-    tail folded in via broadcast anti-join); only the handful of
-    protocol/metaData/txn rows are driver-built. A million-file table
-    checkpoints without ever materializing a million add actions on the
-    driver — the same division delta-spark's checkpoint job uses. For
-    V2, ``sidecar_parts`` splits the add set over N sidecar files
-    (readers scan them in parallel; default 1 file)."""
+    Where the rows are built follows the storage, the same split as
+    ``delta_reader._checkpoint_rows``. On local storage they are the
+    snapshot every read of the table already replays on the driver
+    (``snapshot_actions`` + ``snapshot_domains``), written with pyarrow:
+    no Spark job, a few ms for a table of tens of files. Elsewhere the
+    add set flows checkpoint→checkpoint as a DATAFRAME
+    (``snapshot_adds_frame`` — prior checkpoint scanned distributed, JSON
+    tail folded in via broadcast anti-join) and only the control rows
+    are driver-built, so a million-file remote table checkpoints without
+    materializing its add actions on the driver — the same division
+    delta-spark's checkpoint job uses. Either way each file is written
+    under a temp name and renamed into place, and ``_last_checkpoint``
+    is written last."""
     if layout not in ("auto", "classic", "v2"):
         raise ValueError(
             f"layout must be auto|classic|v2, got {layout!r}"
         )
     root = table_dir.rstrip("/")
-    protocol, meta, adds_df, version, txns = snapshot_adds_frame(
-        spark, root
-    )
-    rows: list[tuple] = [
-        (
-            (
-                int(protocol.get("minReaderVersion", 1)),
-                int(protocol.get("minWriterVersion", 1)),
-                list(protocol["readerFeatures"])
-                if protocol.get("readerFeatures") is not None
-                else None,
-                list(protocol["writerFeatures"])
-                if protocol.get("writerFeatures") is not None
-                else None,
-            ),
-            None,
-            None,
-            None,
-            None,
-            None,
-        ),
-        (
-            None,
-            (
-                meta.get("id"),
-                meta.get("name"),
-                meta.get("description"),
-                (
-                    (meta.get("format") or {}).get("provider", "parquet"),
-                    dict((meta.get("format") or {}).get("options") or {}),
+    local = fsutil._is_local(spark, root)
+    if local:
+        protocol, meta, active, version, txns = snapshot_actions(
+            spark, root
+        )
+    else:
+        protocol, meta, adds_df, version, txns = snapshot_adds_frame(
+            spark, root
+        )
+    control = _checkpoint_control(spark, root, protocol, meta, txns, version)
+    feats_r = set(protocol.get("readerFeatures") or [])
+    feats_w = set(protocol.get("writerFeatures") or [])
+    has_v2 = "v2Checkpoint" in feats_r and "v2Checkpoint" in feats_w
+    if layout == "auto":
+        layout = "v2" if has_v2 else "classic"
+    if layout == "v2" and not has_v2:
+        raise ValueError(
+            "V2 checkpoint writes need the v2Checkpoint feature in "
+            "BOTH readerFeatures and writerFeatures (it is a "
+            "reader-writer feature) — upgrade the table's protocol "
+            "first, or write a classic checkpoint"
+        )
+    log = _log_dir(root)
+    if local:
+        # checkpoint adds are dataChange=false per spec (the snapshot's
+        # dicts are this call's own); fields outside the checkpoint
+        # schema (tags, ...) drop in the Arrow conversion, as in the
+        # distributed path's projection
+        for a in active.values():
+            a["dataChange"] = False
+        adds = [{"add": a} for a in active.values()]
+        n_adds = len(adds)
+    else:
+        n_obs, n_adds = Observation(), None
+        adds = adds_df.select(
+            F.struct(
+                F.col("path"),
+                F.col("partitionValues"),
+                F.col("size"),
+                F.col("modificationTime"),
+                F.lit(False).alias("dataChange"),
+                F.col("stats"),
+                F.col("deletionVector"),
+                F.col("baseRowId"),
+                F.col("defaultRowCommitVersion"),
+            ).alias("add")
+        ).observe(n_obs, F.count(F.lit(1)).alias("n"))
+    if layout == "v2":
+        # sidecars: the FILE ACTIONS only, under _delta_log/_sidecars/
+        # (remove present-but-null so foreign readers probing both file
+        # action columns see the expected shape)
+        sc_dir = posixpath.join(log, "_sidecars")
+        fsutil.mkdirs(spark, sc_dir)
+        sidecars = (
+            _local_sidecars(spark, log, sc_dir, adds, sidecar_parts)
+            if local
+            else _spark_sidecars(spark, root, log, sc_dir, adds,
+                                 sidecar_parts)
+        )
+        # top-level: control plane + checkpointMetadata + sidecar
+        # actions, NO file actions (the spec forbids them once
+        # sidecars are present)
+        top = (
+            control
+            + [{"checkpointMetadata": {"version": version, "tags": None}}]
+            + [{"sidecar": s} for s in sidecars]
+        )
+        final = posixpath.join(
+            log, f"{version:020d}.checkpoint.{uuid.uuid4()}.parquet"
+        )
+        if local:
+            _put_parquet_local(spark, log, final, top, _V2_TOP_SCHEMA)
+        else:
+            _put_parquet_spark(
+                spark, root, log, final, _rows_df(spark, top, _V2_TOP_SCHEMA)
+            )
+    else:
+        final = posixpath.join(log, f"{version:020d}.checkpoint.parquet")
+        if fsutil.exists(spark, final):
+            # idempotent: a checkpoint for this version already exists
+            # (same snapshot — commits are immutable), keep it; rename
+            # onto an existing path fails on local/HDFS
+            if not local:
+                n_adds = adds.count()
+        elif local:
+            _put_parquet_local(
+                spark, log, final, control + adds, _CHECKPOINT_SCHEMA
+            )
+        else:
+            _put_parquet_spark(
+                spark, root, log, final,
+                _rows_df(spark, control, _CHECKPOINT_SCHEMA).unionByName(
+                    adds, allowMissingColumns=True
                 ),
-                meta["schemaString"],
-                list(meta.get("partitionColumns") or []),
-                dict(meta.get("configuration") or {}),
-                meta.get("createdTime"),
-            ),
-            None,
-            None,
-            None,
-            None,
-        ),
+            )
+    if not local and n_adds is None:
+        n_adds = n_obs.get["n"]
+    fsutil.write_text(
+        spark,
+        posixpath.join(log, "_last_checkpoint"),
+        json.dumps({"version": version, "size": len(control) + n_adds}),
+    )
+    return version
+
+
+def _checkpoint_control(
+    spark: SparkSession,
+    root: str,
+    protocol: dict,
+    meta: dict,
+    txns: dict[str, int],
+    version: int,
+) -> list[dict]:
+    """A checkpoint's control rows, one ``{column: action}`` per row:
+    protocol, metaData, the txn watermarks and the domainMetadata
+    state."""
+    from rtdl_spark.sources.delta_reader import snapshot_domains
+
+    fmt = meta.get("format") or {}
+    rows = [
+        {
+            "protocol": {
+                "minReaderVersion": int(protocol.get("minReaderVersion", 1)),
+                "minWriterVersion": int(protocol.get("minWriterVersion", 1)),
+                "readerFeatures": protocol.get("readerFeatures"),
+                "writerFeatures": protocol.get("writerFeatures"),
+            }
+        },
+        {
+            "metaData": {
+                **meta,
+                "format": {
+                    "provider": fmt.get("provider", "parquet"),
+                    "options": dict(fmt.get("options") or {}),
+                },
+                "partitionColumns": list(meta.get("partitionColumns") or []),
+                "configuration": dict(meta.get("configuration") or {}),
+            }
+        },
     ]
     # SetTransaction state must survive checkpoint-bounded replay, or a
     # streaming writer would lose its exactly-once watermark the moment
     # the pre-checkpoint commits stop being read
-    for app_id in sorted(txns):
-        rows.append(
-            (None, None, None, None,
-             (app_id, int(txns[app_id]), None), None)
-        )
+    rows += [
+        {"txn": {"appId": app_id, "version": int(txns[app_id]),
+                 "lastUpdated": None}}
+        for app_id in sorted(txns)
+    ]
     # domainMetadata state likewise (a foreign writer's domains — row
     # tracking, clustering — must survive the tail being cleaned up)
-    from rtdl_spark.sources.delta_reader import snapshot_domains
+    rows += [
+        {"domainMetadata": {"domain": d["domain"],
+                            "configuration": d.get("configuration"),
+                            "removed": bool(d.get("removed"))}}
+        for d in sorted(snapshot_domains(spark, root, version).values(),
+                        key=lambda d: d["domain"])
+    ]
+    return rows
 
-    for dom in sorted(snapshot_domains(spark, root, version).values(),
-                      key=lambda d: d["domain"]):
-        rows.append(
-            (None, None, None, None, None,
-             (dom["domain"], dom.get("configuration"),
-              bool(dom.get("removed"))))
-        )
-    control_df = spark.createDataFrame(rows, _CHECKPOINT_SCHEMA)
-    add_struct_df = adds_df.select(
-        F.struct(
-            F.col("path"),
-            F.col("partitionValues"),
-            F.col("size"),
-            F.col("modificationTime"),
-            # checkpoint adds are dataChange=false per spec
-            F.lit(False).alias("dataChange"),
-            F.col("stats"),
-            F.col("deletionVector"),
-            F.col("baseRowId"),
-            F.col("defaultRowCommitVersion"),
-        ).alias("add")
+
+def _rows_df(
+    spark: SparkSession, rows: list[dict], schema: StructType
+) -> DataFrame:
+    """``{column: action}`` rows as a DataFrame of ``schema``."""
+    return local_df(
+        spark, [tuple(r.get(f.name) for f in schema.fields) for r in rows],
+        schema,
     )
-    n_adds = add_struct_df.count()
-    log = _log_dir(root)
-    feats_r = set(protocol.get("readerFeatures") or [])
-    feats_w = set(protocol.get("writerFeatures") or [])
-    if layout == "auto":
-        layout = (
-            "v2"
-            if "v2Checkpoint" in feats_r and "v2Checkpoint" in feats_w
-            else "classic"
-        )
-    if layout == "v2":
-        if "v2Checkpoint" not in feats_r or "v2Checkpoint" not in feats_w:
-            raise ValueError(
-                "V2 checkpoint writes need the v2Checkpoint feature in "
-                "BOTH readerFeatures and writerFeatures (it is a "
-                "reader-writer feature) — upgrade the table's protocol "
-                "first, or write a classic checkpoint"
-            )
-        # sidecars: the FILE ACTIONS only, under _delta_log/_sidecars/
-        # (remove present-but-null so foreign readers probing both file
-        # action columns see the expected shape)
-        sidecar_df = add_struct_df.withColumn(
-            "remove",
-            F.lit(None).cast(
-                _CHECKPOINT_SCHEMA["remove"].dataType
-            ),
-        )
-        sidecar_df = (
-            sidecar_df.repartition(int(sidecar_parts))
-            if sidecar_parts
-            else sidecar_df.coalesce(1)
-        )
-        sc_dir = posixpath.join(log, "_sidecars")
-        fsutil.mkdirs(spark, sc_dir)
-        tmp = posixpath.join(log, f".ckpt-tmp-{uuid.uuid4().hex[:12]}")
-        sidecar_df.write.mode("overwrite").parquet(tmp)
-        sidecar_rows: list[tuple] = []
-        try:
-            for p, size, mtime in sorted(fsutil.list_files(spark, tmp)):
-                if not p.endswith(".parquet"):
-                    continue
-                name = f"{uuid.uuid4()}.parquet"
-                dest = posixpath.join(sc_dir, name)
-                if not fsutil.rename(spark, _fs_prefix(root) + p, dest):
-                    raise IOError(
-                        f"failed to move sidecar into place: {dest}"
-                    )
-                sidecar_rows.append((name, int(size), int(mtime)))
-        finally:
-            fsutil.delete(spark, tmp)
-        # top-level: control plane + checkpointMetadata + sidecar
-        # actions, NO file actions (the spec forbids them once
-        # sidecars are present)
-        top_rows = [
-            (r[0], r[1], r[4], r[5], None, None) for r in rows
-        ] + [
-            (None, None, None, None, (int(version), None), None)
-        ] + [
-            (None, None, None, None, None, (nm, sz, mt, None))
-            for nm, sz, mt in sidecar_rows
-        ]
-        top_df = local_df(spark, top_rows, _V2_TOP_SCHEMA)
-        tmp2 = posixpath.join(log, f".ckpt-tmp-{uuid.uuid4().hex[:12]}")
-        top_df.coalesce(1).write.mode("overwrite").parquet(tmp2)
-        try:
-            part = next(
-                p
-                for p, _s, _m in fsutil.list_files(spark, tmp2)
-                if p.endswith(".parquet")
-            )
-            final = posixpath.join(
-                log, f"{version:020d}.checkpoint.{uuid.uuid4()}.parquet"
-            )
-            if not fsutil.rename(spark, _fs_prefix(root) + part, final):
-                raise IOError(
-                    f"failed to move checkpoint into place: {final}"
-                )
-        finally:
-            fsutil.delete(spark, tmp2)
-        fsutil.write_text(
-            spark,
-            posixpath.join(log, "_last_checkpoint"),
-            json.dumps({"version": version, "size": len(rows) + n_adds}),
-        )
-        return version
-    cdf = control_df.unionByName(
-        add_struct_df, allowMissingColumns=True
-    )
+
+
+_SIDECAR_SCHEMA = StructType(
+    [_CHECKPOINT_SCHEMA["add"], _CHECKPOINT_SCHEMA["remove"]]
+)
+
+
+def _put_parquet_local(
+    spark: SparkSession,
+    log: str,
+    final: str,
+    rows: list[dict],
+    schema: StructType,
+) -> None:
+    """Write ``rows`` as one parquet file at ``final`` with pyarrow: to a
+    dot-named temp file in ``log`` (invisible to log listing and to
+    Spark's file index), then renamed into place."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    tmp = posixpath.join(log, f".ckpt-tmp-{uuid.uuid4().hex[:12]}.parquet")
+    try:
+        pq.write_table(table, tmp)
+        if not fsutil.rename(spark, tmp, final):
+            raise IOError(f"failed to move checkpoint into place: {final}")
+    finally:
+        fsutil.delete(spark, tmp)
+
+
+def _put_parquet_spark(
+    spark: SparkSession, root: str, log: str, final: str, df: DataFrame
+) -> None:
+    """Write ``df`` as one parquet file at ``final`` with Spark: to a temp
+    directory in ``log``, whose one part file is renamed into place."""
     tmp = posixpath.join(log, f".ckpt-tmp-{uuid.uuid4().hex[:12]}")
-    cdf.coalesce(1).write.mode("overwrite").parquet(tmp)
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
     try:
         part = next(
             p
             for p, _s, _m in fsutil.list_files(spark, tmp)
             if p.endswith(".parquet")
         )
-        final = posixpath.join(log, f"{version:020d}.checkpoint.parquet")
-        if fsutil.exists(spark, final):
-            # idempotent: a checkpoint for this version already exists
-            # (same snapshot — commits are immutable), keep it; rename
-            # onto an existing path fails on local/HDFS
-            pass
-        elif not fsutil.rename(spark, _fs_prefix(root) + part, final):
+        if not fsutil.rename(spark, _fs_prefix(root) + part, final):
             raise IOError(f"failed to move checkpoint into place: {final}")
     finally:
         fsutil.delete(spark, tmp)
-    fsutil.write_text(
-        spark,
-        posixpath.join(log, "_last_checkpoint"),
-        json.dumps({"version": version, "size": len(rows) + n_adds}),
+
+
+def _local_sidecars(
+    spark: SparkSession,
+    log: str,
+    sc_dir: str,
+    adds: list[dict],
+    sidecar_parts: int | None,
+) -> list[dict]:
+    """Write ``adds`` as ``sidecar_parts`` sidecar files (contiguous
+    slices; at least one file, none empty unless the table is) → their
+    sidecar actions."""
+    n = max(1, min(int(sidecar_parts or 1), len(adds)))
+    out = []
+    for i in range(n):
+        dest = posixpath.join(sc_dir, f"{uuid.uuid4()}.parquet")
+        _put_parquet_local(
+            spark, log, dest,
+            adds[i * len(adds) // n:(i + 1) * len(adds) // n],
+            _SIDECAR_SCHEMA,
+        )
+        _p, size, mtime = next(fsutil.iter_files(spark, dest))
+        out.append({"path": posixpath.basename(dest), "sizeInBytes": size,
+                    "modificationTime": mtime, "tags": None})
+    return out
+
+
+def _spark_sidecars(
+    spark: SparkSession,
+    root: str,
+    log: str,
+    sc_dir: str,
+    adds: DataFrame,
+    sidecar_parts: int | None,
+) -> list[dict]:
+    """Write the ``adds`` frame as sidecar files (``sidecar_parts``
+    partitions, default one) → their sidecar actions."""
+    sidecar_df = adds.withColumn(
+        "remove", F.lit(None).cast(_CHECKPOINT_SCHEMA["remove"].dataType)
     )
-    return version
+    sidecar_df = (
+        sidecar_df.repartition(int(sidecar_parts))
+        if sidecar_parts
+        else sidecar_df.coalesce(1)
+    )
+    tmp = posixpath.join(log, f".ckpt-tmp-{uuid.uuid4().hex[:12]}")
+    sidecar_df.write.mode("overwrite").parquet(tmp)
+    out = []
+    try:
+        for p, size, mtime in fsutil.list_files(spark, tmp):
+            if not p.endswith(".parquet"):
+                continue
+            name = f"{uuid.uuid4()}.parquet"
+            dest = posixpath.join(sc_dir, name)
+            if not fsutil.rename(spark, _fs_prefix(root) + p, dest):
+                raise IOError(f"failed to move sidecar into place: {dest}")
+            out.append({"path": name, "sizeInBytes": int(size),
+                        "modificationTime": int(mtime), "tags": None})
+    finally:
+        fsutil.delete(spark, tmp)
+    return out
 
 
 def cleanup_delta_log_native(

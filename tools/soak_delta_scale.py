@@ -6,11 +6,16 @@ of files whose *log* must stay cheap to plan against. So the table here
 is fabricated — one real parquet data file hard-linked N times, with a
 genuine commit 0 carrying N add actions — which makes a 50k-file table
 in seconds while keeping every byte of the log and checkpoint REAL (the
-checkpoint is written by write_checkpoint_native itself, distributed).
+checkpoint is written by write_checkpoint_native itself).
+
+Each cell is timed untraced, then run a second time under tracemalloc for
+its driver-side Python allocation peak (state the first run changed is
+put back in between), so the wall times are not tracing figures.
 
 Cells:
-1. checkpoint WRITE at N files — the add set flows checkpoint->parquet
-   as a DataFrame; driver allocations measured with tracemalloc.
+1. checkpoint WRITE at N files — on local disk the add set is the
+   driver snapshot, written with pyarrow; on remote storage it flows
+   checkpoint->parquet as a DataFrame.
 2. snapshot_actions vs snapshot_control vs snapshot_adds_frame planning
    wall + driver-side Python allocations. control/frame must be FLAT
    (O(tail)), actions is the O(N) scan-planning baseline.
@@ -31,6 +36,7 @@ import os
 import sys
 import time
 import tracemalloc
+from urllib.parse import unquote
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -62,16 +68,25 @@ def main() -> None:
     root = os.path.join(work, "table")
     os.makedirs(root)
 
-    def timed(label, fn, trace=False):
-        if trace:
-            tracemalloc.start()
-        t0 = time.time()
+    def timed(label, fn, trace=False, reset=None):
+        """Run ``fn`` untraced for its wall time; with ``trace``, run it
+        again under tracemalloc for the driver-Python peak, after
+        ``reset(out)`` has undone what the first run changed. Tracing
+        slows allocation-heavy calls up to tenfold, so a traced run's
+        wall would measure the tracing, not the call."""
+        t0 = time.perf_counter()
         out = fn()
-        wall = time.time() - t0
+        wall = time.perf_counter() - t0
         peak = None
         if trace:
-            _cur, peak = tracemalloc.get_traced_memory()
-            tracemalloc.stop()
+            if reset is not None:
+                reset(out)
+            tracemalloc.start()
+            try:
+                fn()
+                peak = tracemalloc.get_traced_memory()[1]
+            finally:
+                tracemalloc.stop()
         print(
             f"  {label}: {wall:.2f}s"
             + (f", driver-python peak {peak / 1e6:.1f} MB" if trace else "")
@@ -135,8 +150,29 @@ def main() -> None:
                 + "\n"
             )
 
-    print(f"cell 1: checkpoint write at {n_files} files (distributed)")
-    timed("write_checkpoint_native", lambda: write_checkpoint_native(spark, root), trace=True)
+    def undo_checkpoint():
+        """Reset for a checkpoint cell: drop the checkpoint it wrote and
+        put back the ``_last_checkpoint`` it replaced."""
+        last = os.path.join(log, "_last_checkpoint")
+        prior = open(last).read() if os.path.exists(last) else None
+
+        def reset(version):
+            os.remove(os.path.join(log, f"{version:020d}.checkpoint.parquet"))
+            if prior is None:
+                os.remove(last)
+            else:
+                with open(last, "w") as f:
+                    f.write(prior)
+
+        return reset
+
+    print(f"cell 1: checkpoint write at {n_files} files")
+    timed(
+        "write_checkpoint_native",
+        lambda: write_checkpoint_native(spark, root),
+        trace=True,
+        reset=undo_checkpoint(),
+    )
 
     print("cell 2: snapshot planning after the checkpoint")
     (_, w_actions, m_actions) = timed(
@@ -155,20 +191,30 @@ def main() -> None:
     ratio = (m_actions or 1) / max(m_ctl or 1, 1)
     print(f"  driver-memory ratio actions/control: {ratio:.0f}x")
 
+    def undo_append(version):
+        """Reset for the append cell: drop its commit and the data files
+        it added (left behind, vacuum would count them in cell 4)."""
+        commit = os.path.join(log, f"{version:020d}.json")
+        with open(commit) as f:
+            for line in f:
+                add = json.loads(line).get("add")
+                if add:
+                    os.remove(os.path.join(root, unquote(add["path"])))
+        os.remove(commit)
+
     print("cell 3: one real append (the streaming-sink path)")
     extra = spark.range(1000, 1010).select("id", (F.col("id") * 3).alias("v"))
     timed(
         "write_delta_native append",
         lambda: write_delta_native(spark, extra, root, checkpoint_interval=0),
         trace=True,
+        reset=undo_append,
     )
-    # checkpoint->checkpoint: the prior checkpoint flows through as a
-    # DataFrame, so unlike the bootstrap checkpoint (whose whole state
-    # was the JSON tail) driver allocations must stay flat
     timed(
         "write_checkpoint_native (from prior checkpoint)",
         lambda: write_checkpoint_native(spark, root),
         trace=True,
+        reset=undo_checkpoint(),
     )
 
     n_remove = n_files // 5
@@ -198,6 +244,9 @@ def main() -> None:
         "vacuum_delta_native_distributed(retain_ms=0)",
         lambda: vacuum_delta_native_distributed(spark, root, retain_ms=0),
         trace=True,
+        reset=lambda _n: [
+            os.link(seed, os.path.join(root, name)) for name in names[:n_remove]
+        ],
     )
     assert reaped == n_remove, (reaped, n_remove)
     gone = sum(

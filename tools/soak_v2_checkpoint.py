@@ -4,9 +4,11 @@ round-8 extension of tools/soak_delta_scale.py's control-plane gate.
 Same fabrication trick (1 real parquet file hard-linked N times behind a
 genuine commit 0), then:
 
-1. write_checkpoint_native(layout="v2", sidecar_parts=4) — the add set
-   must flow into the sidecars as a DataFrame (driver allocations
-   measured with tracemalloc stay flat).
+1. write_checkpoint_native(layout="v2", sidecar_parts=4) — on local
+   disk the add set is the driver snapshot, written to the sidecars with
+   pyarrow (driver allocations, measured with tracemalloc, are those of
+   snapshot_actions); on remote storage it flows into them as a
+   DataFrame.
 2. delete the JSON tail at/below the checkpoint: every subsequent plan
    goes through the top-level + sidecars.
 3. snapshot_adds_frame planning wall + driver allocations (must stay
