@@ -25,12 +25,19 @@ Spark redesign decisions (each a deliberate divergence, not an omission):
 - **Catalog**: Dremio source/dataset promotion (A19) becomes a Spark
   session-catalog table per (stream folder, message type), registered
   once per job and declared from the write's schema. Its partitions come
-  from the write itself: an observation on each append collects the
-  (rtdl_table, rtdl_bucket) pairs it landed, and only pairs the job has
-  not added yet become ADD PARTITION calls. A table holds only its own
-  type's rows, although all types share the stream root.
-- **Micro-batch shape**: one probe job plus one write job per routed
-  stream. Internal actions run under the small-plan scope of the batch's
+  from the write itself: an observation on the staged write collects the
+  (stream, rtdl_table, rtdl_bucket) triples it landed, and only pairs the
+  job has not added yet become ADD PARTITION calls. A table holds only
+  its own type's rows, although all types share the stream root.
+- **Micro-batch shape**: one probe job plus one write job. Each routed
+  stream is one filter plus one flat projection (payload flatten, table
+  and bucket columns, inline PII masks), whose Column list is built once
+  per (stream configs, batch schema) and reused by later batches. All
+  streams that share a store, a codec and a schema are written together:
+  one union, one ``partitionBy(rtdl_stream, rtdl_table, rtdl_bucket)``
+  write into an ``_``-prefixed staging directory, then each stream's
+  files are renamed into its root. A failed write lands nothing in any
+  root. Internal actions run under the small-plan scope of the batch's
   own session (under foreachBatch, the stream's session, never the
   caller's).
 """
@@ -38,9 +45,12 @@ Spark redesign decisions (each a deliberate divergence, not an omission):
 from __future__ import annotations
 
 import os
+import uuid
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from rtdl_spark.catalog import add_lake_partitions, register_lake_table
 from rtdl_spark.config.constants import (
@@ -53,17 +63,23 @@ from rtdl_spark.config.constants import (
 )
 from rtdl_spark.config.registry import StreamConfig, StreamRegistry
 from rtdl_spark.functions.buckets import partition_bucket
-from rtdl_spark.functions.pii import mask_pii_strings
+from rtdl_spark.functions.pii import mask_pii_col, mask_pii_strings
 from rtdl_spark.functions.smallplan import (
     _plan_size_estimate,
     _small_plan_scope,
 )
 from rtdl_spark.session import ensure_runtime_confs
+from rtdl_spark.sources import fsutil
 
 TABLE_COL = "rtdl_table"
 BUCKET_COL = "rtdl_bucket"
+STREAM_COL = "rtdl_stream"  # staging-only partition column: stream index
 CORRUPT_COL = "_corrupt_record"
 _PART_COLS = (TABLE_COL, BUCKET_COL)
+_STAGED_COLS = (STREAM_COL, TABLE_COL, BUCKET_COL)
+_STAGING_PREFIX = "_rtdl_staging-"
+_BUILTIN_FUNCTIONS = ("ingester", "pii-detection", "deltawriter")
+_MAX_CACHED_PLANS = 16
 
 
 def _col_or_null(df: DataFrame, name: str):
@@ -141,6 +157,25 @@ class IngestJob:
         # (db, table, bucket) partitions added (see _register_partitions)
         self._catalog_tables: set[tuple[str, str]] = set()
         self._catalog_parts: set[tuple[str, str, str | None]] = set()
+        # Column lists reused across batches (see _cached)
+        self._plans: dict[tuple, object] = {}
+
+    def _cached(self, key: tuple, build):
+        """Every Column operation is a py4j round trip, so the envelope,
+        probe, projection and observation Column lists are built once per
+        key and reused by later batches. Keys carry everything a list
+        depends on: the job settings below, the batch schema, the active
+        configs' field values. A registry reload or schema drift therefore
+        builds a new list; the oldest entries are dropped."""
+        key = (
+            self.time_source, self.event_time_col, self.fixed_time,
+            self.with_lineage,
+        ) + key
+        if key not in self._plans:
+            if len(self._plans) >= _MAX_CACHED_PLANS:
+                del self._plans[next(iter(self._plans))]
+            self._plans[key] = build()
+        return self._plans[key]
 
     # -- A1: envelope ------------------------------------------------------
     def read_json(self, path: str) -> DataFrame:
@@ -185,6 +220,11 @@ class IngestJob:
         writeKey map to stream_alt_id (projectId takes precedence when both
         are present — ingest-service.go:179-189 only consults writeKey when
         projectId is nil), payload keeps the whole message."""
+        return raw.select(*self._cached(
+            ("envelope", raw.schema.json()), lambda: self._envelope_cols(raw)
+        ))
+
+    def _envelope_cols(self, raw: DataFrame) -> list[Column]:
         cols = [
             _col_or_null(raw, "stream_id").alias("stream_id"),
             F.coalesce(
@@ -203,20 +243,18 @@ class IngestJob:
                 F.input_file_name().alias("_source_file"),
                 ingested.alias("_ingested_at"),
             ]
-        return raw.select(*cols)
-
-    # -- A24: control messages --------------------------------------------
-    def split_control(self, env: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """Control messages (rtdl_205) reload configs and never land in the
-        lake (ingester.go:1551-1561)."""
-        is_ctrl = F.col("message_type") == CONTROL_MESSAGE_TYPE
-        return env.filter(~is_ctrl | is_ctrl.isNull()), env.filter(is_ctrl)
+        return cols
 
     # -- A5: routing -------------------------------------------------------
-    def _route_conds(self) -> list[tuple[StreamConfig, Column]]:
-        """Per active config, the ownership predicate. alt-id match takes
-        precedence over stream-id match across *all* configs."""
-        configs = self.registry.get_all_active()
+    def _route_conds(
+        self, configs: list[StreamConfig]
+    ) -> list[tuple[StreamConfig, Column]]:
+        """Per config, the ownership predicate of a data row. alt-id match
+        takes precedence over stream-id match across *all* configs.
+        Control messages (rtdl_205) reload configs and never land in the
+        lake (ingester.go:1551-1561)."""
+        is_ctrl = F.col("message_type") == CONTROL_MESSAGE_TYPE
+        data = ~is_ctrl | is_ctrl.isNull()
         alt_ids = [c.stream_alt_id for c in configs if c.stream_alt_id]
         conds = []
         for cfg in configs:
@@ -229,18 +267,21 @@ class IngestJob:
                 ~F.col("stream_alt_id").isin(alt_ids)
                 | F.col("stream_alt_id").isNull()
             )
-            conds.append((cfg, by_alt | by_id))
+            conds.append((cfg, data & (by_alt | by_id)))
         return conds
 
-    def route(self, env: DataFrame) -> list[tuple[StreamConfig, DataFrame]]:
-        """Per active config, the rows it owns (see _route_conds)."""
-        return [(cfg, env.filter(c)) for cfg, c in self._route_conds()]
-
-    # -- A7 + A9: table + bucket columns ----------------------------------
-    def resolve_columns(self, df: DataFrame, cfg: StreamConfig) -> DataFrame:
+    # -- A7 + A9 + A23: one flat projection per stream --------------------
+    def _projection(
+        self, cfg: StreamConfig, payload: StructType, mask: bool
+    ) -> list[Column]:
+        """The stream's lake columns in one select: ``payload.*``, the
+        table (A7) and bucket (A9) columns, then the lineage columns. With
+        ``mask``, every string column, partition columns included, goes
+        through the pii-detection regexes, as ``mask_pii_strings`` does
+        to the flat frame."""
         payload_type = (
             F.col("payload.type")
-            if "type" in df.schema["payload"].dataType.fieldNames()
+            if "type" in payload.fieldNames()
             else F.lit(None).cast("string")
         )
         table_col = F.coalesce(
@@ -256,47 +297,122 @@ class IngestJob:
         else:
             ts = F.current_timestamp()
         grain = PARTITION_TIMES[cfg.partition_time_id]
-        return df.withColumn(TABLE_COL, table_col).withColumn(
-            BUCKET_COL, partition_bucket(ts, grain)
-        )
+        out = [
+            (F.col("payload").getField(f.name), f.dataType.simpleString(),
+             f.name)
+            for f in payload.fields
+        ]
+        out += [
+            (table_col, "string", TABLE_COL),
+            (partition_bucket(ts, grain), "string", BUCKET_COL),
+        ]
+        if self.with_lineage:
+            out += [
+                (F.col("_source_file"), "string", "_source_file"),
+                (F.col("_ingested_at"), "timestamp", "_ingested_at"),
+            ]
+        return [
+            (mask_pii_col(c) if mask and t == "string" else c).alias(name)
+            for c, t, name in out
+        ]
 
     # -- A12-A17: store dispatch ------------------------------------------
-    def dest_root(self, cfg: StreamConfig) -> str:
+    def store_root(self, cfg: StreamConfig) -> str:
+        """The store a stream lands on: the lake root, the HDFS namenode,
+        or the object-store bucket. Streams on one store can be staged
+        together and renamed into their roots."""
         store = FILE_STORE_TYPES[cfg.file_store_type_id]
         prefix = STORE_URI_PREFIX[store]
         if store == "local":
-            return os.path.join(self.lake_root, cfg.folder_name)
+            return self.lake_root
         if store == "hdfs":
-            return (
-                f"{prefix}{cfg.namenode_host}:{cfg.namenode_port}"
-                f"/{cfg.folder_name}"
-            )
-        return f"{prefix}{cfg.bucket_name}/{cfg.folder_name}"
+            return f"{prefix}{cfg.namenode_host}:{cfg.namenode_port}"
+        return f"{prefix}{cfg.bucket_name}"
 
-    # -- A11 + A19: write + catalog ---------------------------------------
-    def write_stream_batch(self, cfg: StreamConfig, df: DataFrame) -> str:
-        """Partitioned columnar append of one stream's rows — the
-        micro-batch replacement for file-per-message — then catalog
-        registration of exactly the (table, bucket) partitions that write
-        produced. Those pairs come from an observation on the write itself
-        (the same current_timestamp() bucket the files get), so learning
-        them costs no extra job; see ``_register_partitions``."""
-        dest = self.dest_root(cfg)
-        obs = None
-        if self.register_catalog:
-            obs = Observation()
-            df = df.observe(
-                obs, F.collect_set(F.struct(*_PART_COLS)).alias("parts")
+    def dest_root(self, cfg: StreamConfig) -> str:
+        if FILE_STORE_TYPES[cfg.file_store_type_id] == "local":
+            return os.path.join(self.lake_root, cfg.folder_name)
+        return f"{self.store_root(cfg)}/{cfg.folder_name}"
+
+    # -- A11 + A19: staged write + catalog --------------------------------
+    def _write_group(
+        self,
+        members: list[tuple[int, StreamConfig, DataFrame, StructType]],
+        codec: str,
+        observed: list[Column],
+    ) -> tuple[dict[str, str], dict[str, int]]:
+        """One partitioned columnar append for streams that share a store,
+        a codec and a schema — the micro-batch replacement for
+        file-per-message. The streams' frames are unioned with their index
+        in ``rtdl_stream`` and written once into an ``_``-prefixed staging
+        directory inside the first stream's root (hidden from readers of
+        that root); then each stream's files are renamed into its root and
+        its partitions registered (``_register_partitions``). The write
+        carries the ``observed`` columns (``_observed_cols``): the
+        (stream, table, bucket) triples it landed and, when asked for,
+        per-stream row counts, so learning them costs no extra job. A
+        stream with no rows has no staged files and is left out of the
+        result. The staging directory is deleted in every case, and so is
+        the first stream's root if this write created it and nothing
+        landed there."""
+        dests = {i: self.dest_root(cfg) for i, cfg, _df, _s in members}
+        host = dests[members[0][0]].rstrip("/")
+        name = f"{_STAGING_PREFIX}{uuid.uuid4().hex}"
+        staging = f"{host}/{name}"
+        host_created = not fsutil.exists(self.spark, host)
+        obs = Observation()
+        frame = reduce(
+            lambda a, b: a.union(b), [df for _i, _cfg, df, _s in members]
+        ).observe(obs, *observed)
+        try:
+            (
+                frame.write.partitionBy(*_STAGED_COLS)
+                .option("compression", codec)
+                .mode("append")
+                .parquet(staging)
             )
-        (
-            df.write.partitionBy(*_PART_COLS)
-            .option("compression", COMPRESSION_TYPES[cfg.compression_type_id])
-            .mode("append")
-            .parquet(dest)
-        )
-        if obs is not None:
-            self._register_partitions(cfg, dest, df.schema, obs.get["parts"])
-        return dest
+            self._land_staged(staging, name, dests)
+        finally:
+            fsutil.delete(self.spark, staging)
+            if host_created and not fsutil.list_names(self.spark, host):
+                fsutil.delete(self.spark, host)
+        result = obs.get
+        parts: dict[int, set] = {}
+        for s, t, b in result["parts"]:
+            parts.setdefault(s, set()).add((t, b))
+        written: dict[str, str] = {}
+        counts: dict[str, int] = {}
+        for i, cfg, _df, schema in members:
+            if i not in parts:
+                continue
+            written[cfg.stream_id] = dests[i]
+            if f"n{i}" in result:
+                counts[cfg.stream_id] = result[f"n{i}"]
+            if self.register_catalog:
+                self._register_partitions(cfg, dests[i], schema, parts[i])
+        return written, counts
+
+    def _land_staged(
+        self, staging: str, name: str, dests: dict[int, str]
+    ) -> None:
+        """Renames every file under ``staging/rtdl_stream=<i>/`` to the
+        same relative path under stream i's root; Spark has already
+        escaped the partition directory names. ``fsutil.rename`` never
+        overwrites, so a name clash raises instead of losing a file."""
+        moves = []
+        for path, _size, _mtime in fsutil.iter_files(self.spark, staging):
+            rel = path.split(f"/{name}/", 1)[1]
+            head, _sep, tail = rel.partition("/")
+            if head.startswith(f"{STREAM_COL}="):  # not _SUCCESS
+                dest = dests[int(head[len(STREAM_COL) + 1:])].rstrip("/")
+                moves.append((f"{staging}/{rel}", f"{dest}/{tail}"))
+        for d in sorted({dst.rsplit("/", 1)[0] for _src, dst in moves}):
+            fsutil.mkdirs(self.spark, d)
+        for src, dst in moves:
+            if not fsutil.rename(self.spark, src, dst):
+                raise FileExistsError(
+                    f"staged file {src} not moved: {dst} already exists"
+                )
 
     def _register_partitions(
         self, cfg: StreamConfig, dest: str, schema, parts
@@ -338,8 +454,6 @@ class IngestJob:
     def _listed_buckets(self, dest: str, table: str) -> set[str | None]:
         """Buckets on disk for one table of a stream root. Partition
         directory names use Spark's own path escaping and null marker."""
-        from rtdl_spark.sources import fsutil
-
         paths = (
             self.spark._jvm.org.apache.spark.sql.catalyst.catalog
             .ExternalCatalogUtils
@@ -356,25 +470,36 @@ class IngestJob:
         }
 
     # -- A22/A23: function chain ------------------------------------------
-    def apply_chain(self, cfg: StreamConfig, df: DataFrame) -> DataFrame:
-        """Ordered transform chain. 'ingester' is the write stage handled by
-        run_batch; downstream functions are DataFrame→DataFrame transforms
-        (pii-detection masks every string column with the reference's
-        regexes; deltawriter appends to a Delta table when delta-spark is
-        importable, else records its parquet fallback)."""
-        out = df
+    def _chain_steps(self, cfg: StreamConfig) -> tuple[bool, list[str]]:
+        """The stream's chain split into (mask inline, DataFrame steps).
+        'ingester' is the write stage handled by run_batch. pii-detection
+        masks every string column with the reference's regexes; before
+        any DataFrame step it is part of the stream's projection, after
+        one it runs as a step, so chain order holds. deltawriter and
+        ``extra_functions`` are DataFrame→DataFrame steps, run in chain
+        order."""
+        inline, steps = False, []
         for fn in cfg.function_chain():
-            if fn == "ingester":
-                continue
-            if fn == "pii-detection":
-                out = mask_pii_strings(out)
-            elif fn == "deltawriter":
-                out = self._delta_append(cfg, out)
-            elif fn in self.extra_functions:
-                out = self.extra_functions[fn](out)
-            else:
+            if fn not in _BUILTIN_FUNCTIONS and fn not in self.extra_functions:
                 raise ValueError(f"unknown function in chain: {fn}")
-        return out
+            if fn == "pii-detection" and not steps:
+                inline = True
+            elif fn != "ingester":
+                steps.append(fn)
+        return inline, steps
+
+    def apply_chain(
+        self, cfg: StreamConfig, df: DataFrame, steps: list[str]
+    ) -> DataFrame:
+        """Runs the chain's DataFrame steps (see ``_chain_steps``)."""
+        for fn in steps:
+            if fn == "pii-detection":
+                df = mask_pii_strings(df)
+            elif fn == "deltawriter":
+                df = self._delta_append(cfg, df)
+            else:
+                df = self.extra_functions[fn](df)
+        return df
 
     def _delta_append(self, cfg: StreamConfig, df: DataFrame) -> DataFrame:
         """deltawriter parity (delta_writer.py:81-98): append the batch to
@@ -396,133 +521,130 @@ class IngestJob:
         return df
 
     # -- end-to-end --------------------------------------------------------
+    def _batch_plan(self, env: DataFrame, raw_schema: str, configs) -> tuple:
+        """(probe columns, per-stream (cfg, route, projection, steps,
+        schema)) for these configs over this batch schema, built once
+        (see ``_cached``). The probe counts all rows, control rows and
+        each stream's routed rows. A stream without DataFrame steps
+        carries its ``rtdl_stream`` index in its projection; ``schema``
+        is its lake schema, without that index."""
+
+        def build():
+            payload = env.schema["payload"].dataType
+            is_ctrl = F.col("message_type") == CONTROL_MESSAGE_TYPE
+            probe = [
+                F.count(F.lit(1)).alias("__n"),
+                F.sum(is_ctrl.cast("long")).alias("__ctrl"),
+            ]
+            streams = []
+            for i, (cfg, route) in enumerate(self._route_conds(configs)):
+                probe.append(F.sum(route.cast("long")).alias(f"__s{i}"))
+                inline, steps = self._chain_steps(cfg)
+                cols = self._projection(cfg, payload, inline)
+                schema = env.select(*cols).schema
+                if not steps:
+                    cols.append(F.lit(i).alias(STREAM_COL))
+                streams.append((cfg, route, cols, steps, schema))
+            return probe, streams
+
+        return self._cached((
+            "plan", raw_schema, tuple(repr(c) for c in configs),
+            tuple(sorted(self.extra_functions)),
+        ), build)
+
     def run_batch(
         self, raw: DataFrame, collect_metrics: bool = False
     ) -> dict[str, str]:
-        """Full pipeline for one batch; returns {stream_id: dest_root}.
-        Mirrors Ingest() (ingester.go:1545-1654) minus Kafka hops.
+        """Full pipeline for one batch; returns {stream_id: dest_root} for
+        the streams that landed rows. Mirrors Ingest()
+        (ingester.go:1545-1654) minus Kafka hops.
 
-        A batch without control messages runs one probe job plus one
-        write job per routed stream:
+        A batch runs one probe job plus one write job (one per group of
+        streams that differ in store, codec or schema; one in the common
+        case):
 
         - The envelope frame is persisted for the batch's lifetime, so the
-          probe and every stream's write read it instead of re-running the
-          source read. A micro-batch is bounded by construction, so this
-          is the standard foreachBatch multi-sink pattern (and is why this
+          probe and the write read it instead of re-running the source
+          read. A micro-batch is bounded by construction, so this is the
+          standard foreachBatch multi-sink pattern (and is why this
           method, not the caller, owns persist/unpersist).
+        - The probe counts the control rows and each stream's routed rows
+          in one aggregation. Streams with no routed rows are left out of
+          the write. When control messages are present, the registry is
+          reloaded and every stream of the new configs is written; one
+          that turns out empty simply stages no files.
+        - Each stream is one filter plus one flat projection, then its
+          chain's DataFrame steps (``_chain_steps``); the streams are
+          staged in one write and renamed into their roots
+          (``_write_group``). A failed write raises and lands nothing.
         - The probe and the writes run under the bytes-gated small-plan
           scope (functions/smallplan.py) of the BATCH's session,
           ``raw.sparkSession``. Under foreachBatch that is the stream's
           own session with its own SQLConf, so the scope reaches the
           batch's actions and never flips AQE on the caller's session,
           where a user query may be planning.
-        - Streams are written one after another (``write_stream_batch``),
-          each write followed by the catalog registration of the
-          partitions it observed: no extra job, and most batches make no
-          catalog call. If a write fails, its error is raised at once;
-          the streams written before it are already catalogued.
 
         ``collect_metrics=True`` fills ``self.last_metrics`` with the
         batch's row accounting: n_input, n_control, n_unrouted (rows that
         did not land: unmatched routing — the reference's silent drop,
         ingest-service.go:244 — plus any rows a chain transform removed),
-        and per-stream written row counts. The
-        per-stream counts ride the write action itself via df.observe —
-        no extra pass; the input/control counts come from the probe."""
+        and per-stream written row counts. The per-stream counts ride the
+        write itself as an observation — no extra pass; the input/control
+        counts come from the probe."""
         raw, cached_raw = self._quarantine_corrupt(raw)
+        raw_schema = raw.schema.json()
         env = self.envelope(raw).persist()
         batch_spark = env.sparkSession
-        # r11: batch-internal actions (the fused probe, each stream's
-        # write) run under the bytes-gated small-plan scope — at bench
-        # scale the probe collapsed from 3 AQE stage-jobs to 1 and the
-        # write from 2 to 1; at real batch sizes the gate stays off and
-        # AQE keeps handling the shuffles (see smallplan.py)
+        # r11: batch-internal actions (the probe, the staged write) run
+        # under the bytes-gated small-plan scope — at bench scale the
+        # probe collapsed from 3 AQE stage-jobs to 1 and the write from 2
+        # to 1; at real batch sizes the gate stays off and AQE keeps
+        # handling the shuffles (see smallplan.py)
         batch_small_bytes = _plan_size_estimate(env)
         self.last_metrics: dict | None = None
         try:
-            # ONE probe job (r10; guide §1.2/§2.4 — the r9 shape spent a
-            # job materializing the cache for the control check, then one
-            # MORE job per stream asking "did anything route here?"): a
-            # single aggregation over the just-persisted envelope yields
-            # the control count AND every stream's routed count, so empty
-            # streams are skipped from driver arithmetic. Routed counts
-            # are computed with the PRE-reload configs, so when control
-            # messages ARE present the batch falls back to the reload +
-            # per-stream-probe path (rare by construction — control
-            # messages are administrative).
-            is_ctrl = F.col("message_type") == CONTROL_MESSAGE_TYPE
-            not_ctrl = ~is_ctrl | is_ctrl.isNull()
-            conds = self._route_conds()
+            configs = self.registry.get_all_active()
+            probe_cols, streams = self._batch_plan(env, raw_schema, configs)
             with _small_plan_scope(batch_spark, batch_small_bytes):
-                probe = env.agg(
-                    F.count(F.lit(1)).alias("__n"),
-                    F.sum(is_ctrl.cast("long")).alias("__ctrl"),
-                    *[
-                        F.sum((not_ctrl & c).cast("long")).alias(f"__s{i}")
-                        for i, (_cfg, c) in enumerate(conds)
-                    ],
-                ).collect()[0]
+                probe = env.agg(*probe_cols).collect()[0]
             n_input = int(probe["__n"])
             n_control = int(probe["__ctrl"] or 0)
-            data, ctrl = self.split_control(env)
-            routed_n: dict[str, int] | None = None
             if n_control > 0:
+                # routed counts are the pre-reload configs'; rare by
+                # construction, control messages are administrative
                 self.registry.reload()
-                conds = self._route_conds()  # configs may have changed
+                configs = self.registry.get_all_active()
+                _p, streams = self._batch_plan(env, raw_schema, configs)
+                routed = range(len(streams) if n_input > n_control else 0)
             else:
-                routed_n = {
-                    cfg.stream_id: int(probe[f"__s{i}"] or 0)
-                    for i, (cfg, _c) in enumerate(conds)
-                }
+                routed = [
+                    i for i in range(len(streams)) if probe[f"__s{i}"]
+                ]
+            groups: dict[tuple, list] = {}
+            for i in routed:
+                cfg, route, cols, steps, schema = streams[i]
+                df = env.filter(route).select(*cols)
+                if steps:
+                    df = self.apply_chain(cfg, df, steps)
+                    schema = df.schema
+                    df = df.select("*", F.lit(i).alias(STREAM_COL))
+                key = (
+                    self.store_root(cfg),
+                    COMPRESSION_TYPES[cfg.compression_type_id],
+                    schema.json(),
+                )
+                groups.setdefault(key, []).append((i, cfg, df, schema))
+            observed = self._cached(
+                ("observe", len(streams), collect_metrics),
+                lambda: _observed_cols(len(streams), collect_metrics),
+            )
             written: dict[str, str] = {}
             stream_counts: dict[str, int] = {}
-            for cfg, cond in conds:
-                if routed_n is not None and routed_n[cfg.stream_id] == 0:
-                    continue
-                rows = data.filter(cond)
-                resolved = self.resolve_columns(rows, cfg)
-                # Flatten the payload before the chain so transforms (e.g.
-                # PII masking) see the real data columns, and the lake
-                # schema is the payload schema (A8) plus the two partition
-                # columns.
-                lineage = (
-                    [F.col("_source_file"), F.col("_ingested_at")]
-                    if self.with_lineage
-                    else []
-                )
-                flat = resolved.select(
-                    F.col("payload.*"),
-                    F.col(TABLE_COL),
-                    F.col(BUCKET_COL),
-                    *lineage,
-                )
-                chained = self.apply_chain(cfg, flat)
-                # only a ROW-DROPPING chain transform can empty a routed
-                # stream; the probe already proved routed rows exist,
-                # and the built-in stages are row-preserving by
-                # construction ('ingester' is the write itself,
-                # 'pii-detection' masks in place, 'deltawriter' appends
-                # and passes through) — so the emptiness job survives
-                # only for EXTERNAL extra_functions, whose chains can
-                # filter (r11; guide §1.2)
-                may_empty = routed_n is None or any(
-                    fn in self.extra_functions
-                    for fn in cfg.function_chain()
-                )
+            for (_store, codec, _schema), members in groups.items():
                 with _small_plan_scope(batch_spark, batch_small_bytes):
-                    if may_empty and chained.limit(1).count() == 0:
-                        continue
-                    obs = None
-                    if collect_metrics:
-                        obs = Observation()
-                        chained = chained.observe(
-                            obs, F.count(F.lit(1)).alias("n_rows")
-                        )
-                    written[cfg.stream_id] = self.write_stream_batch(
-                        cfg, chained
-                    )
-                if obs is not None:
-                    stream_counts[cfg.stream_id] = obs.get["n_rows"]
+                    w, c = self._write_group(members, codec, observed)
+                written.update(w)
+                stream_counts.update(c)
             if collect_metrics:
                 self.last_metrics = {
                     "n_input": n_input,
@@ -572,8 +694,6 @@ class IngestJob:
         batch (at-least-once within, exactly-once across runs — same
         contract as foreachBatch + CommitLog)."""
         if batch_id is not None and commit_log_dir is not None:
-            from rtdl_spark.sources import fsutil
-
             marker = f"{commit_log_dir.rstrip('/')}/{batch_id}.committed"
             if fsutil.exists(self.spark, marker):
                 return {}
@@ -634,3 +754,17 @@ def schema_diff(old_schema, new_schema) -> dict:
             if old_f[k] != new_f[k]
         },
     }
+
+
+def _observed_cols(n_streams: int, counts: bool) -> list[Column]:
+    """What a staged write observes: the (stream, table, bucket) triples
+    it landed and, with ``counts``, the row count of each of the batch's
+    ``n_streams`` stream indices."""
+    cols = [F.collect_set(F.struct(*_STAGED_COLS)).alias("parts")]
+    if counts:
+        stream = F.col(STREAM_COL)
+        cols += [
+            F.sum((stream == i).cast("long")).alias(f"n{i}")
+            for i in range(n_streams)
+        ]
+    return cols

@@ -582,9 +582,14 @@ def _replay_core(
     table_dir: str,
     version: int | None = None,
     adds: str = "full",
+    domains: dict[str, dict] | None = None,
 ):
     """Shared log replay → (protocol, meta, active, target, txns,
     ckpt_used, tail_adds, tail_removed).
+
+    ``domains``, when a dict, is filled with the latest domainMetadata
+    action per domain at ``target`` (what ``snapshot_domains`` returns),
+    read in the same checkpoint pass and the same commit replay.
 
     ``adds`` controls how much per-file state is materialized on the
     driver:
@@ -627,6 +632,8 @@ def _replay_core(
         # planning projection (add) is read ONLY in "full" mode, in the
         # same pass when the adds live in the top-level file.
         cols = ["protocol", "metaData", "txn"]
+        if domains is not None:
+            cols.append("domainMetadata")
         if layout["kind"] == "v2":
             cols += ["checkpointMetadata", "sidecar"]
         if adds == "full":
@@ -649,6 +656,9 @@ def _replay_core(
         for t in top["txn"]:
             if t.get("appId") is not None:
                 txns[t["appId"]] = int(t["version"])
+        for d in top.get("domainMetadata", []):
+            if d.get("domain") is not None:
+                domains[d["domain"]] = d
         for a in add_rows:
             a["partitionValues"] = dict(a.get("partitionValues") or {})
             active[a["path"]] = a
@@ -706,6 +716,9 @@ def _replay_core(
                 t = action["txn"]
                 if t.get("appId") is not None:
                     txns[t["appId"]] = int(t["version"])
+            elif "domainMetadata" in action and domains is not None:
+                d = action["domainMetadata"]
+                domains[d["domain"]] = dict(d)
         for a in commit_adds:
             if adds == "full":
                 active[a["path"]] = a
@@ -724,7 +737,10 @@ def _replay_core(
 
 
 def snapshot_actions(
-    spark: SparkSession, table_dir: str, version: int | None = None
+    spark: SparkSession,
+    table_dir: str,
+    version: int | None = None,
+    domains: dict[str, dict] | None = None,
 ) -> tuple[dict, dict, dict[str, dict], int, dict[str, int]]:
     """Replay the log up to ``version`` (latest if None) → (protocol,
     metaData, {file path: full add action}, resolved version,
@@ -740,9 +756,9 @@ def snapshot_actions(
     ``snapshot_control`` (zero per-file work); distributed maintenance
     (vacuum, checkpointing) plans against ``snapshot_adds_frame`` (the
     checkpoint stays a DataFrame; only the KB-scale JSON tail is
-    driver-parsed)."""
+    driver-parsed). ``domains``: see ``_replay_core``."""
     protocol, meta, active, target, txns, _c, _ta, _tr = _replay_core(
-        spark, table_dir, version, adds="full"
+        spark, table_dir, version, adds="full", domains=domains
     )
     return protocol, meta, active, target, txns
 
@@ -783,6 +799,7 @@ _ADDS_FRAME_FIELDS = (
     # once the JSON tail is cleaned (the spec makes them stable)
     ("baseRowId", "bigint"),
     ("defaultRowCommitVersion", "bigint"),
+    ("tags", "map<string,string>"),
 )
 
 _DV_FIELD_ORDER = (
@@ -804,7 +821,10 @@ def _dv_tuple(a: dict):
 
 
 def snapshot_adds_frame(
-    spark: SparkSession, table_dir: str, version: int | None = None
+    spark: SparkSession,
+    table_dir: str,
+    version: int | None = None,
+    domains: dict[str, dict] | None = None,
 ) -> tuple[dict, dict, DataFrame, int, dict[str, int]]:
     """Snapshot whose ACTIVE FILE SET stays a DataFrame → (protocol,
     metaData, adds frame, resolved version, txn map). The checkpoint's
@@ -813,9 +833,10 @@ def snapshot_adds_frame(
     aggregations over a million-file table run distributed and the
     driver holds O(tail) state. Columns: path (table-relative,
     URL-encoded, exactly as in the log), partitionValues, size,
-    modificationTime, stats."""
+    modificationTime, stats, deletionVector, baseRowId,
+    defaultRowCommitVersion, tags. ``domains``: see ``_replay_core``."""
     protocol, meta, _a, target, txns, ckpt_used, tail_adds, tail_removed = (
-        _replay_core(spark, table_dir, version, adds="tail")
+        _replay_core(spark, table_dir, version, adds="tail", domains=domains)
     )
     schema_ddl = ", ".join(f"`{n}` {t}" for n, t in _ADDS_FRAME_FIELDS)
     tail_rows = [
@@ -832,6 +853,7 @@ def snapshot_adds_frame(
             int(a["defaultRowCommitVersion"])
             if a.get("defaultRowCommitVersion") is not None
             else None,
+            a.get("tags"),
         )
         for a in tail_adds.values()
     ]
@@ -1260,7 +1282,9 @@ def read_delta_native(
                     if raw is not None
                     else F.lit(None).cast(by_type[c]),
                 )
-            parts.append(df.select(*[f.name for f in schema.fields]))
+            if part_cols:  # else the scan's projection is the schema
+                df = df.select(*[f.name for f in schema.fields])
+            parts.append(df)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

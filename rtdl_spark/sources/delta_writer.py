@@ -2574,6 +2574,9 @@ _CHECKPOINT_SCHEMA = StructType(
                     ),
                     StructField("baseRowId", LongType()),
                     StructField("defaultRowCommitVersion", LongType()),
+                    # INSERTION_TIME, ZCUBE_ID, ...: writer-set metadata
+                    # that readers of the checkpoint must still see
+                    StructField("tags", MapType(StringType(), StringType())),
                 ]
             ),
         ),
@@ -5897,9 +5900,10 @@ def write_checkpoint_native(
     Where the rows are built follows the storage, the same split as
     ``delta_reader._checkpoint_rows``. On local storage they are the
     snapshot every read of the table already replays on the driver
-    (``snapshot_actions`` + ``snapshot_domains``), written with pyarrow:
-    no Spark job, a few ms for a table of tens of files. Elsewhere the
-    add set flows checkpoint→checkpoint as a DATAFRAME
+    (``snapshot_actions``, which also collects the domainMetadata state
+    in its one pass), written with pyarrow: no Spark job, a few ms for a
+    table of tens of files. Elsewhere the add set flows
+    checkpoint→checkpoint as a DATAFRAME
     (``snapshot_adds_frame`` — prior checkpoint scanned distributed, JSON
     tail folded in via broadcast anti-join) and only the control rows
     are driver-built, so a million-file remote table checkpoints without
@@ -5913,15 +5917,16 @@ def write_checkpoint_native(
         )
     root = table_dir.rstrip("/")
     local = fsutil._is_local(spark, root)
+    domains: dict[str, dict] = {}
     if local:
         protocol, meta, active, version, txns = snapshot_actions(
-            spark, root
+            spark, root, domains=domains
         )
     else:
         protocol, meta, adds_df, version, txns = snapshot_adds_frame(
-            spark, root
+            spark, root, domains=domains
         )
-    control = _checkpoint_control(spark, root, protocol, meta, txns, version)
+    control = _checkpoint_control(protocol, meta, txns, domains)
     feats_r = set(protocol.get("readerFeatures") or [])
     feats_w = set(protocol.get("writerFeatures") or [])
     has_v2 = "v2Checkpoint" in feats_r and "v2Checkpoint" in feats_w
@@ -5938,8 +5943,8 @@ def write_checkpoint_native(
     if local:
         # checkpoint adds are dataChange=false per spec (the snapshot's
         # dicts are this call's own); fields outside the checkpoint
-        # schema (tags, ...) drop in the Arrow conversion, as in the
-        # distributed path's projection
+        # schema drop in the Arrow conversion, as in the distributed
+        # path's projection
         for a in active.values():
             a["dataChange"] = False
         adds = [{"add": a} for a in active.values()]
@@ -5957,6 +5962,7 @@ def write_checkpoint_native(
                 F.col("deletionVector"),
                 F.col("baseRowId"),
                 F.col("defaultRowCommitVersion"),
+                F.col("tags"),
             ).alias("add")
         ).observe(n_obs, F.count(F.lit(1)).alias("n"))
     if layout == "v2":
@@ -6018,18 +6024,14 @@ def write_checkpoint_native(
 
 
 def _checkpoint_control(
-    spark: SparkSession,
-    root: str,
     protocol: dict,
     meta: dict,
     txns: dict[str, int],
-    version: int,
+    domains: dict[str, dict],
 ) -> list[dict]:
     """A checkpoint's control rows, one ``{column: action}`` per row:
     protocol, metaData, the txn watermarks and the domainMetadata
     state."""
-    from rtdl_spark.sources.delta_reader import snapshot_domains
-
     fmt = meta.get("format") or {}
     rows = [
         {
@@ -6066,8 +6068,7 @@ def _checkpoint_control(
         {"domainMetadata": {"domain": d["domain"],
                             "configuration": d.get("configuration"),
                             "removed": bool(d.get("removed"))}}
-        for d in sorted(snapshot_domains(spark, root, version).values(),
-                        key=lambda d: d["domain"])
+        for d in sorted(domains.values(), key=lambda d: d["domain"])
     ]
     return rows
 

@@ -186,16 +186,16 @@ def test_checkpoint_job_shape(spark, tmp_path):
     """A local checkpoint runs no Spark job, bootstrap (no earlier
     checkpoint) or on top of an earlier one. Remotely the add set is
     written by Spark and counted by an Observation on that write, not by
-    a count job of its own: 1 job at bootstrap, 7 on top of a
-    checkpoint (schema inference and collect of the earlier checkpoint's
-    control rows, for the snapshot and for its domains, and the write
-    with its broadcast anti-join)."""
+    a count job of its own: 1 job at bootstrap, 5 on top of a
+    checkpoint (schema inference and one collect of the earlier
+    checkpoint's control rows, domains included, and the write with its
+    broadcast anti-join)."""
     root = str(tmp_path / "t")
     for i in range(3):
         _append(spark, root, i * 10, i * 10 + 10, partition_by=["p"])
     twin = str(tmp_path / "twin")
     shutil.copytree(root, twin)
-    for remote, path, want in ((False, root, [0, 0]), (True, twin, [1, 7])):
+    for remote, path, want in ((False, root, [0, 0]), (True, twin, [1, 5])):
         got = []
         for _ in want:
             _append(spark, path, 100, 105)
@@ -209,6 +209,41 @@ def test_checkpoint_job_shape(spark, tmp_path):
         assert sorted(r.id for r in read_delta_native(spark, path).collect()) \
             == list(range(30)) + [100, 100, 101, 101, 102, 102, 103, 103,
                                   104, 104]
+
+
+@pytest.mark.parametrize("remote", [False, True], ids=["local", "remote"])
+def test_add_tags_survive_checkpoints(spark, tmp_path, remote):
+    """Add-action tags (INSERTION_TIME, ZCUBE_ID, ...) are carried into a
+    checkpoint, from a JSON commit and from an earlier checkpoint, so a
+    reader still sees them once the JSON commits are removed."""
+    root = str(tmp_path / "t")
+    _append(spark, root, 0, 10)
+
+    def tagged(version, **tags):
+        _commit(root, version, {"add": {
+            "path": f"tagged-{version}.parquet", "partitionValues": {},
+            "size": 1, "modificationTime": version, "dataChange": True,
+            "tags": tags,
+        }})
+
+    def tags():
+        return {p: a.get("tags")
+                for p, a in snapshot_actions(spark, root)[2].items()}
+
+    tagged(1, INSERTION_TIME="1700000000000000", ZCUBE_ID="z-1")
+    with _remote_fs(spark) if remote else contextlib.nullcontext():
+        write_checkpoint_native(spark, root)
+        tagged(2, INSERTION_TIME="1700000000000001")
+        want = tags()
+        write_checkpoint_native(spark, root)
+        for f in glob.glob(os.path.join(root, "_delta_log", "*.json")):
+            os.remove(f)
+        assert tags() == want
+    assert want["tagged-1.parquet"] == {
+        "INSERTION_TIME": "1700000000000000", "ZCUBE_ID": "z-1"}
+    assert want["tagged-2.parquet"] == {"INSERTION_TIME": "1700000000000001"}
+    assert tags() == want
+
 
 
 @pytest.mark.parametrize("layout", ["classic", "v2"])

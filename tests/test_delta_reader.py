@@ -1083,3 +1083,59 @@ def test_v2_checkpoint_read_json_top_and_mislabel_refusal(
     )
     with pytest.raises(ValueError, match="checkpointMetadata"):
         read_delta_native(spark, root2).collect()
+
+
+def _py4j_calls(call):
+    """(call(), the py4j round trips it made)."""
+    from py4j.clientserver import JavaClient
+    from py4j.java_gateway import GatewayClient
+
+    n = [0]
+    saved = []
+    for cls in (JavaClient, GatewayClient):
+        if "send_command" in cls.__dict__:
+            orig = cls.__dict__["send_command"]
+
+            def counted(client, *a, _orig=orig, **kw):
+                n[0] += 1
+                return _orig(client, *a, **kw)
+
+            saved.append((cls, orig))
+            cls.send_command = counted
+    try:
+        out = call()
+    finally:
+        for cls, orig in saved:
+            cls.send_command = orig
+    return out, n[0]
+
+
+def test_unpartitioned_read_ends_with_the_scan_projection(spark, tmp_path):
+    """An unpartitioned read ends with the scan's own projection, which
+    already is the table schema: the select over the schema's names that
+    a partitioned read ends with would be an identity here. Dropping it
+    keeps the schema, field metadata included, and the rows, and saves
+    its py4j round trips."""
+    from rtdl_spark.sources.delta_writer import write_delta_native
+
+    root = str(tmp_path / "t")
+    write_delta_native(
+        spark,
+        spark.range(0, 20).select(
+            F.col("id").alias("id", metadata={"comment": "the key"}),
+            (F.col("id") * 2).cast("string").alias("v"),
+        ),
+        root,
+    )
+    read_delta_native(spark, root)  # warm the snapshot and schema caches
+    df, calls = _py4j_calls(lambda: read_delta_native(spark, root))
+    names = [f.name for f in df.schema.fields]
+    identity, calls_with = _py4j_calls(
+        lambda: read_delta_native(spark, root).select(*names)
+    )
+    assert df.schema.json() == identity.schema.json()
+    assert sorted(df.collect()) == sorted(identity.collect())
+    assert sorted(r.id for r in df.collect()) == list(range(20))
+    assert calls < calls_with
+    analyzed = df._jdf.queryExecution().analyzed().toString()
+    assert analyzed.count("Project [") == 1, analyzed

@@ -12,6 +12,7 @@ import os
 import pytest
 
 from rtdl_spark.config import StreamConfig, StreamRegistry
+from tests.test_checkpoint_read import _jobs_of
 
 STREAM_ID = "837a8d07-cd06-4e17-bcd8-aef0b5e48d31"
 ALT_STREAM_ID = "11111111-2222-3333-4444-555555555555"
@@ -928,6 +929,12 @@ def _multi_root_registry(tmp_path, folders):
     return reg
 
 
+def _set(reg, stream_id, **fields):
+    import dataclasses
+
+    reg.update(dataclasses.replace(reg.get(stream_id), **fields))
+
+
 def _events_for(n_streams, per_stream):
     return [
         {"stream_id": f"s{i}", "seq": i * 1000 + k}
@@ -956,48 +963,129 @@ def test_streams_sharing_a_root_land_every_row_once(spark, tmp_path):
     assert spark.read.parquet(written["s2"]).count() == 20
 
 
-def test_failed_write_keeps_earlier_streams_catalogued(
-    spark, tmp_path, monkeypatch
-):
-    """When a stream's write fails, run_batch raises that error; the
-    streams written before it have landed and their partitions are in the
-    catalog, and the batch cache is released after the last write."""
+def _lake_files(root):
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _dirs, files in os.walk(root)
+        for f in files
+    )
+
+
+def test_failed_staged_write_lands_nothing(spark, tmp_path, monkeypatch):
+    """The streams of a batch are written in one staged write. When it
+    fails (here a chain step of the middle stream fails inside the write
+    job), run_batch raises; no file lands in any stream root, nothing is
+    catalogued, no staging directory is left and the batch cache is
+    released."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
+
     from rtdl_spark.ingest import IngestJob
 
     for db in ("r0", "r1", "r2"):
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
     reg = _multi_root_registry(tmp_path, ["r0", "r1", "r2"])
-    job = IngestJob(spark, reg, str(tmp_path / "lake"),
-                    fixed_time="2024-02-15 00:00:00")
-    good, bad, after = [cfg for cfg, _c in job._route_conds()]
-    events = []
-    write = job.write_stream_batch
+    _set(reg, "s1", functions="ingester,boom")
 
-    def flaky_write(cfg, df):
-        events.append(("write", cfg.stream_id))
-        if cfg is bad:
-            raise RuntimeError(f"boom {cfg.stream_id}")
-        return write(cfg, df)
+    def boom(seq):
+        raise RuntimeError("boom in the write")
 
-    path = write_events(tmp_path, _events_for(3, 5))
-    raw = job.read_json(path)
+    fail = F.udf(boom, LongType())
+    job = IngestJob(
+        spark, reg, str(tmp_path / "lake"), fixed_time="2024-02-15 00:00:00",
+        extra_functions={"boom": lambda df: df.withColumn("seq", fail("seq"))},
+    )
+    raw = job.read_json(write_events(tmp_path, _events_for(3, 5)))
+    released = []
     unpersist = type(raw).unpersist
 
     def tracked_unpersist(self, *a, **kw):
-        events.append(("unpersist", None))
+        released.append(True)
         return unpersist(self, *a, **kw)
 
-    monkeypatch.setattr(job, "write_stream_batch", flaky_write)
     monkeypatch.setattr(type(raw), "unpersist", tracked_unpersist)
-    with pytest.raises(RuntimeError, match=f"boom {bad.stream_id}"):
+    with pytest.raises(Exception, match="boom in the write"):
         job.run_batch(raw)
-    assert events == [
-        ("write", good.stream_id), ("write", bad.stream_id),
-        ("unpersist", None),
-    ]
-    rows = spark.sql(
-        f"SELECT seq, rtdl_bucket FROM {good.folder_name}.{good.message_type}"
-    ).collect()
-    assert sorted((r["seq"], r["rtdl_bucket"]) for r in rows) == [
-        (int(good.stream_id[1:]) * 1000 + k, "2024-02-15") for k in range(5)
-    ]
+    assert released
+    assert _lake_files(str(tmp_path / "lake")) == []
+    assert not any(
+        "_rtdl_staging" in d for d, _dirs, _files in os.walk(tmp_path / "lake")
+    )
+    assert not any(
+        spark.catalog.tableExists(f"r{i}.t{i}") for i in range(3)
+    )
+
+
+def test_streams_with_different_codecs_write_separately(spark, tmp_path):
+    """Streams are staged together only when they share a codec: two
+    codecs make two writes, and each stream's files carry its own."""
+    from rtdl_spark.ingest import IngestJob
+
+    reg = _multi_root_registry(tmp_path, ["snap", "gz"])
+    _set(reg, "s1", compression_type_id=2)
+    job = IngestJob(spark, reg, str(tmp_path / "lake"),
+                    fixed_time="2024-02-15 00:00:00", register_catalog=False)
+    raw = job.read_json(write_events(tmp_path, _events_for(2, 5)))
+    written = {}
+    jobs = _jobs_of(spark, "ingest-codecs",
+                    lambda: written.update(job.run_batch(raw)))
+    assert jobs == 3  # the probe and one write per codec
+    for sid, suffix in (("s0", ".snappy.parquet"), ("s1", ".gz.parquet")):
+        files = [f for f in _lake_files(written[sid]) if f.endswith(".parquet")]
+        assert files and all(f.endswith(suffix) for f in files), files
+        assert spark.read.parquet(written[sid]).count() == 5
+
+
+def test_chain_step_that_empties_a_stream_lands_nothing(spark, tmp_path):
+    """A chain step that removes every row of a stream leaves no directory
+    and no catalog table for it, and the stream is absent from the
+    result; the stream staged beside it lands and is catalogued."""
+    from pyspark.sql import functions as F
+
+    from rtdl_spark.ingest import IngestJob
+
+    for db in ("e0", "e1"):
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    reg = _multi_root_registry(tmp_path, ["e0", "e1"])
+    _set(reg, "s0", functions="ingester,drop_all")
+    job = IngestJob(
+        spark, reg, str(tmp_path / "lake"), fixed_time="2024-02-15 00:00:00",
+        extra_functions={"drop_all": lambda df: df.filter(F.lit(False))},
+    )
+    raw = job.read_json(write_events(tmp_path, _events_for(2, 5)))
+    written = {}
+    jobs = _jobs_of(spark, "ingest-emptied",
+                    lambda: written.update(job.run_batch(raw)))
+    assert jobs == 2
+    assert set(written) == {"s1"}
+    assert not os.path.exists(tmp_path / "lake" / "e0")
+    assert not spark.catalog.tableExists("e0.t0")
+    assert os.listdir(tmp_path / "lake") == ["e1"]
+    n = spark.sql("SELECT count(*) AS n FROM e1.t1").collect()[0]["n"]
+    assert n == 5
+
+
+def test_control_batch_runs_no_emptiness_job(spark, tmp_path):
+    """A batch with control messages reloads the registry and then stages
+    every stream of the new configs in one write, with no job asking
+    whether a stream is empty: the stream without rows stages no files. A
+    control-only batch runs the probe alone."""
+    from rtdl_spark.ingest import IngestJob
+
+    reg = _multi_root_registry(tmp_path, ["c0", "c1"])
+    job = IngestJob(spark, reg, str(tmp_path / "lake"),
+                    fixed_time="2024-02-15 00:00:00", register_catalog=False)
+    ctrl = {"stream_id": "", "type": "rtdl_205"}
+    raw = job.read_json(write_events(tmp_path, [ctrl] + _events_for(1, 3)))
+    written = {}
+    jobs = _jobs_of(spark, "ingest-control",
+                    lambda: written.update(job.run_batch(raw)))
+    assert set(written) == {"s0"}
+    assert jobs == 2
+    assert spark.read.parquet(written["s0"]).count() == 3
+    assert os.listdir(tmp_path / "lake") == ["c0"]
+    raw = job.read_json(write_events(tmp_path, [ctrl], "ctrl_only"))
+    written = {}
+    jobs = _jobs_of(spark, "ingest-control-only",
+                    lambda: written.update(job.run_batch(raw)))
+    assert (written, jobs) == ({}, 1)

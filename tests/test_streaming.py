@@ -132,8 +132,8 @@ def test_stream_ingest_foreachbatch(spark, tmp_path):
 
 
 def test_stream_ingest_batch_job_shape(spark, tmp_path, monkeypatch):
-    """Pins the streaming micro-batch shape: one probe job plus one write
-    job per routed stream; the small-plan scope turns AQE off on the
+    """Pins the streaming micro-batch shape: one probe job plus one staged
+    write job for all routed streams; the small-plan scope turns AQE off on the
     batch's own session while the caller's session keeps it on; catalog
     partitions are added only for buckets the job has not added yet."""
     import contextlib
@@ -227,7 +227,7 @@ def test_stream_ingest_batch_job_shape(spark, tmp_path, monkeypatch):
 
     time.sleep(0.5)  # let the listener bus deliver the last job events
     tracker = sc.statusTracker()
-    assert [len(tracker.getJobIdsForGroup(g)) for g in groups] == [5, 5, 5]
+    assert [len(tracker.getJobIdsForGroup(g)) for g in groups] == [2, 2, 2]
     assert scope_aqe and all(
         on and batch == "false" and caller == "true"
         for on, batch, caller in scope_aqe
