@@ -56,6 +56,7 @@ from rtdl_spark.sources.delta_writer import (
     _identity_cols,
     _ict_value,
     _now_ms,
+    _post_commit,
     _table_constraints,
     _try_commit,
 )
@@ -249,6 +250,7 @@ def _commit_alter(
             }
         }
         if _try_commit(spark, root, current + 1, [head] + actions):
+            _post_commit(spark, root, current + 1, actions, meta)
             return {**result, "version": current + 1}
     raise DeltaConcurrentWriteError(
         f"lost the Delta commit race {max_retries} times during ALTER "
@@ -985,6 +987,7 @@ def create_delta_table_native(
             + ("replace" if replacing is not None else "create")
             + " refuses to race"
         )
+    _post_commit(spark, root, commit_version, actions, None)
     return {"version": commit_version, "protocol": protocol}
 
 

@@ -49,7 +49,7 @@ import urllib.parse
 import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 from rtdl_spark.sources import fsutil
 
@@ -1149,6 +1149,26 @@ def read_delta_native(
         else {n: n for n in phys_of}
     )
     by_type = {f.name: f.dataType for f in schema.fields}
+    # user field metadata (column comments and the like) rides onto the
+    # read schema; the log's ``delta.*`` keys are protocol bookkeeping
+    # and stay behind. Attached only where non-empty, so metadata-free
+    # tables make no extra py4j calls.
+    user_md = {}
+    for f in fields_json:
+        md = {
+            k: v for k, v in (f.get("metadata") or {}).items()
+            if not k.startswith("delta.")
+        }
+        if md:
+            user_md[f["name"]] = md
+
+    def _named(col, name: str):
+        md = user_md.get(name)
+        return col.alias(name, metadata=md) if md else col.alias(name)
+
+    def _with_md(col, name: str):
+        # withColumn names the column itself; alias only to attach
+        return _named(col, name) if name in user_md else col
 
     def _abs(rel: str) -> str:
         # log paths are table-root-relative and URL-encoded
@@ -1157,7 +1177,10 @@ def read_delta_native(
         )
 
     if not files:
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame([], StructType([
+            StructField(f.name, f.dataType, f.nullable, user_md.get(f.name))
+            for f in schema.fields
+        ]))
 
     def _plain_abs(abs_p: str) -> str:
         return (
@@ -1172,9 +1195,10 @@ def read_delta_native(
         groups.setdefault(key, []).append(_abs(path))
 
     proj = [
-        F.col(f"`{read_col_of[f.name]}`")
-        .cast(_nullable_dt(f.dataType))
-        .alias(f.name)
+        _named(
+            F.col(f"`{read_col_of[f.name]}`").cast(_nullable_dt(f.dataType)),
+            f.name,
+        )
         for f in data_fields
     ]
 
@@ -1251,20 +1275,23 @@ def read_delta_native(
         for i, c in enumerate(part_cols):
             out = out.withColumn(
                 c,
-                F.when(
-                    F.col("`__pv_ok`").isNull(),
-                    F.raise_error(
-                        F.concat(
-                            F.lit(
-                                "rtdl: partition-value attach missed "
-                                "the scanned file "
-                            ),
-                            F.col("__fp"),
-                        )
-                    ),
-                )
-                .otherwise(F.col(f"`__pv_{i}`"))
-                .cast(by_type[c]),
+                _with_md(
+                    F.when(
+                        F.col("`__pv_ok`").isNull(),
+                        F.raise_error(
+                            F.concat(
+                                F.lit(
+                                    "rtdl: partition-value attach missed "
+                                    "the scanned file "
+                                ),
+                                F.col("__fp"),
+                            )
+                        ),
+                    )
+                    .otherwise(F.col(f"`__pv_{i}`"))
+                    .cast(by_type[c]),
+                    c,
+                ),
             )
         out = out.select(*[f.name for f in schema.fields])
     else:
@@ -1278,9 +1305,12 @@ def read_delta_native(
             for c, raw in zip(part_cols, key):
                 df = df.withColumn(
                     c,
-                    F.lit(raw).cast(by_type[c])
-                    if raw is not None
-                    else F.lit(None).cast(by_type[c]),
+                    _with_md(
+                        F.lit(raw).cast(by_type[c])
+                        if raw is not None
+                        else F.lit(None).cast(by_type[c]),
+                        c,
+                    ),
                 )
             if part_cols:  # else the scan's projection is the schema
                 df = df.select(*[f.name for f in schema.fields])

@@ -57,6 +57,7 @@ import traceback
 import urllib.parse
 import uuid
 import warnings
+from dataclasses import dataclass
 
 import pandas as pd  # module-level: pandas_udf resolves stringified
 # type hints against MODULE globals under future-annotations (NOTES trap)
@@ -2182,46 +2183,30 @@ def write_delta_native(
     # partitionValues keys are physical, per the protocol. The staging
     # schema is the COMMIT's (evolution assigns new columns their
     # physical names; creation just assigned the whole layout).
-    df_write, stage_part_cols = df, part_cols
     cm_staged = (
         _cm_mode(meta) if meta is not None else (column_mapping or "none")
     )
+    stage_meta = None
     if cm_staged != "none":
         # the staging schema is the one carrying CM metadata: the
         # TABLE's for plain appends, the merged/created commit schema
         # when this commit (re)defines it
-        stage_schema_json = (
-            commit_schema_json
-            if (meta is None or merge_schema or cm_replace)
-            else meta["schemaString"]
-        )
         stage_meta = {
-            "schemaString": stage_schema_json,
+            "schemaString": (
+                commit_schema_json
+                if (meta is None or merge_schema or cm_replace)
+                else meta["schemaString"]
+            ),
             "configuration": (
                 commit_configuration
                 if commit_configuration is not None
                 else (meta or {}).get("configuration") or {}
             ),
         }
-        fields_json = (
-            json.loads(stage_schema_json).get("fields") or []
-        )
-        phys_of = {f["name"]: _physical_name(f) for f in fields_json}
-        df_write = _to_physical(spark, df, stage_meta)
-        stage_part_cols = [phys_of[c] for c in part_cols]
-
-    staging = posixpath.join(root, f"_staging-{uuid.uuid4().hex[:12]}")
-    writer = df_write.write.mode("overwrite")
-    if stage_part_cols:
-        writer = writer.partitionBy(*stage_part_cols)
-    with _small_plan_scope(spark, _plan_size_estimate(df_write)):
-        writer.parquet(staging)
-    try:
-        adds = _promote_staged(
-            spark, root, staging, stage_part_cols, with_stats
-        )
-    finally:
-        fsutil.delete(spark, staging)
+    adds = _stage_write(
+        spark, root, df, part_cols, stage_meta, "_staging",
+        _plan_size_estimate(df), with_stats=with_stats,
+    )
 
     ts = _now_ms()
     for _attempt in range(max_retries):
@@ -3111,6 +3096,21 @@ def _skip_candidates(
     return {p: active[p] for p, _pv in cand}
 
 
+# Every staging directory is ``<tag>-<uuid>`` under the table root, and
+# both VACUUMs reap a crashed one by its ``<tag>-`` prefix — so a writer
+# stages only under a tag listed here.
+_STAGING_TAGS = ("_staging", "_optimize", "_delete", "_update", "_merge")
+_STAGING_PREFIXES = tuple(f"{t}-" for t in _STAGING_TAGS)
+
+
+def _staging_dir(root: str, tag: str) -> str:
+    """A fresh staging directory under the table root for ``tag`` (one of
+    ``_STAGING_TAGS``, optionally suffixed: ``_staging-cdc``)."""
+    if not f"{tag}-".startswith(_STAGING_PREFIXES):
+        raise ValueError(f"staging tag {tag!r} is not in _STAGING_TAGS")
+    return posixpath.join(root, f"{tag}-{uuid.uuid4().hex[:12]}")
+
+
 def _stage_write(
     spark: SparkSession,
     root: str,
@@ -3133,7 +3133,7 @@ def _stage_write(
         phys_of = {f["name"]: _physical_name(f) for f in fields_json}
         df = _to_physical(spark, df, meta, extra_cols=extra_cols or None)
         part_cols = [phys_of[c] for c in part_cols]
-    staging = posixpath.join(root, f"{tag}-{uuid.uuid4().hex[:12]}")
+    staging = _staging_dir(root, tag)
     writer = df.write.mode("overwrite")
     if part_cols:
         writer = writer.partitionBy(*part_cols)
@@ -3858,6 +3858,635 @@ def _normalize_merge_clauses(
     )
 
 
+_SET_STAR = {"action": "update", "condition": None, "set": None}
+_LONE_DELETE = {"action": "delete", "condition": None, "set": None}
+
+
+@dataclass
+class _MergePlan:
+    """What MERGE's steps share once ``_merge_plan`` has validated the
+    statement. ``meta`` is the plan's (evolved when the schema evolves);
+    ``commit_meta`` is the snapshot's, which conflict-retry validates."""
+
+    root: str
+    meta: dict
+    commit_meta: dict
+    meta_actions: list[dict]
+    active: dict[str, dict]
+    current: int
+    schema: StructType
+    on: list[str]
+    src: DataFrame
+    src_cols: set[str]
+    m_clauses: list[dict]
+    nm_clauses: list[dict]
+    bs_clauses: list[dict]
+    t_alias: str
+    s_alias: str
+    join_cond: object
+    rt_cols: list[str]
+    dv_by_plain: dict[str, dict]
+    cdf: bool
+    fused: bool
+    small_bytes: int
+    small: bool
+
+    @property
+    def col_order(self) -> list[str]:
+        return self.schema.fieldNames()
+
+    def t(self, col: str):
+        return F.col(f"{self.t_alias}.`{col}`")
+
+    def s(self, col: str):
+        return F.col(f"{self.s_alias}.`{col}`")
+
+    def sh(self, df: DataFrame) -> DataFrame:
+        # Under the small-plan gate the MERGE joins take a SHUFFLE_HASH
+        # hint: the static planner would otherwise broadcast the tiny
+        # build sides, and every broadcast build materializes as its own
+        # Spark job with a driver gap (measured: 3 extra jobs per bench
+        # MERGE, one of them re-scanning the source because a
+        # BroadcastExchange cannot reuse the probe's shuffle exchange).
+        # With the hint every join rides the shared shuffle stages of
+        # ONE job. Above the gate the hint is absent and the planner /
+        # AQE keep choosing (broadcasting a small key set against a
+        # 100 TB scan is exactly right there).
+        return df.hint("shuffle_hash") if self.small else df
+
+
+@dataclass
+class _MergeProbe:
+    """``_merge_probe``'s findings: the scanned (key-range-pruned) file
+    count, the identify scan, the per-key source frame, the affected
+    files (plain path → raw ``_metadata.file_path`` rendering) and the
+    source row count when an insert side needs it."""
+
+    scanned: int
+    tbl: DataFrame | None
+    path_to_add: dict[str, dict]
+    keys: DataFrame
+    raw_of: dict[str, str]
+    n_src_rows: int | None
+
+    @property
+    def affected(self) -> list[str]:
+        return sorted(self.raw_of)
+
+
+def _union_all(frames: list[DataFrame]) -> DataFrame | None:
+    out = None
+    for f in frames:
+        out = f if out is None else out.unionByName(f)
+    return out
+
+
+def _clause_tag(clauses: list[dict]):
+    """First-true-wins over ``clauses``: the index of the first clause
+    whose condition holds (an absent condition always holds), NULL when
+    none does."""
+    tag = None
+    for i, c in enumerate(clauses):
+        cnd = (
+            F.expr(c["condition"])
+            if c["condition"] is not None
+            else F.lit(True)
+        )
+        tag = F.when(cnd, F.lit(i)) if tag is None else tag.when(
+            cnd, F.lit(i)
+        )
+    return tag
+
+
+def _claims(
+    frame: DataFrame, clauses: list[dict]
+) -> tuple[DataFrame | None, list[DataFrame]]:
+    """Split ``frame`` by ``_clause_tag`` → (the rows no clause claims,
+    None when the last clause is unconditional; each clause's rows). A
+    lone unconditional clause claims the frame as it is."""
+    if len(clauses) == 1 and clauses[0]["condition"] is None:
+        return None, [frame]
+    tagged = frame.withColumn(_MERGE_CLAUSE_COL, _clause_tag(clauses))
+    tag = F.col(_MERGE_CLAUSE_COL)
+    unclaimed = (
+        tagged.filter(tag.isNull())
+        if clauses[-1]["condition"] is not None
+        else None
+    )
+    return unclaimed, [
+        tagged.filter(tag == i) for i in range(len(clauses))
+    ]
+
+
+def _clause_projection(
+    p: _MergePlan, rows: DataFrame, clause: dict, extra=()
+) -> DataFrame:
+    """An UPDATE (matched or by-source) or INSERT clause's output rows in
+    the table's columns. SET/VALUES expressions are cast to the column
+    type; SET * / INSERT * take the source's columns. Every other column
+    keeps the target's value (UPDATE) or is NULL (INSERT) — including a
+    column the original source lacked under schema evolution, which
+    delta-spark treats the same way. Generated columns the clause does
+    not assign are recomputed from the FINAL row (keeping the target's
+    value would go stale when a referenced column changed and trip
+    enforcement). ``extra`` columns ride along."""
+    exprs = clause["set" if clause["action"] == "update" else "values"]
+    proj = []
+    for c in p.col_order:
+        if exprs is None and c in p.src_cols:
+            e = p.s(c)
+        elif exprs is not None and c in exprs:
+            e = F.expr(exprs[c]).cast(p.schema[c].dataType)
+        elif clause["action"] == "update":
+            e = p.t(c)
+        else:
+            e = F.lit(None).cast(p.schema[c].dataType)
+        proj.append(e.alias(c))
+    out = rows.select(*proj, *extra)
+    assigned = p.src_cols if exprs is None else set(exprs)
+    for gc, ge in _generated_cols(p.meta).items():
+        if gc not in assigned:
+            out = out.withColumn(
+                gc, F.expr(ge).cast(p.schema[gc].dataType)
+            )
+    return out
+
+
+def _clause_changes(
+    p: _MergePlan, claims: list[DataFrame], clauses: list[dict]
+) -> list[DataFrame]:
+    """Change rows of claimed target rows: an UPDATE clause's rows as pre-
+    and post-images, a DELETE clause's rows as deletes. Rows no clause
+    claims changed nothing and appear nowhere."""
+    pre = [p.t(c).alias(c) for c in p.col_order]
+    out = []
+    for c, rows in zip(clauses, claims):
+        if c["action"] == "delete":
+            out.append(
+                rows.select(*pre).withColumn("_change_type", F.lit("delete"))
+            )
+            continue
+        out.append(
+            rows.select(*pre)
+            .withColumn("_change_type", F.lit("update_preimage"))
+        )
+        out.append(
+            _clause_projection(p, rows, c)
+            .withColumn("_change_type", F.lit("update_postimage"))
+        )
+    return out
+
+
+def _target_clause_rows(
+    p: _MergePlan, frame: DataFrame, clauses: list[dict]
+) -> tuple[list[DataFrame], list[DataFrame]]:
+    """Target rows (``frame``, target side aliased) through ``clauses``:
+    unclaimed rows survive unchanged, UPDATE clauses project, DELETE
+    clauses emit nothing. An updated row keeps its row id and takes a
+    fresh commit version (NULL materialized → the new add's default).
+    → (staging-column frames, change frames when CDF is on)."""
+    unclaimed, claims = _claims(frame, clauses)
+    rows = []
+    if unclaimed is not None:
+        rows.append(
+            unclaimed.select(
+                *[p.t(c).alias(c) for c in p.col_order + p.rt_cols]
+            )
+        )
+    rt_extra = (
+        [p.t(p.rt_cols[0]).alias(p.rt_cols[0]),
+         F.lit(None).cast("long").alias(p.rt_cols[1])]
+        if p.rt_cols
+        else []
+    )
+    rows += [
+        _clause_projection(p, r, c, rt_extra)
+        for c, r in zip(clauses, claims)
+        if c["action"] == "update"
+    ]
+    return rows, (_clause_changes(p, claims, clauses) if p.cdf else [])
+
+
+def _merge_plan(
+    spark: SparkSession,
+    root: str,
+    snapshot: tuple,
+    source: DataFrame,
+    on: list[str],
+    when_matched,
+    when_not_matched,
+    when_not_matched_by_source,
+    aliases: tuple[str, str],
+    merge_schema: bool,
+) -> _MergePlan:
+    """MERGE's plan step: the target checks, schema evolution, the
+    normalized clause lists, row tracking, the matched-side plan and the
+    small-plan gate — everything fixed before a Spark job runs."""
+    protocol, meta, active, current, _txns = snapshot
+    _check_dml_target(protocol, meta, "MERGE", dv=False)
+    _check_cm_supported(meta, "MERGE")
+    _refuse_identity(meta, "MERGE")
+    commit_meta = meta
+    meta_actions: list[dict] = []
+    src_cols = set(source.columns)
+    if _schema_key(source.schema.json()) != _schema_key(
+        meta["schemaString"]
+    ):
+        if not merge_schema:
+            raise ValueError(
+                "MERGE source schema must match the table's "
+                "(names/types) — pass merge_schema=True to evolve "
+                "(delta-spark's withSchemaEvolution)"
+            )
+        if _cm_mode(meta) != "none":
+            raise ValueError(
+                "merge_schema on a column-mapped table is not "
+                "supported by MERGE (evolve via a mergeSchema append "
+                "first)"
+            )
+        evolved = _merge_schemas(meta["schemaString"], source.schema)
+        if _schema_key(evolved) != _schema_key(meta["schemaString"]):
+            # plan against the EVOLVED schema; the commit ships the new
+            # metaData action
+            meta = {**meta, "schemaString": evolved}
+            meta_actions = [{"metaData": meta}]
+    schema = StructType.fromJson(json.loads(meta["schemaString"]))
+    bad = [k for k in on if k not in schema.fieldNames()]
+    if bad:
+        raise ValueError(f"merge keys not in the table schema: {bad}")
+    if merge_schema:
+        # align the source to the evolved schema: lacked columns are
+        # NULL for inserts; matched SET * keeps the TARGET's value for
+        # them (_clause_projection)
+        source = source.select(
+            *[
+                F.col(f"`{f.name}`")
+                if f.name in src_cols
+                else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in schema.fields
+            ]
+        )
+    m_clauses, nm_clauses, bs_clauses = _normalize_merge_clauses(
+        when_matched, when_not_matched, schema.fieldNames(), meta,
+        when_not_matched_by_source,
+    )
+    t_alias, s_alias = aliases
+    if t_alias == s_alias:
+        raise ValueError("MERGE aliases must differ")
+    rt_cols: list[str] = []
+    if _row_tracking_supported(protocol):
+        mat_id, mat_cv, new_meta = _rt_materialize_cols(meta)
+        rt_cols = [mat_id, mat_cv]
+        if new_meta is not None:
+            # built FROM the evolved meta, so it already carries the new
+            # schema — never ship two metaData actions in one commit
+            meta_actions = [{"metaData": new_meta}]
+    cdf = _cdf_enabled(meta)
+    # Two matched-side plans, chosen from the statement alone. A lone
+    # unconditional UPDATE SET * whose source covers every column, with
+    # no by-source clauses and CDF off, keeps the fused left join (one
+    # pass over the affected rows). A lacked column (schema evolution)
+    # must keep the TARGET's value, which that source-only projection
+    # cannot express. Every other shape pairs each matched target row
+    # with its source row once and runs the clause evaluator over it.
+    fused = (
+        m_clauses == [_SET_STAR]
+        and not bs_clauses
+        and not cdf
+        and set(schema.fieldNames()) <= src_cols
+    )
+    join_cond = None
+    for k in on:
+        e = F.col(f"{t_alias}.`{k}`") == F.col(f"{s_alias}.`{k}`")
+        join_cond = e if join_cond is None else (join_cond & e)
+    # small-plan gate input: everything the probe/rewrite can touch —
+    # the whole active set plus Catalyst's (conservatively large for
+    # opaque sources) estimate of the source
+    small_bytes = sum(
+        int(a.get("size") or 0) for a in active.values()
+    ) + _plan_size_estimate(source)
+    return _MergePlan(
+        root=root, meta=meta, commit_meta=commit_meta,
+        meta_actions=meta_actions, active=active, current=current,
+        schema=schema, on=list(on),
+        # frozen against re-evaluation; LAZY so the first action on it
+        # (the fused probe) both materializes the checkpoint and does
+        # its own work in ONE job (r9, measured)
+        src=source.localCheckpoint(eager=False),
+        src_cols=src_cols, m_clauses=m_clauses, nm_clauses=nm_clauses,
+        bs_clauses=bs_clauses, t_alias=t_alias, s_alias=s_alias,
+        join_cond=join_cond, rt_cols=rt_cols,
+        # DV-carrying tables merge through the DV-aware scan — masked
+        # rows never resurrect; rewritten files materialize the mask
+        dv_by_plain=_dv_map_of(root, active),
+        cdf=cdf, fused=fused, small_bytes=small_bytes,
+        small=_is_small_plan(spark, small_bytes),
+    )
+
+
+def _merge_probe(
+    spark: SparkSession, p: _MergePlan, check_duplicates: bool
+) -> _MergeProbe:
+    """MERGE's identify step: key-range pruning, then ONE probe job that
+    checks source-key uniqueness, names every file holding a matched or
+    by-source-claimed row and counts the source rows."""
+    scan = p.active
+    active_bytes = sum(int(a.get("size") or 0) for a in p.active.values())
+    # key-range candidate pruning (r9, delta-spark's two-phase MERGE):
+    # one tiny aggregate over the frozen source yields per-key min/max;
+    # target files whose stats exclude the WHOLE source range can hold
+    # no matching key — and the insert dedup stays correct on the
+    # pruned scan, because a target key equal to a source key lies
+    # inside the source range by definition, hence in a kept file.
+    # Gated on table BYTES (r10): the extra aggregate pays off when
+    # pruning saves scan I/O, which scales with data volume, not file
+    # count. By-source clauses touch rows OUTSIDE the source key range,
+    # so the pruning is invalid for such a statement.
+    if active_bytes >= _MERGE_PRUNE_MIN_BYTES and p.m_clauses and not (
+        p.bs_clauses
+    ):
+        from rtdl_spark.sources.delta_reader import (
+            _prune_files_by_key_ranges,
+        )
+
+        b = p.src.agg(
+            *[F.min(F.col(k)).alias(f"__lo_{i}") for i, k in enumerate(p.on)],
+            *[F.max(F.col(k)).alias(f"__hi_{i}") for i, k in enumerate(p.on)],
+        ).collect()[0]
+        kept, _np = _prune_files_by_key_ranges(
+            sorted(
+                (f, a.get("partitionValues") or {})
+                for f, a in p.active.items()
+            ),
+            p.active,
+            p.meta,
+            {k: (b[f"__lo_{i}"], b[f"__hi_{i}"]) for i, k in enumerate(p.on)},
+        )
+        scan = {f: p.active[f] for f, _pv in kept}
+
+    tbl, path_to_add = _active_scan(
+        spark, p.root, p.meta, scan, dv_by_plain=p.dv_by_plain
+    )
+    # ONE aggregation serves both probe consumers (r10): the per-key
+    # source counts feed the duplicate check AND, projected to the keys,
+    # the identify semi-join.
+    kc = p.src.groupBy(*p.on).agg(
+        F.count(F.lit(1)).alias("__delta_key_n__")
+    )
+    # the filter is a tautology (a group's count is always >= 1); it is
+    # here so column pruning cannot narrow this branch's partial
+    # aggregate to keys-only — pruned, the two probe branches' exchanges
+    # stop being canonically equal and Spark computes the source
+    # aggregation twice instead of reusing one exchange
+    keys = kc.filter(F.col("__delta_key_n__") >= 1).select(*p.on)
+
+    def labelled(df: DataFrame, kind: str, col) -> DataFrame:
+        return df.select(F.lit(kind).alias("__probe"), col.alias(_FP_COL))
+
+    # ONE PROBE JOB (r9): the duplicate check and the affected-file
+    # identify are UNIONED into a single collect. matched="ignore" keeps
+    # matched rows as they are, so that identify side is skipped.
+    probes = []
+    if check_duplicates:
+        probes.append(labelled(
+            kc.filter(F.col("__delta_key_n__") > 1).limit(1), "dup",
+            F.lit(None).cast("string"),
+        ))
+    if tbl is not None and p.m_clauses:
+        probes.append(labelled(
+            tbl.join(p.sh(keys), p.on, "left_semi")
+            .select(_FP_COL).distinct(),
+            "file", F.col(_FP_COL),
+        ))
+    if tbl is not None and p.bs_clauses:
+        # by-source identify: files holding an UNMATCHED row some clause
+        # claims
+        probes.append(labelled(
+            tbl.alias(p.t_alias)
+            .join(p.sh(keys), p.on, "left_anti")
+            .filter(_clause_tag(p.bs_clauses).isNotNull())
+            .select(_FP_COL).distinct(),
+            "file", F.col(_FP_COL),
+        ))
+    raw_of: dict[str, str] = {}
+    n_src_rows: int | None = None
+    if probes:
+        if p.nm_clauses:
+            # total source rows, riding the shared kc exchange (no extra
+            # job): sizes the INSERT side's staging (_merge_stage)
+            probes.append(labelled(
+                kc.agg(F.sum("__delta_key_n__").alias("n")), "nsrc",
+                F.col("n").cast("string"),
+            ))
+        with _small_plan_scope(spark, p.small_bytes):
+            rows = _union_all(probes).collect()
+        if any(r["__probe"] == "dup" for r in rows):
+            raise ValueError(
+                "MERGE source has multiple rows per key — "
+                "nondeterministic match (dedupe the source first)"
+            )
+        # raw → plain decode happens HERE, driver-side, once per
+        # distinct file (r11); the dict also dedupes the match probe
+        # against the by-source probe naming the same file
+        for r in rows:
+            if r["__probe"] == "file":
+                raw_of[_fp_decode_py(r[_FP_COL])] = r[_FP_COL]
+            elif r["__probe"] == "nsrc" and r[_FP_COL] is not None:
+                n_src_rows = int(r[_FP_COL])
+    return _MergeProbe(
+        len(scan), tbl, path_to_add, keys, raw_of, n_src_rows
+    )
+
+
+def _merge_affected_rows(
+    spark: SparkSession, p: _MergePlan, probe: _MergeProbe
+) -> DataFrame | None:
+    """The affected files' live rows, carrying their row-tracking
+    columns (survivors keep id + commit version)."""
+    affected = probe.affected
+    if not affected:
+        return None
+    arows, _ = _active_scan(
+        spark, p.root, p.meta, p.active, subset=affected,
+        with_row_index=bool(p.rt_cols),
+        extra_long_cols=p.rt_cols or None,
+        dv_by_plain=p.dv_by_plain,
+    )
+    if p.rt_cols:
+        # keyed by the TRUE raw rendering learned from the probe
+        # collect (r11)
+        arows = _attach_row_ids(
+            spark, arows,
+            [(probe.raw_of[f], probe.path_to_add[f]) for f in affected],
+            *p.rt_cols, "a MERGE",
+        ).drop(_RI_COL)
+    arows = arows.drop(_FP_COL)
+    if p.cdf or p.nm_clauses or p.bs_clauses or not (
+        p.fused or p.m_clauses == [_LONE_DELETE]
+    ):
+        # r11 (CDF fold): these shapes consume the affected rows from
+        # several plan branches (clause splits, change frames, the
+        # insert anti-join); a lazy localCheckpoint turns the repeated
+        # affected-file scans into one physical pass + cached-block
+        # reads. The single-consumer shapes skip it.
+        arows = arows.localCheckpoint(eager=False)
+    return arows
+
+
+def _merge_rewrite_frames(
+    p: _MergePlan, probe: _MergeProbe, arows: DataFrame | None
+) -> tuple[list[DataFrame], list[DataFrame]]:
+    """MERGE's rewrite step: the affected rows after the matched and
+    by-source clauses, in staging columns (table columns, then the
+    row-tracking columns), and their change rows when CDF is on.
+    → (staging-column frames, change frames)."""
+    if arows is None:
+        return [], []
+    if p.fused:
+        # r10: one left join yields both survivors and updates from a
+        # single pass over the affected rows: a matched target row takes
+        # the source's values (per-target-row cardinality — source keys
+        # are unique by the dup probe), an unmatched one keeps its own.
+        # Null-key target rows match nothing under SQL equality.
+        mark = "__delta_merge_matched__"
+        if mark in p.src.columns or mark in p.col_order:
+            # a user column of this name would be silently overwritten
+            # and every row would project as matched
+            raise ValueError(
+                f"table/source schema uses the reserved column {mark!r}"
+            )
+        matched = F.col(mark).isNotNull()
+        proj = [
+            F.when(matched, p.s(c)).otherwise(p.t(c)).alias(c)
+            for c in p.col_order
+        ]
+        if p.rt_cols:
+            # matched rows keep their identity, commit version goes
+            # fresh (null materialized → the new add's default)
+            mat_id, mat_cv = p.rt_cols
+            proj.append(p.t(mat_id).alias(mat_id))
+            proj.append(
+                F.when(matched, F.lit(None).cast("long"))
+                .otherwise(p.t(mat_cv)).alias(mat_cv)
+            )
+        sa = p.src.withColumn(mark, F.lit(True)).alias(p.s_alias)
+        return [
+            arows.alias(p.t_alias)
+            .join(p.sh(sa), p.join_cond, "left_outer")
+            .select(*proj)
+        ], []
+    unmatched = arows.join(p.sh(probe.keys), p.on, "left_anti")
+    if p.bs_clauses:
+        rows, changes = _target_clause_rows(
+            p, unmatched.alias(p.t_alias), p.bs_clauses
+        )
+    else:
+        rows, changes = [unmatched.select(*p.col_order, *p.rt_cols)], []
+    if p.m_clauses:
+        # pair every matched target row with ITS source row (source keys
+        # are unique — the dup probe guarantees it — so cardinality stays
+        # per target row)
+        m_rows, m_changes = _target_clause_rows(
+            p,
+            arows.alias(p.t_alias).join(
+                p.sh(p.src.alias(p.s_alias)), p.join_cond, "inner"
+            ),
+            p.m_clauses,
+        )
+        rows += m_rows
+        changes += m_changes
+    else:
+        # when_matched="ignore" + by-source clauses: a file the by-source
+        # probe flags can ALSO hold source-matched rows, which survive
+        # unchanged — the rewrite must re-emit them or they vanish with
+        # the removed file
+        rows.append(
+            arows.join(p.sh(probe.keys), p.on, "left_semi")
+            .select(*p.col_order, *p.rt_cols)
+        )
+    return rows, changes
+
+
+def _merge_insert_frame(
+    p: _MergePlan, probe: _MergeProbe, arows: DataFrame | None
+) -> DataFrame | None:
+    """MERGE's insert step: source rows whose key matches no target row,
+    through the not-matched clauses, in the table's columns."""
+    if not p.nm_clauses:
+        return None
+    # r10: when the identify probe ran for matched clauses, every source
+    # key present ANYWHERE in the target lives in an affected file (that
+    # is what made the file affected), so the insert anti-join needs
+    # only the affected rows' keys — not a second full scan of the
+    # table; no affected files means NO source key matches.
+    if probe.tbl is None or (p.m_clauses and arows is None):
+        base = p.src
+    elif p.m_clauses:
+        base = p.src.join(p.sh(arows.select(*p.on)), p.on, "left_anti")
+    else:
+        base = p.src.join(
+            p.sh(probe.tbl.select(*p.on).distinct()), p.on, "left_anti"
+        )
+    _unclaimed, claims = _claims(
+        base.select(*p.col_order).alias(p.s_alias), p.nm_clauses
+    )
+    return _union_all([
+        _clause_projection(p, rows, c)
+        for c, rows in zip(p.nm_clauses, claims)
+    ])
+
+
+def _merge_stage(
+    spark: SparkSession,
+    p: _MergePlan,
+    probe: _MergeProbe,
+    rewrite: list[DataFrame],
+    inserts: DataFrame | None,
+) -> list[dict]:
+    """MERGE's stage step: the rewrite side and the insert side are
+    enforced and sized separately, then unioned into ONE staged write.
+
+    r11: the rewrite side coalesces to ~targetFileSize of rewritten
+    input; the insert side to its OWN estimate — probe-fed source rows ×
+    the affected files' bytes-per-row — and keeps the source's natural
+    parallelism when no estimate exists, so an insert-heavy upsert never
+    serializes its whole output into the rewrite side's few tasks."""
+
+    def ready(df: DataFrame) -> DataFrame:
+        return _enforce_constraints(
+            _enforce_not_null(df, p.meta["schemaString"]), p.meta
+        )
+
+    sides = []
+    affected = [probe.path_to_add[f] for f in probe.affected]
+    if rewrite:
+        sides.append(_sized_for_rewrite(
+            ready(_union_all(rewrite)),
+            sum(int(a.get("size") or 0) for a in affected),
+            p.meta,
+        ))
+    if inserts is not None:
+        ins = ready(inserts.select(
+            *p.col_order,
+            *[F.lit(None).cast("long").alias(c) for c in p.rt_cols],
+        ))
+        counted = [(a, _num_records(a)) for a in affected]
+        aff_bytes = sum(int(a.get("size") or 0) for a, n in counted if n)
+        aff_records = sum(n for _a, n in counted if n)
+        if probe.n_src_rows is not None and aff_records > 0:
+            ins = _sized_for_rewrite(
+                ins, -(-probe.n_src_rows * aff_bytes // aff_records), p.meta
+            )
+        sides.append(ins)
+    if not sides:
+        return []  # every affected row deleted, nothing inserted
+    return _stage_write(
+        spark, p.root, _union_all(sides),
+        list(p.meta.get("partitionColumns") or []), p.meta, "_merge",
+        p.small_bytes, extra_cols=p.rt_cols,
+    )
+
+
 def merge_into_delta_native(
     spark: SparkSession,
     table_dir: str,
@@ -3880,8 +4509,8 @@ def merge_into_delta_native(
     (dataChange=true — MERGE changes data, unlike OPTIMIZE).
 
     CONDITIONAL / COLUMN-LEVEL CLAUSES (r10, delta-spark's full clause
-    model — /root/reference/deltawriter/delta_writer.py:88 funnels user
-    MERGE through that engine): pass lists of clause dicts instead of
+    model — rtdl's deltawriter funnels user MERGE through that engine):
+    pass lists of clause dicts instead of
     the strings. Matched clauses evaluate IN ORDER per matched row —
     the first whose condition holds applies; a matched row claiming no
     clause survives unchanged. Conditions and SET/VALUES expressions
@@ -3921,12 +4550,13 @@ def merge_into_delta_native(
     probe scans the full active set and the two-phase key-range
     pruning is disabled for the whole statement.
 
-    Scale shape (same discipline as delete_by_keys): ONE identify join
-    finds the affected files; ONLY those files are read again and
-    rewritten in ONE distributed staging write (untouched files are
-    never opened twice, never rewritten); the key set is frozen with a
-    localCheckpoint so both passes see identical source rows. O(1)
-    Spark jobs regardless of affected-file count.
+    Scale shape: plan (``_merge_plan``) → ONE probe job that finds the
+    affected files (``_merge_probe``) → ONLY those files are read again
+    and rewritten (``_merge_rewrite_frames``) next to the inserts
+    (``_merge_insert_frame``) in ONE staged write (``_merge_stage``;
+    untouched files are never opened twice, never rewritten) → commit.
+    The source is frozen with a localCheckpoint so every pass sees
+    identical rows. O(1) Spark jobs regardless of affected-file count.
 
     Per Delta MERGE semantics, multiple source rows matching one target
     key is an error (nondeterministic which would win) — caught by one
@@ -3934,838 +4564,65 @@ def merge_into_delta_native(
     race raises; the staged files are unreferenced and vacuum-reclaimed.
     """
     root = table_dir.rstrip("/")
-    protocol, meta, active, current, txns = snapshot_actions(spark, root)
-    if txn is not None and txns.get(txn[0], -1) >= int(txn[1]):
+    snapshot = snapshot_actions(spark, root)
+    if txn is not None and snapshot[4].get(txn[0], -1) >= int(txn[1]):
         # SetTransaction idempotency (the streaming upsert sink's
         # exactly-once guarantee): this epoch already committed
         return {
             "version": None, "files_rewritten": 0, "files_added": 0,
             "skipped_txn": True,
         }
-    _check_protocol(protocol)
-    _check_writer_protocol(protocol)
-    _check_cm_supported(meta, "MERGE")
-    rt = _row_tracking_supported(protocol)
-    _refuse_identity(meta, "MERGE")
-    # r10: DV-carrying tables merge through the DV-aware scan — masked
-    # rows never resurrect; rewritten files materialize the mask
-    dv_by_plain = _dv_map_of(root, active)
-    if (meta.get("configuration") or {}).get("delta.appendOnly") == "true":
-        raise ValueError("table is delta.appendOnly=true; MERGE rewrites")
-
-    part_cols = list(meta.get("partitionColumns") or [])
-    commit_meta = meta  # what conflict-retry validates against the tip
-    evolved_meta_actions: list[dict] = []
-    src_cols = set(source.columns)
-    if _schema_key(source.schema.json()) != _schema_key(
-        meta["schemaString"]
-    ):
-        if not merge_schema:
-            raise ValueError(
-                "MERGE source schema must match the table's "
-                "(names/types) — pass merge_schema=True to evolve "
-                "(delta-spark's withSchemaEvolution)"
-            )
-        if _cm_mode(meta) != "none":
-            raise ValueError(
-                "merge_schema on a column-mapped table is not "
-                "supported by MERGE (evolve via a mergeSchema append "
-                "first)"
-            )
-        evolved = _merge_schemas(meta["schemaString"], source.schema)
-        if _schema_key(evolved) != _schema_key(meta["schemaString"]):
-            # plan against the EVOLVED schema; the commit ships the new
-            # metaData action while conflict-retry still validates the
-            # SNAPSHOT meta (the rt_meta_actions pattern)
-            meta = {**meta, "schemaString": evolved}
-            evolved_meta_actions = [{"metaData": meta}]
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    bad = [k for k in on if k not in schema.fieldNames()]
-    if bad:
-        raise ValueError(f"merge keys not in the table schema: {bad}")
-    if merge_schema:
-        # align the source to the evolved schema: lacked columns are
-        # NULL for inserts; matched SET * keeps the TARGET's value for
-        # them (delta semantics — see the src_cols gates below)
-        source = source.select(
-            *[
-                F.col(f"`{f.name}`")
-                if f.name in src_cols
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
-        )
-    m_clauses, nm_clauses, bs_clauses = _normalize_merge_clauses(
-        when_matched, when_not_matched, schema.fieldNames(), meta,
-        when_not_matched_by_source,
+    p = _merge_plan(
+        spark, root, snapshot, source, on, when_matched, when_not_matched,
+        when_not_matched_by_source, aliases, merge_schema,
     )
-    t_alias, s_alias = aliases
-    if t_alias == s_alias:
-        raise ValueError("MERGE aliases must differ")
-    # the legacy single-unconditional-SET-* shape keeps its narrow plan
-    # (only keys [+ row-id] from the target cross the update join) —
-    # but ONLY when the source covers every table column: with schema
-    # evolution a lacked column must keep the TARGET's value, which the
-    # narrow source-only projection cannot express
-    src_covers_all = set(schema.fieldNames()) <= src_cols
-    legacy_update = src_covers_all and m_clauses == [
-        {"action": "update", "condition": None, "set": None}
-    ]
-    legacy_insert_all = nm_clauses == [
-        {"action": "insert", "condition": None, "values": None}
-    ]
-    # anything conditional / column-level / evolution-lacking goes
-    # through the paired plan
-    generic_matched = bool(m_clauses) and not (
-        len(m_clauses) == 1
-        and m_clauses[0]["condition"] is None
-        and m_clauses[0]["set"] is None
-        and (m_clauses[0]["action"] != "update" or src_covers_all)
-    )
-
-    def _q(alias: str, col: str):
-        return F.col(f"{alias}.`{col}`")
-
-    # freeze the source against re-evaluation; LAZY so the first action
-    # on it (the fused probe below) both materializes the checkpoint
-    # and does its own work in ONE job instead of an eager
-    # materialize-only job first (r9, measured)
-    src = source.localCheckpoint(eager=False)
-
-    # key-range candidate pruning (r9, delta-spark's two-phase MERGE):
-    # one tiny aggregate over the frozen source yields per-key min/max;
-    # target files whose stats exclude the WHOLE source range can hold
-    # no matching key — and the insert dedup stays correct on the
-    # pruned scan, because a target key equal to a source key lies
-    # inside the source range by definition, hence in a kept file.
-    # Gated on table BYTES (r10, judge r9 item 6): the extra aggregate
-    # pays off when pruning saves scan I/O, which scales with data
-    # volume, not file count — a 15-file table of GB files should
-    # prune, a 1000-file table of near-empty files should not pay the
-    # job. The add actions already carry sizes, so the gate is free.
-    merge_scan = active
-    active_bytes = sum(int(a.get("size") or 0) for a in active.values())
-    # small-plan gate input: everything the probe/rewrite can touch —
-    # the whole active set plus Catalyst's (conservatively large for
-    # opaque sources) estimate of the source
-    dml_small_bytes = active_bytes + _plan_size_estimate(source)
-    small_dml = _is_small_plan(spark, dml_small_bytes)
-
-    def _maybe_sh(df: DataFrame) -> DataFrame:
-        # Under the small-plan gate the MERGE joins take a SHUFFLE_HASH
-        # hint: the static planner would otherwise broadcast the tiny
-        # build sides, and every broadcast build materializes as its own
-        # Spark job with a driver gap (measured: 3 extra jobs per bench
-        # MERGE, one of them re-scanning the source because a
-        # BroadcastExchange cannot reuse the probe's shuffle exchange).
-        # With the hint every join rides the shared shuffle stages of
-        # ONE job. Above the gate the hint is absent and the planner /
-        # AQE keep choosing (broadcasting a small key set against a
-        # 100 TB scan is exactly right there).
-        return df.hint("shuffle_hash") if small_dml else df
-    # by-source clauses touch rows OUTSIDE the source key range, so the
-    # range pruning is invalid for this statement
-    if (
-        active_bytes >= _MERGE_PRUNE_MIN_BYTES
-        and m_clauses
-        and not bs_clauses
-    ):
-        from rtdl_spark.sources.delta_reader import (
-            _prune_files_by_key_ranges,
-        )
-
-        b = src.agg(
-            *[F.min(F.col(k)).alias(f"__lo_{i}") for i, k in enumerate(on)],
-            *[F.max(F.col(k)).alias(f"__hi_{i}") for i, k in enumerate(on)],
-        ).collect()[0]
-        ranges = {
-            k: (b[f"__lo_{i}"], b[f"__hi_{i}"]) for i, k in enumerate(on)
-        }
-        kept, _np = _prune_files_by_key_ranges(
-            sorted(
-                (p, a.get("partitionValues") or {})
-                for p, a in active.items()
-            ),
-            active,
-            meta,
-            ranges,
-        )
-        merge_scan = {p: active[p] for p, _pv in kept}
-
-    tbl, path_to_add = _active_scan(
-        spark, root, meta, merge_scan, dv_by_plain=dv_by_plain
-    )
-    # ONE aggregation serves both probe consumers (r10; guide §2.4:
-    # two operations keyed the same way share one exchange): the
-    # per-key source counts feed the duplicate check AND, projected to
-    # the keys, the identify semi-join — the dup probe's own groupBy
-    # shuffle of the source (a second scan + exchange in the r9 shape)
-    # collapses into this one.
-    kc = src.groupBy(*on).agg(F.count(F.lit(1)).alias("__delta_key_n__"))
-    # the filter is a tautology (a group's count is always >= 1); it is
-    # here so column pruning cannot narrow this branch's partial
-    # aggregate to keys-only — pruned, the two probe branches' exchanges
-    # stop being canonically equal and Spark computes the source
-    # aggregation twice instead of reusing one exchange (observed: two
-    # concurrent source scans in the probe job)
-    keys = kc.filter(F.col("__delta_key_n__") >= 1).select(*on)
-    # ONE PROBE JOB (r9, measured — the r8 profile showed lifecycle
-    # time is job-count × fixed job latency): the duplicate-source
-    # check and the affected-file identify are UNIONED into a single
-    # collect instead of two separate actions; the shared src branch
-    # materializes its checkpoint inside the same job. matched=
-    # "ignore" keeps matched rows as they are — no file needs
-    # rewriting, so the identify side is skipped entirely.
-    probes = []
-    if check_duplicates:
-        probes.append(
-            kc.filter(F.col("__delta_key_n__") > 1)
-            .limit(1)
-            .select(
-                F.lit("dup").alias("__probe"),
-                F.lit(None).cast("string").alias(_FP_COL),
-            )
-        )
-    if tbl is not None and m_clauses:
-        probes.append(
-            tbl.join(_maybe_sh(keys), on, "left_semi")
-            .select(_FP_COL)
-            .distinct()
-            .select(F.lit("file").alias("__probe"), F.col(_FP_COL))
-        )
-    if tbl is not None and bs_clauses:
-        # by-source identify: files holding any UNMATCHED row a clause
-        # would claim (OR of the conditions; an unconditional clause
-        # claims every unmatched row). Rides the same single probe job.
-        bs_cond = None
-        for c in bs_clauses:
-            e = (
-                F.expr(c["condition"])
-                if c["condition"] is not None
-                else F.lit(True)
-            )
-            bs_cond = e if bs_cond is None else (bs_cond | e)
-        probes.append(
-            tbl.alias(t_alias)
-            .join(_maybe_sh(keys), on, "left_anti")
-            .filter(bs_cond)
-            .select(_FP_COL)
-            .distinct()
-            .select(F.lit("file").alias("__probe"), F.col(_FP_COL))
-        )
-    affected = []
-    n_src_rows: int | None = None
-    if probes:
-        if nm_clauses:
-            # total source rows, riding the shared kc exchange (guide
-            # §2.4 — no extra job): sizes the INSERT side's staging
-            # coalesce (see the split _sized_for_rewrite below; r11
-            # judge advice — an insert-heavy upsert must not serialize
-            # its whole staged output into the rewrite side's tasks)
-            probes.append(
-                kc.agg(F.sum("__delta_key_n__").alias("__delta_key_n__"))
-                .select(
-                    F.lit("nsrc").alias("__probe"),
-                    F.col("__delta_key_n__")
-                    .cast("string")
-                    .alias(_FP_COL),
-                )
-            )
-        probe_df = probes[0]
-        for p in probes[1:]:
-            probe_df = probe_df.unionByName(p)
-        with _small_plan_scope(spark, dml_small_bytes):
-            rows = probe_df.collect()
-        if any(r["__probe"] == "dup" for r in rows):
-            raise ValueError(
-                "MERGE source has multiple rows per key — "
-                "nondeterministic match (dedupe the source first)"
-            )
-        # raw → plain decode happens HERE, driver-side, once per
-        # distinct file (r11) — the set() also dedupes the match probe
-        # against the by-source probe naming the same file
-        raw_of = {}
-        for r in rows:
-            if r["__probe"] == "file":
-                raw_of[_fp_decode_py(r[_FP_COL])] = r[_FP_COL]
-            elif r["__probe"] == "nsrc" and r[_FP_COL] is not None:
-                n_src_rows = int(r[_FP_COL])
-        affected = sorted(raw_of)
-
-    # rewrite plan: survivors of affected files + matched updates + inserts
-    pieces = []
-    col_order = [f.name for f in schema.fields]
-    # row tracking (r8): survivors keep id + commit version; matched
-    # UPDATES keep the TARGET row's id (per-target-row cardinality —
-    # the id rides the carried materialized column) with a fresh
-    # commit version; INSERTS are new rows (both null → the new add's
-    # fresh range / default version)
-    mat_id = mat_cv = None
-    rt_meta_actions: list[dict] = []
-    if rt:
-        mat_id, mat_cv, new_meta = _rt_materialize_cols(meta)
-        if new_meta is not None:
-            rt_meta_actions = [{"metaData": new_meta}]
-    stage_cols = col_order + ([mat_id, mat_cv] if rt else [])
-    if affected:
-        if not rt:
-            arows, _ = _active_scan(
-                spark, root, meta, active, subset=affected,
-                dv_by_plain=dv_by_plain,
-            )
-        else:
-            arows, _ = _active_scan(
-                spark, root, meta, active, subset=affected,
-                with_row_index=True,
-                extra_long_cols=[mat_id, mat_cv],
-                dv_by_plain=dv_by_plain,
-            )
-            # keyed by the TRUE raw rendering learned from the probe
-            # collect (r11)
-            arows = _attach_row_ids(
-                spark, arows,
-                [(raw_of[p], path_to_add[p]) for p in affected],
-                mat_id, mat_cv, "a MERGE",
-            ).drop(_RI_COL)
-        arows = arows.drop(_FP_COL)
-        fused_legacy = (
-            legacy_update and not bs_clauses and not generic_matched
-        )
-        if (
-            _cdf_enabled(meta)
-            or bs_clauses
-            or generic_matched
-            or not m_clauses
-            or nm_clauses
-        ):
-            # r11 (VERDICT item 1, CDF fold): these MERGE shapes consume
-            # the affected rows from MULTIPLE plan branches (change
-            # frames, clause splits, survivor/claimed partitions, the
-            # insert anti-join) — a lazy localCheckpoint turns the
-            # repeated affected-file scans into one physical pass +
-            # cached-block reads (guide §5). The single-consumer path
-            # (matched-only fused update, no inserts) skips it.
-            arows = arows.localCheckpoint(eager=False)
-        if fused_legacy:
-            # r10 (guide §2.4/§8): the unconditional UPDATE SET * shape
-            # used to scan the affected files TWICE — an anti-join for
-            # survivors plus an inner join for matched rows, unioned.
-            # One left join yields both from a single pass: a matched
-            # target row takes the source's values (per-target-row
-            # cardinality — source keys are unique by the dup probe),
-            # an unmatched one keeps its own. Null-key target rows
-            # match nothing under SQL equality, exactly like the
-            # anti-join they replace.
-            mark = "__delta_merge_matched__"
-            if mark in src.columns or mark in schema.fieldNames():
-                # mirror _stage_rewrite's reserved-column guard: a user
-                # column of this name would be silently overwritten and
-                # every row would project as matched
-                raise ValueError(
-                    f"table/source schema uses the reserved column "
-                    f"{mark!r}"
-                )
-            sa = src.withColumn(mark, F.lit(True)).alias(s_alias)
-            ta = arows.alias(t_alias)
-            jc = None
-            for k in on:
-                e = _q(t_alias, k) == _q(s_alias, k)
-                jc = e if jc is None else (jc & e)
-            matched = F.col(mark).isNotNull()
-            proj = [
-                F.when(matched, _q(s_alias, c))
-                .otherwise(_q(t_alias, c))
-                .alias(c)
-                for c in col_order
-            ]
-            if rt:
-                # matched rows keep their identity, commit version goes
-                # fresh (null materialized → the new add's default)
-                proj.append(_q(t_alias, mat_id).alias(mat_id))
-                proj.append(
-                    F.when(matched, F.lit(None).cast("long"))
-                    .otherwise(_q(t_alias, mat_cv))
-                    .alias(mat_cv)
-                )
-            pieces.append(
-                ta.join(_maybe_sh(sa), jc, "left_outer").select(*proj)
-            )
-        elif not bs_clauses:
-            unmatched = arows.join(_maybe_sh(keys), on, "left_anti")
-            pieces.append(unmatched.select(*stage_cols))
-        else:
-            unmatched = arows.join(_maybe_sh(keys), on, "left_anti")
-            # NOT MATCHED BY SOURCE: route unmatched target rows
-            # through the clause chain — claimed updates project SET
-            # exprs, claimed deletes vanish, unclaimed rows survive
-            ua = unmatched.alias(t_alias)
-            bs_col = None
-            for i, c in enumerate(bs_clauses):
-                cnd = (
-                    F.expr(c["condition"])
-                    if c["condition"] is not None
-                    else F.lit(True)
-                )
-                bs_col = (
-                    F.when(cnd, F.lit(i))
-                    if bs_col is None
-                    else bs_col.when(cnd, F.lit(i))
-                )
-            tagged_u = ua.withColumn(_MERGE_CLAUSE_COL, bs_col)
-            pieces.append(
-                tagged_u.filter(F.col(_MERGE_CLAUSE_COL).isNull())
-                .select(*[_q(t_alias, c).alias(c) for c in stage_cols])
-            )
-            for i, c in enumerate(bs_clauses):
-                if c["action"] != "update":
-                    continue
-                proj = []
-                for col in col_order:
-                    if col in (c["set"] or {}):
-                        proj.append(
-                            F.expr(c["set"][col])
-                            .cast(schema[col].dataType)
-                            .alias(col)
-                        )
-                    else:
-                        proj.append(_q(t_alias, col).alias(col))
-                if rt:
-                    proj.append(_q(t_alias, mat_id).alias(mat_id))
-                    proj.append(F.lit(None).cast("long").alias(mat_cv))
-                pieces.append(
-                    tagged_u.filter(F.col(_MERGE_CLAUSE_COL) == i)
-                    .select(*proj)
-                )
-            if not m_clauses:
-                # when_matched="ignore" + by-source clauses: a file the
-                # by-source probe flags can ALSO hold source-matched
-                # rows ("ignore" means they survive unchanged) — the
-                # rewrite must re-emit them or they silently vanish
-                # with the removed file. Latent in r9 too, where the
-                # file layout merely made it unlikely; surfaced when
-                # r10's rewrite sizing started packing matched and
-                # unmatched keys into one file.
-                pieces.append(
-                    arows.join(_maybe_sh(keys), on, "left_semi")
-                    .select(*stage_cols)
-                )
-        if generic_matched:
-            # conditional / column-level clauses: pair every matched
-            # target row with ITS source row (source keys are unique —
-            # the duplicate probe guarantees it — so cardinality stays
-            # per-target-row), tag each pair with the FIRST clause
-            # whose condition holds, then emit per-clause projections.
-            # Rows claiming no clause survive unchanged; delete-clause
-            # rows are dropped by emitting nothing for them.
-            ta = arows.alias(t_alias)
-            sa = src.alias(s_alias)
-            jc = None
-            for k in on:
-                e = _q(t_alias, k) == _q(s_alias, k)
-                jc = e if jc is None else (jc & e)
-            clause_col = None
-            for i, c in enumerate(m_clauses):
-                cnd = (
-                    F.expr(c["condition"])
-                    if c["condition"] is not None
-                    else F.lit(True)
-                )
-                clause_col = (
-                    F.when(cnd, F.lit(i))
-                    if clause_col is None
-                    else clause_col.when(cnd, F.lit(i))
-                )
-            paired = ta.join(_maybe_sh(sa), jc, "inner").withColumn(
-                _MERGE_CLAUSE_COL, clause_col
-            )
-            t_stage_proj = [
-                _q(t_alias, c).alias(c) for c in stage_cols
-            ]
-            pieces.append(
-                paired.filter(F.col(_MERGE_CLAUSE_COL).isNull())
-                .select(*t_stage_proj)
-            )
-            for i, c in enumerate(m_clauses):
-                if c["action"] != "update":
-                    continue
-                proj = []
-                for col in col_order:
-                    if c["set"] is None:
-                        # SET *: source columns; a column the ORIGINAL
-                        # source lacked (schema evolution) keeps the
-                        # target's value, per delta semantics
-                        proj.append(
-                            _q(s_alias, col).alias(col)
-                            if col in src_cols
-                            else _q(t_alias, col).alias(col)
-                        )
-                    elif col in c["set"]:
-                        proj.append(
-                            F.expr(c["set"][col])
-                            .cast(schema[col].dataType)
-                            .alias(col)
-                        )
-                    else:
-                        proj.append(_q(t_alias, col).alias(col))
-                if rt:
-                    # target row keeps its identity; fresh commit version
-                    proj.append(_q(t_alias, mat_id).alias(mat_id))
-                    proj.append(F.lit(None).cast("long").alias(mat_cv))
-                upd_part = paired.filter(
-                    F.col(_MERGE_CLAUSE_COL) == i
-                ).select(*proj)
-                if c["set"] is not None:
-                    # generated columns omitted from SET recompute from
-                    # the FINAL row (delta-spark's behavior; keeping the
-                    # target's value would go stale when a referenced
-                    # column changed and trip enforcement)
-                    for gc, ge in _generated_cols(meta).items():
-                        if gc not in c["set"]:
-                            upd_part = upd_part.withColumn(
-                                gc,
-                                F.expr(ge).cast(schema[gc].dataType),
-                            )
-                pieces.append(upd_part.select(*(
-                    col_order + ([mat_id, mat_cv] if rt else [])
-                )))
-        elif legacy_update and not fused_legacy:
-            # one output row PER MATCHED TARGET ROW (not per source row):
-            # Delta MERGE's UPDATE SET * preserves target cardinality, so
-            # duplicate-key target rows each become a copy of the source
-            # row rather than collapsing to one
-            upd_keys = (
-                arows.select(*on, mat_id) if rt else arows.select(*on)
-            )
-            upd = upd_keys.join(src, on, "inner")
-            if rt:
-                upd = upd.withColumn(mat_cv, F.lit(None).cast("long"))
-            pieces.append(upd.select(*stage_cols))
-        # legacy unconditional delete: matched rows simply don't reappear
-    ins_df = None
-    if nm_clauses:
-        # r10 (guide §2.3: shuffle/scan fewer bytes): when the identify
-        # probe ran, every source key present ANYWHERE in the target
-        # lives in an affected file (that is what made the file
-        # affected), so the insert anti-join needs only the
-        # affected-file keys — not a second full scan of the table; no
-        # affected files means NO source key matches and the anti-join
-        # vanishes entirely.
-        if tbl is None:
-            base = src
-        elif m_clauses:
-            base = (
-                src.join(_maybe_sh(arows.select(*on)), on, "left_anti")
-                if affected
-                else src
-            )
-        else:
-            base = src.join(
-                _maybe_sh(tbl.select(*on).distinct()), on, "left_anti"
-            )
-        base = base.select(*col_order)
-        if legacy_insert_all:
-            ins_df = base
-        else:
-            sa2 = base.alias(s_alias)
-            clause_col = None
-            for i, c in enumerate(nm_clauses):
-                cnd = (
-                    F.expr(c["condition"])
-                    if c["condition"] is not None
-                    else F.lit(True)
-                )
-                clause_col = (
-                    F.when(cnd, F.lit(i))
-                    if clause_col is None
-                    else clause_col.when(cnd, F.lit(i))
-                )
-            tagged = sa2.withColumn(_MERGE_CLAUSE_COL, clause_col)
-            ins_parts = []
-            for i, c in enumerate(nm_clauses):
-                if c["values"] is None:
-                    proj = [_q(s_alias, col).alias(col) for col in col_order]
-                else:
-                    proj = [
-                        F.expr(c["values"][col])
-                        .cast(schema[col].dataType)
-                        .alias(col)
-                        if col in c["values"]
-                        # INSERT (cols) VALUES (...): omitted columns
-                        # are NULL (NOT NULL enforcement still applies)
-                        else F.lit(None)
-                        .cast(schema[col].dataType)
-                        .alias(col)
-                        for col in col_order
-                    ]
-                ins_part = tagged.filter(
-                    F.col(_MERGE_CLAUSE_COL) == i
-                ).select(*proj)
-                omitted = (
-                    # INSERT (cols) VALUES: anything not assigned;
-                    # INSERT *: anything the ORIGINAL source lacked
-                    # (schema evolution)
-                    (lambda assigned: [
-                        gc for gc in _generated_cols(meta)
-                        if gc not in assigned
-                    ])(c["values"] if c["values"] is not None else src_cols)
-                )
-                for gc in omitted:
-                    ins_part = ins_part.withColumn(
-                        gc,
-                        F.expr(_generated_cols(meta)[gc])
-                        .cast(schema[gc].dataType),
-                    )
-                ins_parts.append(ins_part.select(*col_order))
-            ins_df = ins_parts[0]
-            for p in ins_parts[1:]:
-                ins_df = ins_df.unionByName(p)
-        ins_piece = ins_df
-        if rt:
-            ins_piece = ins_piece.withColumn(
-                mat_id, F.lit(None).cast("long")
-            ).withColumn(mat_cv, F.lit(None).cast("long"))
-        ins_out = ins_piece.select(*stage_cols)
-    else:
-        ins_out = None
-    if not pieces and ins_out is None:
+    probe = _merge_probe(spark, p, check_duplicates)
+    arows = _merge_affected_rows(spark, p, probe)
+    rewrite, changes = _merge_rewrite_frames(p, probe, arows)
+    inserts = _merge_insert_frame(p, probe, arows)
+    if arows is None and inserts is None:
         return {"version": None, "files_rewritten": 0, "files_added": 0}
-
-    # change data feed: MERGE's change rows — matched targets as
-    # update pre/post images (or deletes), unmatched source rows as
-    # inserts; a commit carrying cdc actions is described by them
-    # EXCLUSIVELY, so every produced change is included
+    # change data feed: a commit carrying cdc actions is described by
+    # them EXCLUSIVELY, so every produced change is included
     cdc_actions: list[dict] = []
-    if _cdf_enabled(meta):
-        change_frames = []
-        if affected and generic_matched:
-            # per-clause change rows: only rows a clause CLAIMED appear
-            # (an unclaimed matched row changed nothing)
-            t_chg_proj = [_q(t_alias, c).alias(c) for c in col_order]
-            upd_idx = [
-                i for i, c in enumerate(m_clauses)
-                if c["action"] == "update"
-            ]
-            del_idx = [
-                i for i, c in enumerate(m_clauses)
-                if c["action"] == "delete"
-            ]
-            if upd_idx:
-                change_frames.append(
-                    paired.filter(F.col(_MERGE_CLAUSE_COL).isin(upd_idx))
-                    .select(*t_chg_proj)
-                    .withColumn("_change_type", F.lit("update_preimage"))
-                )
-                for i in upd_idx:
-                    c = m_clauses[i]
-                    proj = []
-                    for col in col_order:
-                        if c["set"] is None:
-                            proj.append(
-                                _q(s_alias, col).alias(col)
-                                if col in src_cols
-                                else _q(t_alias, col).alias(col)
-                            )
-                        elif col in c["set"]:
-                            proj.append(
-                                F.expr(c["set"][col])
-                                .cast(schema[col].dataType)
-                                .alias(col)
-                            )
-                        else:
-                            proj.append(_q(t_alias, col).alias(col))
-                    change_frames.append(
-                        paired.filter(F.col(_MERGE_CLAUSE_COL) == i)
-                        .select(*proj)
-                        .withColumn(
-                            "_change_type", F.lit("update_postimage")
-                        )
-                    )
-            if del_idx:
-                change_frames.append(
-                    paired.filter(F.col(_MERGE_CLAUSE_COL).isin(del_idx))
-                    .select(*t_chg_proj)
-                    .withColumn("_change_type", F.lit("delete"))
-                )
-        elif affected and m_clauses:
-            matched_target = arows.join(keys, on, "left_semi").select(
-                *col_order
-            )
-            if legacy_update:
-                change_frames.append(
-                    matched_target.withColumn(
-                        "_change_type", F.lit("update_preimage")
-                    )
-                )
-                change_frames.append(
-                    arows.select(*on)
-                    .join(src, on, "inner")
-                    .select(*col_order)
-                    .withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                )
-            else:  # legacy unconditional delete
-                change_frames.append(
-                    matched_target.withColumn(
-                        "_change_type", F.lit("delete")
-                    )
-                )
-        if affected and bs_clauses:
-            t_chg_proj2 = [_q(t_alias, c).alias(c) for c in col_order]
-            bs_upd = [
-                i for i, c in enumerate(bs_clauses)
-                if c["action"] == "update"
-            ]
-            bs_del = [
-                i for i, c in enumerate(bs_clauses)
-                if c["action"] == "delete"
-            ]
-            if bs_upd:
-                change_frames.append(
-                    tagged_u.filter(F.col(_MERGE_CLAUSE_COL).isin(bs_upd))
-                    .select(*t_chg_proj2)
-                    .withColumn("_change_type", F.lit("update_preimage"))
-                )
-                for i in bs_upd:
-                    c = bs_clauses[i]
-                    proj = [
-                        F.expr(c["set"][col])
-                        .cast(schema[col].dataType)
-                        .alias(col)
-                        if col in (c["set"] or {})
-                        else _q(t_alias, col).alias(col)
-                        for col in col_order
-                    ]
-                    change_frames.append(
-                        tagged_u.filter(F.col(_MERGE_CLAUSE_COL) == i)
-                        .select(*proj)
-                        .withColumn(
-                            "_change_type", F.lit("update_postimage")
-                        )
-                    )
-            if bs_del:
-                change_frames.append(
-                    tagged_u.filter(F.col(_MERGE_CLAUSE_COL).isin(bs_del))
-                    .select(*t_chg_proj2)
-                    .withColumn("_change_type", F.lit("delete"))
-                )
-        if ins_df is not None:
-            change_frames.append(
-                ins_df.withColumn("_change_type", F.lit("insert"))
-            )
-        if change_frames:
-            changes = change_frames[0]
-            for cf in change_frames[1:]:
-                changes = changes.unionByName(cf)
-            cdc_actions = _stage_cdc(
-                spark, root, changes, col_order, part_cols, meta,
-                small_bytes=dml_small_bytes,
-            )
-
-    def _stage_ready(df: DataFrame) -> DataFrame:
-        # enforcement + physical mapping are row-local, so applying them
-        # per side before the union is identical to the old post-union
-        # application
-        df = _enforce_not_null(df, meta["schemaString"])
-        df = _enforce_constraints(df, meta)
-        if _cm_mode(meta) != "none":
-            df = _to_physical(
-                spark, df, meta,
-                extra_cols=[mat_id, mat_cv] if rt else None,
-            )
-        return df
-
-    # column mapping: computed logically above, staged PHYSICALLY
-    # (same discipline as _stage_write)
-    stage_part_cols = part_cols
-    if _cm_mode(meta) != "none":
-        fields_json = json.loads(meta["schemaString"]).get("fields") or []
-        phys_of = {f["name"]: _physical_name(f) for f in fields_json}
-        stage_part_cols = [phys_of[c] for c in part_cols]
-    # r11 (judge advice): size the REWRITE side and the INSERT side
-    # separately. The old shape coalesced the whole union by the
-    # affected-file bytes alone, so an insert-heavy upsert (one small
-    # matched file + a large source) serialized its entire staged
-    # output into ~one task. The rewrite side still coalesces to
-    # ~targetFileSize of rewritten input; the insert side coalesces to
-    # its OWN estimate — probe-fed source rows × the affected files'
-    # bytes-per-row — and keeps the source's natural parallelism when
-    # no estimate exists.
-    out = None
-    if pieces:
-        out = pieces[0]
-        for p in pieces[1:]:
-            out = out.unionByName(p)
-        out = _stage_ready(out)
-        if affected:
-            out = _sized_for_rewrite(
-                out,
-                sum(
-                    int(path_to_add[p].get("size") or 0) for p in affected
-                ),
-                meta,
-            )
-    if ins_out is not None:
-        ins_fin = _stage_ready(ins_out)
-        if affected and n_src_rows is not None:
-            aff_bytes = aff_records = 0
-            for p in affected:
-                a = path_to_add[p]
-                nr = _num_records(a)
-                if nr:
-                    aff_bytes += int(a.get("size") or 0)
-                    aff_records += nr
-            if aff_records > 0:
-                ins_fin = _sized_for_rewrite(
-                    ins_fin,
-                    -(-n_src_rows * aff_bytes // aff_records),
-                    meta,
-                )
-        out = ins_fin if out is None else out.unionByName(ins_fin)
-    staging = posixpath.join(root, f"_merge-{uuid.uuid4().hex[:12]}")
-    writer = out.write.mode("overwrite")
-    if stage_part_cols:
-        writer = writer.partitionBy(*stage_part_cols)
-    with _small_plan_scope(spark, dml_small_bytes):
-        writer.parquet(staging)
-    try:
-        adds = _promote_staged(spark, root, staging, stage_part_cols, True)
-    finally:
-        fsutil.delete(spark, staging)
-
+    if p.cdf and inserts is not None:
+        changes.append(inserts.withColumn("_change_type", F.lit("insert")))
+    if changes:
+        cdc_actions = _stage_cdc(
+            spark, root, _union_all(changes), p.col_order,
+            list(p.meta.get("partitionColumns") or []), p.meta,
+            small_bytes=p.small_bytes,
+        )
+    adds = _merge_stage(spark, p, probe, rewrite, inserts)
     ts = _now_ms()
     version = _commit_rewrite(
         spark,
         root,
-        current,
+        p.current,
         "MERGE",
         {
             "predicate": json.dumps(on),
             "matched": (
                 when_matched
                 if isinstance(when_matched, str)
-                else json.dumps(m_clauses)
+                else json.dumps(p.m_clauses)
             ),
             "notMatched": (
                 when_not_matched
                 if isinstance(when_not_matched, str)
-                else json.dumps(nm_clauses)
+                else json.dumps(p.nm_clauses)
             ),
             **(
-                {"notMatchedBySource": json.dumps(bs_clauses)}
-                if bs_clauses
+                {"notMatchedBySource": json.dumps(p.bs_clauses)}
+                if p.bs_clauses
                 else {}
             ),
         },
-        _remove_actions([path_to_add[p] for p in affected], ts),
+        _remove_actions([probe.path_to_add[f] for f in probe.affected], ts),
         adds,
         ts,
-        commit_meta,
-        # rt's minted metaData is built FROM the evolved meta, so it
-        # already carries the new schema — never ship two metaData
-        # actions in one commit
-        extra_actions=(rt_meta_actions or evolved_meta_actions)
-        + cdc_actions + (
+        p.commit_meta,
+        extra_actions=p.meta_actions + cdc_actions + (
             [{"txn": {
                 "appId": txn[0],
                 "version": int(txn[1]),
@@ -4774,13 +4631,13 @@ def merge_into_delta_native(
             if txn is not None
             else []
         ),
-        row_tracking=rt,
+        row_tracking=bool(p.rt_cols),
     )
     return {
         "version": version,
-        "files_rewritten": len(affected),
+        "files_rewritten": len(probe.affected),
         "files_added": len(adds),
-        "files_pruned": len(active) - len(merge_scan),
+        "files_pruned": len(p.active) - probe.scanned,
     }
 
 
@@ -5042,6 +4899,7 @@ def sync_identity_delta_native(
             },
         ]
         if _try_commit(spark, root, current + 1, actions):
+            _post_commit(spark, root, current + 1, actions, meta)
             return {"version": current + 1, "high_watermarks": new_hwms}
         # lost the race: the concurrent commit may have appended rows
         # or advanced the watermark itself — recompute from the new tip
@@ -5520,7 +5378,7 @@ def optimize_delta_native(
             spark, staged_src, meta,
             keep_cols=[bin_col] + ([mat_id, mat_cv] if rt else []),
         )
-    staging = posixpath.join(root, f"_optimize-{uuid.uuid4().hex[:12]}")
+    staging = _staging_dir(root, "_optimize")
     with _small_plan_scope(
         spark,
         sum(
@@ -5675,7 +5533,7 @@ def vacuum_delta_native(
             else name
         )
         if name.startswith((".", "_")) and not rel.startswith(
-            ("_staging-", "_optimize-", "_delete-", "_update-", "_merge-")
+            _STAGING_PREFIXES
         ):
             continue  # markers/metadata that are not ours to reap
         if mtime > cutoff:
@@ -5705,7 +5563,7 @@ def vacuum_delta_native_distributed(
 
     Spark's file index hides '.'/'_'-prefixed names, which is exactly
     the hidden-marker rule the driver-side vacuum applies — except our
-    own crash leftovers under ``_staging-*`` / ``_optimize-*``, which
+    own crash leftovers under the ``_STAGING_TAGS`` prefixes, which
     are enumerated separately (driver-side, bounded by the handful of
     crashed operations, not by table size).
 
@@ -5801,8 +5659,7 @@ def vacuum_delta_native_distributed(
     # the file index; list just those dirs driver-side (small)
     orphan_rows: list[tuple[str, int]] = []
     for name in fsutil.list_names(spark, root):
-        if name.startswith(("_staging-", "_optimize-", "_delete-",
-                            "_update-", "_merge-")):
+        if name.startswith(_STAGING_PREFIXES):
             for p, _s, mtime in fsutil.iter_files(
                 spark, posixpath.join(root, name)
             ):

@@ -566,3 +566,36 @@ def test_create_with_row_tracking_assigns_and_preserves_ids(
     # DELETE preserves surviving ids (materialized column lane)
     delete_where_delta_native(spark, root, "id % 2 = 0")
     assert read_delta_native(spark, root).count() == 7
+
+
+def test_alter_on_an_interval_version_checkpoints(spark, tmp_path):
+    """A metadata-only commit runs the post-commit step too: an ALTER
+    SET TBLPROPERTIES landing at v10 leaves ``_last_checkpoint`` at 10,
+    and the snapshot read through it equals a JSON-only replay."""
+    import shutil
+
+    root = str(tmp_path / "t")
+    write_delta_native(spark, spark.range(0, 10), root)  # v0
+    for i in range(1, 10):
+        alter_set_tblproperties(spark, root, {"user.step": str(i)})
+    log = os.path.join(root, "_delta_log")
+    assert not os.path.exists(os.path.join(log, "_last_checkpoint"))
+    assert alter_set_tblproperties(
+        spark, root, {"user.step": "10"})["version"] == 10
+    with open(os.path.join(log, "_last_checkpoint")) as f:
+        assert json.load(f)["version"] == 10
+    plain = str(tmp_path / "plain")
+    shutil.copytree(root, plain)
+    for n in os.listdir(os.path.join(plain, "_delta_log")):
+        if ".checkpoint." in n or n == "_last_checkpoint":
+            os.remove(os.path.join(plain, "_delta_log", n))
+    got, want = snapshot_actions(spark, root), snapshot_actions(spark, plain)
+
+    def present(action):  # a checkpoint row reads absent fields as None
+        return {k: v for k, v in action.items() if v is not None}
+
+    assert got[3] == want[3] == 10
+    assert present(got[0]) == present(want[0])
+    assert present(got[1]) == present(want[1])
+    assert got[1]["configuration"]["user.step"] == "10"
+    assert set(got[2]) == set(want[2])

@@ -1139,3 +1139,52 @@ def test_unpartitioned_read_ends_with_the_scan_projection(spark, tmp_path):
     assert calls < calls_with
     analyzed = df._jdf.queryExecution().analyzed().toString()
     assert analyzed.count("Project [") == 1, analyzed
+
+
+@pytest.mark.parametrize("n_parts", [2, 40])
+def test_read_keeps_user_field_metadata(spark, tmp_path, n_parts):
+    """A column comment written into the log's schema reads back on a
+    data column and on a partition column, through both the per-group
+    partition attach (few groups) and the joined attach (many)."""
+    from rtdl_spark.sources.delta_writer import write_delta_native
+
+    root = str(tmp_path / "t")
+    write_delta_native(
+        spark,
+        spark.range(0, 80).select(
+            F.col("id").alias("id", metadata={"comment": "the key"}),
+            (F.col("id") % n_parts).cast("string")
+            .alias("p", metadata={"comment": "the part"}),
+        ),
+        root, partition_by=["p"], checkpoint_interval=0,
+    )
+    df = read_delta_native(spark, root)
+    assert df.schema["id"].metadata == {"comment": "the key"}
+    assert df.schema["p"].metadata == {"comment": "the part"}
+    assert sorted(r.id for r in df.collect()) == list(range(80))
+
+
+def test_column_mapped_read_schema_has_no_delta_keys(spark, tmp_path):
+    """The log's ``delta.columnMapping.*`` field keys are protocol
+    bookkeeping: a column-mapped table's read schema carries only the
+    user's metadata, on a non-empty and on an empty read alike."""
+    from rtdl_spark.sources.delta_writer import (
+        delete_where_delta_native,
+        write_delta_native,
+    )
+
+    root = str(tmp_path / "cm")
+    write_delta_native(
+        spark,
+        spark.range(0, 10).select(
+            F.col("id").alias("id", metadata={"comment": "the key"}),
+            (F.col("id") % 2).cast("string").alias("p"),
+        ),
+        root, partition_by=["p"], column_mapping="name",
+        checkpoint_interval=0,
+    )
+    for _ in range(2):
+        schema = read_delta_native(spark, root).schema
+        assert schema["id"].metadata == {"comment": "the key"}
+        assert schema["p"].metadata == {}
+        delete_where_delta_native(spark, root, "true")

@@ -671,3 +671,84 @@ def test_matched_ignore_with_by_source_same_file(spark, tmp_path):
     # 50 deleted by the clause; 1 (matched, ignored) and 2 (unclaimed)
     # survive with their ORIGINAL values
     assert rows == [(1, 10, "a"), (2, 20, "b")]
+
+
+_SHAPES = {
+    "upsert": {"when_matched": "update", "when_not_matched": "insert"},
+    "delete": {"when_matched": "delete", "when_not_matched": "ignore"},
+    "conditional": {
+        "when_matched": [
+            {"action": "update", "condition": "s.v > t.v",
+             "set": {"v": "s.v"}},
+            {"action": "delete", "condition": None},
+        ],
+        "when_not_matched": [
+            {"action": "insert", "condition": "s.v > 0", "values": None},
+        ],
+    },
+    "by_source_delete": {
+        "when_matched": "ignore", "when_not_matched": "ignore",
+        "when_not_matched_by_source": [
+            {"action": "delete", "condition": "t.id < 10"},
+        ],
+    },
+    "upsert_by_source_update": {
+        "when_matched": "update", "when_not_matched": "insert",
+        "when_not_matched_by_source": [
+            {"action": "update", "condition": "t.id < 10",
+             "set": {"v": "t.v + 1"}},
+        ],
+    },
+}
+
+
+@pytest.mark.parametrize("cdf", [False, True])
+def test_merge_job_shape(spark, tmp_path, cdf):
+    """Pins how many Spark jobs each MERGE shape runs, with CDF off and
+    on: a 2-file, 100-row table and a 20-row source (10 keys matched,
+    10 new). Counted through statusTracker job groups; the snapshot,
+    probe, staged write, CDF write and commit all run inside the group.
+    Only the fused unconditional upsert with CDF off keeps its left-join
+    plan; every other shape pairs target and source rows once."""
+    import time
+
+    from rtdl_spark.sources.delta_alter import alter_set_tblproperties
+
+    sc = spark.sparkContext
+    groups = {}
+    for name, kwargs in _SHAPES.items():
+        root = str(tmp_path / name)
+        write_delta_native(
+            spark,
+            spark.range(0, 100)
+            .select("id", (F.col("id") * 10).alias("v"))
+            .repartition(2),
+            root, checkpoint_interval=0,
+        )
+        if cdf:
+            alter_set_tblproperties(
+                spark, root, {"delta.enableChangeDataFeed": "true"}
+            )
+        src = spark.range(90, 110).select(
+            "id", (F.col("id") * 10 + 1).alias("v")
+        )
+        gid = f"merge-shape-{name}-{cdf}"
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(gid, gid)
+        try:
+            res = merge_into_delta_native(spark, root, src, on=["id"],
+                                          **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+        assert res["version"] is not None
+        groups[name] = gid
+    time.sleep(0.5)  # let the listener bus deliver the last job events
+    tracker = sc.statusTracker()
+    got = {n: len(tracker.getJobIdsForGroup(g)) for n, g in groups.items()}
+    assert got == (
+        {"upsert": 3, "delete": 3, "conditional": 3,
+         "by_source_delete": 3, "upsert_by_source_update": 3}
+        if cdf
+        else {"upsert": 2, "delete": 2, "conditional": 2,
+              "by_source_delete": 2, "upsert_by_source_update": 2}
+    )
