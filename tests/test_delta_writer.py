@@ -3424,3 +3424,128 @@ def test_active_scan_null_partition_group_order(spark, tmp_path):
         if i % 5 != 0
     )
     assert got == expected
+
+
+def _conflict_case(spark, root, case):
+    """Set up ``case`` at ``root``; return (racer, loser, expect) where
+    ``racer`` lands a real commit, ``loser`` is the operation it races
+    and ``expect`` is (exception, match) or a check of the result."""
+    from rtdl_spark.sources.delta_alter import (
+        alter_add_columns,
+        alter_set_tblproperties,
+        create_delta_table_native,
+    )
+    from rtdl_spark.sources.delta_clone import clone_delta_native
+    from rtdl_spark.sources.delta_writer import sync_identity_delta_native
+
+    base = _frame(spark, 0, 5).coalesce(1)
+    wider = _frame(spark, 5, 8).withColumn("extra", F.lit(1)).coalesce(1)
+
+    def append(df=None, **kw):
+        return lambda: write_delta_native(
+            spark, _frame(spark, 5, 8) if df is None else df, root,
+            checkpoint_interval=0, **kw,
+        )
+
+    def props(prop):
+        return lambda: alter_set_tblproperties(spark, root, prop)
+
+    add_column = lambda: alter_add_columns(spark, root, [("other", "int")])  # noqa: E731
+    abort = DeltaConcurrentWriteError
+    if case in ("cm_evolution_max_id", "cm_replace_max_id"):
+        write_delta_native(spark, base, root, column_mapping="name",
+                           checkpoint_interval=0)
+    elif case in ("identity_hwm", "sync_identity"):
+        create_delta_table_native(
+            spark, root, "id long, v long",
+            identity={"id": {"always": case == "identity_hwm"}},
+        )
+        rows = spark.range(3).select(F.col("id").alias("v"))
+        if case == "sync_identity":  # explicit ids leave the hwm behind
+            rows = spark.createDataFrame([(20, 0)], "id long, v long")
+        write_delta_native(spark, rows, root, checkpoint_interval=0)
+    elif case != "create":
+        write_delta_native(spark, base, root, checkpoint_interval=0)
+
+    if case == "append_schema_drift":
+        return (append(wider, merge_schema=True), append(),
+                (ValueError, "append schema mismatch after concurrent"))
+    if case == "partitioning_drift":
+        return (append(mode="overwrite", partition_by=["tag"]), append(),
+                (ValueError, "partitioning mismatch after concurrent"))
+    if case == "cm_mode_change":
+        return (props({"delta.columnMapping.mode": "name"}), append(),
+                (abort, "COLUMN MAPPING change during append"))
+    if case == "cm_evolution_max_id":
+        return (add_column, append(wider, merge_schema=True),
+                (abort, "column-mapping schema evolution"))
+    if case == "cm_replace_max_id":
+        return (add_column, append(wider, mode="overwrite"),
+                (abort, "column-mapping change during schema-replacing"))
+    if case == "identity_hwm":
+        rows = spark.range(3).select(F.col("id").alias("v"))
+        return (append(rows), append(rows),
+                (abort, "identity high-watermark change on 'id'"))
+    if case == "txn_epoch":
+        def check(v):
+            assert v == -1
+            assert read_delta_native(spark, root).count() == 8
+        return append(txn=("app", 7)), append(txn=("app", 7)), check
+    if case == "alter_rebuilds":
+        def check(res):
+            assert res["version"] == 2
+            _, meta, _, _, _ = snapshot_actions(spark, root)
+            assert meta["configuration"] == {"a": "1", "b": "2"}
+        return props({"b": "2"}), props({"a": "1"}), check
+    if case == "sync_identity":
+        explicit = spark.createDataFrame([(50, 1)], "id long, v long")
+
+        def check(res):
+            assert res == {"version": 3, "high_watermarks": {"id": 50}}
+        return (append(explicit),
+                lambda: sync_identity_delta_native(spark, root), check)
+    if case == "create":
+        return (append(),
+                lambda: create_delta_table_native(spark, root, "id long"),
+                (ValueError, "create refuses to race"))
+    if case == "clone":
+        dst = root + "_clone"
+        return (lambda: write_delta_native(spark, base, dst),
+                lambda: clone_delta_native(spark, root, dst),
+                (ValueError, "clone refuses to race"))
+    raise AssertionError(case)
+
+
+@pytest.mark.parametrize("case", [
+    "append_schema_drift", "partitioning_drift", "cm_mode_change",
+    "cm_evolution_max_id", "cm_replace_max_id", "identity_hwm",
+    "txn_epoch", "alter_rebuilds", "sync_identity", "create", "clone",
+])
+def test_commit_conflicts(spark, tmp_path, monkeypatch, case):
+    """The conflict rules of every committing operation: a real
+    concurrent commit lands just before the first put-if-absent, and
+    the loser aborts with its reason, skips its landed epoch, rebuilds
+    on the new tip, or refuses to race a fixed-version create."""
+    import rtdl_spark.sources.delta_alter as da
+    import rtdl_spark.sources.delta_clone as dc
+    import rtdl_spark.sources.delta_writer as dw
+
+    racer, loser, expect = _conflict_case(spark, str(tmp_path / "t"), case)
+    real = dw._try_commit
+    state = {"raced": False}
+
+    def race_once(spark_, root, version, actions):
+        if not state["raced"]:
+            state["raced"] = True  # before the racer commits through here
+            racer()
+        return real(spark_, root, version, actions)
+
+    for mod in (dw, da, dc):
+        if hasattr(mod, "_try_commit"):
+            monkeypatch.setattr(mod, "_try_commit", race_once)
+    if callable(expect):
+        expect(loser())
+    else:
+        with pytest.raises(expect[0], match=expect[1]):
+            loser()
+    assert state["raced"]
