@@ -39,6 +39,7 @@ from __future__ import annotations
 
 import json
 import re
+import uuid
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -48,17 +49,18 @@ from rtdl_spark.sources.delta_reader import (
     snapshot_control,
 )
 from rtdl_spark.sources.delta_writer import (
-    DeltaConcurrentWriteError,
+    _Attempt,
     _check_writer_protocol,
+    _clustering_domain,
     _cm_annotate_field,
+    _cm_create,
     _cm_mode,
+    _commit,
+    _commit_new,
     _generated_cols,
     _identity_cols,
-    _ict_value,
     _now_ms,
-    _post_commit,
     _table_constraints,
-    _try_commit,
 )
 
 # What each LEGACY protocol version implies (Delta spec, Table Features
@@ -222,40 +224,28 @@ def _fields_to_schema(fields: list[dict]) -> str:
 def _commit_alter(
     spark: SparkSession,
     root: str,
+    operation: str,
     build,
     max_retries: int = 5,
 ) -> dict:
-    """Shared retry loop: ``build(protocol, meta, current)`` returns
-    (operation, operationParameters, actions-after-commitInfo, result)
-    or a plain result dict for a no-op (nothing to commit). Re-reads
-    the tip and rebuilds on every lost race — an ALTER must apply to
-    the state it actually lands on."""
-    for _attempt in range(max_retries):
+    """Every ALTER's commit: ``build(protocol, meta)`` returns
+    (operationParameters, actions, result), or a plain result dict for
+    a no-op (nothing to commit). Each attempt re-reads the tip and
+    rebuilds — an ALTER must apply to the state it actually lands on."""
+    done: dict = {}
+
+    def attempt(_n: int):
         protocol, meta, current, _txns = snapshot_control(spark, root)
         _check_protocol(protocol)
         _check_writer_protocol(protocol)
-        built = build(protocol, meta, current)
+        built = build(protocol, meta)
         if not isinstance(built, tuple):
             return built
-        operation, params, actions, result = built
-        ts = _now_ms()
-        ict = _ict_value(spark, root, current, meta, ts)
-        head = {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": operation,
-                "operationParameters": params,
-                "engineInfo": "rtdl-spark native-delta-writer/1",
-                **({"inCommitTimestamp": ict} if ict is not None else {}),
-            }
-        }
-        if _try_commit(spark, root, current + 1, [head] + actions):
-            _post_commit(spark, root, current + 1, actions, meta)
-            return {**result, "version": current + 1}
-    raise DeltaConcurrentWriteError(
-        f"lost the Delta commit race {max_retries} times during ALTER "
-        f"at {root}"
-    )
+        params, actions, done["result"] = built
+        return _Attempt(current, meta, params, actions)
+
+    out = _commit(spark, root, operation, attempt, max_retries=max_retries)
+    return out if isinstance(out, dict) else {**done["result"], "version": out}
 
 
 def alter_set_tblproperties(
@@ -278,8 +268,9 @@ def alter_set_tblproperties(
       resolving (delta-spark's upgrade rule); maxColumnId is set.
       Mode 'id' refuses (existing parquet carries no field ids), as
       does changing between non-none modes or back to none.
-    - delta.enableInCommitTimestamps=true also records the enablement
-      provenance properties the spec defines.
+    - delta.enableInCommitTimestamps=true: the enabling commit is
+      stamped and records the enablement provenance properties the spec
+      defines (``_commit``).
     - delta.constraints.* refuses — use ``alter_add_constraint``, which
       validates existing rows.
     - delta.enableRowTracking refuses — existing files would need a
@@ -311,7 +302,7 @@ def alter_set_tblproperties(
                 "typo'd feature toggle would sit inert)"
             )
 
-    def build(protocol, meta, current):
+    def build(protocol, meta):
         conf = dict(meta.get("configuration") or {})
         changed = {
             k: v for k, v in properties.items()
@@ -332,18 +323,13 @@ def alter_set_tblproperties(
             mode = changed["delta.columnMapping.mode"]
             cur = _cm_mode(meta)
             if mode == "name" and cur == "none":
-                fields, next_id = [], 1
-                for f in _schema_fields(meta):
-                    f2, next_id = _cm_annotate_field(
-                        f, next_id, keep_names=True
-                    )
-                    fields.append(f2)
-                new_conf["delta.columnMapping.maxColumnId"] = str(
-                    next_id - 1
+                schema_string, cm_conf = _cm_create(
+                    _schema_fields(meta), mode, keep_names=True
                 )
+                new_conf.update(cm_conf)
                 new_meta = {
                     **new_meta,
-                    "schemaString": _fields_to_schema(fields),
+                    "schemaString": schema_string,
                     "configuration": new_conf,
                 }
                 want_w.append("columnMapping")
@@ -358,32 +344,18 @@ def alter_set_tblproperties(
                     "'id' mode, and downgrades would orphan physical "
                     "names)"
                 )
-        if (
-            changed.get("delta.enableInCommitTimestamps", "").lower()
-            == "true"
-        ):
-            # enablement provenance (spec: In-Commit Timestamps) — the
-            # version/timestamp where ICT monotonicity starts
-            new_conf["delta.inCommitTimestampEnablementVersion"] = str(
-                current + 1
-            )
-            new_conf["delta.inCommitTimestampEnablementTimestamp"] = str(
-                _now_ms()
-            )
-            new_meta = {**new_meta, "configuration": new_conf}
         actions = []
         upgraded = _upgraded_protocol(protocol, want_w, want_r)
         if upgraded is not None:
             actions.append({"protocol": upgraded})
         actions.append({"metaData": new_meta})
         return (
-            "SET TBLPROPERTIES",
             {"properties": json.dumps(changed)},
             actions,
             {"properties": changed, "protocol_upgraded": bool(upgraded)},
         )
 
-    return _commit_alter(spark, root, build)
+    return _commit_alter(spark, root, "SET TBLPROPERTIES", build)
 
 
 def alter_unset_tblproperties(
@@ -404,7 +376,7 @@ def alter_unset_tblproperties(
                 "file resolves through it"
             )
 
-    def build(protocol, meta, current):
+    def build(protocol, meta):
         conf = dict(meta.get("configuration") or {})
         missing = [k for k in keys if k not in conf]
         if missing and not if_exists:
@@ -418,13 +390,12 @@ def alter_unset_tblproperties(
         for k in removed:
             del conf[k]
         return (
-            "UNSET TBLPROPERTIES",
             {"properties": json.dumps(sorted(removed))},
             [{"metaData": {**meta, "configuration": conf}}],
             {"removed": sorted(removed)},
         )
 
-    return _commit_alter(spark, root, build)
+    return _commit_alter(spark, root, "UNSET TBLPROPERTIES", build)
 
 
 def alter_add_constraint(
@@ -442,7 +413,7 @@ def alter_add_constraint(
     root = table_dir.rstrip("/")
     key = f"delta.constraints.{name.lower()}"
 
-    def build(protocol, meta, current):
+    def build(protocol, meta):
         conf = meta.get("configuration") or {}
         if key in conf:
             raise ValueError(
@@ -472,13 +443,12 @@ def alter_add_constraint(
             }
         )
         return (
-            "ADD CONSTRAINT",
             {"name": name.lower(), "expr": expression},
             actions,
             {"name": name.lower()},
         )
 
-    return _commit_alter(spark, root, build)
+    return _commit_alter(spark, root, "ADD CONSTRAINT", build)
 
 
 def alter_drop_constraint(
@@ -491,7 +461,7 @@ def alter_drop_constraint(
     root = table_dir.rstrip("/")
     key = f"delta.constraints.{name.lower()}"
 
-    def build(protocol, meta, current):
+    def build(protocol, meta):
         conf = dict(meta.get("configuration") or {})
         if key not in conf:
             if if_exists:
@@ -502,13 +472,12 @@ def alter_drop_constraint(
             )
         del conf[key]
         return (
-            "DROP CONSTRAINT",
             {"name": name.lower()},
             [{"metaData": {**meta, "configuration": conf}}],
             {"name": name.lower()},
         )
 
-    return _commit_alter(spark, root, build)
+    return _commit_alter(spark, root, "DROP CONSTRAINT", build)
 
 
 def alter_add_columns(
@@ -531,7 +500,7 @@ def alter_add_columns(
                 "top level"
             )
 
-    def build(protocol, meta, current):
+    def build(protocol, meta):
         fields = _schema_fields(meta)
         have = {f["name"].lower() for f in fields}
         dup = [n for n, _t in columns if n.lower() in have]
@@ -554,7 +523,6 @@ def alter_add_columns(
         if cm != "none":
             conf["delta.columnMapping.maxColumnId"] = str(next_id - 1)
         return (
-            "ADD COLUMNS",
             {"columns": json.dumps([n for n, _t in columns])},
             [
                 {
@@ -568,7 +536,7 @@ def alter_add_columns(
             {"added": [n for n, _t in columns]},
         )
 
-    return _commit_alter(spark, root, build)
+    return _commit_alter(spark, root, "ADD COLUMNS", build)
 
 
 def _refuse_referenced(meta: dict, name: str, verb: str) -> None:
@@ -602,7 +570,7 @@ def alter_rename_column(
     if "." in old or "." in new:
         raise ValueError("nested column rename is not supported")
 
-    def build(protocol, meta, current):
+    def build(protocol, meta):
         if _cm_mode(meta) == "none":
             raise ValueError(
                 "RENAME COLUMN requires column mapping (the parquet "
@@ -628,7 +596,6 @@ def alter_rename_column(
             for c in (meta.get("partitionColumns") or [])
         ]
         return (
-            "RENAME COLUMN",
             {"oldColumnPath": old, "newColumnPath": new},
             [
                 {
@@ -642,7 +609,7 @@ def alter_rename_column(
             {"old": old, "new": new},
         )
 
-    return _commit_alter(spark, root, build)
+    return _commit_alter(spark, root, "RENAME COLUMN", build)
 
 
 def alter_drop_column(
@@ -658,7 +625,7 @@ def alter_drop_column(
     if "." in name:
         raise ValueError("nested column drop is not supported")
 
-    def build(protocol, meta, current):
+    def build(protocol, meta):
         if _cm_mode(meta) == "none":
             raise ValueError(
                 "DROP COLUMN requires column mapping — without it the "
@@ -678,7 +645,6 @@ def alter_drop_column(
             raise ValueError(f"cannot drop IDENTITY column {name!r}")
         _refuse_referenced(meta, name, "drop")
         return (
-            "DROP COLUMNS",
             {"columns": json.dumps([name])},
             [
                 {
@@ -691,7 +657,7 @@ def alter_drop_column(
             {"dropped": name},
         )
 
-    return _commit_alter(spark, root, build)
+    return _commit_alter(spark, root, "DROP COLUMNS", build)
 
 
 def create_delta_table_native(
@@ -742,20 +708,110 @@ def create_delta_table_native(
     properties imply.
 
     Returns {"version": n, "protocol": <committed protocol>}."""
-    import uuid as _uuid
-
-    from pyspark.sql.types import StructType
-
-    from rtdl_spark.sources.delta_writer import _table_exists
+    from rtdl_spark.sources.delta_reader import (
+        snapshot_actions,
+        snapshot_domains,
+    )
+    from rtdl_spark.sources.delta_writer import (
+        _remove_actions,
+        _table_exists,
+    )
 
     root = table_dir.rstrip("/")
     replacing = None  # (current_version, existing protocol/meta/active)
     if _table_exists(spark, root):
         if not or_replace:
             raise ValueError(f"{root} is already a Delta table")
-        from rtdl_spark.sources.delta_reader import snapshot_actions
-
         replacing = snapshot_actions(spark, root)
+    schema_string, conf, want_w, want_r = _declared_table(
+        schema, partition_by, cluster_by, column_mapping,
+        table_properties, identity, generated, not_null,
+    )
+    part_cols = list(partition_by or [])
+    ts = _now_ms()
+    # protocols only ever upgrade: a replace keeps every existing
+    # capability and adds what the new properties imply
+    base = (
+        dict(replacing[0]) if replacing is not None
+        else {"minReaderVersion": 1, "minWriterVersion": 2}
+    )
+    protocol = _upgraded_protocol(base, want_w, want_r) or base
+    actions: list[dict] = [
+        {"protocol": protocol},
+        {
+            "metaData": {
+                # REPLACE keeps the table's identity and creation time
+                # (the table persists; only its definition is replaced)
+                "id": (
+                    replacing[1]["id"]
+                    if replacing is not None
+                    else str(uuid.uuid4())
+                ),
+                "format": {"provider": "parquet", "options": {}},
+                "schemaString": schema_string,
+                "partitionColumns": part_cols,
+                "configuration": conf,
+                "createdTime": (
+                    replacing[1].get("createdTime", ts)
+                    if replacing is not None
+                    else ts
+                ),
+                **({"description": comment} if comment else {}),
+            }
+        },
+    ]
+    if replacing is not None:
+        active = replacing[2]
+        actions.extend(
+            {"remove": r}
+            for r in _remove_actions([active[p] for p in sorted(active)], ts)
+        )
+    if cluster_by:
+        actions.append(_clustering_domain(cluster_by))
+    elif replacing is not None:
+        # replacing a clustered table with an unclustered definition:
+        # drop the stale clustering domain in the same commit
+        d = snapshot_domains(spark, root).get("delta.clustering")
+        if d and not d.get("removed"):
+            actions.append(
+                {
+                    "domainMetadata": {
+                        "domain": "delta.clustering",
+                        "configuration": d.get("configuration") or "{}",
+                        "removed": True,
+                    }
+                }
+            )
+    verb = "replace" if replacing is not None else "create"
+    version = _commit_new(
+        spark, root, f"{verb.upper()} TABLE",
+        {
+            "partitionBy": json.dumps(part_cols),
+            "clusterBy": json.dumps(cluster_by or []),
+            "properties": json.dumps(table_properties or {}),
+        },
+        actions,
+        f"{root} changed concurrently — {verb} refuses to race",
+        replacing=replacing and (replacing[3], replacing[1]),
+    )
+    return {"version": version, "protocol": protocol}
+
+
+def _declared_table(
+    schema,
+    partition_by: list[str] | None,
+    cluster_by: list[str] | None,
+    column_mapping: str | None,
+    table_properties: dict[str, str] | None,
+    identity: dict[str, dict] | None,
+    generated: dict[str, str] | None,
+    not_null: list[str] | None,
+) -> tuple[str, dict[str, str], list[str], list[str]]:
+    """The column-level DDL of ``create_delta_table_native``, validated
+    and applied: (schemaString, configuration, writer features, reader
+    features the protocol must grant)."""
+    from pyspark.sql.types import StructType
+
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     fields = json.loads(schema.json()).get("fields") or []
@@ -840,19 +896,10 @@ def create_delta_table_native(
     conf: dict[str, str] = {
         k: str(v) for k, v in table_properties.items()
     }
+    schema_string = _fields_to_schema(fields)
     if column_mapping is not None:
-        if column_mapping not in ("name", "id"):
-            raise ValueError(
-                f"column_mapping must be 'name' or 'id', got "
-                f"{column_mapping!r}"
-            )
-        annotated, next_id = [], 1
-        for f in fields:
-            f2, next_id = _cm_annotate_field(f, next_id)
-            annotated.append(f2)
-        fields = annotated
-        conf["delta.columnMapping.mode"] = column_mapping
-        conf["delta.columnMapping.maxColumnId"] = str(next_id - 1)
+        schema_string, cm_conf = _cm_create(fields, column_mapping)
+        conf.update(cm_conf)
 
     want_w: list[str] = []
     want_r: list[str] = []
@@ -870,125 +917,7 @@ def create_delta_table_native(
         if spec and str(v).lower() == "true":
             want_w.extend(spec[0])
             want_r.extend(spec[1])
-    if replacing is not None:
-        # protocols only ever upgrade: the replace keeps every existing
-        # capability and adds what the new properties imply
-        base = dict(replacing[0])
-    else:
-        base = {"minReaderVersion": 1, "minWriterVersion": 2}
-    protocol = _upgraded_protocol(base, want_w, want_r) or base
-    commit_version = (replacing[3] + 1) if replacing is not None else 0
-    if (
-        table_properties.get("delta.enableInCommitTimestamps", "")
-        .lower()
-        == "true"
-    ):
-        conf["delta.inCommitTimestampEnablementVersion"] = str(
-            commit_version
-        )
-        conf["delta.inCommitTimestampEnablementTimestamp"] = str(
-            _now_ms()
-        )
-
-    ts = _now_ms()
-    operation = (
-        "REPLACE TABLE" if replacing is not None else "CREATE TABLE"
-    )
-    # an ICT-enabled EXISTING table needs a monotonic inCommitTimestamp
-    # on the replace commit too
-    ict = (
-        _ict_value(spark, root, replacing[3], replacing[1], ts)
-        if replacing is not None
-        else None
-    )
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": operation,
-                "operationParameters": {
-                    "partitionBy": json.dumps(part_cols),
-                    "clusterBy": json.dumps(cluster_by or []),
-                    "properties": json.dumps(table_properties),
-                },
-                "engineInfo": "rtdl-spark native-delta-writer/1",
-                **(
-                    {"inCommitTimestamp": ict}
-                    if ict is not None
-                    else {}
-                ),
-            }
-        },
-        {"protocol": protocol},
-        {
-            "metaData": {
-                # REPLACE keeps the table's identity and creation time
-                # (the table persists; only its definition is replaced)
-                "id": (
-                    replacing[1]["id"]
-                    if replacing is not None
-                    else str(_uuid.uuid4())
-                ),
-                "format": {"provider": "parquet", "options": {}},
-                # the identity/generated/not_null patches above mutated
-                # the field dicts in place; CM annotation rebuilt them
-                # FROM those (so the metadata rode along either way)
-                "schemaString": _fields_to_schema(fields),
-                "partitionColumns": part_cols,
-                "configuration": conf,
-                "createdTime": (
-                    replacing[1].get("createdTime", ts)
-                    if replacing is not None
-                    else ts
-                ),
-                **({"description": comment} if comment else {}),
-            }
-        },
-    ]
-    if replacing is not None:
-        from rtdl_spark.sources.delta_writer import _remove_actions
-
-        active = replacing[2]
-        actions.extend(
-            {"remove": r}
-            for r in _remove_actions([active[p] for p in sorted(active)], ts)
-        )
-    if cluster_by:
-        actions.append(
-            {
-                "domainMetadata": {
-                    "domain": "delta.clustering",
-                    "configuration": json.dumps(
-                        {"clusteringColumns": [[c] for c in cluster_by]}
-                    ),
-                    "removed": False,
-                }
-            }
-        )
-    elif replacing is not None:
-        # replacing a clustered table with an unclustered definition:
-        # drop the stale clustering domain in the same commit
-        from rtdl_spark.sources.delta_reader import snapshot_domains
-
-        d = snapshot_domains(spark, root).get("delta.clustering")
-        if d and not d.get("removed"):
-            actions.append(
-                {
-                    "domainMetadata": {
-                        "domain": "delta.clustering",
-                        "configuration": d.get("configuration") or "{}",
-                        "removed": True,
-                    }
-                }
-            )
-    if not _try_commit(spark, root, commit_version, actions):
-        raise ValueError(
-            f"{root} changed concurrently — "
-            + ("replace" if replacing is not None else "create")
-            + " refuses to race"
-        )
-    _post_commit(spark, root, commit_version, actions, None)
-    return {"version": commit_version, "protocol": protocol}
+    return schema_string, conf, want_w, want_r
 
 
 def alter_cluster_by(
@@ -1006,7 +935,7 @@ def alter_cluster_by(
     top-level, atomic."""
     root = table_dir.rstrip("/")
 
-    def build(protocol, meta, current):
+    def build(protocol, meta):
         if columns is not None:
             if not columns:
                 raise ValueError(
@@ -1037,26 +966,11 @@ def alter_cluster_by(
             if columns is None:
                 return {"version": None, "clustering": None}  # no-op
             actions.append({"protocol": upgraded})
-        actions.append(
-            {
-                "domainMetadata": {
-                    "domain": "delta.clustering",
-                    "configuration": json.dumps(
-                        {
-                            "clusteringColumns": [
-                                [c] for c in (columns or [])
-                            ]
-                        }
-                    ),
-                    "removed": False,
-                }
-            }
-        )
+        actions.append(_clustering_domain(columns or []))
         return (
-            "CLUSTER BY",
             {"clusterBy": json.dumps(columns or [])},
             actions,
             {"clustering": list(columns) if columns else []},
         )
 
-    return _commit_alter(spark, root, build)
+    return _commit_alter(spark, root, "CLUSTER BY", build)

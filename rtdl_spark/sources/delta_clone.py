@@ -15,7 +15,9 @@ What the clone shares and what it owns:
   so the source table never changes. Appends land in the clone's root.
 - Schema, partitioning, configuration, protocol and live
   domainMetadata (clustering state, row-tracking watermark) carry
-  over; the table id is FRESH (it is a different table).
+  over; the table id is FRESH (it is a different table), and an
+  in-commit-timestamp table's enablement point is the clone's own
+  version 0.
 - Deletion vectors carry over with their descriptors rewritten to the
   absolute ``p`` storage form — the relative ``u`` form resolves
   against the table root, which is now the wrong directory.
@@ -52,10 +54,10 @@ from rtdl_spark.sources.delta_reader import (
 )
 from rtdl_spark.sources.delta_writer import (
     _check_writer_protocol,
+    _commit_new,
     _now_ms,
     _plain,
     _table_exists,
-    _try_commit,
 )
 from rtdl_spark.sources.dv import dv_absolute_path
 
@@ -88,25 +90,13 @@ def clone_delta_native(
     _check_protocol(protocol)
     _check_writer_protocol(protocol)
 
-    ts = _now_ms()
     actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "CLONE",
-                "operationParameters": {
-                    "source": src,
-                    "sourceVersion": src_version,
-                },
-                "engineInfo": "rtdl-spark native-delta-writer/1",
-            }
-        },
         {"protocol": dict(protocol)},
         {
             "metaData": {
                 **meta,
                 "id": str(uuid.uuid4()),  # a clone is a DIFFERENT table
-                "createdTime": ts,
+                "createdTime": _now_ms(),
             }
         },
     ]
@@ -142,11 +132,12 @@ def clone_delta_native(
             }
         actions.append({"add": a})
 
-    if not _try_commit(spark, dst, 0, actions):
-        raise ValueError(
-            f"target {dst} gained a Delta log concurrently — clone "
-            "refuses to race a table creation"
-        )
+    _commit_new(
+        spark, dst, "CLONE", {"source": src, "sourceVersion": src_version},
+        actions,
+        f"target {dst} gained a Delta log concurrently — clone refuses "
+        "to race a table creation",
+    )
     return {
         "version": 0,
         "source_version": src_version,

@@ -1033,6 +1033,29 @@ def version_at_timestamp(
     return max(eligible)
 
 
+def _user_metadata(fields_json: list[dict]) -> dict[str, dict]:
+    """{column: its user field metadata} for the log's schema fields —
+    column comments and the like ride onto read schemas; the log's
+    ``delta.*`` keys are protocol bookkeeping and stay behind. Only
+    non-empty entries, so metadata-free tables make no extra py4j
+    calls."""
+    out = {}
+    for f in fields_json:
+        md = {
+            k: v for k, v in (f.get("metadata") or {}).items()
+            if not k.startswith("delta.")
+        }
+        if md:
+            out[f["name"]] = md
+    return out
+
+
+def _named(col, name: str, user_md: dict[str, dict]):
+    """``col`` named ``name``, carrying its user metadata if any."""
+    md = user_md.get(name)
+    return col.alias(name, metadata=md) if md else col.alias(name)
+
+
 def read_delta_native(
     spark: SparkSession,
     table_dir: str,
@@ -1149,26 +1172,11 @@ def read_delta_native(
         else {n: n for n in phys_of}
     )
     by_type = {f.name: f.dataType for f in schema.fields}
-    # user field metadata (column comments and the like) rides onto the
-    # read schema; the log's ``delta.*`` keys are protocol bookkeeping
-    # and stay behind. Attached only where non-empty, so metadata-free
-    # tables make no extra py4j calls.
-    user_md = {}
-    for f in fields_json:
-        md = {
-            k: v for k, v in (f.get("metadata") or {}).items()
-            if not k.startswith("delta.")
-        }
-        if md:
-            user_md[f["name"]] = md
-
-    def _named(col, name: str):
-        md = user_md.get(name)
-        return col.alias(name, metadata=md) if md else col.alias(name)
+    user_md = _user_metadata(fields_json)
 
     def _with_md(col, name: str):
         # withColumn names the column itself; alias only to attach
-        return _named(col, name) if name in user_md else col
+        return _named(col, name, user_md) if name in user_md else col
 
     def _abs(rel: str) -> str:
         # log paths are table-root-relative and URL-encoded
@@ -1198,6 +1206,7 @@ def read_delta_native(
         _named(
             F.col(f"`{read_col_of[f.name]}`").cast(_nullable_dt(f.dataType)),
             f.name,
+            user_md,
         )
         for f in data_fields
     ]
@@ -1505,6 +1514,7 @@ def read_table_changes_cdf(
     schema = StructType.fromJson(schema_json)
     part_cols = list(meta.get("partitionColumns") or [])
     fields_json = schema_json.get("fields") or []
+    user_md = _user_metadata(fields_json)
     cm = _cm_mode(meta)
     # column mapping: change/data files carry PHYSICAL names (name
     # mode) / parquet field ids (id mode) and partitionValues are
@@ -1595,9 +1605,8 @@ def read_table_changes_cdf(
             {"type": "struct", "fields": read_fields}
         )
         proj = [
-            F.col(f"`{read_col_of[f.name]}`")
-            .cast(_nullable_dt(f.dataType))
-            .alias(f.name)
+            _named(F.col(f"`{read_col_of[f.name]}`").cast(
+                _nullable_dt(f.dataType)), f.name, user_md)
             for f in data_fields
         ]
         for key, paths in sorted(
@@ -1620,12 +1629,9 @@ def read_table_changes_cdf(
                     "_change_type", F.lit(change_type)
                 )
             for c, raw in zip(part_cols, key):
-                df = df.withColumn(
-                    c,
-                    F.lit(raw).cast(by_type[c])
-                    if raw is not None
-                    else F.lit(None).cast(by_type[c]),
-                )
+                df = df.withColumn(c, _named(
+                    F.lit(raw).cast(by_type[c]), c, user_md
+                ))
             ts = ts_of.get(version)
             pieces.append(
                 df.withColumn("_commit_version", F.lit(version))
@@ -1795,15 +1801,15 @@ def read_table_changes_cdf(
             )
 
     if not pieces:
-        from pyspark.sql.types import (
-            IntegerType,
-            StringType,
-            StructField,
-            TimestampType,
-        )
+        from pyspark.sql.types import IntegerType, StringType, TimestampType
 
         empty_schema = StructType(
-            list(schema.fields)
+            [
+                StructField(
+                    f.name, f.dataType, f.nullable, user_md.get(f.name)
+                )
+                for f in schema.fields
+            ]
             + [
                 StructField("_change_type", StringType()),
                 StructField("_commit_version", IntegerType()),

@@ -17,10 +17,11 @@ Safety posture (the reason round 5's reader deliberately deferred this):
   whoever creates N.json first"; we write the final name through an
   exclusive Hadoop-FS create (fsutil.write_text_new — atomic on
   HDFS/local), and on losing the race we re-read the log and retry the
-  NEXT version (appends re-validate schema; overwrites recompute their
-  remove set). Object stores without atomic create need a coordination
-  layer (same caveat as every Delta writer, including delta-spark's
-  S3-single-driver LogStore).
+  NEXT version (writes re-plan against the new tip; rewrites check that
+  their removed files are still live). Every operation commits through
+  one step, ``_commit``. Object stores without atomic create need a
+  coordination layer (same caveat as every Delta writer, including
+  delta-spark's S3-single-driver LogStore).
 - **Foreign-table feature checks are loud.** Before touching an existing
   table we check minWriterVersion (≤2 implemented; 7 only when every
   writerFeature is one we honor), refuse tables carrying column
@@ -58,6 +59,7 @@ import urllib.parse
 import uuid
 import warnings
 from dataclasses import dataclass
+from typing import NamedTuple
 
 import pandas as pd  # module-level: pandas_udf resolves stringified
 # type hints against MODULE globals under future-annotations (NOTES trap)
@@ -176,19 +178,12 @@ def _now_ms() -> int:
     return int(time.time() * 1000)
 
 
-def _ict_value(
-    spark: SparkSession, root: str, current: int, meta: dict, ts: int
-) -> int | None:
-    """inCommitTimestamp for the NEXT commit of a table whose config
-    sets delta.enableInCommitTimestamps — the ICT writer feature: the
-    timestamp is part of the committed action (immune to log-file mtime
-    drift) and MONOTONIC, so it must be strictly greater than the
-    previous commit's ICT even when the wall clock lags (clock skew
-    across writers). None when the table doesn't enable ICT."""
-    if (meta.get("configuration") or {}).get(
-        "delta.enableInCommitTimestamps"
-    ) != "true":
-        return None
+def _ict_value(spark: SparkSession, root: str, current: int, ts: int) -> int:
+    """inCommitTimestamp for the commit after ``current`` (the ICT
+    writer feature): the timestamp is part of the committed action
+    (immune to log-file mtime drift) and MONOTONIC, so it must be
+    strictly greater than the previous commit's ICT even when the wall
+    clock lags (clock skew across writers)."""
     prev = 0
     if current >= 0:
         cpath = posixpath.join(_log_dir(root), f"{current:020d}.json")
@@ -906,6 +901,30 @@ def _cm_annotate_field(f: dict, next_id: int, keep_names: bool = False):
     return {**f, "metadata": md, "type": t}, next_id
 
 
+def _cm_create(
+    fields: list[dict], mode: str, keep_names: bool = False
+) -> tuple[str, dict]:
+    """A fresh column mapping over ``fields``: every field, at every
+    nesting level, gets an id and a physical name (``keep_names``: its
+    current one, the none->name upgrade rule). Returns (schemaString,
+    the mode + maxColumnId configuration)."""
+    if mode not in ("name", "id"):
+        raise ValueError(
+            f"column_mapping must be 'name' or 'id', got {mode!r}"
+        )
+    out, next_id = [], 1
+    for f in fields:
+        f2, next_id = _cm_annotate_field(f, next_id, keep_names)
+        out.append(f2)
+    return (
+        json.dumps({"type": "struct", "fields": out}, separators=(",", ":")),
+        {
+            "delta.columnMapping.mode": mode,
+            "delta.columnMapping.maxColumnId": str(next_id - 1),
+        },
+    )
+
+
 def _merge_schemas_cm(meta: dict, df_schema) -> tuple[str, dict]:
     """Column-mapped schema evolution: the plain merge (_merge_schemas
     rules — type conflicts refused, dropped non-nullables refused),
@@ -1568,8 +1587,6 @@ def convert_to_delta_native(
 
     Returns {"version": 0, "files": n}. Refuses an existing Delta
     table, an empty directory, and partition-layout mismatches."""
-    import uuid as _uuid
-
     root = table_dir.rstrip("/")
     if _table_exists(spark, root):
         raise ValueError(f"{root} is already a Delta table")
@@ -1639,36 +1656,25 @@ def convert_to_delta_native(
     full_schema = StructType(
         list(sample_schema.fields) + part_fields
     )
-    ts = _now_ms()
     actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "CONVERT",
-                "operationParameters": {
-                    "numFiles": len(adds),
-                    "partitionedBy": json.dumps(part_cols),
-                },
-                "engineInfo": "rtdl-spark native-delta-writer/1",
-            }
-        },
         {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
         {
             "metaData": {
-                "id": str(_uuid.uuid4()),
+                "id": str(uuid.uuid4()),
                 "format": {"provider": "parquet", "options": {}},
                 "schemaString": full_schema.json(),
                 "partitionColumns": part_cols,
                 "configuration": {},
-                "createdTime": ts,
+                "createdTime": _now_ms(),
             }
         },
     ] + [{"add": a} for a in sorted(adds, key=lambda a: a["path"])]
-    if not _try_commit(spark, root, 0, actions):
-        raise ValueError(
-            f"{root} gained a Delta log concurrently — convert refuses "
-            "to race"
-        )
+    _commit_new(
+        spark, root, "CONVERT",
+        {"numFiles": len(adds), "partitionedBy": json.dumps(part_cols)},
+        actions,
+        f"{root} gained a Delta log concurrently — convert refuses to race",
+    )
     return {"version": 0, "files": len(adds)}
 
 
@@ -1840,6 +1846,546 @@ def _post_commit(
         )
 
 
+class _Attempt(NamedTuple):
+    """One commit attempt, as a ``_commit`` build plans it."""
+
+    current: int  # the version it was planned on; -1: no table yet
+    meta: dict | None  # that version's metaData; None: no table yet
+    params: dict  # operationParameters
+    actions: list[dict]  # every action after commitInfo
+
+
+def _ict_on(meta: dict | None) -> bool:
+    return ((meta or {}).get("configuration") or {}).get(
+        "delta.enableInCommitTimestamps"
+    ) == "true"
+
+
+def _stamp_ict(
+    spark: SparkSession, root: str, built: _Attempt, ts: int
+) -> tuple[list[dict], int | None]:
+    """(actions, inCommitTimestamp) of one attempt. The rule comes from
+    the metaData in effect AFTER the commit — the committed one, else
+    the attempt's — so the commit that turns ICT on (an ALTER, a
+    CREATE, a CLONE of an ICT table) is stamped too. That commit also
+    records itself as the enablement point: its version and its ICT
+    (spec: In-Commit Timestamps). A metaData that keeps ICT on but
+    drops the enablement point (a REPLACE) carries the old one over."""
+    at = next(
+        (i for i, a in enumerate(built.actions) if "metaData" in a), None
+    )
+    after = built.meta if at is None else built.actions[at]["metaData"]
+    if not _ict_on(after):
+        return built.actions, None
+    ict = _ict_value(spark, root, built.current, ts)
+    conf = after.get("configuration") or {}
+    keys = ("delta.inCommitTimestampEnablementVersion",
+            "delta.inCommitTimestampEnablementTimestamp")
+    if not _ict_on(built.meta):
+        point = dict(zip(keys, (str(built.current + 1), str(ict))))
+    else:
+        before = built.meta.get("configuration") or {}
+        point = {k: before[k] for k in keys if k in before}
+    if at is None or not point or (_ict_on(built.meta) and keys[0] in conf):
+        return built.actions, ict
+    actions = list(built.actions)
+    actions[at] = {
+        "metaData": {**after, "configuration": {**conf, **point}}
+    }
+    return actions, ict
+
+
+def _commit(
+    spark: SparkSession,
+    root: str,
+    operation: str,
+    build,
+    *,
+    max_retries: int = 5,
+    checkpoint_interval: int | None = None,
+    ts: int | None = None,
+):
+    """The one Delta commit step (delta-spark's
+    OptimisticTransaction.commit). ``build(attempt)`` plans attempt 0,
+    1, ... and returns an ``_Attempt``, or anything else as the finished
+    result (a no-op, a txn epoch that already landed), returned as is.
+    A build for attempt > 0 runs after a lost race: it re-reads the tip
+    and raises when what landed conflicts with its plan. The step owns
+    the rest:
+
+    - the commitInfo header: ``ts`` (now, per attempt, when None), the
+      operation and parameters, the engine, and the in-commit timestamp
+      (``_stamp_ict``);
+    - the put-if-absent write of version ``current + 1``
+      (``_try_commit``);
+    - the bound: ``max_retries`` lost races raise
+      DeltaConcurrentWriteError;
+    - ``_post_commit``.
+
+    Returns the committed version."""
+    for attempt in range(max_retries):
+        built = build(attempt)
+        if not isinstance(built, _Attempt):
+            return built
+        now = _now_ms() if ts is None else ts
+        body, ict = _stamp_ict(spark, root, built, now)
+        actions = [
+            {
+                "commitInfo": {
+                    "timestamp": now,
+                    "operation": operation,
+                    "operationParameters": built.params,
+                    "engineInfo": "rtdl-spark native-delta-writer/1",
+                    **(
+                        {"inCommitTimestamp": ict}
+                        if ict is not None
+                        else {}
+                    ),
+                }
+            },
+            *body,
+        ]
+        version = built.current + 1
+        if _try_commit(spark, root, version, actions):
+            _post_commit(
+                spark, root, version, actions, built.meta,
+                checkpoint_interval,
+            )
+            return version
+    raise DeltaConcurrentWriteError(
+        f"lost the Delta commit race {max_retries} times during "
+        f"{operation} at {root}"
+    )
+
+
+def _commit_new(
+    spark: SparkSession,
+    root: str,
+    operation: str,
+    params: dict,
+    actions: list[dict],
+    refusal: str,
+    replacing: tuple[int, dict] | None = None,
+) -> int:
+    """Commit a table's first version (or, with ``replacing=(current,
+    meta)``, the REPLACE of one) at its one fixed version: a lost race
+    raises ValueError(``refusal``) instead of retrying."""
+    current, meta = replacing or (-1, None)
+
+    def build(attempt):
+        if attempt:
+            raise ValueError(refusal)
+        return _Attempt(current, meta, params, actions)
+
+    return _commit(spark, root, operation, build, max_retries=2)
+
+
+@dataclass
+class _WritePlan:
+    """What one WRITE commits, planned on the driver from a snapshot's
+    metaData and the frame's schema (no Spark job)."""
+
+    part_cols: list[str]
+    schema: str  # the schemaString in effect after the commit
+    configuration: dict  # the configuration in effect after the commit
+    actions: list[dict]  # the protocol/clustering/metaData it commits
+    # what the staged files depend on: (facet, detail) -> value, in
+    # check order; facets are the keys of _DRIFT, the detail fills its
+    # message (the identity column, the write mode)
+    layout: dict
+
+    @property
+    def stage_meta(self) -> dict:
+        return {"schemaString": self.schema,
+                "configuration": self.configuration}
+
+
+# a lost race whose new tip moves a facet of the staged layout aborts
+# with that facet's error: the staged files no longer fit the table
+_DRIFT = {
+    "identity": (
+        DeltaConcurrentWriteError,
+        "concurrent identity high-watermark change on {!r} — the staged "
+        "values may collide with the concurrent writer's; re-run the "
+        "write",
+    ),
+    "mapping": (
+        DeltaConcurrentWriteError,
+        "concurrent COLUMN MAPPING change during {} — the staged "
+        "files no longer match the table layout",
+    ),
+    "evolution": (
+        DeltaConcurrentWriteError,
+        "concurrent column-mapping schema evolution — the staged "
+        "physical layout is stale; re-run the write",
+    ),
+    "replace": (
+        DeltaConcurrentWriteError,
+        "concurrent column-mapping change during schema-replacing "
+        "overwrite — the rebuilt mapping is stale; re-run the write",
+    ),
+    "schema": (
+        ValueError, "append schema mismatch after concurrent commit"
+    ),
+    "partitioning": (
+        ValueError, "append partitioning mismatch after concurrent commit"
+    ),
+}
+
+
+def _write_plan(
+    meta: dict | None,
+    schema: StructType,
+    *,
+    mode: str,
+    partition_by: list[str] | None,
+    merge_schema: bool,
+    column_mapping: str | None,
+    cluster_by: list[str] | None,
+    identity_hwms: dict[str, int],
+    ts: int,
+    staged: _WritePlan | None = None,
+) -> _WritePlan:
+    """Plan a WRITE of a frame of ``schema`` against the table's
+    ``meta`` (None: the write creates the table): partitioning, schema
+    (creation, mergeSchema evolution, a replacing overwrite), column
+    mapping, identity high watermarks and clustering. ``staged`` is the
+    plan the files were staged under: re-planning against a new tip
+    first checks that no facet of its layout moved (``_DRIFT``), then
+    keeps its physical names wherever this plan assigns fresh
+    column-mapping ids."""
+    existing = list((meta or {}).get("partitionColumns") or [])
+    part_cols = list(partition_by) if partition_by is not None else existing
+    schema_json = schema.json()
+    table_schema = meta["schemaString"] if meta is not None else schema_json
+    conf = dict((meta or {}).get("configuration") or {})
+    cm = _cm_mode(meta) if meta is not None else (column_mapping or "none")
+    max_id = conf.get("delta.columnMapping.maxColumnId")
+    replacing = (
+        mode == "overwrite"
+        and meta is not None
+        and (_schema_key(schema_json) != _schema_key(table_schema)
+             or part_cols != existing)
+    )
+    fresh_ids = cm != "none" and meta is not None and (
+        replacing or (mode == "append" and merge_schema)
+    )
+    idents = _identity_cols(meta) if identity_hwms else {}
+    layout: dict = {
+        ("identity", c): (idents.get(c) or {}).get("hwm")
+        for c in identity_hwms
+    }
+    layout["mapping", mode] = cm
+    if mode == "append":
+        if fresh_ids:
+            layout["evolution", ""] = (max_id, _schema_key(table_schema))
+        if not merge_schema:
+            layout["schema", ""] = _schema_key(table_schema)
+        layout["partitioning", ""] = existing if meta else part_cols
+    elif fresh_ids:
+        layout["replace", ""] = (cm, max_id, _schema_key(table_schema))
+    if staged is not None:
+        for key in {**staged.layout, **layout}:
+            if staged.layout.get(key) != layout.get(key):
+                error, message = _DRIFT[key[0]]
+                raise error(message.format(key[1]))
+
+    commit_schema, commit_conf = schema_json, None
+    if meta is None and column_mapping is not None:
+        # CM table CREATION: the first commit's metaData carries mode +
+        # maxColumnId, its protocol the classic CM versions (2/5)
+        commit_schema, commit_conf = _cm_create(
+            schema.jsonValue()["fields"], column_mapping
+        )
+    if meta is not None and mode == "append":
+        if fresh_ids:
+            commit_schema, commit_conf = _merge_schemas_cm(meta, schema)
+        elif merge_schema:
+            commit_schema = _merge_schemas(table_schema, schema)
+        elif _schema_key(schema_json) != _schema_key(table_schema):
+            raise ValueError(
+                "append schema mismatch vs the table's metaData "
+                "(names/types must match exactly; overwrite to replace, "
+                "or merge_schema=True to evolve by adding columns)"
+            )
+        if part_cols != existing:
+            raise ValueError(
+                f"append partitioning {part_cols} != table's {existing}"
+            )
+    elif fresh_ids:
+        # schema-REPLACING overwrite on a CM table (r8): retained
+        # columns keep id/physicalName, new ones get fresh ids above
+        # maxColumnId, advanced in the same metaData
+        commit_schema, commit_conf = _replace_schema_cm(meta, schema)
+    if fresh_ids and staged is not None:
+        # an unmoved layout assigns the same ids: keep the staged names
+        commit_schema = staged.schema
+    missing = [c for c in part_cols if c not in schema.fieldNames()]
+    if missing:
+        raise ValueError(f"partition columns absent from frame: {missing}")
+    if cluster_by is not None:
+        _check_cluster_by(schema, cluster_by, part_cols)
+
+    creating = meta is None
+    evolving = (
+        mode == "append"
+        and not creating
+        and _schema_key(commit_schema) != _schema_key(table_schema)
+    )
+    if identity_hwms:
+        # patched from the TABLE's schema — the frame's carries no
+        # identity metadata and would wipe the definitions
+        after = _identity_schema_update(meta, identity_hwms)
+    elif creating or evolving or replacing:
+        after = commit_schema
+    else:
+        after = table_schema
+    after_conf = commit_conf if commit_conf is not None else conf
+    actions: list[dict] = []
+    if creating:
+        actions.extend(_creation_actions(cluster_by, column_mapping))
+    if creating or replacing or evolving or identity_hwms:
+        actions.append(
+            {
+                "metaData": {
+                    "id": str(uuid.uuid4()) if creating else meta["id"],
+                    # table name/description/configuration survive
+                    # schema evolution and overwrite — wiping them
+                    # would silently disable CDF/DV/appendOnly and
+                    # drop catalog identity (r7 fix; delta-spark
+                    # keeps table properties through both)
+                    **(
+                        {}
+                        if creating
+                        else {
+                            "name": meta.get("name"),
+                            "description": meta.get("description"),
+                        }
+                    ),
+                    "format": {"provider": "parquet", "options": {}},
+                    "schemaString": after,
+                    "partitionColumns": part_cols,
+                    "configuration": dict(after_conf),
+                    "createdTime": ts if creating else meta.get(
+                        "createdTime"
+                    ),
+                }
+            }
+        )
+    return _WritePlan(part_cols, after, after_conf, actions, layout)
+
+
+def _check_cluster_by(
+    schema: StructType, cluster_by: list[str], part_cols: list[str]
+) -> None:
+    """The frame-side gates of ``cluster_by`` (the table-side one, that
+    an existing table's domain matches, is ``_check_clustering``)."""
+    if not cluster_by:
+        raise ValueError("cluster_by must name at least one column")
+    if part_cols:
+        raise ValueError(
+            "cluster_by and partition_by are mutually exclusive — "
+            "delta-spark refuses clustering on partitioned tables"
+        )
+    absent = [c for c in cluster_by if c not in schema.fieldNames()]
+    if absent:
+        raise ValueError(
+            f"clustering columns absent from frame: {absent} — "
+            "nested paths refuse too (the recluster cannot "
+            "curve-rank a nested field; the same gate OPTIMIZE "
+            "applies)"
+        )
+    complex_c = [
+        c
+        for c in cluster_by
+        if schema[c].dataType.typeName() in ("struct", "array", "map")
+    ]
+    if complex_c:
+        raise ValueError(
+            f"clustering columns must be atomic types: {complex_c}"
+        )
+
+
+def _check_clustering(
+    spark: SparkSession, root: str, cluster_by: list[str]
+) -> None:
+    """On an existing table ``cluster_by`` must MATCH its domain
+    verbatim (idempotent create); changing clustering is ALTER
+    territory."""
+    from rtdl_spark.sources.delta_reader import snapshot_domains
+
+    d = snapshot_domains(spark, root).get("delta.clustering")
+    have: list[str] | None = None
+    if d and not d.get("removed") and d.get("configuration"):
+        try:
+            have = [
+                ".".join(p)
+                for p in json.loads(d["configuration"])["clusteringColumns"]
+            ]
+        except (ValueError, KeyError, TypeError):
+            raise ValueError(
+                "unparseable delta.clustering domain "
+                "configuration on the existing table"
+            )
+    if have != list(cluster_by):
+        raise ValueError(
+            f"cluster_by={list(cluster_by)} does not match the "
+            f"existing table's clustering ({have}) — this "
+            "writer declares clustering at creation only"
+        )
+
+
+def _creation_actions(
+    cluster_by: list[str] | None, column_mapping: str | None
+) -> list[dict]:
+    """The protocol (and clustering domain) of a table a WRITE creates."""
+    if cluster_by is None:
+        return [{"protocol": (
+            {"minReaderVersion": 2, "minWriterVersion": 5}
+            if column_mapping is not None
+            else {"minReaderVersion": 1, "minWriterVersion": 2}
+        )}]
+    # clustering is a table FEATURE (writer v7); with CM the reader
+    # side moves to v3 feature form too
+    proto: dict = {"minReaderVersion": 1, "minWriterVersion": 7,
+                   "writerFeatures": ["clustering", "domainMetadata"]}
+    if column_mapping is not None:
+        proto = {
+            "minReaderVersion": 3,
+            "minWriterVersion": 7,
+            "readerFeatures": ["columnMapping"],
+            "writerFeatures": [
+                "columnMapping", "clustering", "domainMetadata",
+            ],
+        }
+    return [{"protocol": proto}, _clustering_domain(cluster_by)]
+
+
+def _clustering_domain(columns: list[str]) -> dict:
+    """The delta.clustering domain action declaring ``columns``."""
+    return {
+        "domainMetadata": {
+            "domain": "delta.clustering",
+            "configuration": json.dumps(
+                {"clusteringColumns": [[c] for c in columns]}
+            ),
+            "removed": False,
+        }
+    }
+
+
+def _write_target(
+    spark: SparkSession, root: str, mode: str
+) -> tuple[dict | None, dict | None, dict[str, dict], int, dict[str, int]]:
+    """(protocol, meta, active files, version, txns) a WRITE plans on.
+    Appends never need the file inventory — snapshot_control keeps the
+    driver at O(tail) state, so a streaming sink appending to a
+    million-file table doesn't rebuild a million-entry dict per
+    micro-batch; only overwrite (which must tombstone every active
+    file in its commit) pays for the full set."""
+    if mode == "overwrite":
+        return snapshot_actions(spark, root)
+    protocol, meta, current, txns = snapshot_control(spark, root)
+    return protocol, meta, {}, current, txns
+
+
+def _prepare_write_frame(
+    spark: SparkSession,
+    df: DataFrame,
+    meta: dict,
+    mode: str,
+    merge_schema: bool,
+) -> tuple[DataFrame, dict[str, int]]:
+    """Complete a frame bound for an existing table: omitted GENERATED
+    columns are computed (appends, before the schema check —
+    delta-spark's writer does the same); IDENTITY columns are generated
+    when omitted, validated against allowExplicitInsert when provided.
+    An overwrite that REPLACES the schema (the frame doesn't match the
+    table modulo omitted identity columns) carries the user's own
+    definition and skips the duty. Returns (frame, {identity column:
+    new high watermark})."""
+    if mode == "append":
+        df = _complete_generated(df, meta)
+    idents = _identity_cols(meta)
+    if not idents:
+        return df, {}
+    tnames = [
+        f["name"]
+        for f in json.loads(meta["schemaString"]).get("fields") or []
+    ]
+    frame_matches = set(df.columns) <= set(tnames) and (
+        set(tnames) - set(df.columns) <= set(idents)
+    )
+    if mode != "append" and not frame_matches:
+        return df, {}
+    if merge_schema:
+        raise ValueError(
+            "mergeSchema on a table with IDENTITY columns "
+            "is not supported by this native writer — use "
+            "delta-spark"
+        )
+    df, identity_hwms = _apply_identity(spark, df, meta)
+    # table-order the frame: the exact-schema check is order-sensitive
+    # and generation appends at the end (unknown extra columns stay —
+    # the schema check must still see and refuse them, never a silent
+    # drop)
+    order = [c for c in tnames if c in df.columns]
+    extra = [c for c in df.columns if c not in set(order)]
+    return df.select(*order, *extra), identity_hwms
+
+
+def _enforce_write(
+    df: DataFrame, meta: dict, mode: str, plan: _WritePlan
+) -> DataFrame:
+    """The existing table's row checks on a WRITE's frame."""
+    if mode == "append" or (
+        _schema_key(df.schema.json()) == _schema_key(meta["schemaString"])
+    ):
+        # appends and SAME-SCHEMA overwrites keep the table's
+        # configuration (CHECK constraints) and schema metadata
+        # (invariants, nullability): enforce them on the new rows. The
+        # plain-append schema key compares names+types only, so a
+        # frame-nullable column can still target a non-nullable table
+        # column; the merged schema keeps table nullability for
+        # existing fields and forces new ones nullable
+        return _enforce_constraints(
+            _enforce_not_null(
+                df, plan.schema if mode == "append" else meta["schemaString"]
+            ),
+            meta,
+        )
+    # schema-REPLACING overwrite: the new schemaString is the frame's
+    # own law (old invariants/nullability die with the old schema) —
+    # but delta.constraints.* live in the CONFIGURATION, which survives
+    # the overwrite, so retained CHECK constraints are enforced on the
+    # replacing frame, and a constraint whose expression no longer
+    # analyzes against the new schema REFUSES the overwrite
+    # (delta-spark refuses schema changes that invalidate constraints)
+    # rather than committing a table that declares a constraint no
+    # subsequent append could satisfy or even analyze (ADVICE r8)
+    constraints = _table_constraints(meta)
+    for name, expr in sorted(constraints.items()):
+        try:
+            df.select(F.expr(expr))
+        except Exception as e:
+            raise ValueError(
+                f"CHECK constraint {name} ({expr}) does not "
+                "analyze against the replacing schema (it "
+                "references dropped/retyped columns) — drop the "
+                "constraint first or keep the columns it needs: "
+                f"{e}"
+            ) from e
+    if not constraints:
+        return df
+    return _enforce_constraints(
+        df,
+        {
+            "schemaString": df.schema.json(),
+            "configuration": meta.get("configuration") or {},
+        },
+    )
+
+
 def write_delta_native(
     spark: SparkSession,
     df: DataFrame,
@@ -1901,41 +2447,25 @@ def write_delta_native(
     table's latest txn version for ``app_id`` is already ≥ ``version``
     (a re-delivered epoch), the write is SKIPPED and -1 returned, so a
     crashed-and-replayed micro-batch can never double-append. The check
-    re-runs inside the commit retry loop, so it also holds against a
-    concurrent writer of the same app landing between attempts.
+    re-runs on every commit attempt, so it also holds against a
+    concurrent writer of the same app landing between attempts. A lost
+    race re-plans the write against the new tip (``_write_plan``) and
+    aborts when the staged files no longer fit it (``_DRIFT``).
     """
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     root = table_dir.rstrip("/")
-
-    protocol: dict | None = None
-    meta: dict | None = None
-    active: dict[str, dict] = {}
-    txns: dict[str, int] = {}
-    current = -1
+    protocol, meta, active, current, txns = None, None, {}, -1, {}
+    identity_hwms: dict[str, int] = {}
     if _table_exists(spark, root):
-        # appends never need the file inventory — snapshot_control keeps
-        # the driver at O(tail) state, so a streaming sink appending to a
-        # million-file table doesn't rebuild a million-entry dict per
-        # micro-batch; only overwrite (which must tombstone every active
-        # file in its commit) pays for the full set
-        if mode == "overwrite":
-            protocol, meta, active, current, txns = snapshot_actions(
-                spark, root
-            )
-        else:
-            protocol, meta, current, txns = snapshot_control(spark, root)
+        protocol, meta, active, current, txns = _write_target(
+            spark, root, mode
+        )
         if txn is not None and txns.get(txn[0], -1) >= int(txn[1]):
             return -1  # epoch already committed: exactly-once skip
         _check_protocol(protocol)
         _check_writer_protocol(protocol)
         cm = _check_cm_supported(meta, "WRITE")
-        # CM appends (incl. mergeSchema evolution — new columns get
-        # fresh ids above maxColumnId) and SAME-SCHEMA overwrites
-        # rename to the physical layout below; a schema-REPLACING
-        # overwrite rebuilds the mapping (retained columns keep their
-        # identity, new ones get fresh ids) after the schema
-        # comparison further down (r8)
         if column_mapping is not None and column_mapping != cm:
             raise ValueError(
                 f"column_mapping={column_mapping!r} requested but the "
@@ -1949,526 +2479,72 @@ def write_delta_native(
             raise ValueError(
                 "table is delta.appendOnly=true; overwrite is not allowed"
             )
-
-    existing_parts = list((meta or {}).get("partitionColumns") or [])
-    part_cols = (
-        list(partition_by) if partition_by is not None else existing_parts
+        df, identity_hwms = _prepare_write_frame(
+            spark, df, meta, mode, merge_schema
+        )
+    schema = df.schema
+    opts = dict(
+        mode=mode, merge_schema=merge_schema, column_mapping=column_mapping,
+        cluster_by=cluster_by, identity_hwms=identity_hwms, ts=_now_ms(),
     )
-    if meta is not None and mode == "append":
-        # omitted GENERATED columns are computed before the schema
-        # check (delta-spark's writer does the same)
-        df = _complete_generated(df, meta)
-    # IDENTITY columns: omitted -> generated (before the schema check),
-    # provided -> validated against allowExplicitInsert. An overwrite
-    # that REPLACES the schema (frame doesn't match the table modulo
-    # omitted identity columns) carries the user's own definition and
-    # skips the duty.
-    identity_hwms: dict[str, int] = {}
-    identity_based: dict[str, int] = {}
+    plan = _write_plan(meta, schema, partition_by=partition_by, **opts)
     if meta is not None:
-        idents = _identity_cols(meta)
-        if idents:
-            tnames = [
-                f["name"]
-                for f in json.loads(meta["schemaString"]).get("fields")
-                or []
-            ]
-            frame_matches = set(df.columns) <= set(tnames) and (
-                set(tnames) - set(df.columns) <= set(idents)
-            )
-            if mode == "append" or frame_matches:
-                if merge_schema:
-                    raise ValueError(
-                        "mergeSchema on a table with IDENTITY columns "
-                        "is not supported by this native writer — use "
-                        "delta-spark"
-                    )
-                df, identity_hwms = _apply_identity(spark, df, meta)
-                # table-order the frame: the exact-schema check is
-                # order-sensitive and generation appends at the end
-                # (unknown extra columns stay — the schema check must
-                # still see and refuse them, never a silent drop)
-                order = [c for c in tnames if c in df.columns]
-                extra = [c for c in df.columns if c not in set(order)]
-                df = df.select(*order, *extra)
-                identity_based = {
-                    c: idents[c]["hwm"] for c in identity_hwms
-                }
-    schema_json = df.schema.json()
-    commit_schema_json = schema_json  # what a metaData action would carry
-    commit_configuration: dict | None = None  # None = inherit/empty
-    cm_evolution_based_maxid: str | None = None
-    if meta is None and column_mapping is not None:
-        # CM table CREATION: every column (at every nesting level) gets
-        # a fresh id + col-<uuid> physical name; the first commit's
-        # metaData carries mode + maxColumnId, its protocol the classic
-        # CM versions (reader 2 / writer 5)
-        if column_mapping not in ("name", "id"):
-            raise ValueError(
-                f"column_mapping must be 'name' or 'id', got "
-                f"{column_mapping!r}"
-            )
-        fields, next_id = [], 1
-        for f in df.schema.jsonValue()["fields"]:
-            f2, next_id = _cm_annotate_field(f, next_id)
-            fields.append(f2)
-        commit_schema_json = json.dumps(
-            {"type": "struct", "fields": fields}, separators=(",", ":")
-        )
-        schema_json = commit_schema_json
-        commit_configuration = {
-            "delta.columnMapping.mode": column_mapping,
-            "delta.columnMapping.maxColumnId": str(next_id - 1),
-        }
-    if meta is not None and mode == "append":
-        if merge_schema:
-            if _cm_mode(meta) != "none":
-                commit_schema_json, commit_configuration = (
-                    _merge_schemas_cm(meta, df.schema)
-                )
-                cm_evolution_based_maxid = (
-                    meta.get("configuration") or {}
-                ).get("delta.columnMapping.maxColumnId")
-            else:
-                commit_schema_json = _merge_schemas(
-                    meta["schemaString"], df.schema
-                )
-        elif _schema_key(schema_json) != _schema_key(meta["schemaString"]):
-            raise ValueError(
-                "append schema mismatch vs the table's metaData "
-                "(names/types must match exactly; overwrite to replace, "
-                "or merge_schema=True to evolve by adding columns)"
-            )
-        if part_cols != existing_parts:
-            raise ValueError(
-                f"append partitioning {part_cols} != table's "
-                f"{existing_parts}"
-            )
-
-    # schema-REPLACING overwrite on a CM table (r8): rebuild the
-    # mapping — retained columns keep id/physicalName, new ones get
-    # fresh ids above maxColumnId, advanced in the same metaData
-    cm_replace = (
-        meta is not None
-        and mode == "overwrite"
-        and _cm_mode(meta) != "none"
-        and (
-            _schema_key(schema_json) != _schema_key(meta["schemaString"])
-            or part_cols != existing_parts
-        )
-    )
-    cm_replace_based_maxid: str | None = None
-    if cm_replace:
-        commit_schema_json, commit_configuration = _replace_schema_cm(
-            meta, df.schema
-        )
-        cm_replace_based_maxid = (meta.get("configuration") or {}).get(
-            "delta.columnMapping.maxColumnId"
-        )
-
-    missing = [c for c in part_cols if c not in df.columns]
-    if missing:
-        raise ValueError(f"partition columns absent from frame: {missing}")
-
-    if cluster_by is not None:
-        cluster_by = list(cluster_by)
-        if not cluster_by:
-            raise ValueError("cluster_by must name at least one column")
-        if part_cols:
-            raise ValueError(
-                "cluster_by and partition_by are mutually exclusive — "
-                "delta-spark refuses clustering on partitioned tables"
-            )
-        absent = [c for c in cluster_by if c not in df.columns]
-        if absent:
-            raise ValueError(
-                f"clustering columns absent from frame: {absent} — "
-                "nested paths refuse too (the recluster cannot "
-                "curve-rank a nested field; the same gate OPTIMIZE "
-                "applies)"
-            )
-        complex_c = [
-            c
-            for c in cluster_by
-            if df.schema[c].dataType.typeName() in ("struct", "array", "map")
-        ]
-        if complex_c:
-            raise ValueError(
-                f"clustering columns must be atomic types: {complex_c}"
-            )
-        if meta is not None:
-            # existing table: the option must MATCH its domain verbatim
-            # (idempotent create); changing clustering is ALTER territory
-            from rtdl_spark.sources.delta_reader import snapshot_domains
-
-            d = snapshot_domains(spark, root).get("delta.clustering")
-            have: list[str] | None = None
-            if d and not d.get("removed") and d.get("configuration"):
-                try:
-                    have = [
-                        ".".join(p)
-                        for p in json.loads(d["configuration"])[
-                            "clusteringColumns"
-                        ]
-                    ]
-                except (ValueError, KeyError, TypeError):
-                    raise ValueError(
-                        "unparseable delta.clustering domain "
-                        "configuration on the existing table"
-                    )
-            if have != cluster_by:
-                raise ValueError(
-                    f"cluster_by={cluster_by} does not match the "
-                    f"existing table's clustering ({have}) — this "
-                    "writer declares clustering at creation only"
-                )
-
-    if meta is not None and mode == "append":
-        # appends into an existing table must honor the TABLE's
-        # nullability (the plain-append schema key compares names+types
-        # only; a frame-nullable column can still target a non-nullable
-        # table column) — the merged schema keeps table nullability for
-        # existing fields and forces new ones nullable
-        df = _enforce_not_null(
-            df,
-            commit_schema_json if merge_schema else meta["schemaString"],
-        )
-        df = _enforce_constraints(df, meta)
-    elif (
-        meta is not None
-        and mode == "overwrite"
-        and _schema_key(schema_json) == _schema_key(meta["schemaString"])
-    ):
-        # a SAME-SCHEMA overwrite replaces the rows of a table whose
-        # configuration (CHECK constraints) and schema metadata
-        # (invariants, nullability) survive — enforce them on the new
-        # rows exactly like an append
-        df = _enforce_not_null(df, meta["schemaString"])
-        df = _enforce_constraints(df, meta)
-    elif meta is not None and mode == "overwrite":
-        # schema-REPLACING overwrite: the new schemaString is the
-        # frame's own law (old invariants/nullability die with the old
-        # schema) — but delta.constraints.* live in the CONFIGURATION,
-        # which survives the overwrite, so retained CHECK constraints
-        # are enforced on the replacing frame, and a constraint whose
-        # expression no longer analyzes against the new schema REFUSES
-        # the overwrite (delta-spark refuses schema changes that
-        # invalidate constraints) rather than committing a table that
-        # declares a constraint no subsequent append could satisfy or
-        # even analyze (ADVICE r8)
-        constraints = _table_constraints(meta)
-        for name, expr in sorted(constraints.items()):
-            try:
-                df.select(F.expr(expr))
-            except Exception as e:
-                raise ValueError(
-                    f"CHECK constraint {name} ({expr}) does not "
-                    "analyze against the replacing schema (it "
-                    "references dropped/retyped columns) — drop the "
-                    "constraint first or keep the columns it needs: "
-                    f"{e}"
-                ) from e
-        if constraints:
-            df = _enforce_constraints(
-                df,
-                {
-                    "schemaString": schema_json,
-                    "configuration": meta.get("configuration") or {},
-                },
-            )
-
-    # column mapping: the frame is validated in LOGICAL terms above,
-    # then staged in the table's PHYSICAL layout (physical names +
-    # parquet field ids at every nesting level); partition dirs and
-    # partitionValues keys are physical, per the protocol. The staging
-    # schema is the COMMIT's (evolution assigns new columns their
-    # physical names; creation just assigned the whole layout).
-    cm_staged = (
-        _cm_mode(meta) if meta is not None else (column_mapping or "none")
-    )
-    stage_meta = None
-    if cm_staged != "none":
-        # the staging schema is the one carrying CM metadata: the
-        # TABLE's for plain appends, the merged/created commit schema
-        # when this commit (re)defines it
-        stage_meta = {
-            "schemaString": (
-                commit_schema_json
-                if (meta is None or merge_schema or cm_replace)
-                else meta["schemaString"]
-            ),
-            "configuration": (
-                commit_configuration
-                if commit_configuration is not None
-                else (meta or {}).get("configuration") or {}
-            ),
-        }
+        if cluster_by is not None:
+            _check_clustering(spark, root, cluster_by)
+        df = _enforce_write(df, meta, mode, plan)
+    # column mapping: the frame is validated in LOGICAL terms, then
+    # staged in the PHYSICAL layout of the schema this commit leaves
+    # (evolution assigns new columns their physical names; creation
+    # assigns the whole layout)
     adds = _stage_write(
-        spark, root, df, part_cols, stage_meta, "_staging",
+        spark, root, df, plan.part_cols, plan.stage_meta, "_staging",
         _plan_size_estimate(df), with_stats=with_stats,
     )
-
     ts = _now_ms()
-    for _attempt in range(max_retries):
-        version = current + 1
-        ict = (
-            _ict_value(spark, root, current, meta, ts)
-            if meta is not None
-            else None
-        )
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": ts,
-                    "operation": "WRITE",
-                    "operationParameters": {
-                        "mode": "Append" if mode == "append" else "Overwrite",
-                        "partitionBy": json.dumps(part_cols),
-                    },
-                    "engineInfo": "rtdl-spark native-delta-writer/1",
-                    **(
-                        {"inCommitTimestamp": ict}
-                        if ict is not None
-                        else {}
-                    ),
-                }
-            }
-        ]
-        creating = meta is None
-        replacing_meta = mode == "overwrite" and meta is not None and (
-            _schema_key(schema_json) != _schema_key(meta["schemaString"])
-            or part_cols != list(meta.get("partitionColumns") or [])
-        )
-        evolving = (
-            mode == "append"
-            and meta is not None
-            and _schema_key(commit_schema_json)
-            != _schema_key(meta["schemaString"])
-        )
-        if creating:
-            if cluster_by is not None:
-                # clustering is a table FEATURE (writer v7); with CM the
-                # reader side moves to v3 feature form too
-                proto = (
-                    {
-                        "minReaderVersion": 3,
-                        "minWriterVersion": 7,
-                        "readerFeatures": ["columnMapping"],
-                        "writerFeatures": [
-                            "columnMapping",
-                            "clustering",
-                            "domainMetadata",
-                        ],
-                    }
-                    if column_mapping is not None
-                    else {
-                        "minReaderVersion": 1,
-                        "minWriterVersion": 7,
-                        "writerFeatures": ["clustering", "domainMetadata"],
-                    }
-                )
-            elif column_mapping is not None:
-                proto = {"minReaderVersion": 2, "minWriterVersion": 5}
-            else:
-                proto = {"minReaderVersion": 1, "minWriterVersion": 2}
-            actions.append({"protocol": proto})
-            if cluster_by is not None:
-                actions.append(
-                    {
-                        "domainMetadata": {
-                            "domain": "delta.clustering",
-                            "configuration": json.dumps(
-                                {
-                                    "clusteringColumns": [
-                                        [c] for c in cluster_by
-                                    ]
-                                }
-                            ),
-                            "removed": False,
-                        }
-                    }
-                )
-        if creating or replacing_meta or evolving or identity_hwms:
-            if identity_hwms:
-                # patched from the TABLE's schema — the frame's carries
-                # no identity metadata and would wipe the definitions
-                meta_schema = _identity_schema_update(meta, identity_hwms)
-            elif evolving or cm_replace:
-                meta_schema = commit_schema_json
-            else:
-                meta_schema = schema_json
-            actions.append(
-                {
-                    "metaData": {
-                        "id": str(uuid.uuid4()) if creating else meta["id"],
-                        # table name/description/configuration survive
-                        # schema evolution and overwrite — wiping them
-                        # would silently disable CDF/DV/appendOnly and
-                        # drop catalog identity (r7 fix; delta-spark
-                        # keeps table properties through both)
-                        **(
-                            {}
-                            if creating
-                            else {
-                                "name": meta.get("name"),
-                                "description": meta.get("description"),
-                            }
-                        ),
-                        "format": {"provider": "parquet", "options": {}},
-                        "schemaString": meta_schema,
-                        "partitionColumns": part_cols,
-                        "configuration": (
-                            dict(commit_configuration)
-                            if commit_configuration is not None
-                            else {}
-                            if creating
-                            else dict(meta.get("configuration") or {})
-                        ),
-                        "createdTime": ts
-                        if creating
-                        else meta.get("createdTime"),
-                    }
-                }
+    params = {
+        "mode": "Append" if mode == "append" else "Overwrite",
+        "partitionBy": json.dumps(plan.part_cols),
+    }
+
+    def build(attempt: int):
+        nonlocal protocol, meta, active, current, plan
+        if attempt:  # lost the race: re-plan against the new tip
+            protocol, meta, active, current, txns = _write_target(
+                spark, root, mode
             )
+            if txn is not None and txns.get(txn[0], -1) >= int(txn[1]):
+                return -1  # the concurrent writer WAS this epoch
+            _check_protocol(protocol)
+            _check_writer_protocol(protocol)
+            plan = _write_plan(
+                meta, schema, partition_by=plan.part_cols, staged=plan,
+                **opts,
+            )
+        actions = list(plan.actions)
         if txn is not None:
-            actions.append(
-                {
-                    "txn": {
-                        "appId": txn[0],
-                        "version": int(txn[1]),
-                        "lastUpdated": ts,
-                    }
-                }
-            )
-        if mode == "overwrite":
-            # a DV-carrying file's tombstone keeps the descriptor, like
-            # _remove_actions: reconciliation keys on (path, dvId), so a
-            # dvId-less remove may not cancel the DV-carrying add in a
-            # spec-strict reader, and the CDF mask-diff derivation would
-            # over-report the masked rows as deletes (ADVICE r8)
-            for path in sorted(active):
-                a = active[path]
-                actions.append(
-                    {
-                        "remove": {
-                            "path": path,
-                            "deletionTimestamp": ts,
-                            "dataChange": True,
-                            "extendedFileMetadata": True,
-                            "partitionValues": a.get("partitionValues")
-                            or {},
-                            "size": a.get("size"),
-                            **(
-                                {"deletionVector": a["deletionVector"]}
-                                if a.get("deletionVector")
-                                else {}
-                            ),
-                        }
-                    }
-                )
+            actions.append({"txn": {
+                "appId": txn[0], "version": int(txn[1]), "lastUpdated": ts,
+            }})
+        # an overwrite tombstones every active file (DV descriptors kept)
+        actions.extend(
+            {"remove": r}
+            for r in _remove_actions([active[p] for p in sorted(active)], ts)
+        )
         # row tracking: every new add gets a fresh, non-overlapping
         # baseRowId range after the delta.rowTracking high watermark,
-        # stamped with THIS attempt's commit version; the same commit
-        # advances the watermark domain. Re-read per attempt — a
-        # concurrent writer may have claimed ids (unlike data, ids live
-        # only in actions, so reassignment costs nothing).
+        # stamped with THIS attempt's version; the same commit advances
+        # the watermark domain (re-read per attempt: ids live only in
+        # actions, so reassignment costs nothing)
         if adds and _row_tracking_supported(protocol):
-            dom = _stamp_row_tracking(spark, root, adds, version)
+            dom = _stamp_row_tracking(spark, root, adds, current + 1)
             if dom is not None:
                 actions.append(dom)
         actions.extend({"add": a} for a in adds)
+        return _Attempt(current, meta, params, actions)
 
-        if _try_commit(spark, root, version, actions):
-            _post_commit(
-                spark, root, version, actions, meta, checkpoint_interval
-            )
-            return version
-
-        # lost the race: re-read and re-validate against the new tip
-        if mode == "overwrite":
-            protocol, meta, active, current, txns = snapshot_actions(
-                spark, root
-            )
-        else:
-            protocol, meta, current, txns = snapshot_control(spark, root)
-        if txn is not None and txns.get(txn[0], -1) >= int(txn[1]):
-            return -1  # the concurrent writer WAS this epoch
-        _check_protocol(protocol)
-        _check_writer_protocol(protocol)
-        if identity_hwms:
-            cur_idents = _identity_cols(meta)
-            for c, based in identity_based.items():
-                if (cur_idents.get(c) or {}).get("hwm") != based:
-                    raise DeltaConcurrentWriteError(
-                        f"concurrent identity high-watermark change on "
-                        f"{c!r} — the staged values may collide with "
-                        "the concurrent writer's; re-run the write"
-                    )
-        if cm_replace and (
-            _cm_mode(meta) != cm_staged
-            or (meta.get("configuration") or {}).get(
-                "delta.columnMapping.maxColumnId"
-            )
-            != cm_replace_based_maxid
-        ):
-            # the rebuilt mapping's fresh ids were assigned above the
-            # PRE-RACE maxColumnId; a concurrent mapping change could
-            # collide with them — abort rather than commit stale ids
-            raise DeltaConcurrentWriteError(
-                "concurrent column-mapping change during "
-                "schema-replacing overwrite — the rebuilt mapping is "
-                "stale; re-run the write"
-            )
-        if mode == "append":
-            if _cm_mode(meta) != cm_staged:
-                raise DeltaConcurrentWriteError(
-                    "concurrent COLUMN MAPPING change during append — "
-                    "the staged files no longer match the table layout"
-                )
-            if merge_schema:
-                if _cm_mode(meta) != "none":
-                    # the staged files carry the physical names assigned
-                    # on the FIRST attempt; if a concurrent commit moved
-                    # maxColumnId, re-annotating would change them and
-                    # silently orphan the staged columns — abort instead
-                    if (
-                        (meta.get("configuration") or {}).get(
-                            "delta.columnMapping.maxColumnId"
-                        )
-                        != cm_evolution_based_maxid
-                    ):
-                        raise DeltaConcurrentWriteError(
-                            "concurrent column-mapping schema evolution "
-                            "— the staged physical layout is stale; "
-                            "re-run the write"
-                        )
-                    # maxColumnId is unmoved, but a concurrent
-                    # CONFIGURATION-ONLY change (enabling appendOnly,
-                    # CDF, ...) must not be reverted by replaying the
-                    # pre-race configuration: rebuild from the
-                    # refreshed meta, overlaying only this evolution's
-                    # maxColumnId (r8 ADVICE item)
-                    refreshed = dict(meta.get("configuration") or {})
-                    refreshed["delta.columnMapping.maxColumnId"] = (
-                        commit_configuration or {}
-                    )["delta.columnMapping.maxColumnId"]
-                    commit_configuration = refreshed
-                else:
-                    commit_schema_json = _merge_schemas(
-                        meta["schemaString"], df.schema
-                    )
-            elif _schema_key(schema_json) != _schema_key(
-                meta["schemaString"]
-            ):
-                raise ValueError(
-                    "append schema mismatch after concurrent commit"
-                )
-            if part_cols != list(meta.get("partitionColumns") or []):
-                raise ValueError(
-                    "append partitioning mismatch after concurrent commit"
-                )
-    raise DeltaConcurrentWriteError(
-        f"lost the Delta commit race {max_retries} times at {root}"
+    return _commit(
+        spark, root, "WRITE", build, max_retries=max_retries,
+        checkpoint_interval=checkpoint_interval, ts=ts,
     )
 
 
@@ -2984,10 +3060,10 @@ def _commit_rewrite(
     rt_stamp_adds: list[dict] | None = None,
 ) -> int:
     """Commit a file rewrite (``removes`` tombstones + ``adds``) at the
-    next version, with BOUNDED CONFLICT RETRY on a lost commit race —
-    real Delta's OptimisticTransaction semantics rather than
-    fail-on-first-race: re-read the tip, verify the loser is still
-    logically valid against what landed, and try the next version.
+    next version through ``_commit``, with BOUNDED CONFLICT RETRY on a
+    lost commit race — real Delta's OptimisticTransaction semantics
+    rather than fail-on-first-race: re-read the tip, verify the loser is
+    still logically valid against what landed, and try the next version.
 
     A concurrent commit is COMPATIBLE iff (a) protocol still passes the
     writer checks, (b) the metaData facets this plan depends on
@@ -3009,24 +3085,35 @@ def _commit_rewrite(
     read. Strict Serializable would abort instead; callers wanting that
     can pass max_retries=1."""
     planned = {r["path"]: _dv_id(r) for r in removes}
-    for _attempt in range(max_retries):
-        ict = _ict_value(spark, root, current, planned_meta, ts)
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": ts,
-                    "operation": operation,
-                    "operationParameters": op_params,
-                    "engineInfo": "rtdl-spark native-delta-writer/1",
-                    **(
-                        {"inCommitTimestamp": ict}
-                        if ict is not None
-                        else {}
-                    ),
-                }
-            }
-        ]
-        actions.extend(extra_actions or [])
+
+    def build(attempt: int) -> _Attempt:
+        nonlocal current
+        if attempt:
+            protocol2, meta2, active2, current, _tx = snapshot_actions(
+                spark, root
+            )
+            _check_protocol(protocol2)
+            _check_writer_protocol(protocol2)
+            if _meta_key(meta2) != _meta_key(planned_meta):
+                raise DeltaConcurrentWriteError(
+                    f"concurrent METADATA change during {operation} — "
+                    "the staged rewrite no longer matches the table "
+                    "(re-run; staged files are unreferenced and "
+                    "vacuum-reclaimable)"
+                )
+            gone = sorted(
+                p for p, dv in planned.items()
+                if p not in active2 or _dv_id(active2[p]) != dv
+            )
+            if gone:
+                raise DeltaConcurrentWriteError(
+                    f"concurrent commit removed files this {operation} "
+                    f"rewrote ({gone[:3]}"
+                    f"{'...' if len(gone) > 3 else ''}) — re-run against "
+                    "the new snapshot (staged files are unreferenced "
+                    "and vacuum-reclaimable)"
+                )
+        actions = list(extra_actions or [])
         actions.extend({"remove": r} for r in removes)
         if row_tracking:
             # fresh baseRowId ranges for the freshly-staged files (the
@@ -3042,34 +3129,10 @@ def _commit_rewrite(
             if dom is not None:
                 actions.append(dom)
         actions.extend({"add": a} for a in adds)
-        if _try_commit(spark, root, current + 1, actions):
-            _post_commit(spark, root, current + 1, actions, planned_meta)
-            return current + 1
-        protocol2, meta2, active2, current, _tx = snapshot_actions(
-            spark, root
-        )
-        _check_protocol(protocol2)
-        _check_writer_protocol(protocol2)
-        if _meta_key(meta2) != _meta_key(planned_meta):
-            raise DeltaConcurrentWriteError(
-                f"concurrent METADATA change during {operation} — the "
-                "staged rewrite no longer matches the table (re-run; "
-                "staged files are unreferenced and vacuum-reclaimable)"
-            )
-        gone = sorted(
-            p for p, dv in planned.items()
-            if p not in active2 or _dv_id(active2[p]) != dv
-        )
-        if gone:
-            raise DeltaConcurrentWriteError(
-                f"concurrent commit removed files this {operation} "
-                f"rewrote ({gone[:3]}{'...' if len(gone) > 3 else ''}) — "
-                "re-run against the new snapshot (staged files are "
-                "unreferenced and vacuum-reclaimable)"
-            )
-    raise DeltaConcurrentWriteError(
-        f"lost the Delta commit race {max_retries} times during "
-        f"{operation} at {root}"
+        return _Attempt(current, planned_meta, op_params, actions)
+
+    return _commit(
+        spark, root, operation, build, max_retries=max_retries, ts=ts
     )
 
 
@@ -4828,7 +4891,11 @@ def sync_identity_delta_native(
     from rtdl_spark.sources.delta_reader import read_delta_native
 
     root = table_dir.rstrip("/")
-    for _attempt in range(max_retries):
+    new_hwms: dict[str, int] = {}
+
+    def build(attempt: int):
+        # every attempt recomputes from its tip: a concurrent commit may
+        # have appended rows or advanced the watermark itself
         protocol, meta, current, _txns = snapshot_control(spark, root)
         _check_protocol(protocol)
         _check_writer_protocol(protocol)
@@ -4854,7 +4921,7 @@ def sync_identity_delta_native(
             for c in want
         ]
         extremes = read_delta_native(spark, root).agg(*aggs).collect()[0]
-        new_hwms: dict[str, int] = {}
+        new_hwms.clear()
         for c in want:
             v = extremes[c]
             if v is None:
@@ -4870,43 +4937,21 @@ def sync_identity_delta_native(
             if cand != old:
                 new_hwms[c] = cand
         if not new_hwms:
-            return {"version": None, "high_watermarks": {}}
-        ts = _now_ms()
-        ict = _ict_value(spark, root, current, meta, ts)
-        actions = [
-            {
-                "commitInfo": {
-                    "timestamp": ts,
-                    "operation": "SYNC IDENTITY",
-                    "operationParameters": {
-                        "columns": json.dumps(sorted(new_hwms))
-                    },
-                    "engineInfo": "rtdl-spark native-delta-writer/1",
-                    **(
-                        {"inCommitTimestamp": ict}
-                        if ict is not None
-                        else {}
-                    ),
-                }
-            },
-            {
-                "metaData": {
-                    **meta,
-                    "schemaString": _identity_schema_update(
-                        meta, new_hwms
-                    ),
-                }
-            },
-        ]
-        if _try_commit(spark, root, current + 1, actions):
-            _post_commit(spark, root, current + 1, actions, meta)
-            return {"version": current + 1, "high_watermarks": new_hwms}
-        # lost the race: the concurrent commit may have appended rows
-        # or advanced the watermark itself — recompute from the new tip
-    raise DeltaConcurrentWriteError(
-        f"lost the Delta commit race {max_retries} times during "
-        f"SYNC IDENTITY at {root}"
+            return None
+        return _Attempt(
+            current,
+            meta,
+            {"columns": json.dumps(sorted(new_hwms))},
+            [{"metaData": {
+                **meta,
+                "schemaString": _identity_schema_update(meta, new_hwms),
+            }}],
+        )
+
+    version = _commit(
+        spark, root, "SYNC IDENTITY", build, max_retries=max_retries
     )
+    return {"version": version, "high_watermarks": dict(new_hwms)}
 
 
 _ZORDER_STAT_TYPES = {

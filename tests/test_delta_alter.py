@@ -126,7 +126,11 @@ def test_set_ict_records_enablement_and_stamps_commits(spark, tmp_path):
     assert "inCommitTimestamp" in protocol["writerFeatures"]
     conf = meta["configuration"]
     assert conf["delta.inCommitTimestampEnablementVersion"] == "1"
-    assert int(conf["delta.inCommitTimestampEnablementTimestamp"]) > 0
+    # the enabling commit is the first stamped one, and its ICT is the
+    # recorded enablement timestamp
+    assert conf["delta.inCommitTimestampEnablementTimestamp"] == str(
+        _commit_info(root, 1)["inCommitTimestamp"]
+    )
     v = write_delta_native(spark, _frame(spark, 5, 8), root,
                            checkpoint_interval=0)
     with open(
@@ -134,6 +138,62 @@ def test_set_ict_records_enablement_and_stamps_commits(spark, tmp_path):
     ) as f:
         info = [json.loads(line) for line in f][0]["commitInfo"]
     assert "inCommitTimestamp" in info
+
+
+def _commit_info(root, version):
+    with open(
+        os.path.join(root, "_delta_log", f"{version:020d}.json")
+    ) as f:
+        return json.loads(f.readline())["commitInfo"]
+
+
+@pytest.mark.parametrize("how", ["create", "clone"])
+def test_ict_table_creation_stamps_its_first_commit(spark, tmp_path, how):
+    """A table born with in-commit timestamps on (CREATE with the
+    property, or a SHALLOW CLONE of an ICT table) stamps its version 0,
+    and its enablement properties name that version and its ICT — a
+    clone's never copy the source's."""
+    from rtdl_spark.sources.delta_alter import create_delta_table_native
+    from rtdl_spark.sources.delta_clone import clone_delta_native
+
+    root = str(tmp_path / "t")
+    ict = {"delta.enableInCommitTimestamps": "true"}
+    if how == "create":
+        create_delta_table_native(spark, root, "id long",
+                                  table_properties=ict)
+    else:
+        src = str(tmp_path / "src")
+        write_delta_native(spark, _frame(spark, 0, 5), src,
+                           checkpoint_interval=0)
+        alter_set_tblproperties(spark, src, ict)
+        clone_delta_native(spark, src, root)
+    conf = snapshot_actions(spark, root)[1]["configuration"]
+    info = _commit_info(root, 0)
+    assert conf["delta.inCommitTimestampEnablementVersion"] == "0"
+    assert conf["delta.inCommitTimestampEnablementTimestamp"] == str(
+        info["inCommitTimestamp"]
+    )
+
+
+def test_replace_keeps_the_ict_enablement_point(spark, tmp_path):
+    """A REPLACE that keeps in-commit timestamps on is stamped and keeps
+    the version where they were turned on: every commit since carries
+    an ICT, the REPLACE included."""
+    from rtdl_spark.sources.delta_alter import create_delta_table_native
+
+    root = str(tmp_path / "t")
+    ict = {"delta.enableInCommitTimestamps": "true"}
+    write_delta_native(spark, _frame(spark, 0, 5), root,
+                       checkpoint_interval=0)
+    alter_set_tblproperties(spark, root, ict)
+    res = create_delta_table_native(spark, root, "id long",
+                                    table_properties=ict, or_replace=True)
+    conf = snapshot_actions(spark, root)[1]["configuration"]
+    assert "inCommitTimestamp" in _commit_info(root, res["version"])
+    assert conf["delta.inCommitTimestampEnablementVersion"] == "1"
+    assert conf["delta.inCommitTimestampEnablementTimestamp"] == str(
+        _commit_info(root, 1)["inCommitTimestamp"]
+    )
 
 
 def test_cm_upgrade_none_to_name_keeps_existing_files_readable(

@@ -1164,6 +1164,28 @@ def test_read_keeps_user_field_metadata(spark, tmp_path, n_parts):
     assert sorted(r.id for r in df.collect()) == list(range(80))
 
 
+def test_cdf_read_keeps_user_field_metadata(spark, tmp_path):
+    """The change feed carries the same user column metadata as a
+    plain read, on data and partition columns alike."""
+    from rtdl_spark.sources.delta_reader import read_table_changes_cdf
+    from rtdl_spark.sources.delta_writer import write_delta_native
+
+    root = str(tmp_path / "t")
+    write_delta_native(
+        spark,
+        spark.range(0, 8).select(
+            F.col("id").alias("id", metadata={"comment": "the key"}),
+            (F.col("id") % 2).cast("string")
+            .alias("p", metadata={"comment": "the part"}),
+        ),
+        root, partition_by=["p"], checkpoint_interval=0,
+    )
+    df = read_table_changes_cdf(spark, root, 0, allow_unrecorded=True)
+    assert df.schema["id"].metadata == {"comment": "the key"}
+    assert df.schema["p"].metadata == {"comment": "the part"}
+    assert df.count() == 8
+
+
 def test_column_mapped_read_schema_has_no_delta_keys(spark, tmp_path):
     """The log's ``delta.columnMapping.*`` field keys are protocol
     bookkeeping: a column-mapped table's read schema carries only the

@@ -3549,3 +3549,33 @@ def test_commit_conflicts(spark, tmp_path, monkeypatch, case):
         with pytest.raises(expect[0], match=expect[1]):
             loser()
     assert state["raced"]
+
+
+def test_overwrite_aborts_when_a_race_changes_column_mapping(
+    spark, tmp_path, monkeypatch
+):
+    """An overwrite that would create a column-mapped table loses the
+    race to a plain creation: its files were staged under physical
+    names the new table does not map, so it aborts instead of
+    committing columns that read back as NULL."""
+    import rtdl_spark.sources.delta_writer as dw
+
+    root = str(tmp_path / "t")
+    real = dw._try_commit
+    raced = []
+
+    def race_once(spark_, root_, version, actions):
+        if not raced:
+            raced.append(True)
+            write_delta_native(spark, _frame(spark, 0, 3), root,
+                               checkpoint_interval=0)
+        return real(spark_, root_, version, actions)
+
+    monkeypatch.setattr(dw, "_try_commit", race_once)
+    with pytest.raises(DeltaConcurrentWriteError,
+                       match="COLUMN MAPPING change during overwrite"):
+        write_delta_native(spark, _frame(spark, 3, 6), root,
+                           mode="overwrite", column_mapping="name",
+                           checkpoint_interval=0)
+    assert sorted(r.id for r in read_delta_native(spark, root).collect()) \
+        == [0, 1, 2]
